@@ -1,13 +1,12 @@
 """Benchmark harness (driver contract).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
+Times every catalog registry entry at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
 line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
 Each query is forced end-to-end with the noop sink (full computation,
-no driver-side collect bottleneck) — except tiny aggregates, where
-collect() is the realistic consumption path.
+no driver-side collect bottleneck).
 """
 
 from __future__ import annotations
@@ -15,6 +14,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import sys
 import tempfile
 import time
@@ -23,328 +23,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from chronicle_sniffer_spark.plans import registry
 from chronicle_sniffer_spark.session import get_spark
-
-# Headline set: one per bench target in BASELINE.md §2 plus the
-# LLM-pipeline ops (B2=a1, B3=j2, B4=o1/w1, B7=l1/l2) and the
-# subquery/time-series shapes a warehouse user hits daily.
-HEADLINE = (
-    "a1_q1_pricing_summary",
-    "j2_q3_shape",
-    "o1_sort_limit",
-    "w1_topk_per_group",
-    "w4_running_total",
-    "j8_asof",
-    "a8_exp_histogram",
-    "a9b_q18_large_orders",
-    "sq2_q17_correlated",
-    "ts1_gapfill_ffill",
-    "l1_exact_dedup",
-    "l2_minhash_signatures",
-    "l2_ngram_jaccard",
-    "l2_simhash_pairs",
-    "l3_cosine_topk",
-    "l3_ann_lsh_topk",
-    "a10_salted_skew_agg",
-    # round-2 additions: repetition/quality/split/layout family
-    "l4_repetition_signals",
-    "l4_top_bigram",
-    "l4_c4_quality_filter",
-    "l6_hash_split",
-    "s8_zorder_key",
-    "l4_tfidf",
-    "o9_cdc_latest",
-    "s8_merge_upsert",
-    "ts2_funnel_conversion",
-    "ts3_retention_cohorts",
-    "t9b_outer_join_batch",
-    "l5_image_decode",
-    "l5_audio_stats",
-    "s10_python_datasource",
-    # rows-only (non-oracle) surface, so regressions there are visible
-    # round-over-round too
-    "udm_projection",
-    "s4_pcap_ingest",
-    "udm_per_file_metrics",
-    "l4_fingerprint",
-    "l3_ann_ivf_topk",
-    "l5_feature_extract",
-    "t9_interval_join_batch",
-    # round-4 additions: derived-partsupp TPC-H, real compressed-media
-    # decode, adaptive embedding near-dup, span dedup
-    "j2g_q9_product_profit",
-    "sq4_q2_min_cost_supplier",
-    "a9c_q11_important_stock",
-    "l5_png_decode",
-    "l5_jpeg_decode",
-    "l5_jpeg_color_decode",
-    "l5_jpeg420_decode",
-    "l5_mp4_probe",
-    "l2_embedding_near_dup",
-    "l4_span_dedup",
-    # round-5 additions: per-sample MJPEG-in-MP4 video decode,
-    # skew-join mitigation on a manufactured hot key, IVF ANN through
-    # the materialized (partition-pruned) index
-    "l5_video_decode",
-    "a10b_salted_skew_join",
-    "l3_ann_ivf_index_topk",
-    "l5_gif_decode",
-    "l5_video_color_decode",
-    "l5_ulaw_decode",
-    "l5_gif_anim_decode",
-    # round-5 session additions: retrieval + PQ/semantic embedding ops
-    # and the XML source round-trip
-    "l4_bm25_topk",
-    "l3_ann_pq_topk",
-    "l2_semantic_dedup",
-    "s11_xml_roundtrip",
-    "l3_ann_ivfpq_topk",
-    "l4_unigram_surprisal",
-    "l4_rrf_fusion",
-    "g1_pagerank_topk",
-    "l4_mmr_rerank",
-    "ts4_zscore_anomaly",
-    "ts5_sessionize",
-    "l3_ann_ivfpq_index_topk",
-    "l2_incremental_dedup",
-    "l2_fuzzy_title_join",
-    "l3_label_centroids",
-    "l6_quality_deciles",
-    "t10_doc_quality_gate",
-    "l6_leakage_safe_split",
-    "l6_token_budget_select",
-    "s12_text_roundtrip",
-    "l4_bigram_surprisal",
-    "l4_pmi_collocations",
-    "l6_moore_lewis_select",
-    "l3_sq8_quantize",
-    "dq1_constraint_report",
-    "l6_weighted_sample_es",
-    "ts6_user_entropy",
-    "ts7_mad_outliers",
-    "l3_ann_sq8_topk",
-    "l4_source_vocab_overlap",
-    "a11_corr_matrix",
-    "a12_ols_trend",
-    "a13_time_rollup",
-    "dq2_benford_digits",
-    # round-6 additions: in-plan model training/evaluation
-    "ml1_logreg_gd",
-    "ml2_naive_bayes",
-    "ml3_eval_confusion",
-    "ml4_kmeans",
-    "ml5_gbt_stumps",
-    "ml2b_nb_classify",
-    "dq3_dp_release",
-    # round-7 additions: df-cap audit, CMS sketch, PIT assembly, BPE step
-    "l2_ngram_df_cap_audit",
-    "a14_cms_heavy_hitters",
-    "ml6_pit_training_set",
-    "l4_bpe_merge_step",
-    "l3_ann_recall_eval",
-    "dq4_drift_report",
-    "s8b_bucketed_colocated_join",
-    "g2_triangle_count",
-    "a15_bitmap_distinct",
-    "o9b_scd2_intervals",
-    "l4_phrase_search",
-    "o10_incremental_agg_refresh",
-    "a4b_mergeable_quantiles",
-    "g3_cc_components",
-    # round-8 additions: native recursive CTE + SQL UDFs, EWMA/Holt
-    # state recursions, skyline, bigram LM, containment dedup,
-    # quarantine split, nucleus selection
-    "g4_hierarchy_rollup_rcte",
-    "u7_sql_scalar_udf",
-    "u8_sql_table_udf",
-    "ts8_ewma_smoothing",
-    "ts9_holt_linear",
-    "o11_pareto_frontier",
-    "l4_bigram_lm_score",
-    "l2_ngram_containment",
-    "dq5_quarantine_split",
-    "l6_nucleus_select",
-    "g5_bfs_hops",
-    "u9_iter_pandas_udf",
-    "ts10_sequence_pattern",
-    "l6_curation_funnel",
-    "p15_variant_shred",
-    "j13_lateral_topk",
-    "p16_try_arithmetic",
-    "a17_group_by_all",
-    "dq6_reconciliation_checksum",
-    "l4_rouge_pairs",
-    "p17_collated_group",
-    "s8c_dynamic_partition_overwrite",
-    "a4c_weighted_median",
-    "u10_parameterized_sql",
-    "t9c_full_outer_join_batch",
-    "a18_mode_per_group",
-    "t3b_dynamic_gap_session",
-    "u11_apply_in_arrow",
-    "j14_bucketed_range_join",
-    "a19_equidepth_histogram",
-    "ts11_seasonal_profile",
-    "s13_manifest_file_prune",
-    "u12_polymorphic_udtf",
-    "ts12_interval_coverage",
-    "j15_dynamic_partition_pruning",
-    "p18_pipe_syntax",
-    "o12_threshold_topk",
-    "j16_merge_on_read",
-    "l6_temperature_mix",
-    "ml7_calibration_curve",
-    "j17_null_safe_join",
-    "ts13_m4_downsample",
-    "a20_multi_distinct_expand",
-    "ml8_auc_exact",
-    "u13_udtf_table_argument",
-    "s14_snapshot_time_travel",
-    "w5_trailing_range_window",
-    "a21_grouping_id_rollup",
-    "o13_keyset_pagination",
-    "j18_asof_forward",
-    "s15_partition_evolution",
-    "t9d_semi_join_batch",
-    "a22_sliding_distinct_users",
-    "s16_scan_path_options",
-    "p20_sql_scripting",
-    "ml10_lift_table",
-    "u14_pandas_window_udaf",
-    "dq8_observe_pipeline",
-    "l8_preference_pairs",
-    "p21_identifier_clause",
-    "ml11_chi2_ab_test",
-    "dq9_order_inversions",
-    "u15_arrow_scalar_udf",
-    "s17_corrupt_record_quarantine",
-    "u16_arrow_udtf_wordhist",
-    "g6_clustering_coefficient",
-    "o16_sequence_gaps",
-    # round-9 additions: bitmap set algebra, integer-exact stats
-    # (CUSUM / cross-correlation / KS), profile drift, template dedup,
-    # non-splittable-codec scan, norm-pruned MIPS, k-core peel
-    "a23_bitmap_set_algebra",
-    "ts14_cusum_changepoint",
-    "ts15_lag_cross_correlation",
-    "ml12_ks_two_sample",
-    "dq10_profile_snapshot_diff",
-    "l7_template_dedup",
-    "s18_gzip_json_scan",
-    "l3_mips_norm_prune",
-    "g7_kcore_peel",
-    "ts16_theil_sen_slope",
-    "ml13_poisson_bootstrap_ci",
-    "dq11_snapshot_row_diff",
-    "g8_degree_powerlaw",
-    "o18_incremental_sessionize",
-    "w7_rolling_median",
-    "ts17_mase_backtest",
-    "ml14_feature_hash_score",
-    # round-10 additions
-    "l3_ann_ivf_index_upsert",
-    "l4_bpe_encode",
-    "ml19_psi_drift",
-    "dq13_fd_audit",
-    "ml21_target_encode_loo",
-    "ts18_seasonal_decompose",
-    "g9_label_propagation",
-    "l3_sparse_cosine_topk",
-    "g10_cosupply_projection",
-    "ts20_outage_windows",
-    "ml16_ols_normal_eq",
-    "dq14_ri_orphan_audit",
-    "j19_asof_tolerance",
-    # round-11 additions
-    "l4_html_extract",
-    "l4_html_blocks",
-    "ml22_kfold_target_encode",
-    "ts22_holt_winters",
-    "a24_kmv_distinct",
-    "g12_bounded_cheapest_path",
-    "l4_markdown_extract",
-    "s19_manifest_store_scan",
-    "ml23_pr_curve",
-    "a25_gini_token_inequality",
-    "l1_dedup_keep_best",
-    "j21_nearest_value_join",
-    # round-12 additions
-    "s20_warc_scan",
-    "s20_warc_html_pipeline",
-    "l4_url_canonicalize",
-    "ts23_acf",
-    "ml24_welch_ttest",
-    "g13_common_neighbors",
-    "l5_image_resize",
-    "s21_manifest_compaction",
-    "ml25_brier_decomposition",
-    "l2_cdc_chunk_dedup",
-    # round-13 additions
-    "g13_degree_cap_audit",
-    "s20_warc_record_mix",
-    "a24b_kmv_production",
-    "l6_crawl_funnel",
-    "s22_cdx_offset_read",
-    "ml26_isotonic_calibration",
-    "ml27_mann_whitney_u",
-    "ts25_sax_symbolize",
-    "l4_lang_id_trigram",
-    "l5_audio_resample",
-    "s23_schema_evolution_scan",
-    "j22_interval_anti_join",
-    "u17_cogrouped_map",
-    # round-14 additions
-    "s20_warc_image_decode",
-    "s20_warc_audio_decode",
-    "s24_crawl_stream_ingest",
-    "ts26_time_weighted_avg",
-    "ml28_spearman_rho",
-    "ml29_ndcg_eval",
-    "ml30_cohens_kappa",
-    "s25_position_deletes",
-    "l5_video_scene_cut",
-    "l3_ann_ivf_index_delete",
-    "ts29_counter_rate",
-    "g14_adamic_adar",
-)
-
-# Entries with documented ±18% round-over-round drift on identical code
-# (round-4 verdict watch items) report the MEDIAN of N timed runs — the
-# same noise-robust treatment the B1 marginal-rate pairs already get.
-_MEDIAN_REPS = {"udm_projection": 3, "udm_stream_e2e_60k": 3}
-
-# Results small enough that collect() is the realistic consumption path.
-_SMALL = {
-    "a1_q1_pricing_summary",
-    "o1_sort_limit",
-    "sq2_q17_correlated",
-    "l3_cosine_topk",
-    "l3_ann_lsh_topk",
-    "a8_exp_histogram",
-    "a10_salted_skew_agg",
-    # round-12 additions (tiny results; collect() is the real consumption)
-    "ts23_acf",
-    "ml24_welch_ttest",
-    "g13_common_neighbors",
-    "g13_degree_cap_audit",
-    "s20_warc_record_mix",
-    "a24b_kmv_production",
-    "l6_crawl_funnel",
-    "ml26_isotonic_calibration",
-    "ml27_mann_whitney_u",
-    "s23_schema_evolution_scan",
-    "s21_manifest_compaction",
-    "ml25_brier_decomposition",
-    "l2_cdc_chunk_dedup",
-    "j22_interval_anti_join",
-    "u17_cogrouped_map",
-    "s20_warc_image_decode",
-    "s20_warc_audio_decode",
-    "ts26_time_weighted_avg",
-    "ml30_cohens_kappa",
-    "s25_position_deletes",
-    "ts29_counter_rate",
-}
-
 
 UDM_BENCH_PACKETS = 60_000
 UDM_BENCH_FILES = 32
@@ -428,20 +106,14 @@ def main() -> None:
     spark = get_spark("bench")
     reg = registry()
 
-    # Warm the JVM + parquet footers outside the timed region.
-    reg["s1_parquet_count"].spark_fn(spark, sf_dir).collect()
-
-    # Steady-state measurement (TPC-style power run): one untimed warm
-    # execution per query pays Janino/whole-stage-codegen compilation and
-    # JIT; the timed run is what a long-running cluster job sees.
-    def run(name: str) -> None:
-        df = reg[name].spark_fn(spark, sf_dir)
-        if name in _SMALL:
-            df.collect()
-        else:
-            df.write.format("noop").mode("overwrite").save()
-
-    import statistics
+    # Steady-state measurement (TPC-style power run) of every registry
+    # entry, each forced end-to-end with the noop sink: two untimed
+    # warm executions pay Janino/whole-stage-codegen compilation and
+    # JIT (multi-stage plans like l2_ngram_jaccard measured 8.4 s after
+    # one warm run vs 2.4 s true steady state), then one timed run is
+    # what a long-running cluster job sees.
+    def run(spec) -> None:
+        spec.spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     timings: dict[str, float] = {}
     # Diagnostic split (does NOT change the timed methodology): during
@@ -451,34 +123,22 @@ def main() -> None:
     # and for sub-second entries it bounds what execution-side
     # optimization can still buy (the B1a class, BASELINE.md).
     # Reported as the top-level "plan_build" dict; "queries" and the
-    # headline sum are computed exactly as before.
+    # headline sum do not include it.
     builds: dict[str, float] = {}
-    for name in HEADLINE:
-        run(name)  # warm 1: codegen compile
-        # warm 2: JIT reaches steady state (multi-stage plans like
-        # l2_ngram_jaccard measured 8.4 s after one warm run vs 2.4 s
-        # true steady state — one warm pass is not enough once the
-        # catalog is this large); its build phase is timed for the
-        # diagnostic split above
+    for name, spec in reg.items():
+        run(spec)
         t_b = time.time()
-        df2 = reg[name].spark_fn(spark, sf_dir)
+        df = spec.spark_fn(spark, sf_dir)
         builds[name] = round(time.time() - t_b, 3)
-        if name in _SMALL:
-            df2.collect()
-        else:
-            df2.write.format("noop").mode("overwrite").save()
-        reps = _MEDIAN_REPS.get(name, 1)
-        samples = []
-        for _ in range(reps):
-            t0 = time.time()
-            run(name)
-            samples.append(time.time() - t0)
-        timings[name] = round(statistics.median(samples), 3)
+        df.write.format("noop").mode("overwrite").save()
+        t0 = time.time()
+        run(spec)
+        timings[name] = round(time.time() - t0, 3)
 
     # B1: UDM projection throughput (BASELINE.md). First run pays JIT +
     # whole-stage-codegen compile for the ~400-expression projection;
     # steady-state (what a long-running cluster job sees) is the warm run.
-    # Fresh session first: after 32 queries x 3 executions the JVM's
+    # Fresh session first: after three executions of every entry the JVM's
     # old gen is full of plan/broadcast state and GC pressure inflated
     # the B1/stream tail up to 2x in full-bench runs — a dedicated
     # ingest job (the thing B1 models) doesn't carry that baggage.
@@ -542,7 +202,7 @@ def main() -> None:
     from chronicle_sniffer_spark.streaming.udm_pipeline import run_udm_stream
 
     stream_samples = []
-    for _ in range(_MEDIAN_REPS["udm_stream_e2e_60k"]):
+    for _ in range(3):
         stream_out = tempfile.mkdtemp(prefix="css_bench_stream_")
         t0 = time.time()
         run_udm_stream(
@@ -564,7 +224,7 @@ def main() -> None:
         "sf": sf,
     }
     # The driver snapshots only the LAST 2000 bytes of stdout
-    # (BENCH_r06.json "tail"), and the full per-query dict is ~4.5 KB —
+    # (BENCH_r06.json "tail"), and the full per-query dict is several KB —
     # so the full line alone can never parse from the tail.  Emit the
     # full record first (and persist it to BENCH_FULL_LATEST.json for
     # the judge), then a SHORT headline line LAST so the tail window

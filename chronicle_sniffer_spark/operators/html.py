@@ -29,8 +29,10 @@ LLM-pipeline surface (SURVEY.md §2B L4, BASELINE.json north star).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from chronicle_sniffer_spark.tables import load_table, spread
 
 # block-level elements whose CLOSE tag ends a text block; the split
 # regex is shared verbatim with the DuckDB oracle
@@ -173,3 +175,110 @@ def html_extract(docs: DataFrame, html_col: str = "html", max_density_pct: int =
         F.coalesce("n_kept", F.lit(0)).cast("int").alias("n_kept"),
         F.coalesce("n_dropped", F.lit(0)).cast("int").alias("n_dropped"),
     )
+
+
+# ---------------------------------------------------------------------------
+# The synthetic HTML page fixture and its DuckDB twin, shared by the
+# html-extraction, WARC-container and crawl entries
+# ---------------------------------------------------------------------------
+
+
+def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Synthetic page table: spread() BEFORE the html construction so
+    the per-row regex work never inherits the single-file scan's one
+    task (the recurring sf1 soak trap, BASELINE.md round-10 notes)."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+    return spread(docs).select("doc_id", F.expr(HTML_PAGE_SQL).alias("html"))
+
+
+# Deterministic page construction, shared VERBATIM between the Spark
+# plan (F.expr) and the DuckDB oracle so the fixture cannot drift.
+# Layout exercises every extraction rule: a <style> and TWO <script>
+# elements (one inside <body>) whose content must not leak; a
+# link-only <nav>; an <h1> with entities that must survive as text
+# ("&lt;draft&gt;" is content, not markup); the document text as a
+# paragraph; a summary paragraph that gains an inline <a> on every
+# 5th doc (low-density → anchor text is KEPT); a link-dense related
+# box and footer (dropped).  Word-salad corpus text contains no '<',
+# so the construction is unambiguous.
+HTML_PAGE_SQL = (
+    "'<html><head><title>Doc ' || CAST(doc_id AS STRING) || ' &amp; notes ["
+    "' || lang || ']</title>'"
+    " || '<style>p { color: #222; }</style>'"
+    " || '<script>var t = \"x-' || CAST(doc_id AS STRING) || '\"; if (1 &lt; 2) { track(); }</script>'"
+    " || '</head><body>'"
+    " || '<nav><a href=\"/\">Home</a> <a href=\"/archive\">Archive</a> <a href=\"/contact\">Contact</a></nav>'"
+    " || '<h1>Doc ' || CAST(doc_id AS STRING) || ' &lt;draft&gt;</h1>'"
+    " || '<script>inline(\"s\", 3 &gt; 2);</script>'"
+    " || '<p>' || text || '</p>'"
+    " || '<p>Summary: ' || substr(text, 1, 80) ||"
+    " CASE WHEN doc_id % 5 = 0"
+    "      THEN ' see <a href=\"/doc/' || CAST(doc_id AS STRING) || '\">related doc '"
+    "           || CAST(doc_id AS STRING) || '</a>'"
+    "      ELSE '' END || '</p>'"
+    " || '<div><a href=\"/t/1\">one</a> <a href=\"/t/2\">two</a> <a href=\"/t/3\">three</a> more</div>'"
+    " || '<footer><a href=\"/tos\">Terms</a> <a href=\"/privacy\">Privacy</a> &amp;copy 2026</footer>'"
+    " || '</body></html>'"
+)
+
+_DENSITY_PCT = 40
+
+# the oracle mirrors operators/html.py step for step; DuckDB
+# regexp_replace needs the explicit 'g' flag (Spark is global by
+# default), and '' '' escapes one quote inside a SQL literal
+_DECODE = (
+    "replace(replace(replace(replace(replace(replace({x},"
+    " '&lt;', '<'), '&gt;', '>'), '&quot;', '\"'), '&#39;', ''''),"
+    " '&nbsp;', ' '), '&amp;', '&')"
+)
+
+
+def _block_cte() -> str:
+    strip_tags = "regexp_replace(block, '<[^>]*>', ' ', 'g')"
+    txt = (
+        "trim(regexp_replace("
+        + _DECODE.format(x=strip_tags)
+        + ", '[ \t\n\r\f]+', ' ', 'g'))"
+    )
+    return f"""
+    WITH pages AS (
+      SELECT doc_id, {HTML_PAGE_SQL} AS html FROM documents
+    ),
+    clean AS (
+      SELECT doc_id,
+             trim(regexp_replace(
+               {_DECODE.format(x="regexp_extract(html, '(?s)<title>(.*?)</title>', 1)")},
+               '[ \t\n\r\f]+', ' ', 'g')) AS title,
+             regexp_replace(regexp_replace(
+               CASE WHEN regexp_matches(html, '(?s)<body[^>]*>.*</body>')
+                    THEN regexp_extract(html, '(?s)<body[^>]*>(.*)</body>', 1)
+                    ELSE html END,
+               '(?s)<script[^>]*>.*?</script>', ' ', 'g'),
+               '(?s)<style[^>]*>.*?</style>', ' ', 'g') AS body
+      FROM pages
+    ),
+    split_parts AS (
+      SELECT doc_id, title,
+             string_split_regex(body, '{BLOCK_CLOSE_RE}') AS parts
+      FROM clean
+    ),
+    blocks AS (
+      SELECT doc_id, title,
+             unnest(generate_series(0, len(parts) - 1)) AS pos,
+             unnest(parts) AS block
+      FROM split_parts
+    ),
+    scored AS (
+      SELECT doc_id, title, pos,
+             {txt} AS text,
+             CAST(length({txt}) AS INTEGER) AS text_len,
+             CAST(coalesce(length(array_to_string(
+               regexp_extract_all(block, '(?s)<a[^>]*>(.*?)</a>', 1), '')), 0) AS INTEGER)
+               AS anchor_len
+      FROM blocks
+    ),
+    nonempty AS (
+      SELECT *, (100 * anchor_len) <= ({_DENSITY_PCT} * text_len) AS kept
+      FROM scored WHERE text_len > 0
+    )
+    """

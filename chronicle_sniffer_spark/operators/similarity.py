@@ -377,3 +377,27 @@ def oracle_bucket_keys_sql() -> str:
         ]
         keys.append(f"('{t}_' || CAST({' + '.join(bits)} AS VARCHAR))")
     return "[" + ", ".join(keys) + "]"
+
+
+# ---------------------------------------------------------------------------
+# The catalog's fixed retrieval query: top-k neighbors of one vector
+# ---------------------------------------------------------------------------
+
+ANN_QUERY_VEC = 0
+ANN_K = 10
+
+# DuckDB oracle of the brute-force cosine top-k (``l3_cosine_topk``),
+# also nested verbatim by the rank-fusion entry
+COSINE_TOPK_ORACLE = """
+    WITH q AS (
+      SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0
+    ), scored AS (
+      SELECT e.vec_id,
+             round(list_cosine_similarity(e.embedding::DOUBLE[], q.qv), 6) AS sim
+      FROM embeddings e, q WHERE e.vec_id <> 0
+    )
+    SELECT vec_id, sim, CAST(rank AS INTEGER) AS rank FROM (
+      SELECT vec_id, sim, row_number() OVER (ORDER BY sim DESC, vec_id) AS rank
+      FROM scored
+    ) WHERE rank <= 10
+    """

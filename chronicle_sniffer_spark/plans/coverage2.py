@@ -20,10 +20,6 @@ from chronicle_sniffer_spark.plans.catalog import (
 from chronicle_sniffer_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "w1b_ranking_variants",
     section="W1",
@@ -39,7 +35,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 )
 def w1b_ranking_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All four ranking functions over one window definition."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 200)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 200)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return o.select(
         "o_custkey",
@@ -61,7 +57,7 @@ def w1b_ranking_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def a5b_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         dsum("l_quantity", "sum_qty"), F.count("*").alias("n")
     )
@@ -77,7 +73,7 @@ def a5b_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def a5c_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     li.createOrReplaceTempView("lineitem")
     return li.sparkSession.sql(
         "SELECT l_returnflag, l_linestatus,"
@@ -101,7 +97,7 @@ def a5c_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p6b_base64_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """base64/unbase64 round-trip (the ref's Pub/Sub envelope decode,
     processor_app.py:120-122) + trim/split."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 100)
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 100)
     b64 = F.base64(F.col("c_name").cast("binary"))
     return c.select(
         "c_custkey",
@@ -127,10 +123,10 @@ def p6b_base64_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def j2c_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: fact⋈part with conditional revenue share —
     the dim side broadcasts, the CASE aggregates map-side."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1995-09-01") & (F.col("l_shipdate") < "1995-10-01")
     )
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     j = li.join(p, li.l_partkey == p.p_partkey)
     promo = F.sum(
         F.when(F.col("p_type").like("PROMO%"), disc_price_dec())
@@ -160,7 +156,7 @@ def j2c_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p9b_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Higher-order array functions: transform, filter, exists,
     aggregate, flatten — all JVM-side lambdas (ref R12/R19 shapes)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     return d.select(
         "doc_id",
@@ -190,7 +186,7 @@ def p10b_map_transforms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ref's `additional` map surface, R21).  The oracle counts through
     JSON keys — DuckDB has no MAP literal path from JSON — so the
     checked values are the map cardinalities and a looked-up value."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     m = F.from_json(F.col("props"), "map<string,string>")
     concat = F.map_concat(m, F.create_map(F.lit("extra"), F.lit("1")))
     return e.select(
@@ -219,14 +215,14 @@ def p10b_map_transforms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def j2b_q5_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5-shaped 6-way join: Catalyst reorders, broadcasts the
     region/nation dims, and AQE picks strategies for the fact joins."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1995-01-01") & (F.col("o_orderdate") < "1996-01-01")
     )
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, o.o_orderkey == li.l_orderkey)

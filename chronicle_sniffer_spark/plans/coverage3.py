@@ -28,10 +28,6 @@ from chronicle_sniffer_spark.plans.catalog import (
 from chronicle_sniffer_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
     for n in names:
         load_table(spark, sf_dir, n).createOrReplaceTempView(n)
@@ -86,8 +82,8 @@ def j4b_q4_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
 def j3b_q13_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: outer join preserved under a two-level
     aggregate (customers with zero orders must appear as c_count=0)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     per_cust = (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy(c.c_custkey)
@@ -238,12 +234,12 @@ def j2d_q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters (returnflag, date) reach the parquet scan; nation
     broadcasts; the final top-k is TakeOrderedAndProject (no global
     sort materialization)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1995-01-01") & (F.col("o_orderdate") < "1995-04-01")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    n = load_table(spark, sf_dir, "nation")
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, o.o_orderkey == li.l_orderkey)
@@ -269,7 +265,7 @@ def j2d_q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def o7_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot with explicit value list — compiles to one map-side
     conditional aggregate (no extra shuffle per pivot column)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     piv = o.groupBy("o_orderpriority").pivot("o_orderstatus", ["F", "O", "P"]).count()
     return piv.select(
         "o_orderpriority",
@@ -296,7 +292,7 @@ def o7_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def o8_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """unpivot/melt: wide measures to (measure, value) rows — a
     narrow map-only transform (no shuffle)."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 100)
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 100)
     return li.unpivot(
         ["l_orderkey", "l_linenumber"],
         ["l_quantity", "l_extendedprice", "l_discount"],
@@ -319,7 +315,7 @@ def p13_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     TABLESAMPLE, so the sampled set is stable across engines, runs,
     and partitionings — the reproducible-subset primitive a training
     pipeline needs for held-out splits."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.filter(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 1) == "0").select(
         "o_orderkey", "o_totalprice"
     )
@@ -339,7 +335,7 @@ def p13_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def w1c_distribution_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """percent_rank / cume_dist: rank-arithmetic doubles, IEEE-identical
     across engines (no float accumulation)."""
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     w = Window.partitionBy("s_nationkey").orderBy("s_acctbal", "s_suppkey")
     return s.select(
         "s_suppkey",
@@ -367,7 +363,7 @@ def a11_min_by_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT key: (acctbal, custkey) — via DECIMAL so Spark's
     truncating double→int cast and DuckDB's rounding one never see a
     fraction; DuckDB's arg_max can't order by a struct."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     key = (
         F.col("c_acctbal").cast("decimal(18,2)") * 100
     ).cast("bigint") * 10000000 + F.col("c_custkey")
@@ -415,7 +411,7 @@ def a7b_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def p6c_string_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit distance + positional split + reverse/repeat — the string
     surface fuzzy matching and feature extraction lean on."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 200)
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 200)
     return c.select(
         "c_custkey",
         F.levenshtein("c_mktsegment", F.lit("BUILDING")).alias("edit_dist"),
@@ -447,7 +443,7 @@ def p7b_calendar_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes datetime64, so a pandas-based hasher (the driver's) sees
     different representations of identical values.  TIMESTAMP maps to
     datetime64 from both engines."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 2000)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 2000)
     return o.select(
         "o_orderkey",
         F.add_months(F.col("o_orderdate"), 3).cast("timestamp").alias("plus3m"),

@@ -39,10 +39,29 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from chronicle_sniffer_spark.plans.catalog import query
+from chronicle_sniffer_spark.operators.dedup import (
+    JACCARD_THRESHOLD,
+    MINHASH_K,
+    _ORACLE_GRAMS_CTE,
+    SHINGLE_LEN,
+    minhash_signatures,
+    shared_pairs_and_labels,
+)
+from chronicle_sniffer_spark.operators.quality import (
+    MAX_SYMBOL_RATIO,
+    MEAN_WL_HI,
+    MEAN_WL_LO,
+    MIN_WORDS,
+    _SPLIT_A,
+    _SPLIT_M,
+    TRAIN_PCT,
+    VAL_PCT,
+)
+from chronicle_sniffer_spark.operators.similarity import ANN_K, ANN_QUERY_VEC, COSINE_TOPK_ORACLE
+from chronicle_sniffer_spark.plans.catalog import query, registry
+from chronicle_sniffer_spark.streaming.sessions import SESSION_GAP_MIN
 from chronicle_sniffer_spark.tables import load_table, session_tmpdir
 
-_t = load_table
 
 # ---------------------------------------------------------------------------
 # L4: BM25 retrieval scoring
@@ -116,7 +135,7 @@ def l4_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserts the quantized values agree and sit far from any rounding
     boundary for every occurring df.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     docs = d.select("doc_id", F.size(F.split("text", " ")).alias("dl"))
     stats = docs.agg(
         F.count("*").alias("n"),
@@ -168,7 +187,6 @@ def _pq_oracle() -> str:
 
     # same query vector / k as the LSH and IVF ANN entries, so the three
     # scale paths are directly comparable
-    from chronicle_sniffer_spark.plans.dedup_sim import ANN_K, ANN_QUERY_VEC
 
     return oracle_pq_sql(ANN_QUERY_VEC, ANN_K)
 
@@ -185,14 +203,12 @@ def l3_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     `oracle_ivf_sql` pattern with the subspace id as an extra group
     key."""
     from chronicle_sniffer_spark.operators.pq import pq_adc_topk
-    from chronicle_sniffer_spark.plans.dedup_sim import ANN_K, ANN_QUERY_VEC
 
-    return pq_adc_topk(_t(spark, sf_dir, "embeddings"), ANN_QUERY_VEC, ANN_K)
+    return pq_adc_topk(load_table(spark, sf_dir, "embeddings"), ANN_QUERY_VEC, ANN_K)
 
 
 def _ivfpq_oracle() -> str:
     from chronicle_sniffer_spark.operators.pq import oracle_ivfpq_sql
-    from chronicle_sniffer_spark.plans.dedup_sim import ANN_K, ANN_QUERY_VEC
 
     return oracle_ivfpq_sql(ANN_QUERY_VEC, ANN_K)
 
@@ -206,9 +222,8 @@ def l3_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     training chains (IVF cells unprefixed, PQ codebooks p-prefixed) in
     one WITH clause over the shared train sample."""
     from chronicle_sniffer_spark.operators.pq import ivfpq_topk
-    from chronicle_sniffer_spark.plans.dedup_sim import ANN_K, ANN_QUERY_VEC
 
-    return ivfpq_topk(_t(spark, sf_dir, "embeddings"), ANN_QUERY_VEC, ANN_K)
+    return ivfpq_topk(load_table(spark, sf_dir, "embeddings"), ANN_QUERY_VEC, ANN_K)
 
 
 # (applicationId, sf_dir) -> index dir: the IVF-PQ index is written
@@ -224,7 +239,7 @@ def _ivfpq_index_dir(spark: SparkSession, sf_dir: str) -> str:
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _IVFPQ_INDEX_CACHE:
         out = session_tmpdir("css_ivfpq_index_")
-        ivfpq_index_write(_t(spark, sf_dir, "embeddings"), out)
+        ivfpq_index_write(load_table(spark, sf_dir, "embeddings"), out)
         _IVFPQ_INDEX_CACHE[key] = out
     return _IVFPQ_INDEX_CACHE[key]
 
@@ -238,9 +253,8 @@ def l3_ann_ivfpq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     just the codes column; same train-then-serve oracle as
     `l3_ann_ivfpq_topk`."""
     from chronicle_sniffer_spark.operators.pq import ivfpq_topk_from_index
-    from chronicle_sniffer_spark.plans.dedup_sim import ANN_K, ANN_QUERY_VEC
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     qv = [
         float(x)
         for x in emb.filter(F.col("vec_id") == ANN_QUERY_VEC).collect()[0].embedding
@@ -271,7 +285,7 @@ def l2_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline through the shared unrolled-Lloyd CTE chain."""
     from chronicle_sniffer_spark.operators.ivf import semantic_dedup
 
-    return semantic_dedup(_t(spark, sf_dir, "embeddings"))
+    return semantic_dedup(load_table(spark, sf_dir, "embeddings"))
 
 
 # ---------------------------------------------------------------------------
@@ -280,11 +294,6 @@ def l2_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _leakage_safe_oracle() -> str:
-    from chronicle_sniffer_spark.plans.dedup_sim import (
-        _ORACLE_GRAMS_CTE,
-        JACCARD_THRESHOLD,
-    )
-    from chronicle_sniffer_spark.plans.quality import _SPLIT_A, _SPLIT_M, TRAIN_PCT, VAL_PCT
 
     return f"""
     WITH RECURSIVE {_ORACLE_GRAMS_CTE},
@@ -331,12 +340,10 @@ def l6_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     split, sharing their exact constants; the oracle nests the
     recursive-CTE reachability closure.  The pair/label computation is
     served from the session-scoped materialization shared with the L2
-    entries (dedup_sim.shared_pairs_and_labels) — computed once per
+    entries (operators.dedup.shared_pairs_and_labels) — computed once per
     session, consumed by three catalog entries."""
-    from chronicle_sniffer_spark.plans.dedup_sim import shared_pairs_and_labels
-    from chronicle_sniffer_spark.plans.quality import _SPLIT_A, _SPLIT_M, TRAIN_PCT, VAL_PCT
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     _, labels = shared_pairs_and_labels(spark, sf_dir)
     labels = labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
@@ -404,7 +411,7 @@ def l6_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage is partition-parallel — this is the plan that survives
     100 TB, unlike the single-task global-window formulation it
     replaced in round 7."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     n_tokens = F.size(F.split("text", " ")).cast("bigint")
     quality = F.round(
         F.length(F.regexp_replace("text", " ", "")) * 1.0 / F.size(F.split("text", " ")),
@@ -506,12 +513,6 @@ def doc_quality_counts(docs: DataFrame) -> DataFrame:
     both ways): C4-gate keeps, drops, and token totals per source.
     One narrow map stage + a source-keyed partial agg — the shape of a
     live ingest-quality dashboard over a crawled corpus."""
-    from chronicle_sniffer_spark.plans.quality import (
-        MAX_SYMBOL_RATIO,
-        MEAN_WL_LO,
-        MEAN_WL_HI,
-        MIN_WORDS,
-    )
 
     n_words = F.size(F.split("text", " "))
     mean_wl = F.round(F.length(F.regexp_replace("text", " ", "")) * 1.0 / n_words, 6)
@@ -532,12 +533,6 @@ def doc_quality_counts(docs: DataFrame) -> DataFrame:
 
 
 def _t10_oracle() -> str:
-    from chronicle_sniffer_spark.plans.quality import (
-        MAX_SYMBOL_RATIO,
-        MEAN_WL_LO,
-        MEAN_WL_HI,
-        MIN_WORDS,
-    )
 
     return f"""
     WITH sig AS (
@@ -567,7 +562,7 @@ def t10_doc_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     source with stream≡batch parity asserted in
     tests/test_coverage5.py — live ingest QA for an LLM corpus, the
     L4 gate lifted onto the T-series runtime."""
-    return doc_quality_counts(_t(spark, sf_dir, "documents"))
+    return doc_quality_counts(load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -607,7 +602,7 @@ def l6_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a full (signal, doc_id) tie-break; the shuffle key is the
     source — at 100 TB a skewed source is handled by the same
     two-stage/salting treatment as any hot-key agg (A10)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     n_words = F.size(F.split("text", " "))
     mwl = F.round(
         F.length(F.regexp_replace("text", " ", "")) * 1.0 / n_words, 6
@@ -656,7 +651,7 @@ def l3_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     and report per-label centroid summaries.  Shuffle key is
     (label, dim) — dimension-parallel, never vector-at-a-time; at
     100 TB this partial-aggregates map-side like any numeric agg."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     ex = e.select(
         "label", F.posexplode(F.col("embedding").cast("array<double>")).alias("idx0", "val")
     )
@@ -683,7 +678,6 @@ INC_MOD = 5  # doc_id % 5 == 0 -> today's "delta" batch; rest -> history
 
 
 def _inc_minhash_cte(name: str, src: str) -> str:
-    from chronicle_sniffer_spark.plans.llm import MINHASH_K, SHINGLE_LEN
 
     hashes = ",\n             ".join(
         f"min(substring(md5(substring(text, t.i, {SHINGLE_LEN})), {1 + 8 * i}, 8)) AS h{i + 1}"
@@ -736,9 +730,8 @@ def l2_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     digest/band tables are a maintained index (bucketed or
     bloom-backed), and the delta side is small — the join prunes to
     delta-sized work."""
-    from chronicle_sniffer_spark.plans.llm import minhash_signatures
 
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = d.filter(F.col("doc_id") % INC_MOD != 0)
     delta = d.filter(F.col("doc_id") % INC_MOD == 0)
     bmd5 = base.select(F.md5(F.col("text").cast("binary")).alias("h")).distinct()
@@ -928,7 +921,7 @@ def l2_fuzzy_title_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound removes the rest of it plus the 7–8 band).  On a
     high-entropy corpus the cost tracks true duplicate density
     instead."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     # repartition BEFORE the pair fan-out: the block join multiplies
     # each probe row into ~|block| candidates, and the pre-join stage
     # inherits the scan's partitioning — a single-file corpus would run
@@ -1047,17 +1040,9 @@ RRF_C = 60  # the standard Cormack/Clarke/Buettcher constant
 
 
 def _rrf_oracle() -> str:
-    # import for its registration side effect: when this module is
-    # imported directly (not through registry()'s ordered submodule
-    # walk), llm.py's entries may not be in REGISTRY yet
-    import chronicle_sniffer_spark.plans.llm  # noqa: F401
-    from chronicle_sniffer_spark.plans.catalog import REGISTRY
-
-    bm25 = REGISTRY["l4_bm25_topk"].oracle
-    cos = REGISTRY["l3_cosine_topk"].oracle
     return f"""
-    WITH bm AS ({bm25}),
-    ann AS ({cos}),
+    WITH bm AS ({_BM25_ORACLE}),
+    ann AS ({COSINE_TOPK_ORACLE}),
     u AS (
       SELECT coalesce(bm.doc_id, ann.vec_id) AS id, bm.rank AS ra, ann.rank AS rb
       FROM bm FULL OUTER JOIN ann ON ann.vec_id = bm.doc_id
@@ -1087,11 +1072,9 @@ def l4_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     then the two-term sum is exact decimal; the join of two top-k
     lists is trivially broadcast at any corpus size (fusion cost is
     O(k), independent of the corpus)."""
-    from chronicle_sniffer_spark.plans.catalog import REGISTRY
-
-    bm = REGISTRY["l4_bm25_topk"].spark_fn(spark, sf_dir).select("doc_id", F.col("rank").alias("ra"))
+    bm = l4_bm25_topk(spark, sf_dir).select("doc_id", F.col("rank").alias("ra"))
     ann = (
-        REGISTRY["l3_cosine_topk"].spark_fn(spark, sf_dir)
+        registry()["l3_cosine_topk"].spark_fn(spark, sf_dir)
         .select("vec_id", F.col("rank").alias("rb"))
     )
     u = bm.join(ann, bm.doc_id == ann.vec_id, "full_outer").select(
@@ -1152,7 +1135,7 @@ def l4_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcastable at this vocabulary, a token-keyed shuffle join at
     web scale.  Same quantized-ln + exact-decimal discipline as the
     unigram entry."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     ws = d.select("doc_id", F.split("text", " ").alias("a"))
     bigrams = F.when(
         F.size("a") >= 2,
@@ -1235,7 +1218,7 @@ def l3_sq8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     only cross-engine channel is a value landing within an ulp of a
     .5 code boundary, the same accepted-improbable class as the ANN
     entries' distance ties."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     ex = e.select(
         "vec_id", F.posexplode(F.col("embedding").cast("array<double>")).alias("idx", "val")
     )
@@ -1310,7 +1293,7 @@ def l4_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject; the ln is a single quantized call on an
     exact integer ratio (both engines compute the identical double
     quotient first)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     ws = d.select("doc_id", F.split("text", " ").alias("a"))
     bigrams = F.when(
         F.size("a") >= 2,
@@ -1362,7 +1345,6 @@ l4_pmi_collocations.__doc__ = l4_pmi_collocations.__doc__.format(k=PMI_TOP_K)
 
 
 def _sq8_ann_oracle() -> str:
-    from chronicle_sniffer_spark.plans.dedup_sim import ANN_K, ANN_QUERY_VEC
 
     return f"""
     WITH ex AS (
@@ -1404,9 +1386,8 @@ def l3_ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization error rather than biasing one side.  Same query
     vector / k as the other ANN entries for direct comparison."""
     from chronicle_sniffer_spark.operators.similarity import cosine
-    from chronicle_sniffer_spark.plans.dedup_sim import ANN_K, ANN_QUERY_VEC
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     ex = e.select(
         "vec_id", F.posexplode(F.col("embedding").cast("array<double>")).alias("idx", "val")
     )
@@ -1480,7 +1461,7 @@ def l4_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     token meet in that token's posting list), never a source×source
     cross join; posting lists are df-bounded by construction since a
     (source, token) pair appears once."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     v = d.select(
         "source", F.explode(F.split("text", " ")).alias("w")
     ).distinct()
@@ -1582,7 +1563,7 @@ def l6_moore_lewis_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     when the true quotient sat on a 6-dp boundary and Spark's
     BigDecimal HALF_UP disagreed with DuckDB's multiply-nearbyint
     (CROSS_SF_r10.json, doc 1676: -0.008116 vs -0.008115)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     words = d.select(
         "doc_id", "lang", F.explode(F.split("text", " ")).alias("w")
     )
@@ -1736,7 +1717,7 @@ def l4_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop step by step."""
     import numpy as np
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     q = vecs.filter(F.col("vec_id") == MMR_QUERY_VEC).collect()[0].v
     qcol = F.array(*[F.lit(x) for x in q])
@@ -1829,7 +1810,7 @@ def l4_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines (the BM25 lesson — JVM and C libm differ in the last
     ulp), per-token surprisal × tf stays in exact DECIMAL, and only
     the final per-doc mean divides as double."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     words = d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
     tf = words.groupBy("doc_id", "w").agg(F.count("*").alias("tf"))
     cnt = words.groupBy("w").agg(F.count("*").alias("cw"))
@@ -1894,7 +1875,7 @@ def l6_weighted_sample_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lehmer hash of doc_id, not an RNG; the ln is quantized (9 dp — the
     priority feeds an order-by, so the quantization only needs to be
     identical, not precise) and the division is single-IEEE."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     u = (((F.col("doc_id") * _ES_A) % _ES_M).cast("double") + 1.0) / float(_ES_M + 1)
     weight = F.size(F.split("text", " ")).cast("double")
     keyed = d.select(
@@ -1950,7 +1931,7 @@ def ts7_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     event scan; at 100 TB exact per-group medians come from the same
     shuffle as any sort-based agg (or approx_percentile when the
     ±ε tradeoff is acceptable)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     med = e.groupBy("event_type").agg(F.percentile("value", F.lit(0.5)).alias("med"))
     dev = e.join(F.broadcast(med), "event_type").select(
         "event_id",
@@ -2008,7 +1989,7 @@ def ts6_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank on (a user suddenly emitting one event type collapses to
     H≈0).  Two key-sized aggregations; per-term −p·ln p is quantized
     then summed as exact decimal (the surprisal discipline)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     c = e.groupBy("user_id", "event_type").agg(F.count("*").alias("c"))
     tot = c.groupBy("user_id").agg(F.sum("c").alias("n"))
     p = F.col("c").cast("double") / F.col("n").cast("double")
@@ -2046,7 +2027,7 @@ def a13_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dashboard backfill shape, with exact decimal value sums and
     the grouping-bit level id distinguishing subtotal rows from NULL
     data."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     y = F.year("ts").alias("y")
     m = F.month("ts").alias("m")
     d = F.dayofmonth("ts").alias("d")
@@ -2116,7 +2097,7 @@ def dq2_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans, so no runtime log call exists on either engine; digit
     extraction goes through the DECIMAL(18,2) string form (identical
     canonical text both engines)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
     digits = o.select(
         F.substring(F.col("o_totalprice").cast("decimal(18,2)").cast("string"), 1, 1)
         .cast("int")
@@ -2211,7 +2192,7 @@ def a11_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one pass for the whole matrix — the textbook map-side-combinable
     formulation; built-in `corr()` gives no cross-engine determinism
     because it accumulates doubles in partition order)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     aggs = [F.count("*").alias("n")]
     # operand precision 18, not 19: Spark's (19,4)x(19,4) product needs
     # precision 39 > 38 and allowPrecisionLoss silently demotes it to
@@ -2295,7 +2276,7 @@ def a12_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     intercept as fixed IEEE chains — grouped regression without ML
     libraries, map-side combinable, deterministic (the built-in
     `regr_slope` accumulates doubles in partition order)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     x = F.col("l_quantity")
     y = F.col("l_extendedprice")
     m = li.groupBy("l_returnflag").agg(
@@ -2367,8 +2348,8 @@ def dq1_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniqueness is count−count(distinct).  At 100 TB this is how
     constraints are actually enforced: as audit queries over the lake,
     not row-by-row triggers."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
 
     def check(name: str, df: DataFrame, violation_col) -> DataFrame:
         return df.agg(
@@ -2456,7 +2437,7 @@ def ts4_zscore_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     order can't matter; mean/variance then use one fixed double
     expression shape on both engines, `sqrt` is IEEE-correctly-rounded,
     and cancellation is clamped with greatest(·, 0)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("event_type")
         .orderBy("ts", "event_id")
@@ -2499,8 +2480,6 @@ ts4_zscore_anomaly.__doc__ = ts4_zscore_anomaly.__doc__.format(f=ZS_FRAME, t=ZS_
 # TS5: batch sessionization (gap-based session assignment)
 # ---------------------------------------------------------------------------
 
-SESSION_GAP_MIN = 30
-
 _SESSIONIZE_ORACLE = f"""
     WITH marked AS (
       SELECT user_id, event_id, ts, value,
@@ -2536,7 +2515,7 @@ def ts5_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals.  The streaming counterpart is the native session window
     (T3, `streaming_queries.t3_session_window`); this is its batch
     twin over ungridded history, shuffle-keyed on user_id only."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_us = SESSION_GAP_MIN * 60 * 1000000
     # ts is TIMESTAMP_NTZ in the parquet; the session is pinned to UTC,
@@ -2693,8 +2672,8 @@ def pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full (node, rq, r) rank table after PR_ITER damped iterations —
     rq is the exact BIGINT pico-rank, r its double rendering; exposed
     separately so tests can assert rank-mass conservation."""
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     edges = (
         o.join(li, o.o_orderkey == li.l_orderkey)
         .select(
@@ -2792,7 +2771,7 @@ def s12_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (and the shape of most raw crawl/log drops before schema-ing).
     Completes the built-in source matrix next to
     parquet/JSON/CSV/ORC/XML/binary."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     out = os.path.join(tempfile.gettempdir(), "css_s12_text_roundtrip")
     d.select(
         F.concat_ws("\t", F.col("doc_id").cast("string"), F.col("text")).alias("value")
@@ -2819,7 +2798,7 @@ def s11_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-parsed is bit-identical).  XML became a first-class built-in
     Spark source in 4.0 (SPARK-44265), with the same
     permissive-mode/schema-on-read semantics as JSON."""
-    s = _t(spark, sf_dir, "supplier").select(
+    s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
     out = os.path.join(tempfile.gettempdir(), "css_s11_xml_roundtrip")

@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from chronicle_sniffer_spark.plans.catalog import query
 from chronicle_sniffer_spark.tables import load_table
 
-_t = load_table
 
 # ---------------------------------------------------------------------------
 # L4: PII scrubbing
@@ -71,7 +70,7 @@ def l4_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     plants deterministic PII in every third document (same expression
     in both engines) — the scrub is then provably non-vacuous: 1/3 of
     rows must report n_emails=1, n_ips=1 and a changed md5."""
-    aug = _t(spark, sf_dir, "documents").select(
+    aug = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(
             F.col("text"),
@@ -136,7 +135,7 @@ def l6_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines select identical rows), seedless, and pure per-row
     arithmetic: no shuffle, no RNG state, products bounded well inside
     BIGINT for any realistic id space."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     u = (F.col("doc_id") * _LEHMER_A) % _LEHMER_M % 1000
     return d.filter(u < F.expr(_rate_case_sql())).select("doc_id", "lang")
 
@@ -177,7 +176,7 @@ def l6_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative sum parallel across sources — there is no global
     ordering anywhere, which is what makes this shape survive 100 TB
     (one shuffle on source for the window, one partial agg)."""
-    d = _t(spark, sf_dir, "documents").select(
+    d = load_table(spark, sf_dir, "documents").select(
         "source", "doc_id", F.size(F.split("text", " ")).alias("n_tok")
     )
     w = (
@@ -227,7 +226,7 @@ def l6_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     equalize source contributions — the bookkeeping step before
     weighted sampling in a data-mixing pipeline.  One groupBy shuffle;
     the corpus total is a single broadcast row (window over ())."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     per = d.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.size(F.split("text", " "))).alias("src_tokens"),

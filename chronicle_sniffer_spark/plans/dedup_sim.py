@@ -12,8 +12,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chronicle_sniffer_spark.operators.dedup import connected_components, ngram_jaccard_pairs
+from chronicle_sniffer_spark.operators.dedup import (
+    JACCARD_THRESHOLD,
+    NGRAM_MAX_DF_PCT,
+    NGRAM_N,
+    _ORACLE_GRAMS_CTE,
+    connected_components,
+    ngram_jaccard_pairs,
+    shared_pairs_and_labels,
+)
 from chronicle_sniffer_spark.operators.similarity import (
+    ANN_K,
+    ANN_QUERY_VEC,
     ann_topk,
     cosine_pairs_adaptive,
     oracle_bucket_keys_sql,
@@ -21,103 +31,10 @@ from chronicle_sniffer_spark.operators.similarity import (
 from chronicle_sniffer_spark.plans.catalog import query
 from chronicle_sniffer_spark.tables import load_table, session_tmpdir
 
-NGRAM_N = 3
-JACCARD_THRESHOLD = 0.5
-NGRAM_MAX_DF_PCT = 20  # prefix df cap = ceil(20% of corpus doc count), corpus-relative
-ANN_QUERY_VEC = 0
-ANN_K = 10
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
 
 def _oracle_grams_cte(rel: str = "documents") -> str:
     """The shingle→candidate→intersection CTE chain over ``rel``."""
     return _ORACLE_GRAMS_CTE.replace("FROM documents)", f"FROM {rel})")
-
-
-_ORACLE_GRAMS_CTE = f"""
-    grams AS (
-      SELECT DISTINCT doc_id, array_to_string(words[i:i+{NGRAM_N - 1}], ' ') AS gram
-      FROM (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-           unnest(generate_series(1, greatest(len(words) - {NGRAM_N - 1}, 1))) AS t(i)
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n_grams FROM grams GROUP BY doc_id),
-    rare AS (
-      SELECT g.doc_id, g.gram FROM grams g
-      JOIN (SELECT gram FROM grams GROUP BY gram
-            HAVING count(*) <= (SELECT (count(*) * {NGRAM_MAX_DF_PCT} + 99) // 100
-                                FROM documents)) r
-        ON g.gram = r.gram
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM rare a JOIN rare b ON a.gram = b.gram AND a.doc_id < b.doc_id
-    ),
-    inter AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS n_inter
-      FROM cand c
-      JOIN grams g1 ON g1.doc_id = c.doc_a
-      JOIN grams g2 ON g2.doc_id = c.doc_b AND g2.gram = g1.gram
-      GROUP BY c.doc_a, c.doc_b
-    )
-"""
-
-
-_PAIR_LABEL_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
-
-def shared_pairs_and_labels(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Session-scoped materialization of the n-gram Jaccard pair set
-    and its connected-component labels over the raw ``documents``
-    table (the module's shared constants).
-
-    Three catalog entries consume the SAME pair generation + component
-    closure — ``l2_ngram_jaccard`` (pairs), ``l2_dedup_clusters``
-    (labels), ``l6_leakage_safe_split`` (labels) — and each used to
-    recompute it from scratch (~35 s of EACH sf1 wall).  This is also
-    the production shape: a dedup run computes the cluster table once
-    and many downstream jobs read it.  First caller in a session pays
-    the computation and writes both tables to parquet under /tmp;
-    every later caller (and every later stage of the same query) reads
-    the parquet back — a scan, not a 7-shuffle recompute.
-
-    The location includes BOTH the sf_dir hash and this session's
-    applicationId: the in-memory cache key is per-session (a fresh
-    session never trusts a stale file from a previous process), and
-    because the path is per-session too, two concurrent processes on
-    the same sf_dir (e.g. bench.py and pytest) each write their own
-    directory instead of one mode("overwrite") clobbering parquet
-    files the other is actively reading.  Directories live under the
-    OS temp dir and are reused for the lifetime of the session.
-    """
-    import hashlib
-    import os
-    import tempfile
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PAIR_LABEL_CACHE:
-        tag = hashlib.md5(
-            f"{sf_dir}|{spark.sparkContext.applicationId}".encode()
-        ).hexdigest()[:12]
-        base = os.path.join(tempfile.gettempdir(), f"css_ngram_pairs_{tag}")
-        pairs_path = os.path.join(base, "pairs")
-        labels_path = os.path.join(base, "labels")
-        pairs = ngram_jaccard_pairs(
-            _t(spark, sf_dir, "documents"),
-            n=NGRAM_N,
-            threshold=JACCARD_THRESHOLD,
-            max_df_pct=NGRAM_MAX_DF_PCT,
-        )
-        pairs.write.mode("overwrite").parquet(pairs_path)
-        pairs = spark.read.parquet(pairs_path)
-        connected_components(pairs).write.mode("overwrite").parquet(labels_path)
-        _PAIR_LABEL_CACHE[key] = (pairs_path, labels_path)
-    pairs_path, labels_path = _PAIR_LABEL_CACHE[key]
-    return spark.read.parquet(pairs_path), spark.read.parquet(labels_path)
 
 
 @query(
@@ -169,7 +86,7 @@ def l2_ngram_df_cap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chronicle_sniffer_spark.operators.dedup import ngram_df_cap_report
 
     return ngram_df_cap_report(
-        _t(spark, sf_dir, "documents"), n=NGRAM_N, max_df_pct=NGRAM_MAX_DF_PCT
+        load_table(spark, sf_dir, "documents"), n=NGRAM_N, max_df_pct=NGRAM_MAX_DF_PCT
     )
 
 
@@ -252,7 +169,7 @@ def l2_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     property worth hash-checking."""
     from chronicle_sniffer_spark.operators.simhash import simhash_pairs
 
-    return simhash_pairs(_t(spark, sf_dir, "documents"))
+    return simhash_pairs(load_table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -301,7 +218,7 @@ def l2_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-vacuous and SF-stable (tests/test_dedup_filters.py asserts
     both at all three SFs).  DuckDB re-derives the identical threshold
     from the same 6-dp sims, so the driver hash-compare stays exact."""
-    return cosine_pairs_adaptive(_t(spark, sf_dir, "embeddings"))
+    return cosine_pairs_adaptive(load_table(spark, sf_dir, "embeddings"))
 
 
 @query(
@@ -335,7 +252,7 @@ def l2_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def l3_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-random-projection LSH ANN: 8 tables × 4 bits, candidates
     from shared buckets, exact cosine on candidates only."""
-    return ann_topk(_t(spark, sf_dir, "embeddings"), ANN_QUERY_VEC, ANN_K)
+    return ann_topk(load_table(spark, sf_dir, "embeddings"), ANN_QUERY_VEC, ANN_K)
 
 
 def _ivf_oracle() -> str:
@@ -357,7 +274,7 @@ def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _IVF_INDEX_CACHE:
         out = session_tmpdir("css_ivf_index_")
-        ivf_index_write(_t(spark, sf_dir, "embeddings"), out)
+        ivf_index_write(load_table(spark, sf_dir, "embeddings"), out)
         _IVF_INDEX_CACHE[key] = out
     return _IVF_INDEX_CACHE[key]
 
@@ -373,7 +290,7 @@ def l3_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning) stay pytest checks in tests/test_ivf.py."""
     from chronicle_sniffer_spark.operators.ivf import ivf_topk
 
-    return ivf_topk(_t(spark, sf_dir, "embeddings"), ANN_QUERY_VEC, ANN_K)
+    return ivf_topk(load_table(spark, sf_dir, "embeddings"), ANN_QUERY_VEC, ANN_K)
 
 
 @query("l3_ann_ivf_index_topk", section="L3", oracle=_ivf_oracle())
@@ -389,7 +306,7 @@ def l3_ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     serve must return exactly what train-inline returns."""
     from chronicle_sniffer_spark.operators.ivf import ivf_topk_from_index
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     qrow = emb.filter(F.col("vec_id") == ANN_QUERY_VEC).select("embedding").collect()
     qv = [float(x) for x in qrow[0][0]]
     return ivf_topk_from_index(
@@ -412,7 +329,7 @@ def _ivf_upserted_index_dir(spark: SparkSession, sf_dir: str) -> str:
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _IVF_UPSERT_CACHE:
         out = session_tmpdir("css_ivf_upsert_")
-        emb = _t(spark, sf_dir, "embeddings")
+        emb = load_table(spark, sf_dir, "embeddings")
         ivf_index_write(emb.filter(F.expr(_IVF_UPSERT_BASE)), out)
         ivf_index_upsert(spark, out, emb.filter(~F.expr(_IVF_UPSERT_BASE)))
         _IVF_UPSERT_CACHE[key] = out
@@ -444,7 +361,7 @@ def l3_ann_ivf_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     monolithic pipeline would."""
     from chronicle_sniffer_spark.operators.ivf import ivf_topk_from_index
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     qrow = emb.filter(F.col("vec_id") == ANN_QUERY_VEC).select("embedding").collect()
     qv = [float(x) for x in qrow[0][0]]
     return ivf_topk_from_index(
@@ -475,7 +392,7 @@ _BPE_RE = " ?[a-z]+| ?[0-9]+| ?[^a-z0-9 ]+| +"
 def l4_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting two ways: whitespace split vs a BPE-style
     pre-tokenizer regex (the unit LLM data pipelines budget by)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(_BPE_RE), 0)).alias(
@@ -501,7 +418,7 @@ def a10_salted_skew_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     on keys×16 salts (operators/skew.py)."""
     from chronicle_sniffer_spark.operators.skew import salted_aggregate
 
-    o = _t(spark, sf_dir, "orders").withColumn(
+    o = load_table(spark, sf_dir, "orders").withColumn(
         "price_dec", F.col("o_totalprice").cast("decimal(18,2)")
     )
     out = salted_aggregate(
@@ -552,7 +469,7 @@ def a10b_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Identical result to the plain join, per the oracle."""
     from chronicle_sniffer_spark.operators.skew import salted_join
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     fact = li.select(
         F.when(F.col("l_orderkey") % 10 < 7, F.lit(0))
         .otherwise(F.col("l_orderkey") % 100)
@@ -562,7 +479,7 @@ def a10b_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_extendedprice",
     )
     dim = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .groupBy((F.col("p_partkey") % 100).alias("hot_key"))
         .agg(F.count("*").alias("dim_n"))
         .hint("shuffle_hash")
@@ -594,7 +511,7 @@ def l5_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/multimodal.py; byte decode is the stubbed step)."""
     from chronicle_sniffer_spark.operators.multimodal import sample_frames, synthesize_media
 
-    return sample_frames(synthesize_media(_t(spark, sf_dir, "documents")), every_ms=200)
+    return sample_frames(synthesize_media(load_table(spark, sf_dir, "documents")), every_ms=200)
 
 
 @query(
@@ -623,7 +540,7 @@ def l5_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     transport, the byte layout, and the f8→f4 rounding end-to-end."""
     from chronicle_sniffer_spark.operators.multimodal import extract_features, synthesize_media
 
-    media = synthesize_media(_t(spark, sf_dir, "documents"))
+    media = synthesize_media(load_table(spark, sf_dir, "documents"))
     feats = extract_features(media, dim=16)
     return feats.select(
         "media_id",
@@ -679,7 +596,7 @@ def l6_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     `kept_docs` CTE so near-dup runs on survivors, not the raw table)."""
     from chronicle_sniffer_spark.operators.dedup import connected_components
 
-    d = _t(spark, sf_dir, "documents").filter(
+    d = load_table(spark, sf_dir, "documents").filter(
         (F.col("lang") == "en") & (F.col("n_chars") >= 100)
     )
     h = d.withColumn("h", F.sha2("text", 256))
@@ -727,7 +644,7 @@ def l5_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_media_encoded,
     )
 
-    return image_stats(synthesize_media_encoded(_t(spark, sf_dir, "documents")))
+    return image_stats(synthesize_media_encoded(load_table(spark, sf_dir, "documents")))
 
 
 @query(
@@ -753,7 +670,7 @@ def l5_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_media_encoded,
     )
 
-    return audio_stats(synthesize_media_encoded(_t(spark, sf_dir, "documents")))
+    return audio_stats(synthesize_media_encoded(load_table(spark, sf_dir, "documents")))
 
 
 @query(
@@ -787,7 +704,7 @@ def l5_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_png_corpus,
     )
 
-    return png_stats(synthesize_png_corpus(_t(spark, sf_dir, "documents")))
+    return png_stats(synthesize_png_corpus(load_table(spark, sf_dir, "documents")))
 
 
 @query(
@@ -816,7 +733,7 @@ def l5_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_jpeg_corpus,
     )
 
-    return jpeg_stats(synthesize_jpeg_corpus(_t(spark, sf_dir, "documents")))
+    return jpeg_stats(synthesize_jpeg_corpus(load_table(spark, sf_dir, "documents")))
 
 
 @query(
@@ -847,7 +764,7 @@ def l5_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_jpeg_color_corpus,
     )
 
-    return jpeg_color_stats(synthesize_jpeg_color_corpus(_t(spark, sf_dir, "documents")))
+    return jpeg_color_stats(synthesize_jpeg_color_corpus(load_table(spark, sf_dir, "documents")))
 
 
 @query(
@@ -874,7 +791,7 @@ def l5_jpeg420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_jpeg420_corpus,
     )
 
-    return jpeg420_stats(synthesize_jpeg420_corpus(_t(spark, sf_dir, "documents")))
+    return jpeg420_stats(synthesize_jpeg420_corpus(load_table(spark, sf_dir, "documents")))
 
 
 @query(
@@ -901,7 +818,7 @@ def l5_mp4_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_media_encoded,
     )
 
-    return mp4_probe_stats(synthesize_media_encoded(_t(spark, sf_dir, "documents")))
+    return mp4_probe_stats(synthesize_media_encoded(load_table(spark, sf_dir, "documents")))
 
 
 @query(
@@ -933,7 +850,7 @@ def l5_gif_anim_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_gif_anim_corpus,
     )
 
-    return gif_anim_stats(synthesize_gif_anim_corpus(_t(spark, sf_dir, "documents")))
+    return gif_anim_stats(synthesize_gif_anim_corpus(load_table(spark, sf_dir, "documents")))
 
 
 @query(
@@ -967,7 +884,7 @@ def l5_ulaw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         ulaw_stats,
     )
 
-    return ulaw_stats(synthesize_ulaw_corpus(_t(spark, sf_dir, "documents")))
+    return ulaw_stats(synthesize_ulaw_corpus(load_table(spark, sf_dir, "documents")))
 
 
 @query(
@@ -1001,7 +918,7 @@ def l5_video_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return video_color_decode_stats(
-        synthesize_mjpeg420_video_corpus(_t(spark, sf_dir, "documents"))
+        synthesize_mjpeg420_video_corpus(load_table(spark, sf_dir, "documents"))
     )
 
 
@@ -1029,7 +946,7 @@ def l5_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthesize_gif_corpus,
     )
 
-    return gif_stats(synthesize_gif_corpus(_t(spark, sf_dir, "documents")))
+    return gif_stats(synthesize_gif_corpus(load_table(spark, sf_dir, "documents")))
 
 
 @query(
@@ -1065,4 +982,4 @@ def l5_video_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         video_decode_stats,
     )
 
-    return video_decode_stats(synthesize_mjpeg_video_corpus(_t(spark, sf_dir, "documents")))
+    return video_decode_stats(synthesize_mjpeg_video_corpus(load_table(spark, sf_dir, "documents")))

@@ -24,10 +24,6 @@ from chronicle_sniffer_spark.plans.catalog import query
 from chronicle_sniffer_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # U-series
 # ---------------------------------------------------------------------------
@@ -35,7 +31,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _ts_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic tshark-format timestamp strings built from orders."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
         F.concat(
@@ -77,7 +73,7 @@ def u3_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """applyInPandas per-user stats == plain SQL aggregation."""
     from chronicle_sniffer_spark.functions.udfs import user_stats_grouped_map
 
-    return user_stats_grouped_map(_t(spark, sf_dir, "events"))
+    return user_stats_grouped_map(load_table(spark, sf_dir, "events"))
 
 
 @query(
@@ -93,7 +89,7 @@ def u4_weighted_avg_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantity-weighted average price via a pandas GROUPED_AGG UDAF."""
     from chronicle_sniffer_spark.functions.udfs import weighted_avg
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(weighted_avg("l_extendedprice", "l_quantity"), 2).alias("wavg_price")
     )
@@ -114,7 +110,7 @@ def u5_udtf_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chronicle_sniffer_spark.functions.udfs import register_udtf
 
     register_udtf(spark)
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     return spark.sql(
         "SELECT s.doc_id, s.pos, s.word FROM documents d,"
         " LATERAL split_words(d.doc_id, d.text) s WHERE d.doc_id < 10"
@@ -134,7 +130,7 @@ def u6_sql_registration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chronicle_sniffer_spark.functions.udfs import register_sql_udfs
 
     register_sql_udfs(spark)
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer")
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(
         "SELECT c_custkey, py_rev_upper(c_mktsegment) AS seg_rev"
         " FROM customer WHERE c_custkey < 50"
@@ -182,7 +178,7 @@ def r27_log_metric_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's log(0) quietly returns null while DuckDB's ln(0) raises —
     a zero-valued metric at sf0.1 is exactly the cross-SF-sweep class
     of divergence (CROSS_SF_r10.json caught it; sf0.01 has no zero)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     logs = ev.select(F.expr(_LOG_LINE_SQL).alias("line"))
     parsed = logs.select(
         F.regexp_extract("line", r"PROCESSING_DURATION_SECONDS: ([0-9.]+)", 1)
@@ -211,7 +207,7 @@ def r27_log_metric_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 def r28_dashboard_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dashboard's ALIGN_RATE / REDUCE_MAX / ALIGN_PERCENTILE_95
     shapes as one 60 s windowed aggregation."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "60 seconds").alias("w"))
         .agg(
@@ -244,7 +240,7 @@ def r28_dashboard_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def l4_lang_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-marker heuristic + punctuation ratio (quality-score
     components; full composite in functions/text.py, golden-tested)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     en_hits = F.size(F.expr("filter(split(text,' '), w -> w IN ('the','and','of','is'))"))
     return d.select(
         "doc_id",
@@ -291,7 +287,7 @@ def l4_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     per token, codegen nibble fold, partial-aggregated vote sums)."""
     from chronicle_sniffer_spark.operators.simhash import simhash_fingerprints
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     fps = simhash_fingerprints(d.select("doc_id", "text"))
     return d.select(
         "doc_id",

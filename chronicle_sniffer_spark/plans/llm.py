@@ -14,21 +14,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from chronicle_sniffer_spark.operators.dedup import MINHASH_K, SHINGLE_LEN, minhash_signatures
+from chronicle_sniffer_spark.operators.similarity import COSINE_TOPK_ORACLE
 from chronicle_sniffer_spark.plans.catalog import query
 from chronicle_sniffer_spark.tables import load_table
-
-# MinHash parameters (seed-fixed, SURVEY §4.3-6): 5-char shingles,
-# 4 hash functions, 2 bands × 2 rows.  The 4 functions are the four
-# 8-hex-char slices of ONE md5 per shingle ("one permutation" style) —
-# 4× fewer hash computations than 4 salted md5s, same LSH banding
-# properties, still engine-portable (DuckDB computes the identical
-# slices).
-SHINGLE_LEN = 5
-MINHASH_K = 4
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -49,7 +38,7 @@ def l1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowest doc_id as representative.  Hash-groupBy (not distinct-on-
     text) so the shuffle key is 16 bytes, not the document body —
     the difference between shuffling 100 TB and shuffling 1.6 TB."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.groupBy(F.md5(F.col("text").cast("binary")).alias("content_hash"))
         .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_copies"))
@@ -60,37 +49,6 @@ def l1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # L2 — MinHash near-dup
 # ---------------------------------------------------------------------------
-
-
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """doc_id → k min-hashes over character shingles (one md5 per
-    shingle, sliced into k sub-hashes).
-
-    Explode is a narrow flatMap; the only shuffle is the groupBy on
-    doc_id (map-side partial min keeps it small).  Deterministic: MD5
-    is engine-independent, no RNG.
-
-    The explode multiplies each doc into ~|text| shingle rows, so the
-    input is repartitioned FIRST: a single-file doc table would
-    otherwise do the entire 1000×-fan-out map stage in one task (the
-    pre-shuffle stage inherits the scan's partitioning — cheap to fix
-    on the 1×-size side, unfixable mid-stage on the 1000× side).
-    """
-    docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, "doc_id")
-    shingles = docs.select(
-        "doc_id",
-        F.explode(
-            F.sequence(F.lit(1), F.greatest(F.length("text") - (SHINGLE_LEN - 1), F.lit(1)))
-        ).alias("pos"),
-        "text",
-    ).select(
-        "doc_id",
-        F.md5(F.substring(F.col("text"), F.col("pos"), SHINGLE_LEN).cast("binary")).alias("h"),
-    )
-    aggs = [
-        F.min(F.substring("h", 1 + 8 * i, 8)).alias(f"h{i+1}") for i in range(MINHASH_K)
-    ]
-    return shingles.groupBy("doc_id").agg(*aggs)
 
 
 def _oracle_minhash_cte() -> str:
@@ -123,7 +81,7 @@ def _oracle_minhash_cte() -> str:
 )
 def l2_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signature + LSH band buckets per document."""
-    sig = minhash_signatures(_t(spark, sf_dir, "documents"))
+    sig = minhash_signatures(load_table(spark, sf_dir, "documents"))
     return sig.select(
         "doc_id",
         F.concat_ws("|", "h1", "h2", "h3", "h4").alias("sig"),
@@ -149,7 +107,7 @@ def l2_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 def l2_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding: docs sharing any band bucket become candidate
     near-dup pairs.  The pair join is per-bucket — never all-pairs."""
-    sig = minhash_signatures(_t(spark, sf_dir, "documents"))
+    sig = minhash_signatures(load_table(spark, sf_dir, "documents"))
     banded = sig.select(
         "doc_id", F.md5(F.concat("h1", "h2").cast("binary")).alias("bucket")
     ).unionByName(
@@ -172,19 +130,7 @@ def l2_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "l3_cosine_topk",
     section="L3",
-    oracle="""
-    WITH q AS (
-      SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0
-    ), scored AS (
-      SELECT e.vec_id,
-             round(list_cosine_similarity(e.embedding::DOUBLE[], q.qv), 6) AS sim
-      FROM embeddings e, q WHERE e.vec_id <> 0
-    )
-    SELECT vec_id, sim, CAST(rank AS INTEGER) AS rank FROM (
-      SELECT vec_id, sim, row_number() OVER (ORDER BY sim DESC, vec_id) AS rank
-      FROM scored
-    ) WHERE rank <= 10
-    """,
+    oracle=COSINE_TOPK_ORACLE,
 )
 def l3_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k for a fixed query vector.
@@ -195,7 +141,7 @@ def l3_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     1 ulp; similarity rounded to 6 dp.  The IVF/LSH scale path lives in
     operators/similarity.py.
     """
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     dbl = F.col("embedding").cast("array<double>")  # codegen array cast, no lambda
     q = e.filter(F.col("vec_id") == 0).select(dbl.alias("qv"))
     scored = (
@@ -256,7 +202,7 @@ def l3_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def l4_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenization + quality-score features (length, stopword ratio)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     stop = F.expr(
         "size(filter(split(text, ' '), w -> w IN ('the','a','of','and','to','in','is')))"
@@ -285,7 +231,7 @@ def l4_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def l4_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus term frequency, top-20 (explode → count; partial
     aggregation makes the shuffle carry only distinct words)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     counts = (
         d.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
         .groupBy("word")
@@ -312,7 +258,7 @@ def l4_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 def l5_content_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary pass-through integrity: content survives the pipeline
     byte-exact (multimodal decode plumbing lives in operators/multimodal)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return d.select("doc_id", F.md5(F.col("text").cast("binary")).alias("content_hash"))
 
 
@@ -342,7 +288,7 @@ def l4_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks can be traced back to their source span.  A narrow
     flatMap (sequence + explode + slice): no shuffle, bounded memory
     per partition, embarrassingly parallel at 100 TB."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", F.split("text", " ").alias("words"))
+    d = load_table(spark, sf_dir, "documents").select("doc_id", F.split("text", " ").alias("words"))
     starts = F.explode(
         F.sequence(
             F.lit(1),
@@ -408,7 +354,7 @@ def l4_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     tg = grams(docs.filter(F.col("doc_id") % 10 != 0))
     bg = grams(docs.filter(F.col("doc_id") % 10 == 0)).select("gram").distinct()
     hit = tg.join(F.broadcast(bg).withColumn("hit", F.lit(1)), "gram", "left")

@@ -57,10 +57,6 @@ from chronicle_sniffer_spark.plans.catalog import query
 from chronicle_sniffer_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # ML1: logistic regression via in-plan full-batch gradient descent
 # ---------------------------------------------------------------------------
@@ -151,7 +147,7 @@ def _featurize(li: DataFrame) -> DataFrame:
 
 
 def _logreg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _featurize(_t(spark, sf_dir, "lineitem"))
+    return _featurize(load_table(spark, sf_dir, "lineitem"))
 
 
 def _z() -> Column:
@@ -277,7 +273,7 @@ def ml2_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     word-count pass no matter the corpus size.  Probabilities are
     plain IEEE divisions of exact counts (correctly rounded, so
     engine-identical); ranking ties break on the word itself."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select("lang", F.explode(F.split(F.col("text"), " ")).alias("word"))
     cw = toks.groupBy("lang", "word").agg(F.count("*").alias("c"))
     ct = toks.groupBy("lang").agg(F.count("*").alias("tw"))
@@ -383,7 +379,7 @@ def ml2b_nb_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     name."""
     from chronicle_sniffer_spark.tables import spread
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     # spread before the token fan-outs: the scoring join + decimal
     # sums are map-side and would otherwise run in the single-file
     # scan's one task (round-6 soak: 6x wall for 10x data; 1.0x after)
@@ -657,7 +653,7 @@ def _km_oracle() -> str:
 
 
 def _km_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.select(
         (F.col("l_discount").cast("double") * F.lit(10.0)).alias("x1"),
         (F.col("l_quantity").cast("double") / F.lit(50.0)).alias("x2"),
@@ -897,7 +893,7 @@ def ml5_gbt_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     (floor·1e6 + DECIMAL) like the GD gradients, so the trained model
     is bit-reproducible and the DuckDB oracle replays both rounds'
     split search exactly (gain ties break toward the lower bin)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     feats = li.select(
         F.col("l_quantity").cast("double").alias("x"),
         (
@@ -1016,7 +1012,7 @@ def dq3_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries no privacy.  Scale shape: noise is a scalar expression on
     the already-aggregated (tiny) group relation — the release adds
     zero distributed work to the underlying count."""
-    g = _t(spark, sf_dir, "orders").groupBy("o_orderpriority").agg(
+    g = load_table(spark, sf_dir, "orders").groupBy("o_orderpriority").agg(
         F.count("*").cast("bigint").alias("n_true")
     )
     u = (

@@ -43,10 +43,6 @@ from chronicle_sniffer_spark.plans.catalog import O_DISC_PRICE, disc_price_dec, 
 from chronicle_sniffer_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # DuckDB CTE text, prepended to every oracle below.
 PARTSUPP_CTE = """
     partsupp AS (
@@ -85,14 +81,14 @@ def derived_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached = _PS_CACHE.get(key)
     if cached is not None:
         return cached
-    n_sup = _t(spark, sf_dir, "supplier").count()
+    n_sup = load_table(spark, sf_dir, "supplier").count()
     if n_sup in _DEGENERATE_SUPPLIER_COUNTS:
         raise ValueError(
             f"supplier count {n_sup} makes the stride-13 ps_suppkey derivation "
             "collide (duplicate (ps_partkey, ps_suppkey) rows); regenerate the "
             "testdata with >= 4 suppliers and S not in {1,2,3,13,26,39}"
         )
-    part = _t(spark, sf_dir, "part").select("p_partkey")
+    part = load_table(spark, sf_dir, "part").select("p_partkey")
     base = part.select(
         F.col("p_partkey").alias("ps_partkey"),
         F.explode(F.expr("sequence(0, 3)")).alias("k"),
@@ -140,10 +136,10 @@ def sq4_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     part' decorrelation (Catalyst rewrites it to an aggregate + join;
     region/nation broadcast)."""
     ps = derived_partsupp(spark, sf_dir)
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name").isin("ASIA", "EUROPE"))
-    p = _t(spark, sf_dir, "part").filter(
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name").isin("ASIA", "EUROPE"))
+    p = load_table(spark, sf_dir, "part").filter(
         F.col("p_size").between(10, 20) & (F.col("p_type") == "ECONOMY")
     )
     qualified = (
@@ -198,11 +194,11 @@ def j2g_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal until the final double cast (both engines subtract the
     same DECIMAL(18,6) values)."""
     ps = derived_partsupp(spark, sf_dir)
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders")
+    n = load_table(spark, sf_dir, "nation")
     cost = (
         F.col("ps_supplycost") * F.col("l_quantity").cast("decimal(18,2)")
     ).cast("decimal(18,6)")
@@ -243,8 +239,8 @@ def a9c_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole-table aggregate broadcasts back as a 1-row crossJoin
     (no collect; the decimal products keep both engines exact)."""
     ps = derived_partsupp(spark, sf_dir)
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_2")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_2")
     joined = (
         ps.join(s, ps.ps_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
@@ -280,12 +276,12 @@ def a2b_q16_supplier_part_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the comment-complaints filter the reduced schema lacks) +
     count(DISTINCT) over a three-column grouping."""
     ps = derived_partsupp(spark, sf_dir)
-    p = _t(spark, sf_dir, "part").filter(
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & ~F.col("p_type").like("PROMO%")
         & F.col("p_size").isin(1, 4, 7, 10, 13, 16, 19, 22)
     )
-    bad = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
+    bad = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
     return (
         ps.join(F.broadcast(bad), ps.ps_suppkey == bad.s_suppkey, "left_anti")
         .join(p, F.col("ps_partkey") == p.p_partkey)
@@ -322,8 +318,12 @@ def j4c_q20_excess_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered, matching SQL semantics), then a semi join into
     supplier."""
     ps = derived_partsupp(spark, sf_dir)
-    small = _t(spark, sf_dir, "part").filter(F.col("p_name").like("small%")).select("p_partkey")
-    li = _t(spark, sf_dir, "lineitem").filter(
+    small = (
+        load_table(spark, sf_dir, "part")
+        .filter(F.col("p_name").like("small%"))
+        .select("p_partkey")
+    )
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
     )
     shipped = li.groupBy("l_partkey", "l_suppkey").agg(
@@ -341,8 +341,8 @@ def j4c_q20_excess_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("ps_suppkey")
         .distinct()
     )
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_1")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_1")
     return (
         s.join(excess, s.s_suppkey == excess.ps_suppkey, "left_semi")
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey, "left_semi")

@@ -27,10 +27,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from chronicle_sniffer_spark.operators.quality import (
+    MAX_SYMBOL_RATIO,
+    MEAN_WL_HI,
+    MEAN_WL_LO,
+    MIN_WORDS,
+    _SPLIT_A,
+    _SPLIT_M,
+    TRAIN_PCT,
+    VAL_PCT,
+)
 from chronicle_sniffer_spark.plans.catalog import query
 from chronicle_sniffer_spark.tables import load_table
 
-_t = load_table
 
 # ---------------------------------------------------------------------------
 # L4: Gopher-style repetition signals (word level)
@@ -63,7 +72,7 @@ def l4_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     to (doc_id, word), count, then collapse to doc_id — where both
     shuffle keys are id/token-sized and partial aggregation combines
     map-side, so the document bodies themselves never shuffle."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     words = d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
     wc = words.groupBy("doc_id", "w").agg(F.count("*").alias("c"))
     return wc.groupBy("doc_id").agg(
@@ -106,7 +115,7 @@ def l4_top_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Project out of codegen); the size guard keeps 1-word docs from
     minting bogus pairs — DuckDB's generate_series(1,0) is empty, and
     explode-of-empty drops the row identically in both engines."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     ws = d.select("doc_id", F.split("text", " ").alias("a"))
     bigrams = F.when(
         F.size("a") >= 2,
@@ -129,10 +138,6 @@ def l4_top_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # L4: C4-style quality gate
 # ---------------------------------------------------------------------------
-
-MIN_WORDS = 50
-MEAN_WL_LO, MEAN_WL_HI = 3.0, 10.0
-MAX_SYMBOL_RATIO = 0.1
 
 
 @query(
@@ -162,7 +167,7 @@ def l4_c4_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure per-row expressions — no shuffle, scan-pruned to (doc_id,
     text) — so at 100 TB this is a narrow map stage that rides along
     with the parquet scan."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     n_words = F.size(F.split("text", " "))
     mean_wl = F.round(F.length(F.regexp_replace("text", " ", "")) * 1.0 / n_words, 6)
     sym = F.round(
@@ -185,9 +190,6 @@ def l4_c4_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # L6: hash-based train/val/test split
 # ---------------------------------------------------------------------------
-
-_SPLIT_A, _SPLIT_M = 16807, 2147483647  # Lehmer multiplier != sampling's 48271
-TRAIN_PCT, VAL_PCT = 80, 10
 
 
 @query(
@@ -215,7 +217,7 @@ def l6_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats.  The split assignment is stateless per-row arithmetic —
     re-runs, engines, and cluster topologies all agree — and the only
     shuffle is the tiny stats groupBy."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     bucket = (F.col("doc_id") * _SPLIT_A) % _SPLIT_M % 100
     split_name = (
         F.when(bucket < TRAIN_PCT, "train")
@@ -262,7 +264,7 @@ def l6_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard from its first nibble.  At 100 TB the writer range-partitions
     on shuffle_key and sorts within partitions — a global ORDER
     without a global window; no row_number anywhere."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     key = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":42")))
     return d.select("doc_id", key.alias("shuffle_key")).select(
         "doc_id",
@@ -310,7 +312,7 @@ def l4_url_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast LEFT ANTI join, and survivors aggregate per domain.  The
     blocklist is the small side by construction — broadcast, never
     shuffled."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     aug = d.select(
         "doc_id",
         F.concat(
@@ -366,7 +368,7 @@ def o9_cdc_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the standard log-compaction shape: shuffle once
     on the key, per-partition heap — never a self-join against the
     history."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     changes = o.select(
         "o_orderkey",
         "o_orderstatus",
@@ -420,7 +422,7 @@ def s8_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows insert.  The scale shape is a single co-partitioned join on
     the merge key; with a bucketed base table the shuffle drops to the
     delta side only (tests/test_bucketing.py shows that layout)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     updates = o.filter(F.col("o_orderkey") % 7 == 0).select(
         "o_orderkey",
         F.lit("P").alias("new_status"),
@@ -490,7 +492,7 @@ def l4_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking window — all shuffle keys are tokens or doc ids."""
     from chronicle_sniffer_spark.tables import spread
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     # spread before the token fan-out (single-row-group scan -> one
     # map task otherwise; no-op on a many-split source)
     words = spread(d.select("doc_id", "text")).select(
@@ -567,7 +569,7 @@ def l4_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # spread before the span fan-out + md5: map-side work that would
     # otherwise run in the single-row-group scan's one task
-    d = spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
     spans = (
         d.select("doc_id", F.explode(F.expr(ngram_zip_expr(SPAN_N))).alias("z"))
         .select("doc_id", F.md5(ngram_gram_col(SPAN_N)).alias("h"))

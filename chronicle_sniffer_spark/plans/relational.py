@@ -40,10 +40,6 @@ from chronicle_sniffer_spark.plans.catalog import (
 from chronicle_sniffer_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # P — projection / filter / scalar expressions
 # ---------------------------------------------------------------------------
@@ -57,7 +53,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def p1_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column projection + rename (SURVEY §2B P1; generalizes ref layer
     projection json2udm_cloud.py:113-124)."""
-    return _t(spark, sf_dir, "lineitem").select(
+    return load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("ok"),
         F.col("l_linenumber").alias("ln"),
         F.col("l_quantity").alias("qty"),
@@ -80,7 +76,7 @@ def p3_filter_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6-shaped predicate filter; filters push to the parquet scan."""
     from chronicle_sniffer_spark.plans.catalog import money2
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.filter(
         F.col("l_shipdate").between("1996-01-01", "1996-12-31 00:00:00")
         & F.col("l_discount").between(0.05, 0.07)
@@ -106,7 +102,7 @@ def p3_filter_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p4_case_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional expression (when/otherwise chain, ref R15-R17)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
         F.when(F.col("o_totalprice") > 100000, "big")
@@ -130,7 +126,7 @@ def p4_case_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p5_casts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Casts & try-casts (ref R16 string→int coercions)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -158,7 +154,7 @@ def p5_casts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p6_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String function battery (ref R7/R13/R24 string handling)."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return c.select(
         "c_custkey",
         F.upper(F.substring("c_name", 1, 8)).alias("name_pfx"),
@@ -187,7 +183,7 @@ def p6_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p7_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time functions (ref R13 timestamp handling, R25 latency)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
         F.year("o_orderdate").alias("yr"),
@@ -221,7 +217,7 @@ def p8_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     Transcendentals are rounded in-query to 6 dp so last-ulp libm
     differences between JVM and C++ can never flip the oracle hash.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -246,7 +242,7 @@ def p8_math(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p9_explode_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array generate + explode (ref R12/R19 multi-valued extraction)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_orderkey") < 100)
         .select("l_orderkey", F.explode(F.sequence(F.lit(1), F.col("l_linenumber"))).alias("i"))
@@ -268,7 +264,7 @@ def p9_explode_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p9_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array transform/filter/sort/slice battery over document tokens."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     return d.select(
         "doc_id",
@@ -292,7 +288,7 @@ def p9_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p10_maps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map functions over JSON-parsed props (ref R21 additional-map)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     m = F.from_json(F.col("props"), "map<string,string>")
     return e.select(
         "event_id",
@@ -313,7 +309,7 @@ def p10_maps(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p11_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON path extraction (ref R10/R24 JSON in/out)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return e.select(
         "event_id",
         F.get_json_object("props", "$.k").alias("k_val"),
@@ -333,7 +329,7 @@ def p11_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def p12_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null handling (ref R13 fallbacks, R21 null pruning)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
         F.coalesce(F.nullif(F.col("o_orderpriority"), F.lit("1-URGENT")), F.lit("OTHER")).alias(
@@ -360,8 +356,8 @@ def p12_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
 def j1_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inner equi-join with explicit broadcast of the dimension side —
     at 100 TB the customer scan never shuffles for this join."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     return (
         c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey, "inner")
         .groupBy("n_name")
@@ -386,9 +382,9 @@ def j1_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 def j2_q3_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3-shaped 3-way join; AQE picks broadcast for the filtered
     customer side at small SF and sort-merge at scale."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1997-01-01")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1997-01-01 00:00:00")
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1997-01-01")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1997-01-01 00:00:00")
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, o.o_orderkey == li.l_orderkey)
@@ -408,8 +404,8 @@ def j2_q3_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j3_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join + null filter: customers with no orders."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .filter(F.col("o_orderkey").isNull())
@@ -429,8 +425,8 @@ def j3_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j3_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join, summarized (row count + dangling-side counts)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     j = c.join(o, c.c_custkey == o.o_custkey, "full")
     return j.agg(
         F.count("*").alias("n_rows"),
@@ -449,8 +445,8 @@ def j3_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j4_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join (EXISTS) — mirrors ref processed-set membership (R4)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").agg(F.count("*").alias("n"))
 
 
@@ -465,8 +461,8 @@ def j4_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j5_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join (NOT EXISTS) — mirrors ref closed-file anti-filter (R3)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").agg(F.count("*").alias("n"))
 
 
@@ -482,8 +478,8 @@ def j5_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 def j6_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi + theta residual join (equi key keeps it shuffle-hash-able;
     the range predicate is a post-join filter, not a nested loop)."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     return o.join(
         li, (o.o_orderkey == li.l_orderkey) & (li.l_shipdate > o.o_orderdate)
     ).agg(F.count("*").alias("n"))
@@ -496,8 +492,8 @@ def j6_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j7_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded cross join (dims only — never fact×fact)."""
-    r = _t(spark, sf_dir, "region")
-    n = _t(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region")
+    n = load_table(spark, sf_dir, "nation")
     return r.crossJoin(n).agg(F.count("*").alias("n"))
 
 
@@ -524,7 +520,7 @@ def j8_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate join, and it streams under watermark at 100 TB.
     (DuckDB oracle uses its native ASOF LEFT JOIN.)
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     purchases = e.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     clicks = (
         e.filter(F.col("event_type") == "click")
@@ -575,8 +571,8 @@ def j8_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def j9_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval-overlap join (range predicate riding an equi key)."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     cond = (
         (o.o_orderkey == li.l_orderkey)
         & (li.l_shipdate >= o.o_orderdate)
@@ -611,7 +607,7 @@ def j9_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a1_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape — the flagship multi-measure hash aggregate
     (generalizes ref per-file counters, json2udm_cloud.py:325-348)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= "1998-09-02 00:00:00")
         .groupBy("l_returnflag", "l_linestatus")
@@ -638,7 +634,7 @@ def a1_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def a2_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.agg(
         F.countDistinct("o_custkey").alias("n_cust"),
         F.countDistinct("o_orderpriority").alias("n_prio"),
@@ -654,7 +650,7 @@ def a3_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL++ approx distinct, self-checked against the exact count to 5%
     (sketches differ between engines, so the oracle checks the tolerance
     flag rather than the raw estimate)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     agg = li.agg(
         F.countDistinct("l_partkey").alias("exact"),
         F.approx_count_distinct("l_partkey", rsd=0.02).alias("approx"),
@@ -679,7 +675,7 @@ def a4_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (generalizes ref latency p95, R27/R28).
     Rounded to 4 dp: both engines interpolate the same two order
     statistics but may associate the lerp differently."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.round(F.expr("percentile(l_extendedprice, 0.5)"), 4).alias("p50"),
         F.round(F.expr("percentile(l_extendedprice, 0.95)"), 4).alias("p95"),
@@ -696,7 +692,7 @@ def a4_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def a5_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         dsum("l_quantity", "sum_qty"), F.count("*").alias("n")
     )
@@ -714,7 +710,7 @@ def a5_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a6_filtered_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional aggregation — the ref error-rate pattern (R23)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     is_f = F.col("o_orderstatus") == "F"
     return o.agg(
         F.count(F.when(is_f, 1)).alias("n_f"),
@@ -734,7 +730,7 @@ def a6_filtered_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a7_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """collect_set canonicalized (sorted, joined) for determinism."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.groupBy("o_custkey").agg(
         F.array_join(F.sort_array(F.collect_set("o_orderpriority")), ",").alias("prios")
     )
@@ -752,7 +748,7 @@ def a7_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a8_exp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponential histogram bucketing — mirrors the ref's log-based
     latency distribution (growth 1.5, terraform/main.tf:540-547)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     bucket = F.floor(F.log("l_extendedprice") / F.log(F.lit(1.5))).alias("bucket")
     return li.groupBy(bucket).agg(F.count("*").alias("n"))
 
@@ -766,7 +762,7 @@ def a8_exp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def a9_having(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.groupBy("o_custkey").agg(F.count("*").alias("n_orders")).filter(
         F.col("n_orders") > 12
     )
@@ -791,7 +787,7 @@ def a9_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 def w1_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k per group via ranking window (O3); Spark pushes the rn<=3
     filter into a per-partition top-k (WindowGroupLimit)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return (
         o.withColumn("rn", F.row_number().over(w))
@@ -813,7 +809,7 @@ def w1_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def w2_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return o.select(
         "o_custkey",
@@ -837,7 +833,7 @@ def w2_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w3_moving_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Moving-frame sum (decimal-exact so frame association can't drift)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-2, 0)
     return e.select(
         "user_id",
@@ -858,7 +854,7 @@ def w3_moving_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def w4_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -887,7 +883,7 @@ def w4_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 def o1_sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k: Spark plans TakeOrderedAndProject (per-partition
     heap + driver merge), never a full sort at scale."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
         .select("o_orderkey", "o_totalprice")
@@ -901,7 +897,7 @@ def o1_sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT o_orderkey FROM orders ORDER BY o_orderkey LIMIT 5 OFFSET 10",
 )
 def o2_limit_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.orderBy("o_orderkey").select("o_orderkey").offset(10).limit(5)
 
 
@@ -915,8 +911,8 @@ def o2_limit_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def o4_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.union(s).distinct()
 
 
@@ -930,8 +926,8 @@ def o4_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def o5_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.subtract(s)  # EXCEPT (distinct) semantics, unlike exceptAll
 
 
@@ -945,8 +941,8 @@ def o5_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def o5_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.intersect(s)
 
 
@@ -956,4 +952,4 @@ def o5_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT DISTINCT o_orderpriority FROM orders",
 )
 def o6_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir, "orders").select("o_orderpriority").distinct()
+    return load_table(spark, sf_dir, "orders").select("o_orderpriority").distinct()

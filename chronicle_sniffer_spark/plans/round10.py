@@ -47,10 +47,6 @@ from chronicle_sniffer_spark.plans.catalog import query
 from chronicle_sniffer_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # L4: full BPE encode with a trained merge list
 # ---------------------------------------------------------------------------
@@ -150,7 +146,7 @@ def l4_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread(): the single-file documents scan is ONE task, and the
     # replace chain is pure per-row CPU — serialized it measured 9.2 s
     # at sf1 (SCALE_r10); at 100 TB the corpus arrives pre-split
-    return spread(_t(spark, sf_dir, "documents")).select(
+    return spread(load_table(spark, sf_dir, "documents")).select(
         "doc_id",
         F.size(F.split(enc_trim, " +")).cast("int").alias("n_bpe_tokens"),
         F.md5(F.regexp_replace(enc_trim, " +", " ").cast("binary")).alias("enc_md5"),
@@ -239,7 +235,7 @@ def ml19_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     with map-side partials, a ≤{nb}-row window for totals — at 100 TB
     the only full-data pass is the bucketed count, shuffling
     {nb} rows per partition."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     stats = ev.agg(F.min("value").alias("vmin"), F.max("value").alias("vmax"))
     nb = PSI_BUCKETS
     bucketed = ev.crossJoin(F.broadcast(stats)).select(
@@ -346,7 +342,7 @@ def dq13_fd_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (column pruning does the rest) and shuffles key-level rows only."""
     outs = []
     for name, table, lhs, rhs in FD_CLAIMS:
-        t = _t(spark, sf_dir, table)
+        t = load_table(spark, sf_dir, table)
         keys = t.groupBy(lhs).agg(F.countDistinct(rhs).alias("nd"))
         outs.append(
             keys.agg(
@@ -414,7 +410,7 @@ def ml21_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     ×2 (1,0) → (28,0), + (11,0) → (29,0).
     Singleton categories yield NULL (no peer evidence) rather than a
     leaked self-mean."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     g = o.groupBy("o_orderpriority").agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("s"),
         F.count("*").alias("n"),
@@ -508,7 +504,7 @@ def ts18_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit-accepted), a 7-row seasonal aggregate broadcast back.  At
     100 TB only the daily rollup touches full data."""
     hw = TS18_HALF_WIN
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.select(
             F.date_format("ts", "yyyy-MM-dd").alias("d"),
@@ -678,8 +674,8 @@ def _lpa_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected trade-graph edges, hash-partitioned by the receiving
     endpoint so every per-round aggregation is exchange-free (the
     caller caches)."""
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     pair = o.join(li, o.o_orderkey == li.l_orderkey).select(
         (F.lit(2) * F.col("o_custkey")).alias("src"),
         (F.lit(2) * F.col("l_suppkey") + 1).alias("dst"),
@@ -795,7 +791,7 @@ def l3_sparse_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back onto candidate scores; TakeOrderedAndProject
     finishes top-k.  At 100 TB the posting table is the classic
     shardable inverted index and the query side stays KB-sized."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tf = (
         d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
         .groupBy("doc_id", "w")
@@ -911,7 +907,7 @@ def g10_cosupply_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the k ≤ items-per-order bound keeps the fan-out linear in
     input."""
     per_order = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_suppkey")
         .groupBy("l_orderkey")
         .agg(F.collect_set("l_suppkey").alias("supps"))
@@ -973,7 +969,7 @@ def ts20_outage_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ts, event_id) — the deterministic total order — then a filter;
     a single shuffle on the partition key, no joins.  Gap seconds are
     exact integer timestamp arithmetic on both engines."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1080,7 +1076,7 @@ def ml16_ols_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is a single scan producing 9 numbers; for p
     features it is p(p+3)/2 measures and a driver-side (or in-plan,
     as here for p=2) solve."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     q = F.col("l_quantity").cast("decimal(18,2)")
     d = F.col("l_discount").cast("decimal(18,2)")
     y = F.col("l_extendedprice").cast("decimal(18,2)")
@@ -1183,10 +1179,10 @@ def dq14_ri_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         by_child.setdefault(child, []).append((name, fk, parent, pk))
     outs = []
     for child, claims in by_child.items():
-        j = _t(spark, sf_dir, child)
+        j = load_table(spark, sf_dir, child)
         for i, (_, fk, parent, pk) in enumerate(claims):
             p = (
-                _t(spark, sf_dir, parent)
+                load_table(spark, sf_dir, parent)
                 .select(F.col(pk).alias(f"pk{i}"))
                 .distinct()
             )
@@ -1273,7 +1269,7 @@ def j19_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     per left event, exact integer staleness.  Mirrors DuckDB's
     grouped max_by over the range-joined pairs — same (ts, value)
     lexicographic tie-break on simultaneous purchases."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     a = ev.filter(F.col("event_type") == "view").select(
         "event_id", "user_id", "ts", "value"
     )

@@ -22,120 +22,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chronicle_sniffer_spark.operators.html import (
-    BLOCK_CLOSE_RE,
+    _DENSITY_PCT,
+    _block_cte,
+    _pages,
     html_blocks,
     html_extract,
 )
+from chronicle_sniffer_spark.operators.sketches import _LEHMER_A, _LEHMER_M, KMV_K, _kmv_ranked
 from chronicle_sniffer_spark.plans.catalog import query
 from chronicle_sniffer_spark.tables import load_table, spread
-
-_t = load_table
-
-
-def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthetic page table: spread() BEFORE the html construction so
-    the per-row regex work never inherits the single-file scan's one
-    task (the recurring sf1 soak trap, BASELINE.md round-10 notes)."""
-    return spread(_t(spark, sf_dir, "documents").select("doc_id", "lang", "text")).select(
-        "doc_id", F.expr(HTML_PAGE_SQL).alias("html")
-    )
 
 # ---------------------------------------------------------------------------
 # L4: HTML → text extraction
 # ---------------------------------------------------------------------------
-
-# Deterministic page construction, shared VERBATIM between the Spark
-# plan (F.expr) and the DuckDB oracle so the fixture cannot drift.
-# Layout exercises every extraction rule: a <style> and TWO <script>
-# elements (one inside <body>) whose content must not leak; a
-# link-only <nav>; an <h1> with entities that must survive as text
-# ("&lt;draft&gt;" is content, not markup); the document text as a
-# paragraph; a summary paragraph that gains an inline <a> on every
-# 5th doc (low-density → anchor text is KEPT); a link-dense related
-# box and footer (dropped).  Word-salad corpus text contains no '<',
-# so the construction is unambiguous.
-HTML_PAGE_SQL = (
-    "'<html><head><title>Doc ' || CAST(doc_id AS STRING) || ' &amp; notes ["
-    "' || lang || ']</title>'"
-    " || '<style>p { color: #222; }</style>'"
-    " || '<script>var t = \"x-' || CAST(doc_id AS STRING) || '\"; if (1 &lt; 2) { track(); }</script>'"
-    " || '</head><body>'"
-    " || '<nav><a href=\"/\">Home</a> <a href=\"/archive\">Archive</a> <a href=\"/contact\">Contact</a></nav>'"
-    " || '<h1>Doc ' || CAST(doc_id AS STRING) || ' &lt;draft&gt;</h1>'"
-    " || '<script>inline(\"s\", 3 &gt; 2);</script>'"
-    " || '<p>' || text || '</p>'"
-    " || '<p>Summary: ' || substr(text, 1, 80) ||"
-    " CASE WHEN doc_id % 5 = 0"
-    "      THEN ' see <a href=\"/doc/' || CAST(doc_id AS STRING) || '\">related doc '"
-    "           || CAST(doc_id AS STRING) || '</a>'"
-    "      ELSE '' END || '</p>'"
-    " || '<div><a href=\"/t/1\">one</a> <a href=\"/t/2\">two</a> <a href=\"/t/3\">three</a> more</div>'"
-    " || '<footer><a href=\"/tos\">Terms</a> <a href=\"/privacy\">Privacy</a> &amp;copy 2026</footer>'"
-    " || '</body></html>'"
-)
-
-_DENSITY_PCT = 40
-
-# the oracle mirrors operators/html.py step for step; DuckDB
-# regexp_replace needs the explicit 'g' flag (Spark is global by
-# default), and '' '' escapes one quote inside a SQL literal
-_DECODE = (
-    "replace(replace(replace(replace(replace(replace({x},"
-    " '&lt;', '<'), '&gt;', '>'), '&quot;', '\"'), '&#39;', ''''),"
-    " '&nbsp;', ' '), '&amp;', '&')"
-)
-
-
-def _block_cte() -> str:
-    strip_tags = "regexp_replace(block, '<[^>]*>', ' ', 'g')"
-    txt = (
-        "trim(regexp_replace("
-        + _DECODE.format(x=strip_tags)
-        + ", '[ \t\n\r\f]+', ' ', 'g'))"
-    )
-    return f"""
-    WITH pages AS (
-      SELECT doc_id, {HTML_PAGE_SQL} AS html FROM documents
-    ),
-    clean AS (
-      SELECT doc_id,
-             trim(regexp_replace(
-               {_DECODE.format(x="regexp_extract(html, '(?s)<title>(.*?)</title>', 1)")},
-               '[ \t\n\r\f]+', ' ', 'g')) AS title,
-             regexp_replace(regexp_replace(
-               CASE WHEN regexp_matches(html, '(?s)<body[^>]*>.*</body>')
-                    THEN regexp_extract(html, '(?s)<body[^>]*>(.*)</body>', 1)
-                    ELSE html END,
-               '(?s)<script[^>]*>.*?</script>', ' ', 'g'),
-               '(?s)<style[^>]*>.*?</style>', ' ', 'g') AS body
-      FROM pages
-    ),
-    split_parts AS (
-      SELECT doc_id, title,
-             string_split_regex(body, '{BLOCK_CLOSE_RE}') AS parts
-      FROM clean
-    ),
-    blocks AS (
-      SELECT doc_id, title,
-             unnest(generate_series(0, len(parts) - 1)) AS pos,
-             unnest(parts) AS block
-      FROM split_parts
-    ),
-    scored AS (
-      SELECT doc_id, title, pos,
-             {txt} AS text,
-             CAST(length({txt}) AS INTEGER) AS text_len,
-             CAST(coalesce(length(array_to_string(
-               regexp_extract_all(block, '(?s)<a[^>]*>(.*?)</a>', 1), '')), 0) AS INTEGER)
-               AS anchor_len
-      FROM blocks
-    ),
-    nonempty AS (
-      SELECT *, (100 * anchor_len) <= ({_DENSITY_PCT} * text_len) AS kept
-      FROM scored WHERE text_len > 0
-    )
-    """
-
 
 @query(
     "l4_html_blocks",
@@ -201,7 +100,6 @@ def l4_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 KFOLD_K = 5
-_LEHMER_A, _LEHMER_M = 48271, 2147483647
 
 _ML22_ORACLE = f"""
     WITH r AS (
@@ -251,7 +149,7 @@ def ml22_kfold_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the integer half-away idiom ((2·cents·10⁴ + den) div (2·den)),
     so there is no cross-engine rounding channel anywhere.  Folds with
     the whole category (n_c = n_f) encode NULL rather than leak."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
         F.expr(
@@ -404,7 +302,7 @@ def ts22_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows(uid, n, l, b, seas), columns=_COLS)
 
     return (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .select("user_id", "ts", "event_id", "value")
         .repartition("user_id")
         .sortWithinPartitions("user_id", "ts", "event_id")
@@ -418,8 +316,6 @@ def ts22_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # A24: KMV (k-minimum-values) distinct-count sketch
 # ---------------------------------------------------------------------------
-
-KMV_K = 64
 
 _A24_ORACLE = f"""
     WITH d AS (
@@ -444,35 +340,6 @@ _A24_ORACLE = f"""
     FROM ex LEFT JOIN (SELECT * FROM ranked WHERE rn = {KMV_K}) r
       USING (o_orderpriority)
 """
-
-
-def _kmv_ranked(spark: SparkSession, sf_dir: str):
-    """Shared KMV sketch pipeline: hashed keys → per-batch pre-shuffle
-    K-minima cap (mapInPandas at the scan edge) → dedup →
-    window-ranked minima.  Returns (hashed base, ranked minima)."""
-    base = _t(spark, sf_dir, "orders").select(
-        "o_orderpriority",
-        ((F.col("o_custkey") * _LEHMER_A) % _LEHMER_M).alias("h"),
-    )
-
-    def _kmv_partial(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            yield (
-                pdf.drop_duplicates()
-                .sort_values("h", kind="mergesort")
-                .groupby("o_orderpriority", sort=False)
-                .head(KMV_K)
-            )
-
-    capped = base.mapInPandas(_kmv_partial, "o_orderpriority string, h bigint")
-    from pyspark.sql import Window
-
-    ranked = capped.distinct().withColumn(
-        "rn", F.row_number().over(Window.partitionBy("o_orderpriority").orderBy("h"))
-    )
-    return base, ranked
 
 
 @query("a24_kmv_distinct", section="A3", oracle=_A24_ORACLE)
@@ -597,7 +464,7 @@ def g12_bounded_cheapest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     relaxation order can never matter.  Each round ends in one eager
     localCheckpoint (materialize + lineage truncation in a single
     job; the earlier cache()+count() pair ran two jobs per round)."""
-    li, o = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "orders")
+    li, o = load_table(spark, sf_dir, "lineitem"), load_table(spark, sf_dir, "orders")
     pair = li.join(o, li.l_orderkey == o.o_orderkey).select(
         (2 * F.col("o_custkey")).alias("u"),
         (2 * F.col("l_suppkey") + 1).alias("v"),
@@ -746,7 +613,7 @@ def l4_markdown_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = spread(
-        _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+        load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     ).select("doc_id", F.expr(MD_PAGE_SQL).alias("md"))
     md = F.col("md")
     counts = md_counts(md)
@@ -797,7 +664,7 @@ def _manifest_store(spark: SparkSession, sf_dir: str) -> str:
             # the staging path could rmtree each other's in-flight
             # files)
             build = f"{table}.build.{os.getpid()}"
-            ev = _t(spark, sf_dir, "events")
+            ev = load_table(spark, sf_dir, "events")
             for epoch in range(3):
                 merge_batch(
                     spark, build, ev.filter(F.col("event_id") % 3 == epoch), epoch
@@ -915,7 +782,7 @@ def ml23_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket assignment is pure integer arithmetic ((x−lo)·({b}−1)
     div (hi−lo)) on a broadcast 1-row range, so no float boundary can
     move a row across engines."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("score_c"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
     )
@@ -999,7 +866,7 @@ def a25_gini_token_inequality(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic with the (x, doc_id) tie-break), so the single
     double division at the end sees identical integers in both
     engines."""
-    sig = _t(spark, sf_dir, "documents").select(
+    sig = load_table(spark, sf_dir, "documents").select(
         "source",
         "doc_id",
         F.size(F.split(F.col("text"), " ")).cast("bigint").alias("x"),
@@ -1064,7 +931,7 @@ def l1_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     join back is hash-keyed, NOT broadcast — Catalyst decides), the
     deterministic argmax is the lexicographic struct-max idiom
     (max(struct(quality, -doc_id))), map-side combinable."""
-    sig = _t(spark, sf_dir, "documents").select(
+    sig = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
         F.md5(F.col("text").cast("binary")).alias("h"),
@@ -1132,7 +999,7 @@ def j21_nearest_value_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # has no position on the value axis (the descending window would
     # otherwise sort a NULL purchase last and hand it the user's
     # minimum click — the round-11 review finding)
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     p = e.filter(
         (F.col("event_type") == "purchase") & F.col("value").isNotNull()
     ).select("event_id", "user_id", "value")

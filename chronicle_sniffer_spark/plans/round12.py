@@ -14,46 +14,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chronicle_sniffer_spark.plans.catalog import query
-from chronicle_sniffer_spark.plans.round11 import (
+from chronicle_sniffer_spark.operators.graph import G13_DEG_CAP
+from chronicle_sniffer_spark.operators.html import (
     _DENSITY_PCT,
-    _block_cte,
-    _pages,
     HTML_PAGE_SQL,
+    _block_cte,
+    html_extract,
 )
-from chronicle_sniffer_spark.operators.html import html_extract
-from chronicle_sniffer_spark.tables import load_table, session_tmpdir, spread
-
-_t = load_table
+from chronicle_sniffer_spark.plans.catalog import query
+from chronicle_sniffer_spark.sources.warc import _warc_dir
+from chronicle_sniffer_spark.tables import load_table, spread
 
 
 # ---------------------------------------------------------------------------
 # S20: WARC crawl-container scan + end-to-end crawl pipeline
 # ---------------------------------------------------------------------------
-
-_WARC_CACHE: dict[tuple[str, str], str] = {}
-
-
-def _warc_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per session+sf) the synthetic crawl: the documents
-    table rendered to the shared HTML fixture and packed into
-    ``.warc.gz`` container files by the DISTRIBUTED writer (one gzip
-    member per record, one file per partition — the Common Crawl
-    layout at miniature scale)."""
-    from chronicle_sniffer_spark.sources.warc import write_warc
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _WARC_CACHE:
-        out = session_tmpdir("css_warc_")
-        # one container file per core: gzip members decode sequentially
-        # WITHIN a file, so the file count IS the decode parallelism —
-        # a real crawl ships tens of thousands of ~1 GB files for the
-        # same reason (the s20 sf1 soak measured 7.2x at a pinned 8)
-        n_files = spark.sparkContext.defaultParallelism
-        write_warc(_pages(spark, sf_dir), out, n_files=n_files)
-        _WARC_CACHE[key] = out
-    return _WARC_CACHE[key]
-
 
 _S20_SCAN_ORACLE = f"""
     WITH pages AS (
@@ -273,7 +248,7 @@ def l4_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark shapes: one explode + pure-codegen regex/array expressions
     (Java∩RE2 subset, the html.py policy) + one doc_id partial agg —
     a single narrow shuffle; no UDFs anywhere."""
-    d = _t(spark, sf_dir, "documents").select("doc_id")
+    d = load_table(spark, sf_dir, "documents").select("doc_id")
     raw = d.select(
         "doc_id",
         F.explode(F.array(F.expr(URL_V1_SQL), F.expr(URL_V2_SQL))).alias("u"),
@@ -357,7 +332,7 @@ def ts23_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     daily = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id", F.date_trunc("day", "ts").alias("d"))
         .agg(F.count("*").cast("bigint").alias("x"))
     )
@@ -459,7 +434,7 @@ def ml24_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark shapes: one map-side-combinable (metric, arm) partial agg
     over the event stream, then an arm self-join on the ≤#metrics-row
     aggregate — the statistic costs one scan."""
-    x = _t(spark, sf_dir, "events").select(
+    x = load_table(spark, sf_dir, "events").select(
         "event_type",
         (F.col("user_id") % 2).alias("arm"),
         F.round(F.col("value") * 100).cast("bigint").alias("xc"),
@@ -506,15 +481,6 @@ def ml24_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 G13_TOPK = 25
-# Wedge-contributing neighbors per customer: a customer contributes
-# candidate wedges only among its CAP smallest suppliers
-# (deterministic rank truncation).  Σ_c deg(c)² is the wedge-join
-# volume — unbounded it is the power-law scale-killer (one hot
-# customer with 1M suppliers = 10¹² wedges); capped it is ≤ C(CAP,2)
-# per customer, so the candidate pass is LINEAR in customers with a
-# CAP² constant.  The filter-and-verify split (below) keeps reported
-# scores exact.
-G13_DEG_CAP = 16
 # Phase-1 survivors re-scored exactly in phase 2: 8× the emitted
 # top-k.  The verification recount is bounded by
 # OVERFETCH × (deg(s1) + deg(s2)) rows — hundreds of pairs, never the
@@ -618,8 +584,8 @@ def g13_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The union in the denominator needs no union materialization:
     |A∪B| = d(a) + d(b) − common, all exact BIGINTs."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     e = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(F.col("l_suppkey").alias("s"), F.col("o_custkey").alias("c"))
@@ -824,7 +790,7 @@ def l5_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out["sum_b"].append(int(s[2]))
             yield pd.DataFrame(out)
 
-    media = _spread_ids(_t(spark, sf_dir, "documents")).mapInPandas(
+    media = _spread_ids(load_table(spark, sf_dir, "documents")).mapInPandas(
         encode, "media_id bigint, payload binary"
     )
     return media.mapInPandas(
@@ -888,7 +854,7 @@ def s21_manifest_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         table = cleanup_at_exit(
             os.path.join(wh, f"css_s21_{suf}.build.{os.getpid()}")
         )
-        ev = _t(spark, sf_dir, "events")
+        ev = load_table(spark, sf_dir, "events")
         for epoch in range(3):
             merge_batch(spark, table, ev.filter(F.col("event_id") % 3 == epoch), epoch)
         compact_table(spark, table)
@@ -974,7 +940,7 @@ def ml25_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark shapes: one map-side (k) partial agg + one scalar agg, the
     101-row bucket table cross-joined against the 1-row totals —
     event volume is scanned once."""
-    x = _t(spark, sf_dir, "events").select(
+    x = load_table(spark, sf_dir, "events").select(
         ((F.col("user_id") * 37) % 101).alias("k"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
     )
@@ -1089,7 +1055,7 @@ def l2_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exceptAll-verified both directions).  Downstream stays JVM-side:
     one explode + two hash-keyed partial aggs."""
     t = (
-        spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+        spread(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
         .filter(F.length("text") >= 4)
     )
     from chronicle_sniffer_spark.operators.chunking import make_cdc_chunker
@@ -1169,7 +1135,7 @@ def j22_interval_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines.  Output: per event_type totals, dropped, kept —
     dropped + kept = total is an internal consistency the oracle hash
     enforces."""
-    o = _t(spark, sf_dir, "orders").select("o_orderdate")
+    o = load_table(spark, sf_dir, "orders").select("o_orderdate")
     days = (
         o.distinct().orderBy("o_orderdate").limit(J22_N_WINDOWS).select(
             F.col("o_orderdate").alias("d")
@@ -1184,7 +1150,7 @@ def j22_interval_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.expr("INTERVAL 30 MINUTES")
         ).alias("e"),
     )
-    ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "ts")
+    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "ts")
     cand = ev.withColumn("d", F.to_date("ts")).join(F.broadcast(win), "d")
     matched = (
         cand.filter((F.col("ts") >= F.col("s")) & (F.col("ts") < F.col("e")))
@@ -1255,7 +1221,7 @@ def u17_cogrouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's FULL OUTER twin)."""
     import pandas as pd
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts")
+    ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts")
     buys = ev.filter(F.col("event_type") == "purchase").select("user_id", "ts")
 

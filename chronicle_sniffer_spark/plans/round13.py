@@ -14,11 +14,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from chronicle_sniffer_spark.operators.dedup import (
+    JACCARD_THRESHOLD,
+    _ORACLE_GRAMS_CTE,
+    shared_pairs_and_labels,
+)
+from chronicle_sniffer_spark.operators.graph import G13_DEG_CAP
+from chronicle_sniffer_spark.operators.html import _DENSITY_PCT, HTML_PAGE_SQL, _block_cte
+from chronicle_sniffer_spark.operators.quality import (
+    MAX_SYMBOL_RATIO,
+    MEAN_WL_HI,
+    MEAN_WL_LO,
+    MIN_WORDS,
+)
+from chronicle_sniffer_spark.operators.sketches import KMV_K, _LEHMER_A, _LEHMER_M, _kmv_ranked
 from chronicle_sniffer_spark.plans.catalog import query
-from chronicle_sniffer_spark.plans.round12 import G13_DEG_CAP
+from chronicle_sniffer_spark.sources.warc import _warc_dir
 from chronicle_sniffer_spark.tables import load_table
-
-_t = load_table
 
 
 # ---------------------------------------------------------------------------
@@ -63,8 +75,8 @@ def g13_degree_cap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     global fold; every count is exact int64 (DuckDB's BIGINT sums
     promote to HUGEINT, so the oracle casts each sum back — the
     documented int64 contract)."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     e = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(F.col("l_suppkey").alias("s"), F.col("o_custkey").alias("c"))
@@ -162,7 +174,6 @@ def s20_warc_record_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark shapes: the per-file member decode → one warc_type-keyed
     partial agg; nothing else."""
-    from chronicle_sniffer_spark.plans.round12 import _warc_dir
     from chronicle_sniffer_spark.sources.warc import read_warc
 
     recs = read_warc(spark, _warc_dir(spark, sf_dir))
@@ -181,7 +192,6 @@ def s20_warc_record_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _a24b_oracle() -> str:
-    from chronicle_sniffer_spark.plans.round11 import _LEHMER_A, _LEHMER_M, KMV_K
 
     return f"""
     WITH d AS (
@@ -221,7 +231,6 @@ def a24b_kmv_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest remains the correctness anchor for the cap; the oracle
     here recomputes the same K-minima from scratch — the GATE pays
     the exact-distinct cost, the production plan never does."""
-    from chronicle_sniffer_spark.plans.round11 import _LEHMER_M, KMV_K, _kmv_ranked
 
     _, ranked = _kmv_ranked(spark, sf_dir)
     sk = ranked.filter(F.col("rn") <= KMV_K)
@@ -256,17 +265,6 @@ CRAWL_TRAIN_PCT = 80
 
 
 def _crawl_funnel_oracle() -> str:
-    from chronicle_sniffer_spark.plans.dedup_sim import (
-        _ORACLE_GRAMS_CTE,
-        JACCARD_THRESHOLD,
-    )
-    from chronicle_sniffer_spark.plans.quality import (
-        MAX_SYMBOL_RATIO,
-        MEAN_WL_HI,
-        MEAN_WL_LO,
-        MIN_WORDS,
-    )
-    from chronicle_sniffer_spark.plans.round11 import _block_cte
 
     block = _block_cte().replace("WITH pages", "pages", 1)
     return f"""
@@ -385,15 +383,6 @@ def l6_crawl_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     6-row stack unpivots it — the whole funnel is one pass over the
     containers plus one narrow shuffle."""
     from chronicle_sniffer_spark.operators.html import html_extract
-    from chronicle_sniffer_spark.plans.dedup_sim import shared_pairs_and_labels
-    from chronicle_sniffer_spark.plans.quality import (
-        MAX_SYMBOL_RATIO,
-        MEAN_WL_HI,
-        MEAN_WL_LO,
-        MIN_WORDS,
-    )
-    from chronicle_sniffer_spark.plans.round11 import _DENSITY_PCT
-    from chronicle_sniffer_spark.plans.round12 import _warc_dir
     from chronicle_sniffer_spark.sources.warc import read_warc
     from chronicle_sniffer_spark.tables import spread
 
@@ -518,7 +507,6 @@ _CDX_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _cdx_path(spark: SparkSession, sf_dir: str) -> str:
-    from chronicle_sniffer_spark.plans.round12 import _warc_dir
     from chronicle_sniffer_spark.sources.warc import build_cdx
     from chronicle_sniffer_spark.tables import session_tmpdir
 
@@ -533,7 +521,6 @@ def _cdx_path(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _s22_oracle() -> str:
-    from chronicle_sniffer_spark.plans.round11 import HTML_PAGE_SQL
 
     return f"""
     WITH pages AS (
@@ -654,7 +641,7 @@ def ml26_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     divisions, min/max are comparisons (no accumulation) — both
     engines pick bit-identical values; round(…,6) only at output.
     Monotonicity of the fit is pytest-asserted."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     z = (F.col("n_chars") - 300) / 80.0
     p = F.lit(0.5) + F.lit(0.5) * z / (F.lit(1) + F.abs(z))
     scored = d.select((F.col("lang") == "en").alias("label"), p.alias("p"))
@@ -818,7 +805,7 @@ def ml27_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``before`` = bucket offset + within-bucket prefix, exactly the
     single-window value; the oracle keeps the plain SQL window form."""
     s = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority").isin(ML27_A, ML27_B))
         .select(
             (F.col("o_totalprice").cast("decimal(18,2)") * 100)
@@ -964,7 +951,7 @@ def ts25_sax_symbolize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     daily = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("event_type", F.col("ts").cast("date").alias("d"))
         .agg(F.count("*").cast("bigint").alias("n"))
     )
@@ -1107,7 +1094,7 @@ def l4_lang_id_trigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of the entry's 4.6 s wall); a properly-split 100 TB corpus makes
     # this a no-op (see tables.spread docstring)
     d = spread(
-        _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+        load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     ).select(
         "doc_id",
         "lang",
@@ -1230,7 +1217,7 @@ def l5_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     stats = audio_resample(
-        synthesize_media_encoded(_t(spark, sf_dir, "documents")),
+        synthesize_media_encoded(load_table(spark, sf_dir, "documents")),
         RESAMPLE_OUT_RATE,
     )
     return stats.select(
@@ -1263,7 +1250,7 @@ def _s23_dir(spark: SparkSession, sf_dir: str) -> str:
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _S23_CACHE:
         out = session_tmpdir("css_s23_")
-        o = _t(spark, sf_dir, "orders").select(
+        o = load_table(spark, sf_dir, "orders").select(
             F.col("o_orderkey").alias("okey"),
             (F.col("o_totalprice").cast("decimal(18,2)") * 100)
             .cast("bigint")

@@ -43,10 +43,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from chronicle_sniffer_spark.operators.html import _block_cte
+from chronicle_sniffer_spark.operators.quality import (
+    MAX_SYMBOL_RATIO,
+    MEAN_WL_HI,
+    MEAN_WL_LO,
+    MIN_WORDS,
+)
+from chronicle_sniffer_spark.operators.similarity import ANN_K, ANN_QUERY_VEC
 from chronicle_sniffer_spark.plans.catalog import query
+from chronicle_sniffer_spark.sources.warc import _warc_dir
 from chronicle_sniffer_spark.tables import load_table
-
-_t = load_table
 
 
 # ---------------------------------------------------------------------------
@@ -88,7 +95,6 @@ def s20_warc_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched BMP decoder; only small stats leave the stage,
     payload bytes never shuffle; ZERO shuffles end-to-end."""
     from chronicle_sniffer_spark.operators.multimodal import image_stats
-    from chronicle_sniffer_spark.plans.round12 import _warc_dir
     from chronicle_sniffer_spark.sources.warc import read_warc
 
     recs = read_warc(spark, _warc_dir(spark, sf_dir))
@@ -116,7 +122,6 @@ _STREAM_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _stream_table(spark: SparkSession, sf_dir: str) -> str:
-    from chronicle_sniffer_spark.plans.round12 import _warc_dir
     from chronicle_sniffer_spark.streaming.crawl import stream_crawl_ingest
     from chronicle_sniffer_spark.tables import session_tmpdir
 
@@ -136,13 +141,6 @@ def _stream_table(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _s24_oracle() -> str:
-    from chronicle_sniffer_spark.plans.quality import (
-        MAX_SYMBOL_RATIO,
-        MEAN_WL_HI,
-        MEAN_WL_LO,
-        MIN_WORDS,
-    )
-    from chronicle_sniffer_spark.plans.round11 import _block_cte
 
     return f"""
     {_block_cte()},
@@ -254,7 +252,6 @@ def s20_warc_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same zero-shuffle shape as the image twin; WAV bytes pass the
     charset decoder untouched (content-type gate)."""
     from chronicle_sniffer_spark.operators.multimodal import audio_stats
-    from chronicle_sniffer_spark.plans.round12 import _warc_dir
     from chronicle_sniffer_spark.sources.warc import read_warc
 
     recs = read_warc(spark, _warc_dir(spark, sf_dir))
@@ -326,7 +323,7 @@ def ts26_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume — then one map-side-combinable hash aggregate.  No global
     window, no driver state; survives 100× by adding partitions, not
     partition depth."""
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.to_date("ts").cast("timestamp").alias("day"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
@@ -432,7 +429,7 @@ def ml28_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-global-cardinality window anywhere."""
     from pyspark.sql import Window
 
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.to_date("ts").cast("timestamp").alias("day"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
@@ -553,7 +550,7 @@ def ml29_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     gains = F.array(*[F.lit(g) for g in _NDCG_GAIN_PICOS])
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
         "value",
@@ -642,7 +639,7 @@ def ml30_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     eight counts (agreement + both marginals via conditional sums — no
     pivot, no self-join); κ is a projection over the group row.
     O(series) output, a single shuffle of 8 longs per series."""
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_type",
         ((F.col("event_id") * 7) % 3).cast("bigint").alias("a"),
         (
@@ -701,7 +698,7 @@ def _s25_base_dir(spark: SparkSession, sf_dir: str) -> str:
     if key not in _S25_CACHE:
         out = session_tmpdir("css_s25_base_")
         (
-            _t(spark, sf_dir, "orders")
+            load_table(spark, sf_dir, "orders")
             .repartition(_S25_FILES, "o_orderkey")
             .write.mode("overwrite")
             .parquet(out)
@@ -821,7 +818,7 @@ def l5_video_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return video_scene_cuts(
-        synthesize_mjpeg_video_corpus(_t(spark, sf_dir, "documents")),
+        synthesize_mjpeg_video_corpus(load_table(spark, sf_dir, "documents")),
         threshold=_SCENE_CUT_T,
     )
 
@@ -851,7 +848,7 @@ def _ivf_deleted_index_dir(spark: SparkSession, sf_dir: str) -> str:
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _IVF_DELETE_CACHE:
         out = session_tmpdir("css_ivf_del_")
-        emb = _t(spark, sf_dir, "embeddings")
+        emb = load_table(spark, sf_dir, "embeddings")
         ivf_index_write(emb, out)
         ivf_index_delete(
             spark, out, emb.filter(F.expr(_IVF_DELETE_WHERE))
@@ -862,7 +859,6 @@ def _ivf_deleted_index_dir(spark: SparkSession, sf_dir: str) -> str:
 
 def _ivf_delete_oracle() -> str:
     from chronicle_sniffer_spark.operators.ivf import oracle_ivf_sql
-    from chronicle_sniffer_spark.plans.dedup_sim import ANN_K, ANN_QUERY_VEC
 
     return oracle_ivf_sql(
         ANN_QUERY_VEC, ANN_K, score_where=f"NOT ({_IVF_DELETE_WHERE})"
@@ -889,9 +885,8 @@ def l3_ann_ivf_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pytest-asserted byte-identity), and the probe stays
     partition-pruned manifest path resolution."""
     from chronicle_sniffer_spark.operators.ivf import ivf_topk_from_index
-    from chronicle_sniffer_spark.plans.dedup_sim import ANN_K, ANN_QUERY_VEC
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     qrow = (
         emb.filter(F.col("vec_id") == ANN_QUERY_VEC)
         .select("embedding")
@@ -964,7 +959,7 @@ def ts29_counter_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     100× by adding partitions, not depth."""
     from pyspark.sql import Window
 
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.to_date("ts").cast("timestamp").alias("day"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
@@ -1078,8 +1073,8 @@ def g14_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a TakeOrdered, never a global sort materialization."""
     from pyspark.sql import Window as W
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     e = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(F.col("l_suppkey").alias("s"), F.col("o_custkey").alias("c"))

@@ -30,12 +30,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from chronicle_sniffer_spark.operators.graph import _COPURCHASE_CTES, _copurchase_edges
 from chronicle_sniffer_spark.plans.catalog import query
 from chronicle_sniffer_spark.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -109,7 +106,7 @@ def a14_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from chronicle_sniffer_spark.tables import spread
 
-    d = spread(_t(spark, sf_dir, "documents").select("text"))
+    d = spread(load_table(spark, sf_dir, "documents").select("text"))
     words = d.select(
         F.explode(F.split(F.lower("text"), " ")).alias("w")
     ).filter(F.col("w") != "")
@@ -209,7 +206,7 @@ def ml6_pit_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's native chained ASOF joins.  Rank (not row_number) makes
     the prior count deterministic under equal-ts label ties.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     p = e.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", F.col("value").alias("label")
     )
@@ -346,7 +343,7 @@ def l3_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_bucket_keys,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     # with_bucket_keys is a MapInPandas — opaque to filter pushdown, so
     # the three consumers (candidate side, query keys, query vectors)
     # each re-ran the full-corpus Arrow matmul; materialize the keyed
@@ -424,66 +421,6 @@ l3_ann_recall_eval.__doc__ = l3_ann_recall_eval.__doc__.format(
 # ---------------------------------------------------------------------------
 # G2: triangle counting (degree-oriented node-iterator)
 # ---------------------------------------------------------------------------
-
-# Per-hour participation cap for the co-purchase graph.  An UNCAPPED
-# same-bucket co-occurrence graph is a scale landmine: each hour's
-# purchasers form a clique, so edge volume grows quadratically — and
-# wedge volume cubically — in event RATE, not data size (measured: the
-# uncapped sf1 graph is ~20M edges / ~5e9 wedges and kills the soak).
-# Bounded-participation sampling (keep the CAP lowest user_ids per
-# hour — deterministic, engine-identical) keeps the graph
-# O(hours × CAP²) = linear in history length regardless of traffic,
-# which is how production co-occurrence graphs stay tractable.  CAP=6
-# leaves the gate-scale graph almost untouched (sf0.01: 15 of 673
-# hours capped) so the oracle exercises BOTH paths.
-G2_HOUR_CAP = 6
-
-_COPURCHASE_CTES = f"""
-    pur0 AS (
-      SELECT DISTINCT date_trunc('hour', ts) AS h, user_id
-      FROM events WHERE event_type = 'purchase'
-    ),
-    pur AS (
-      SELECT h, user_id FROM (
-        SELECT h, user_id,
-               row_number() OVER (PARTITION BY h ORDER BY user_id) AS rk
-        FROM pur0
-      ) WHERE rk <= {G2_HOUR_CAP}
-    ),
-    edges AS (
-      SELECT DISTINCT a.user_id AS u, b.user_id AS v
-      FROM pur a JOIN pur b ON a.h = b.h AND a.user_id < b.user_id
-    )
-"""
-
-
-def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical (u < v) distinct edge set of the capped per-hour
-    purchase co-occurrence graph — shared by g2 and g3; the SQL twin
-    is ``_COPURCHASE_CTES``."""
-    e = _t(spark, sf_dir, "events")
-    pur0 = (
-        e.filter(F.col("event_type") == "purchase")
-        .select(F.date_trunc("hour", "ts").alias("h"), "user_id")
-        .distinct()
-    )
-    wh = Window.partitionBy("h").orderBy("user_id")
-    pur = (
-        pur0.withColumn("rk", F.row_number().over(wh))
-        .filter(F.col("rk") <= G2_HOUR_CAP)
-        .drop("rk")
-    )
-    a, b = pur.alias("a"), pur.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.user_id") < F.col("b.user_id")),
-        )
-        .select(F.col("a.user_id").alias("u"), F.col("b.user_id").alias("v"))
-        .distinct()
-    )
-
 
 @query(
     "g2_triangle_count",
@@ -611,7 +548,7 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             if stale and os.path.isdir(stale):
                 shutil.rmtree(stale, ignore_errors=True)
         (
-            _t(spark, sf_dir, "lineitem")
+            load_table(spark, sf_dir, "lineitem")
             .select("l_orderkey", "l_extendedprice", "l_discount")
             .write.mode("overwrite")
             .format("parquet")
@@ -620,7 +557,7 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .saveAsTable(li_name)
         )
         (
-            _t(spark, sf_dir, "orders")
+            load_table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_orderpriority")
             .write.mode("overwrite")
             .format("parquet")
@@ -741,7 +678,7 @@ def dq4_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows are a constant-size union — output is O(#metrics), never
     O(corpus).  Integer sums are exact; the only doubles are final
     ratios rounded at 6 dp on both engines."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tagged = d.select(
         F.when(F.col("doc_id") % 2 == 0, "a").otherwise("b").alias("snap"),
         "lang",
@@ -834,7 +771,7 @@ def l4_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from chronicle_sniffer_spark.tables import spread
 
-    d = spread(_t(spark, sf_dir, "documents").select("text"))
+    d = spread(load_table(spark, sf_dir, "documents").select("text"))
     wc = (
         d.select(F.explode(F.split(F.lower("text"), " ")).alias("w"))
         .filter(F.col("w") != "")
@@ -888,7 +825,7 @@ def a15_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     not raw ids, and the final count is a cheap popcount + sum.  The
     same bitmaps are storable, making the distinct count incrementally
     maintainable (see o10's merge discipline)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     partial = e.groupBy(
         "event_type", F.bitmap_bucket_number(F.col("user_id")).alias("bkt")
     ).agg(
@@ -956,7 +893,7 @@ def o9b_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic `% 10` customer slice keeps gate output bounded;
     production runs unsliced with identical shape."""
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_custkey") % 10 == 0)
         .select(
             F.col("o_custkey").alias("custkey"),
@@ -1034,7 +971,7 @@ def l4_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     same plan (posexplode), so Catalyst pushes each term filter to
     its own branch of the explode — no unfiltered all-postings
     shuffle ever forms."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "w")
     )
@@ -1091,7 +1028,7 @@ def o10_incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored bitmaps (bitmap_or_agg).  Money stays in integer cents
     (floor(value*100) on IEEE doubles is engine-identical), never
     summed as floats."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     cut = F.lit(REFRESH_CUTOFF).cast("timestamp")
 
     def partial_state(df: DataFrame) -> DataFrame:
@@ -1166,7 +1103,7 @@ def a4b_mergeable_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative count reaches ceil(q·n) — error bounded by the bin
     width, deterministic (integer thresholds, power-of-two bin edges,
     engine-identical floor on IEEE doubles), no sampling."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     bin_col = F.least(
         F.lit(QH_BINS - 1), F.floor(F.col("value") / QH_WIDTH).cast("int")
     ).alias("bin")

@@ -64,12 +64,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from chronicle_sniffer_spark.operators.dedup import (
+    JACCARD_THRESHOLD,
+    NGRAM_MAX_DF_PCT,
+    NGRAM_N,
+    _ORACLE_GRAMS_CTE,
+    shared_pairs_and_labels,
+)
+from chronicle_sniffer_spark.operators.graph import _COPURCHASE_CTES, _copurchase_edges
 from chronicle_sniffer_spark.plans.catalog import query
 from chronicle_sniffer_spark.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -115,8 +119,8 @@ def g4_hierarchy_rollup_rcte(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-depth hierarchies; cyclic graphs stay on the dedicated CC
     operator (operators/dedup.py), since Spark's rCTE is UNION ALL
     only and cannot dedup a cyclic closure."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(_g4_sql("DIV"))
 
 
@@ -144,7 +148,7 @@ def u7_sql_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round8.py).  This is the scalable home for shared
     semantic definitions that teams otherwise copy-paste or, worse,
     implement as Python UDFs."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     spark.sql(
         """CREATE OR REPLACE TEMPORARY FUNCTION css_disc_price(
              p DECIMAL(18,2), d DECIMAL(18,2)) RETURNS DECIMAL(18,4)
@@ -186,7 +190,7 @@ def u8_sql_table_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     The function body is inlined as a subquery plan; the spine is a
     few rows, so the join side is broadcast and the orders scan stays
     one pass."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     spark.sql(
         """CREATE OR REPLACE TEMPORARY FUNCTION css_year_span(y1 INT, y2 INT)
            RETURNS TABLE(yr INT)
@@ -279,7 +283,7 @@ def ts8_ewma_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     return (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .select("user_id", "ts", "event_id", "value")
         .repartition("user_id")
         .sortWithinPartitions("user_id", "ts", "event_id")
@@ -322,7 +326,7 @@ def o11_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict back to parts is one (brand, size)-keyed hash join — the
     shape that survives a 100 TB parts table (skylines are per-group;
     a global skyline would add one grid-partition pre-filter pass)."""
-    part = _t(spark, sf_dir, "part").select(
+    part = load_table(spark, sf_dir, "part").select(
         "p_brand", "p_partkey", "p_size", "p_retailprice"
     )
     per_size = part.groupBy("p_brand", "p_size").agg(
@@ -388,7 +392,7 @@ def l4_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     size); scoring is a shuffle join of bigram INSTANCES against the
     count tables on the bigram key, plus a 1-row broadcast for V.
     No UDFs — every stage is codegen'd expressions."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     docs = docs.repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )  # explode fan-out must not run in the scan's single-file partitioning
@@ -448,7 +452,6 @@ CONTAINMENT_THRESHOLD = 0.8
 
 
 def _l2c_oracle() -> str:
-    from chronicle_sniffer_spark.plans.dedup_sim import _ORACLE_GRAMS_CTE
 
     return f"""
     WITH {_ORACLE_GRAMS_CTE}
@@ -477,10 +480,9 @@ def l2_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (l2_ngram_df_cap_audit).  Scores are EXACT on the full gram sets;
     only candidate recall depends on the index."""
     from chronicle_sniffer_spark.operators.dedup import containment_pairs
-    from chronicle_sniffer_spark.plans.dedup_sim import NGRAM_MAX_DF_PCT, NGRAM_N
 
     return containment_pairs(
-        _t(spark, sf_dir, "documents"),
+        load_table(spark, sf_dir, "documents"),
         n=NGRAM_N,
         threshold=CONTAINMENT_THRESHOLD,
         max_df_pct=NGRAM_MAX_DF_PCT,
@@ -529,8 +531,8 @@ def dq5_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, so the reason string needs no array machinery.  The
     clean-path complement is the same plan with the filter flipped —
     one scan feeds both sinks."""
-    o = _t(spark, sf_dir, "orders").alias("o")
-    c = _t(spark, sf_dir, "customer").alias("c")
+    o = load_table(spark, sf_dir, "orders").alias("o")
+    c = load_table(spark, sf_dir, "customer").alias("c")
     r1 = F.col("o.o_totalprice") > 400000
     r2 = (F.col("o.o_orderpriority") == "1-URGENT") & (F.col("o.o_orderstatus") == "F")
     r3 = (F.col("o.o_custkey") % 97) == 0
@@ -638,7 +640,7 @@ def ts9_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     return (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .select("user_id", "ts", "event_id", "value")
         .repartition("user_id")
         .sortWithinPartitions("user_id", "ts", "event_id")
@@ -694,7 +696,7 @@ def l6_nucleus_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     global distributed prefix sum is only needed when the ordering
     spans the whole corpus.  One source-keyed shuffle, no single-task
     window (partitionBy present), no driver round-trips."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     n_tokens = F.size(F.split("text", " ")).cast("bigint")
     quality = F.round(
         F.length(F.regexp_replace("text", " ", "")) * 1.0
@@ -737,7 +739,6 @@ BFS_BROADCAST_MAX_NODES = 2_000_000
 
 
 def _g5_oracle() -> str:
-    from chronicle_sniffer_spark.plans.round7 import _COPURCHASE_CTES
 
     steps = []
     prev = "d0"
@@ -793,7 +794,6 @@ def g5_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     Distances are exact ints, so relaxation order can never matter.
     The oracle unrolls the identical K min-relaxation steps as
     chained CTEs."""
-    from chronicle_sniffer_spark.plans.round7 import _copurchase_edges
 
     edges = _copurchase_edges(spark, sf_dir)
     # ONE eager materialization: the t-partitioned symmetric edge list
@@ -872,7 +872,7 @@ def u9_iter_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from chronicle_sniffer_spark.tables import spread
 
-    return spread(_t(spark, sf_dir, "documents")).select(
+    return spread(load_table(spark, sf_dir, "documents")).select(
         "doc_id", score(F.col("text")).alias("score")
     )
 
@@ -913,7 +913,7 @@ def ts10_sequence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluate identically — deliberately NOT regex, whose
     non-overlapping-match semantics differ across engines.  Per-key
     sequences are the parallel unit; nothing global."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("events")
+    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
     return spark.sql(
         f"""
         WITH seq AS (
@@ -938,7 +938,6 @@ QUALITY_GATE_MIN = 4.2  # chars-per-token floor for the gate stage
 
 
 def _l6p_oracle() -> str:
-    from chronicle_sniffer_spark.plans.dedup_sim import _ORACLE_GRAMS_CTE, JACCARD_THRESHOLD
 
     return f"""
     WITH RECURSIVE {_ORACLE_GRAMS_CTE},
@@ -997,14 +996,13 @@ def l6_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     silent shrinkage; every stage's cost is visible).
 
     Composition reuses the session-scoped pair/label materialization
-    (:func:`chronicle_sniffer_spark.plans.dedup_sim.
+    (:func:`chronicle_sniffer_spark.operators.dedup.
     shared_pairs_and_labels`) — the cluster table is computed once per
     session and this entry reads the parquet, exactly how a
     production pipeline consumes its dedup stage.  The oracle nests
     the full recursive-CTE closure + hash dedup + gate chain."""
-    from chronicle_sniffer_spark.plans.dedup_sim import shared_pairs_and_labels
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     sig = d.select(
         "doc_id",
         "text",
@@ -1069,7 +1067,7 @@ def p15_variant_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSON as VARIANT (sources/json_source.py); this entry is the
     declared catalog surface for it.  Integer sums — exact, engine-
     identical."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     k = F.expr("variant_get(parse_json(props), '$.k', 'bigint')")
     return (
         e.select("event_type", k.alias("k"))
@@ -1108,8 +1106,8 @@ def j13_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     point of the entry is that the DECLARATIVE form is supported and
     optimal, full tie-break keys included.  Identical SQL runs on
     DuckDB."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(_J13_SQL)
 
 
@@ -1156,7 +1154,7 @@ def p16_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chronicle_sniffer_spark.tables import spread
 
     p = spread(
-        _t(spark, sf_dir, "part").select("p_brand", "p_name", "p_retailprice", "p_size")
+        load_table(spark, sf_dir, "part").select("p_brand", "p_name", "p_retailprice", "p_size")
     )
     x = p.select(
         F.expr("try_cast(split_part(p_brand, '#', 2) AS INT)").alias("mfgr_id"),
@@ -1191,7 +1189,7 @@ def a17_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     copy-the-select-list-into-GROUP-BY drift bug in wide rollups.
     The IDENTICAL query text runs on both engines; the resolved plan
     is the ordinary hash aggregate."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(_A17_SQL)
 
 
@@ -1250,7 +1248,7 @@ def dq6_reconciliation_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     output — the cheapest possible cross-system integrity handshake
     at 100 TB (this entry's DuckDB oracle literally IS the
     'other engine' computing the matching checksum)."""
-    e = _t(spark, sf_dir, "orders")
+    e = load_table(spark, sf_dir, "orders")
     return (
         e.groupBy(F.expr("CAST(year(o_orderdate) AS INT)").alias("yr"))
         .agg(
@@ -1265,7 +1263,6 @@ def dq6_reconciliation_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _l4r_oracle() -> str:
-    from chronicle_sniffer_spark.plans.dedup_sim import _ORACLE_GRAMS_CTE, JACCARD_THRESHOLD
 
     return f"""
     WITH {_ORACLE_GRAMS_CTE},
@@ -1316,11 +1313,10 @@ def l4_rouge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a (pair × shared-token) join keyed on (doc, token) — candidate
     pairs only, never all pairs.  Unigram overlap uses min(count_a,
     count_b), the multiset intersection ROUGE defines."""
-    from chronicle_sniffer_spark.plans.dedup_sim import shared_pairs_and_labels
 
     pairs, _ = shared_pairs_and_labels(spark, sf_dir)
     pairs = pairs.select("doc_a", "doc_b")
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     toks = (
         d.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("w"))
@@ -1383,7 +1379,7 @@ def p17_collated_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     output key is canonicalized with lower() for determinism — the
     COUNTS are what prove the collated grouping merged the variants.
     Oracle: the classic lower() rewrite."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     return spark.sql(
         """
         WITH x AS (
@@ -1438,7 +1434,7 @@ def s8c_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
         tempfile.gettempdir(),
         f"css_dynpart_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
     )
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_totalprice",
         "o_orderpriority",
@@ -1505,7 +1501,7 @@ def a4c_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain percentiles (A4), mergeable sketch (A4b), weighted exact
     (A4c)."""
     B = 1024
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.col("l_extendedprice").alias("x"),
         F.col("l_quantity").cast("bigint").alias("wt"),
@@ -1591,7 +1587,7 @@ def u10_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-rounded so a one-ulp cross-engine difference in the
     average cannot move any 2-decimal price across the comparison.
     Oracle inlines both parameters as plain SQL."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     spark.sql("DECLARE OR REPLACE VARIABLE css_rev_floor DOUBLE DEFAULT 0.0")
     spark.sql(
         "SET VAR css_rev_floor = (SELECT CAST(round(avg(o_totalprice)) AS DOUBLE)"
@@ -1646,7 +1642,7 @@ def t9c_full_outer_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         click_purchase_attribution_full_outer,
     )
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     out = click_purchase_attribution_full_outer(
         e.filter(F.col("event_type") == "click"),
         e.filter(F.col("event_type") == "purchase"),
@@ -1685,7 +1681,7 @@ def a18_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     requirement; the count + ranked-window form pins the semantics at
     the cost of one extra (tiny, value-cardinality-sized) shuffle."""
     counts = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy("o_orderstatus", "o_orderpriority")
         .agg(F.count("*").alias("n"))
     )
@@ -1751,7 +1747,7 @@ def t3b_dynamic_gap_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag/cumsum construction must agree exactly."""
     from chronicle_sniffer_spark.streaming.windows import dynamic_session_aggregate
 
-    return dynamic_session_aggregate(_t(spark, sf_dir, "events"))
+    return dynamic_session_aggregate(load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -1791,7 +1787,7 @@ def u11_apply_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .select("user_id", "value")
         .groupBy("user_id")
         .applyInArrow(agg, "user_id bigint, n_events bigint, total_cents bigint")

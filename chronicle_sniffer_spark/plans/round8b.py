@@ -48,10 +48,6 @@ from chronicle_sniffer_spark.plans.catalog import davg, dsum, o_davg, o_dsum, qu
 from chronicle_sniffer_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # J14: bucketed range join (interval overlap, no equi key)
 # ---------------------------------------------------------------------------
@@ -99,7 +95,7 @@ def j14_bucketed_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     evenly and no task ever sees the O(n^2) cross product.
     """
     W = _J14_BUCKET_DAYS
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     day = (F.unix_timestamp("o_orderdate") / 86400).cast("bigint")
 
     a = orders.filter(F.col("o_orderpriority") == "1-URGENT").select(
@@ -184,7 +180,7 @@ def a19_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed formulation implements the standard semantics.
     """
     K = _A19_K
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_extendedprice").alias("p"), "l_orderkey", "l_linenumber"
     )
     npart = max(spark.sparkContext.defaultParallelism, 2)
@@ -263,7 +259,7 @@ def ts11_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     double subtraction ``value - avg_value`` is bit-identical across
     engines; abs/max are order-independent.
     """
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_type", F.hour("ts").alias("hr"), "value"
     )
     base = e.groupBy("event_type", "hr").agg(
@@ -307,7 +303,7 @@ def manifest_layout(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
         base = os.path.join(wh, f"css_manifest_orders_{suf}")
         if not os.path.exists(os.path.join(base, "_SUCCESS")):
             (
-                _t(spark, sf_dir, "orders")
+                load_table(spark, sf_dir, "orders")
                 .repartitionByRange(_S13_FILES, "o_orderdate")
                 .write.mode("overwrite")
                 .parquet(base)
@@ -416,7 +412,7 @@ def u12_polymorphic_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chronicle_sniffer_spark.functions.udfs import register_polymorphic_udtf
 
     register_polymorphic_udtf(spark)
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     return spark.sql(
         "SELECT s.* FROM documents d,"
         f" LATERAL split_fixed(d.doc_id, d.text, {_U12_N}) s WHERE d.doc_id < 10"
@@ -481,7 +477,7 @@ def ts12_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic is exact integer microseconds — no float drift between
     engines.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     s = F.unix_micros(F.col("ts").cast("timestamp"))
     iv = ev.select(
         "user_id",

@@ -57,10 +57,6 @@ from chronicle_sniffer_spark.plans.catalog import dsum, o_dsum, query
 from chronicle_sniffer_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # J15: dynamic partition pruning
 # ---------------------------------------------------------------------------
@@ -81,7 +77,7 @@ def dpp_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "/tmp"
         fact = os.path.join(wh, f"css_dpp_orders_{suf}")
         dim = os.path.join(wh, f"css_dpp_years_{suf}")
-        orders = _t(spark, sf_dir, "orders")
+        orders = load_table(spark, sf_dir, "orders")
         if not os.path.exists(os.path.join(fact, "_SUCCESS")):
             (
                 orders.withColumn("o_year", F.year("o_orderdate"))
@@ -179,7 +175,7 @@ def p18_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the lowering, and the physical plan is byte-identical to the
     classic spelling, so every pushdown/pruning property is preserved.
     """
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
         """
 FROM lineitem
@@ -238,7 +234,7 @@ def o12_threshold_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     need (top-k, exact percentile tails, trimmed means).
     """
     K = _O12_K
-    ev = _t(spark, sf_dir, "events").select("event_type", "event_id", "value")
+    ev = load_table(spark, sf_dir, "events").select("event_type", "event_id", "value")
     thr = ev.groupBy("event_type").agg(
         F.percentile_approx("value", _O12_P, 10000).alias("thr")
     )
@@ -287,7 +283,7 @@ def mor_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
         posd = os.path.join(wh, f"css_mor_posdel_{suf}")
         eqd = os.path.join(wh, f"css_mor_eqdel_{suf}")
         if not os.path.exists(os.path.join(base, "_SUCCESS")):
-            _t(spark, sf_dir, "orders").repartition(8).write.mode(
+            load_table(spark, sf_dir, "orders").repartition(8).write.mode(
                 "overwrite"
             ).parquet(base)
         if not os.path.exists(os.path.join(eqd, "_SUCCESS")):
@@ -444,7 +440,7 @@ def l6_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     property a training-data pipeline actually wants).
     """
     B = _L6T_BUDGET
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     per = d.groupBy("lang").agg(F.count("*").alias("n_docs"))
     w_all = Window.partitionBy()
     wts = per.select(
@@ -546,7 +542,7 @@ def ml7_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Binning is explicit ``least(floor(p·10), 9)`` — the same arithmetic
     on both engines, no width_bucket implementation drift.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     z = (F.col("n_chars") - 300) / 80.0
     p = F.lit(0.5) + F.lit(0.5) * z / (F.lit(1) + F.abs(z))
     scored = d.select(

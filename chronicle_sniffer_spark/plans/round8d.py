@@ -35,10 +35,6 @@ from chronicle_sniffer_spark.plans.catalog import dsum, o_dsum, query
 from chronicle_sniffer_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # J17: null-safe equi join
 # ---------------------------------------------------------------------------
@@ -72,7 +68,7 @@ def j17_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality makes the NULL group a single join key, so a mostly-NULL
     column becomes a skew hotspot (the A10 salting pattern applies).
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     f = o.select(
         F.nullif(F.col("o_orderpriority"), F.lit("3-MEDIUM")).alias("k"),
         "o_totalprice",
@@ -130,7 +126,7 @@ def ts13_m4_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output is O(series × pixels) regardless of input volume: the right
     operator to put in front of a dashboard reading 100 TB of metrics.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     key = F.struct(
         F.col("ts_us").alias("t"), F.col("event_id").alias("i"), F.col("value").alias("v")
@@ -183,7 +179,7 @@ def a20_multi_distinct_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     width of the table.  (When approximate answers suffice, A3's HLL
     sketches drop even the replication; this entry is the EXACT path.)
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("n_parts"),
         F.countDistinct("l_suppkey").alias("n_supps"),
@@ -240,7 +236,7 @@ def ml8_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     so both engines divide the same two integers.  Scores are the ml7
     rational sigmoid (IEEE-exact on both engines).
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     z = (F.col("n_chars") - 300) / 80.0
     p = F.lit(0.5) + F.lit(0.5) * z / (F.lit(1) + F.abs(z))
     scored = d.select((F.col("lang") == "en").alias("label"), p.alias("p"))
@@ -297,7 +293,7 @@ def u13_udtf_table_argument(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chronicle_sniffer_spark.functions.udfs import register_table_arg_udtf
 
     register_table_arg_udtf(spark)
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     return spark.sql(
         "SELECT * FROM summarize_lang(TABLE(documents) PARTITION BY lang)"
     )
@@ -325,7 +321,7 @@ def snapshot_layout(spark: SparkSession, sf_dir: str) -> dict[int, list]:
         suf = _h.md5(sf_dir.encode()).hexdigest()[:8]
         wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "/tmp"
         base = os.path.join(wh, f"css_snap_orders_{suf}")
-        orders = _t(spark, sf_dir, "orders")
+        orders = load_table(spark, sf_dir, "orders")
         cut = F.lit(_S14_CUT).cast("timestamp")
         v1_dir, v2_dir = os.path.join(base, "c1"), os.path.join(base, "c2")
         if not os.path.exists(os.path.join(v1_dir, "_SUCCESS")):
@@ -417,7 +413,7 @@ def w5_trailing_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     on both engines, and the windowed money sum goes through exact
     decimal so frame-internal addition order can't flip a bit.
     """
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
@@ -468,7 +464,7 @@ def a21_grouping_id_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUPING() spec in DuckDB; matching proves flag semantics, not just
     totals.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     prio = F.nullif(F.col("o_orderpriority"), F.lit("2-HIGH")).alias("prio_key")
     return (
         o.select("o_orderstatus", prio, "o_totalprice")
@@ -522,7 +518,7 @@ def o13_keyset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion.  LIMIT over the fully-keyed ORDER BY is deterministic
     (house rule).
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     c_ts = F.lit(_O13_CURSOR_TS).cast("timestamp")
     c_key = F.lit(_O13_CURSOR_KEY).cast("bigint")
     seek = (F.col("o_orderdate") > c_ts) | (
@@ -569,7 +565,7 @@ def j18_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     qualifies, matching the oracle's ``p.ts <= c.ts`` (DuckDB's native
     forward ASOF).
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     purchases = e.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
@@ -644,7 +640,7 @@ def pevo_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "/tmp"
         ydir = os.path.join(wh, f"css_pevo_year_{suf}")
         mdir = os.path.join(wh, f"css_pevo_month_{suf}")
-        orders = _t(spark, sf_dir, "orders")
+        orders = load_table(spark, sf_dir, "orders")
         split = F.lit(_S15_SPLIT).cast("timestamp")
         if not os.path.exists(os.path.join(ydir, "_SUCCESS")):
             (
@@ -762,7 +758,7 @@ def t9d_semi_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from chronicle_sniffer_spark.streaming.joins import clicks_with_conversion_semi
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     clicks = e.filter(F.col("event_type") == "click")
     purchases = e.filter(F.col("event_type") == "purchase")
     out = clicks_with_conversion_semi(clicks, purchases)
@@ -813,7 +809,7 @@ def a22_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-aggregation every warehouse uses for rolling actives.
     """
     W = _A22_WIN_DAYS
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     day = (F.unix_micros(F.col("ts").cast("timestamp")) / 86400000000).cast("bigint")
     pairs = e.select("user_id", day.alias("d")).distinct()
     expanded = pairs.select(
@@ -845,7 +841,7 @@ def s16_layout(spark: SparkSession, sf_dir: str) -> str:
         base = os.path.join(wh, f"css_nested_orders_{suf}")
         done = os.path.join(base, "_LAYOUT_DONE")
         if not os.path.exists(done):
-            orders = _t(spark, sf_dir, "orders")
+            orders = load_table(spark, sf_dir, "orders")
             split = F.lit("1998-01-01").cast("timestamp")
             (
                 orders.filter(F.col("o_orderdate") < split)

@@ -29,12 +29,9 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from chronicle_sniffer_spark.operators.graph import _COPURCHASE_CTES, _copurchase_edges
 from chronicle_sniffer_spark.plans.catalog import query
 from chronicle_sniffer_spark.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -87,7 +84,7 @@ def p20_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     terminates at the right k.  The relative (quarter-of-rows) cap
     keeps the answer scale-invariant.
     """
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
         f"""
 BEGIN
@@ -167,7 +164,7 @@ def ml10_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     of two exact integer products.  No corpus-sized sort, no
     row-by-row rank: the ordered pass is distinct-values-sized.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     z = (F.col("n_chars") - 300) / 80.0
     p = F.lit(0.5) + F.lit(0.5) * z / (F.lit(1) + F.abs(z))
     scored = d.select((F.col("lang") == "en").alias("label"), p.alias("p"))
@@ -251,7 +248,7 @@ def u14_pandas_window_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ws = float(w.sum())
         return float((v * w).sum() / ws) if ws else float("nan")
 
-    e = _t(spark, sf_dir, "events").filter(
+    e = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     ).select(
         "event_id",
@@ -303,7 +300,7 @@ def dq8_observe_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Observation
 
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 5)
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 5)
     obs = Observation()
     observed = li.observe(
         obs,
@@ -369,7 +366,7 @@ def l8_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (IEEE-exact both engines), ties fully keyed by doc_id; the margin
     is a single subtraction of identical doubles.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     z = (F.col("n_chars") - 300) / 80.0
     p = F.lit(0.5) + F.lit(0.5) * z / (F.lit(1) + F.abs(z))
     scored = d.select("lang", "doc_id", p.alias("p"))
@@ -433,7 +430,7 @@ def p21_identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     spelling — IDENTIFIER resolves at analysis time, so every pushdown
     and pruning property survives.
     """
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
         """
         SELECT IDENTIFIER(:col) AS k,
@@ -491,7 +488,7 @@ def ml11_chi2_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE map-side-combinable reduction straight to four
     cells — no shuffle wider than 4 numbers whatever the event volume.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     variant = F.when(
         F.md5(F.col("user_id").cast("string")) < "8", F.lit("A")
     ).otherwise(F.lit("B"))
@@ -561,7 +558,7 @@ def dq9_order_inversions(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this audit rides the same shuffle any per-user operator
     already pays.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(
         F.unix_micros(F.col("ts").cast("timestamp")), F.col("event_id")
     )
@@ -617,7 +614,7 @@ def u15_arrow_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     def n_chars(v: pa.Array) -> pa.Array:
         return pc.cast(pc.utf8_length(v), pa.int64())
 
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     return d.select(
         "doc_id",
         head12_upper(F.col("text")).alias("head12"),
@@ -646,7 +643,7 @@ def s17_layout(spark: SparkSession, sf_dir: str) -> str:
         wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "/tmp"
         out = os.path.join(wh, f"css_badcsv_orders_{suf}")
         if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            orders = _t(spark, sf_dir, "orders")
+            orders = load_table(spark, sf_dir, "orders")
             line = F.when(
                 F.col("o_orderkey") % 101 == 0,
                 # type mismatch in a present field -> PERMISSIVE flags it
@@ -761,7 +758,7 @@ def u16_arrow_udtf_wordhist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chronicle_sniffer_spark.functions.udfs import register_arrow_udtf
 
     register_arrow_udtf(spark)
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     return spark.sql(
         """
         SELECT word, CAST(SUM(n) AS BIGINT) AS total
@@ -777,7 +774,7 @@ def u16_arrow_udtf_wordhist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _G6_ORACLE = """
 WITH
-""" + __import__("chronicle_sniffer_spark.plans.round7", fromlist=["x"])._COPURCHASE_CTES + """,
+""" + _COPURCHASE_CTES + """,
 tri AS (
   SELECT e1.u AS a, e1.v AS b, e2.v AS c
   FROM edges e1
@@ -812,14 +809,13 @@ def g6_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     triangle count, and the standard community-tightness signal.
 
     Reuses g2's bounded-participation graph (the hour cap keeps edge
-    volume linear in history length — round7.py:418) and its
+    volume linear in history length — operators/graph.py G2_HOUR_CAP) and its
     node-iterator join shape: triangles come from two edge self-joins
     on the CANONICAL a<b<c orientation (each triangle materializes
     once, then explodes to its three corners), degrees from one
     union-count.  Everything integer until the final cc division of
     exact ints — engine-identical.
     """
-    from chronicle_sniffer_spark.plans.round7 import _copurchase_edges
 
     # eager localCheckpoint, NOT cache(): the edge table feeds five
     # lazy consumers (two self-joins + the degree union), and a leaked
@@ -905,7 +901,7 @@ def o16_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     seams leak no gap and invent none.
     """
     keys = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         # the synthetic key space is dense; puncture it deterministically
         # (identically in the oracle) so the detector has real gaps to find
         .filter(F.col("o_orderkey") % 97 != 0)

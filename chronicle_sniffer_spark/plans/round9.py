@@ -48,12 +48,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from chronicle_sniffer_spark.operators.graph import _COPURCHASE_CTES, _copurchase_edges
 from chronicle_sniffer_spark.plans.catalog import dsum, o_dsum, query
+from chronicle_sniffer_spark.streaming.sessions import SESSION_GAP_MIN
 from chronicle_sniffer_spark.tables import load_table, session_tmpdir, spread
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -89,7 +87,7 @@ def a23_bitmap_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch intersections whose error compounds.  This is the A15
     single-set machinery extended to the full set algebra a
     segmentation/attribution pipeline runs per pair of audiences."""
-    e = _t(spark, sf_dir, "events").filter(
+    e = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     )
     pos = F.expr("bitmap_bit_position(user_id)")
@@ -166,7 +164,7 @@ def ts14_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one day-grain aggregate (map-side combinable), a
     broadcast of per-series totals (dimension-sized), one
     series-partitioned window, one ranked pick per series."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = (
         e.select("event_type", F.date_trunc("day", "ts").alias("d"))
         .groupBy("event_type", "d")
@@ -256,7 +254,7 @@ def ts15_lag_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension-sized series — a broadcast-joined grid, never a shuffle
     of raw events."""
     L = _TS15_MAX_LAG
-    e = _t(spark, sf_dir, "events").filter(
+    e = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     )
     daily = (
@@ -346,7 +344,7 @@ def ml12_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (thousands of rows, independent of corpus size); the global
     cumulative window runs on that aggregated grid — exactly the
     bounded-input global window the window audit allows."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     s1 = d.filter(F.col("lang") == "en").select(F.col("n_chars").alias("v"))
     s2 = d.filter(F.col("lang") == "de").select(F.col("n_chars").alias("v"))
     grid = (
@@ -437,7 +435,7 @@ def dq10_profile_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     nature.  Scale shape: ONE conditional-aggregate pass per snapshot
     pair (profiles ride the same scan via the snap CASE key), then a
     6-row unpivot + self-join on the metric name."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     prof = (
         o.withColumn(
             "snap",
@@ -505,7 +503,7 @@ def l7_template_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     match Spark's replace-all semantics.  Scale shape: identical to
     l1_exact_dedup — a narrow map + hash groupBy, no candidate
     generation at all."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tpl = F.md5(
         F.regexp_replace(
             F.array_join(F.slice(F.split(F.lower("text"), " "), 1, _L7_HEAD), " "),
@@ -545,7 +543,7 @@ def _s18_stage(spark: SparkSession, sf_dir: str) -> str:
     if key not in _S18_CACHE:
         out = session_tmpdir("css_s18_gzip_")
         (
-            _t(spark, sf_dir, "orders")
+            load_table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_orderpriority", "o_totalprice")
             .coalesce(1)
             .write.mode("overwrite")
@@ -643,7 +641,7 @@ def l3_mips_norm_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tests/test_round9.py proves the prune fires (survivors < corpus)
     AND equals brute force."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     dbl = F.col("embedding").cast("array<double>")
     q = (
         e.filter(F.col("vec_id") == 0)
@@ -738,7 +736,6 @@ _G7_UNROLL = 8
 
 
 def _g7_oracle() -> str:
-    from chronicle_sniffer_spark.plans.round7 import _COPURCHASE_CTES
 
     # AS MATERIALIZED is load-bearing: DuckDB inlines plain CTEs, and
     # each round references the previous one ~5 times, so an inlined
@@ -789,7 +786,6 @@ def g7_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolls — if a future corpus peels deeper, the entry fails loudly
     (the coverage5 loud-assumption discipline) instead of silently
     diverging from its oracle."""
-    from chronicle_sniffer_spark.plans.round7 import _copurchase_edges
 
     # lazy checkpoint + count() materialization: ONE driver-synchronized
     # job per round instead of two (the g3/o18 convergence-fusion
@@ -881,7 +877,7 @@ def ts16_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     DAY-collapsed series (calendar-bounded — 365 days is 66k pairs
     per series regardless of event volume); the only data-sized work
     is the first day-grain aggregate."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = (
         e.select("event_type", F.date_trunc("day", "ts").alias("d"))
         .groupBy("event_type", "d")
@@ -1031,7 +1027,7 @@ def ml13_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-pass but paid ~7 s of driver-side Catalyst + Janino per plan
     REBUILD for its ~600 expressions — this form plans in
     milliseconds.  The rank window runs over {B} aggregated rows."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
 
     # money as exact integer CENTS: the weighted sums are then long
     # arithmetic instead of 96M BigDecimal ops; round(x*100) is the
@@ -1168,7 +1164,7 @@ def dq11_snapshot_row_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the unavoidable shape of a row diff) followed by a one-pass
     conditional aggregate; at 100 TB the join co-partitions both
     snapshots by key — no row ships twice."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     v1 = o.filter(F.col("o_orderkey") % 50 != 0).select(
         F.col("o_orderkey").alias("k1"),
         F.col("o_totalprice").alias("p1"),
@@ -1213,7 +1209,6 @@ _G8_XMIN = 2
 
 
 def _g8_oracle() -> str:
-    from chronicle_sniffer_spark.plans.round7 import _COPURCHASE_CTES
 
     return f"""
 WITH {_COPURCHASE_CTES},
@@ -1256,7 +1251,6 @@ def g8_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME aggregate instead of two crossJoined ones (the 1-row
     side broadcast, which AQE's exchange reuse cannot dedupe — the
     tail subtree executed twice)."""
-    from chronicle_sniffer_spark.plans.round7 import _copurchase_edges
 
     edges = _copurchase_edges(spark, sf_dir)
     deg = (
@@ -1298,7 +1292,6 @@ def o18_cutoff_micros(spark: SparkSession, sf_dir: str) -> DataFrame:
     vacuous).  In production the cutoff is simply yesterday's
     watermark; data-deriving it here is test-harness rigor, not part
     of the operator."""
-    from chronicle_sniffer_spark.plans.coverage5 import SESSION_GAP_MIN
 
     gap_us = SESSION_GAP_MIN * 60 * 1000000
     e = load_table(spark, sf_dir, "events")
@@ -1314,7 +1307,6 @@ def o18_cutoff_micros(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _o18_oracle() -> str:
-    from chronicle_sniffer_spark.plans.coverage5 import SESSION_GAP_MIN
 
     return f"""
 WITH marked AS (
@@ -1365,10 +1357,9 @@ def o18_incremental_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one user-keyed shuffle over the DELTA plus a
     semi-join pull of affected users' stored sessions (session-table
     sized, not event-history sized); untouched users never move."""
-    from chronicle_sniffer_spark.plans.coverage5 import SESSION_GAP_MIN
 
     gap_us = SESSION_GAP_MIN * 60 * 1000000
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     # the 1-row cutoff is consumed by both the base and delta branches
     # — checkpoint it so its own event-history window runs once, not
@@ -1489,7 +1480,7 @@ def w7_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines' interpolations collapse to the same double.  (Spark
     rejects ``median`` with an explicit frame; ``percentile(x, 0.5)``
     is the same exact order statistic and frames fine.)"""
-    e = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    e = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -1546,7 +1537,7 @@ def ts17_mase_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts; MASE is one shared double division.  Scale shape: the
     day-grain aggregate collapses event volume; two lag windows ride
     ONE series-partitioned sort."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = (
         e.select("event_type", F.date_trunc("day", "ts").alias("d"))
         .groupBy("event_type", "d")
@@ -1619,7 +1610,7 @@ def ml14_feature_hash_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σweights would be accumulation-order-dependent — with one shared
     division at the end.  Scale shape: explode → broadcast join →
     doc-keyed partial-agg sum; no vocabulary state anywhere."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("token")
     )

@@ -31,10 +31,6 @@ from chronicle_sniffer_spark.plans.catalog import DEC, query
 from chronicle_sniffer_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "ts1_gapfill_ffill",
     section="P7/W2",
@@ -60,7 +56,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def ts1_gapfill_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regularize per-user daily series: dense day grid over each
     user's span, forward-fill missing days, flag gaps."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         "user_id", F.to_date(F.date_trunc("day", "ts")).alias("day")
     ).agg(F.sum(F.col("value").cast(DEC)).cast("double").alias("day_sum"))
@@ -101,7 +97,7 @@ def a3b_hll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes the sketch shuffle-friendly.  (Union and direct paths are
     not bit-identical: the union operator re-coupons, so the check is
     a tolerance, not equality.)"""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     per_group = o.groupBy("o_orderpriority").agg(
         F.expr("hll_sketch_agg(o_custkey, 12)").alias("sk")
     )
@@ -134,7 +130,7 @@ def a3c_freq_items_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     > 15% must appear in the sketch's candidate list (the algorithm's
     superset guarantee) — the primitive that replaces a full groupBy
     at 100 TB when only frequent keys matter."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     candidates = e.stat.freqItems(["event_type"], support=0.15)
     heavy = (
         e.groupBy("event_type")
@@ -167,7 +163,7 @@ def a8b_width_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets; the ref's latency histogram, terraform/main.tf:540-547).
     DuckDB has no width_bucket — the oracle states the same bucketing
     arithmetically (20 buckets of 25000 over [0, 500000))."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.groupBy(
         F.width_bucket("o_totalprice", F.lit(0), F.lit(500000), F.lit(20)).alias("bucket")
     ).agg(F.count("*").alias("n"))
@@ -200,7 +196,7 @@ def ts2_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     user key with partial min combine; no window over the full event
     history and no self-join explosion (the join input is one row per
     user, not per event)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
 
     def first_after(etype: str, prev: DataFrame, prev_col: str, alias: str) -> DataFrame:
         e = ev.filter(F.col("event_type") == etype)
@@ -261,7 +257,7 @@ def ts3_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user, week) before counting, and week arithmetic runs on unix
     seconds so both engines bucket identically; cohort_week stays
     TIMESTAMP (never DateType) per the catalog hashing rules."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).cast("timestamp").alias("cohort_week")
     )

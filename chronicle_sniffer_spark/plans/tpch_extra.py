@@ -29,10 +29,6 @@ from chronicle_sniffer_spark.plans.catalog import (
 from chronicle_sniffer_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "j2e_q7_nation_volume",
     section="J2",
@@ -55,23 +51,23 @@ def j2e_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     roles, with a *disjunctive pair* predicate that can only be applied
     after both joins.  Both nation sides broadcast; the fact-side joins
     shuffle on their keys and AQE picks strategies."""
-    n1 = _t(spark, sf_dir, "nation").select(
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1998-01-01")
     )
     pair = (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2") | (
         F.col("supp_nation") == "NATION_2"
     ) & (F.col("cust_nation") == "NATION_1")
     return (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(li, F.col("s_suppkey") == F.col("l_suppkey"))
-        .join(_t(spark, sf_dir, "orders"), F.col("o_orderkey") == F.col("l_orderkey"))
-        .join(_t(spark, sf_dir, "customer"), F.col("c_custkey") == F.col("o_custkey"))
+        .join(load_table(spark, sf_dir, "orders"), F.col("o_orderkey") == F.col("l_orderkey"))
+        .join(load_table(spark, sf_dir, "customer"), F.col("c_custkey") == F.col("o_custkey"))
         .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
         .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
         .filter(pair)
@@ -107,23 +103,23 @@ def j2f_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     through region, supplier side feeds the share split) finished by a
     conditional-aggregate ratio.  The exact-decimal volume makes the
     double division bit-identical across engines."""
-    n1 = _t(spark, sf_dir, "nation").select(
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nk"), F.col("n_regionkey").alias("c_rk")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("nat")
     )
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
-    o = _t(spark, sf_dir, "orders").filter(
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1998-01-01")
     )
     vol = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
-        .join(_t(spark, sf_dir, "supplier"), F.col("s_suppkey") == F.col("l_suppkey"))
+        .join(load_table(spark, sf_dir, "supplier"), F.col("s_suppkey") == F.col("l_suppkey"))
         .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(_t(spark, sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
+        .join(load_table(spark, sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(n1), F.col("c_nationkey") == F.col("c_nk"))
         .join(F.broadcast(r), F.col("c_rk") == F.col("r_regionkey"))
         .join(F.broadcast(n2), F.col("s_nationkey") == F.col("s_nk"))
@@ -166,11 +162,11 @@ def a6b_q12_late_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     priority.  Exercises join + CASE-split aggregation in one pass
     (map-side partials on both channels)."""
     hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
     )
     return (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
         .groupBy(
             F.when(
@@ -211,14 +207,14 @@ def sq3_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     and reused (Spark re-plans it per use; at 100 TB persist/cache the
     revenue view or let AQE reuse the exchange)."""
     rev = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .filter((F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01"))
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(dsum_dec(disc_price_dec(), "total_revenue"))
     )
     mx = rev.agg(F.max("total_revenue").alias("mx"))
     return (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(rev, F.col("s_suppkey") == F.col("supplier_no"))
         .join(F.broadcast(mx), F.col("total_revenue") == F.col("mx"))
         .select("s_suppkey", "s_name", "total_revenue")
@@ -258,8 +254,11 @@ def p3c_q19_disjunctive_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("l_quantity").between(20, 40)
     )
     return (
-        _t(spark, sf_dir, "lineitem")
-        .join(F.broadcast(_t(spark, sf_dir, "part")), F.col("p_partkey") == F.col("l_partkey"))
+        load_table(spark, sf_dir, "lineitem")
+        .join(
+            F.broadcast(load_table(spark, sf_dir, "part")),
+            F.col("p_partkey") == F.col("l_partkey"),
+        )
         .filter(cond)
         .agg(
             dsum_dec(disc_price_dec(), "revenue"),
@@ -301,12 +300,12 @@ def j5c_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern (`sniffer_entrypoint.sh:160-177`) at full relational
     depth.  Both self-joins shuffle lineitem on l_orderkey once each;
     at 100 TB bucket lineitem by l_orderkey so neither re-shuffles."""
-    li = _t(spark, sf_dir, "lineitem")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_5")
-    s = _t(spark, sf_dir, "supplier").join(
+    li = load_table(spark, sf_dir, "lineitem")
+    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_5")
+    s = load_table(spark, sf_dir, "supplier").join(
         F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"), "left_semi"
     )
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     l1 = (
         li.join(o, F.col("o_orderkey") == F.col("l_orderkey"), "left_semi")
         .join(s.select("s_suppkey"), F.col("l_suppkey") == F.col("s_suppkey"), "left_semi")
@@ -335,7 +334,7 @@ def j5c_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         waiting.join(
-            _t(spark, sf_dir, "supplier"), F.col("s_suppkey") == F.col("l_suppkey")
+            load_table(spark, sf_dir, "supplier"), F.col("s_suppkey") == F.col("l_suppkey")
         )
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))

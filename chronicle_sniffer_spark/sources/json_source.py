@@ -17,21 +17,23 @@ pcap decoder (sources/pcap.py) emits JSON-lines, which splits freely.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamReader
 
 from chronicle_sniffer_spark.schemas import RAW_PACKET_SCHEMA
 
 
-def read_tshark_json(spark: SparkSession, path: str, multiline: bool = True) -> DataFrame:
-    """Read tshark ``-T json`` output into one row per packet.
+def tshark_packets(reader: DataFrameReader | DataStreamReader, path: str) -> DataFrame:
+    """tshark ``-T json`` files at ``path`` as one row per packet, through
+    a batch ``spark.read`` or a streaming ``spark.readStream`` reader.
 
     Returns columns: ``_source`` (VARIANT), ``_corrupt_record``,
     ``source_file``.
     """
     df = (
-        spark.read.schema(RAW_PACKET_SCHEMA)
-        .option("multiLine", multiline)
+        reader.schema(RAW_PACKET_SCHEMA)
+        .option("multiLine", True)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
@@ -41,3 +43,8 @@ def read_tshark_json(spark: SparkSession, path: str, multiline: bool = True) -> 
         "_corrupt_record",
         F.input_file_name().alias("source_file"),
     )
+
+
+def read_tshark_json(spark: SparkSession, path: str) -> DataFrame:
+    """Batch read of tshark ``-T json`` output (see :func:`tshark_packets`)."""
+    return tshark_packets(spark.read, path)

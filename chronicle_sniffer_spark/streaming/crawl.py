@@ -40,6 +40,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from chronicle_sniffer_spark.operators.html import _DENSITY_PCT
+from chronicle_sniffer_spark.operators.quality import (
+    MAX_SYMBOL_RATIO,
+    MEAN_WL_HI,
+    MEAN_WL_LO,
+    MIN_WORDS,
+)
 from chronicle_sniffer_spark.streaming import manifest as mf
 
 BINARYFILE_SCHEMA = (
@@ -52,18 +59,11 @@ N_BUCKETS = 32
 def gated_extract(recs: DataFrame) -> DataFrame:
     """WARC records → gated training documents: main-document
     responses → HTML → text (operators/html.py) → the C4 quality gate
-    (plans/quality.py constants) — the batch funnel's stages 1–2
+    (operators/quality.py constants) — the batch funnel's stages 1–2
     expressed once and shared by the stream's micro-batches and the
     batch twin (plans/round14.py), so stream ≡ batch is a property of
     shared code, not of parallel reimplementation."""
     from chronicle_sniffer_spark.operators.html import html_extract
-    from chronicle_sniffer_spark.plans.quality import (
-        MAX_SYMBOL_RATIO,
-        MEAN_WL_HI,
-        MEAN_WL_LO,
-        MIN_WORDS,
-    )
-    from chronicle_sniffer_spark.plans.round11 import _DENSITY_PCT
 
     main = (
         recs.filter(

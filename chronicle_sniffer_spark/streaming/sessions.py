@@ -48,6 +48,8 @@ from chronicle_sniffer_spark.streaming import manifest as mf
 
 SESSIONS_SCHEMA = "user_id bigint, s bigint, e bigint, n bigint"
 N_BUCKETS = 32
+# session gap of the catalog's batch and incremental sessionize entries
+SESSION_GAP_MIN = 30
 
 
 def _bucket_of(col: str = "user_id"):

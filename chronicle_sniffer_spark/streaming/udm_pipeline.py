@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chronicle_sniffer_spark.etl import per_file_metrics
-from chronicle_sniffer_spark.schemas import RAW_PACKET_SCHEMA
+from chronicle_sniffer_spark.sources.json_source import tshark_packets
 from chronicle_sniffer_spark.udm import project_udm
 
 
@@ -31,15 +31,8 @@ def read_capture_stream(
     spark: SparkSession, in_dir: str, max_files_per_trigger: int = 4
 ) -> DataFrame:
     """S5 over tshark-JSON capture files (multiLine root arrays)."""
-    raw = (
-        spark.readStream.schema(RAW_PACKET_SCHEMA)
-        .option("multiLine", True)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(in_dir)
-    )
-    return raw.select("_source", "_corrupt_record", F.input_file_name().alias("source_file"))
+    reader = spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
+    return tshark_packets(reader, in_dir)
 
 
 def run_udm_stream(

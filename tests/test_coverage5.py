@@ -147,7 +147,7 @@ def test_pq_ranking_quality_vs_exact(spark):
     (chance: 10·50/500 = 1), and a median exact-rank under half of
     chance's 250 (measured: 5 in top-50, median rank ~25)."""
     from chronicle_sniffer_spark.operators.pq import pq_adc_topk
-    from chronicle_sniffer_spark.plans.dedup_sim import ANN_QUERY_VEC
+    from chronicle_sniffer_spark.operators.similarity import ANN_QUERY_VEC
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     approx = [r.vec_id for r in pq_adc_topk(emb, ANN_QUERY_VEC, 10).collect()]
@@ -236,7 +236,7 @@ def test_ivfpq_full_probe_equals_pq(spark):
     full-probe≡brute invariant one level up the composition."""
     from chronicle_sniffer_spark.operators.ivf import N_CENTROIDS
     from chronicle_sniffer_spark.operators.pq import ivfpq_topk, pq_adc_topk
-    from chronicle_sniffer_spark.plans.dedup_sim import ANN_QUERY_VEC
+    from chronicle_sniffer_spark.operators.similarity import ANN_QUERY_VEC
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     full = [tuple(r) for r in ivfpq_topk(emb, ANN_QUERY_VEC, 10, n_probe=N_CENTROIDS).collect()]
@@ -255,7 +255,7 @@ def test_ivfpq_index_serves_codes_only(spark, tmp_path):
         ivfpq_topk,
         ivfpq_topk_from_index,
     )
-    from chronicle_sniffer_spark.plans.dedup_sim import ANN_QUERY_VEC
+    from chronicle_sniffer_spark.operators.similarity import ANN_QUERY_VEC
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     out = str(tmp_path / "ivfpq_index")
@@ -292,7 +292,7 @@ def test_ivfpq_results_subset_of_probed_cells(spark):
     )
     from chronicle_sniffer_spark.operators.pq import ivfpq_topk
     from chronicle_sniffer_spark.operators.similarity import as_double
-    from chronicle_sniffer_spark.plans.dedup_sim import ANN_QUERY_VEC
+    from chronicle_sniffer_spark.operators.similarity import ANN_QUERY_VEC
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     res = {r.vec_id for r in ivfpq_topk(emb, ANN_QUERY_VEC, 10).collect()}
@@ -318,7 +318,8 @@ def test_sessionize_gap_semantics(spark):
     assert the operator's per-session (count, duration) aggregation
     matches exactly — intra-session gaps ≤ 30 min, session breaks
     > 30 min."""
-    from chronicle_sniffer_spark.plans.coverage5 import SESSION_GAP_MIN, ts5_sessionize
+    from chronicle_sniffer_spark.plans.coverage5 import ts5_sessionize
+    from chronicle_sniffer_spark.streaming.sessions import SESSION_GAP_MIN
 
     rows = (
         spark.read.parquet(f"{SF_SMOKE}/events.parquet")

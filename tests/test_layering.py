@@ -1,0 +1,94 @@
+"""Layering guard: the registry is the only list of catalog entries,
+``plans/`` modules are leaves that share code only through
+``operators/``, ``sources/``, ``streaming/`` and ``tables``, and the
+library layers never reach up into the catalog.  Pure ``ast`` checks,
+no Spark session."""
+
+from __future__ import annotations
+
+import ast
+import os
+
+from chronicle_sniffer_spark.plans import registry
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(REPO, "chronicle_sniffer_spark")
+PLANS = "chronicle_sniffer_spark.plans"
+PLAN_MODULES = {
+    f[:-3] for f in os.listdir(os.path.join(PKG, "plans")) if f.endswith(".py")
+} - {"__init__"}
+
+
+def _package_modules() -> dict[str, ast.Module]:
+    out = {}
+    for root, _dirs, files in os.walk(PKG):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                with open(path) as fh:
+                    out[os.path.relpath(path, REPO)] = ast.parse(fh.read(), path)
+    return out
+
+
+def _imported_modules(tree: ast.Module) -> list[str]:
+    """Every module an import statement names, with ``from X import y``
+    expanded to ``X.y`` when ``y`` is a plan submodule."""
+    mods = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            mods += [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            mods.append(node.module)
+            if node.module == PLANS:
+                mods += [f"{PLANS}.{a.name}" for a in node.names if a.name in PLAN_MODULES]
+    return mods
+
+
+def test_no_module_imports_a_plan_module_other_than_catalog():
+    bad = [
+        (path, mod)
+        for path, tree in _package_modules().items()
+        for mod in _imported_modules(tree)
+        if mod.startswith(PLANS + ".") and mod != PLANS + ".catalog"
+    ]
+    assert not bad, bad
+
+
+def test_library_layers_do_not_import_the_catalog():
+    layers = tuple(
+        os.path.join("chronicle_sniffer_spark", d, "") for d in ("operators", "sources", "streaming")
+    )
+    bad = [
+        (path, mod)
+        for path, tree in _package_modules().items()
+        if path.startswith(layers)
+        for mod in _imported_modules(tree)
+        if mod == PLANS or mod.startswith(PLANS + ".")
+    ]
+    assert not bad, bad
+
+
+def test_no_t_loader_wrapper():
+    bad = []
+    for path, tree in _package_modules().items():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name == "_t":
+                bad.append((path, node.lineno))
+            elif isinstance(node, ast.Name) and node.id == "_t" and isinstance(node.ctx, ast.Store):
+                bad.append((path, node.lineno))
+            elif isinstance(node, ast.alias) and (node.asname or node.name) == "_t":
+                bad.append((path, node.lineno))
+    assert not bad, bad
+
+
+def test_bench_tools_hold_no_entry_names():
+    names = set(registry())
+    for rel in ("bench.py", "tools/profile_query.py", "tools/scale_soak.py"):
+        with open(os.path.join(REPO, rel)) as fh:
+            tree = ast.parse(fh.read())
+        found = {
+            n.value
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Constant) and isinstance(n.value, str) and n.value in names
+        }
+        assert not found, (rel, sorted(found))

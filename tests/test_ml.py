@@ -270,7 +270,7 @@ def test_gbt_stumps_recover_planted_structure(spark):
 
     import chronicle_sniffer_spark.plans.ml as ml
 
-    feats = ml._t(spark, SF_SMOKE, "lineitem")
+    feats = ml.load_table(spark, SF_SMOKE, "lineitem")
     a = ml5_gbt_stumps(spark, SF_SMOKE).collect()
     # repartition invariance: run through a different partitioning of
     # the same session (the plan re-reads the scan; partitioning of the

@@ -19,7 +19,7 @@ def test_kmv_sketches_merge_exactly(spark):
     smallest distinct hashes of a UNION equal the K smallest of the
     parts' per-part K-minima — so partial sketches built per
     partition/nation merge into the global sketch losslessly."""
-    from chronicle_sniffer_spark.plans.round11 import KMV_K, _LEHMER_A, _LEHMER_M
+    from chronicle_sniffer_spark.operators.sketches import KMV_K, _LEHMER_A, _LEHMER_M
 
     o = load_table(spark, SF_SMOKE, "orders").join(
         load_table(spark, SF_SMOKE, "customer"),
@@ -84,7 +84,6 @@ def test_g12_matches_bruteforce_bellman_ford(spark):
 def test_holt_winters_pinned_series(spark):
     """Hand-replayed 10-point series: the operator's recursion must
     equal the reference loop bit-for-bit (dyadic constants)."""
-    from chronicle_sniffer_spark.plans.round10 import _t  # noqa: F401
     from chronicle_sniffer_spark.plans.round11 import (
         HW_ALPHA,
         HW_BETA,
@@ -130,12 +129,8 @@ def test_holt_winters_pinned_series(spark):
 
 
 def test_kfold_encode_bruteforce(spark):
-    from chronicle_sniffer_spark.plans.round11 import (
-        KFOLD_K,
-        _LEHMER_A,
-        _LEHMER_M,
-        ml22_kfold_target_encode,
-    )
+    from chronicle_sniffer_spark.operators.sketches import _LEHMER_A, _LEHMER_M
+    from chronicle_sniffer_spark.plans.round11 import KFOLD_K, ml22_kfold_target_encode
 
     got = {
         r.o_orderkey: (r.fold, r.enc)
@@ -232,12 +227,8 @@ def test_a24_caps_sketch_before_the_shuffle(spark):
     exchange in the plan — what crosses the wire is sketch-sized, not
     the raw key stream.  Also re-checks the capped path's result
     equals the uncapped reference."""
-    from chronicle_sniffer_spark.plans.round11 import (
-        KMV_K,
-        _LEHMER_A,
-        _LEHMER_M,
-        a24_kmv_distinct,
-    )
+    from chronicle_sniffer_spark.operators.sketches import KMV_K, _LEHMER_A, _LEHMER_M
+    from chronicle_sniffer_spark.plans.round11 import a24_kmv_distinct
 
     df = a24_kmv_distinct(spark, SF_SMOKE)
     plan = df._jdf.queryExecution().executedPlan().toString()

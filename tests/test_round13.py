@@ -62,7 +62,7 @@ def test_g13_audit_reconciles_with_cap_arithmetic(spark):
     """wedges_kept + wedges_dropped == wedges_total, and the kept
     volume is what a CAP-bounded wedge join can generate: per-customer
     at most C(CAP, 2)."""
-    from chronicle_sniffer_spark.plans.round12 import G13_DEG_CAP
+    from chronicle_sniffer_spark.operators.graph import G13_DEG_CAP
     from chronicle_sniffer_spark.plans.round13 import g13_degree_cap_audit
 
     row = g13_degree_cap_audit(spark, SF_SMOKE).collect()[0]
@@ -81,7 +81,8 @@ def test_a24b_production_matches_full_entry_sketch_columns(spark):
     """The production (sketch-only) variant must report the same
     kth_min and estimate as a24_kmv_distinct's sketch columns, and
     its n_sketch must equal min(K, n_exact) — KMV is exact below K."""
-    from chronicle_sniffer_spark.plans.round11 import KMV_K, a24_kmv_distinct
+    from chronicle_sniffer_spark.operators.sketches import KMV_K
+    from chronicle_sniffer_spark.plans.round11 import a24_kmv_distinct
     from chronicle_sniffer_spark.plans.round13 import a24b_kmv_production
 
     full = {r.o_orderpriority: r for r in a24_kmv_distinct(spark, SF_SMOKE).collect()}
@@ -102,8 +103,8 @@ def test_crawl_funnel_reconciles_with_standalone_stages(spark):
     l6_hash_split Lehmer arithmetic."""
     import hashlib
 
-    from chronicle_sniffer_spark.plans.dedup_sim import shared_pairs_and_labels
-    from chronicle_sniffer_spark.plans.quality import (
+    from chronicle_sniffer_spark.operators.dedup import shared_pairs_and_labels
+    from chronicle_sniffer_spark.operators.quality import (
         MAX_SYMBOL_RATIO,
         MEAN_WL_HI,
         MEAN_WL_LO,

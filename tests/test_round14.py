@@ -94,7 +94,7 @@ def test_warc_media_payloads_match_synthesized_corpus(spark):
     from chronicle_sniffer_spark.operators.multimodal import (
         synthesize_media_encoded,
     )
-    from chronicle_sniffer_spark.plans.round12 import _warc_dir
+    from chronicle_sniffer_spark.sources.warc import _warc_dir
     from chronicle_sniffer_spark.sources.warc import BMP_MOD, WAV_MOD, read_warc
     from chronicle_sniffer_spark.tables import load_table
 
@@ -202,14 +202,18 @@ def test_centroid_cache_evicts_superseded_versions(spark, tmp_path):
 
 
 def _s24_setup(spark):
-    """Run the streaming ingest once over the sf0.001 containers into
-    a fresh table dir; returns (warc_dir, table_dir)."""
-    from chronicle_sniffer_spark.plans.round12 import _warc_dir
+    """Run the streaming ingest once over 16 fresh sf0.001 containers
+    into a fresh table dir; returns (warc_dir, table_dir).  The file
+    count is fixed, not one per core, so the 8-file triggers make
+    several micro-batches on any core count."""
+    from chronicle_sniffer_spark.operators.html import _pages
+    from chronicle_sniffer_spark.sources.warc import write_warc
     from chronicle_sniffer_spark.streaming.crawl import stream_crawl_ingest
     from chronicle_sniffer_spark.tables import session_tmpdir
 
     sf = "/root/testdata/sf0.001"
-    wdir = _warc_dir(spark, sf)
+    wdir = session_tmpdir("s24_warc_")
+    write_warc(_pages(spark, sf), wdir, n_files=16)
     table = session_tmpdir("s24_tab_")
     ckpt = session_tmpdir("s24_ckpt_")
     stream_crawl_ingest(spark, wdir, table, ckpt, max_files_per_trigger=8)
@@ -337,10 +341,10 @@ def test_ts26_twa_weights_by_holding_time(spark):
 
     orig = tables.load_table
     try:
-        r14._t = lambda s, d, n: ev
+        r14.load_table = lambda s, d, n: ev
         out = registry()["ts26_time_weighted_avg"].spark_fn(spark, "ignored").collect()
     finally:
-        r14._t = orig
+        r14.load_table = orig
     assert len(out) == 1
     r = out[0]
     assert r.n_events == 3
@@ -373,15 +377,15 @@ def test_ml28_spearman_exact_on_known_rankings(spark):
     )
     import chronicle_sniffer_spark.plans.round14 as r14
 
-    orig = r14._t
+    orig = r14.load_table
     try:
-        r14._t = lambda s, d, n: ev
+        r14.load_table = lambda s, d, n: ev
         out = {
             r.event_type: r.rho
             for r in registry()["ml28_spearman_rho"].spark_fn(spark, "x").collect()
         }
     finally:
-        r14._t = orig
+        r14.load_table = orig
     assert out["up"] == 1.0
     assert out["down"] == -1.0
 
@@ -411,15 +415,15 @@ def test_ml29_ndcg_perfect_ranking_is_one(spark):
     )
     import chronicle_sniffer_spark.plans.round14 as r14
 
-    orig = r14._t
+    orig = r14.load_table
     try:
-        r14._t = lambda s, d, n: ev
+        r14.load_table = lambda s, d, n: ev
         out = {
             r.user_id: r
             for r in registry()["ml29_ndcg_eval"].spark_fn(spark, "x").collect()
         }
     finally:
-        r14._t = orig
+        r14.load_table = orig
     assert out[1].ndcg == 1.0
     assert out[1].dcg_picos == out[1].idcg_picos > 0
     assert out[2].ndcg < 1.0
@@ -631,12 +635,12 @@ def test_ts29_reset_contributes_post_reset_value(spark):
         rows, "event_id bigint, ts timestamp, user_id bigint,"
         " event_type string, value double, props string"
     )
-    orig = r14._t
+    orig = r14.load_table
     try:
-        r14._t = lambda s, d, n: ev
+        r14.load_table = lambda s, d, n: ev
         out = registry()["ts29_counter_rate"].spark_fn(spark, "x").collect()
     finally:
-        r14._t = orig
+        r14.load_table = orig
     assert len(out) == 1
     r = out[0]
     assert r.n_samples == 4
@@ -664,15 +668,15 @@ def test_g14_adamic_adar_hand_graph(spark):
         [(i, c) for i, (_s, c) in enumerate(edges)],
         "o_orderkey bigint, o_custkey bigint",
     )
-    orig = r14._t
+    orig = r14.load_table
     try:
-        r14._t = lambda sp, d, n: {"lineitem": li, "orders": o}[n]
+        r14.load_table = lambda sp, d, n: {"lineitem": li, "orders": o}[n]
         rows = {
             (r.s1, r.s2): r
             for r in registry()["g14_adamic_adar"].spark_fn(spark, "x").collect()
         }
     finally:
-        r14._t = orig
+        r14.load_table = orig
     w2 = math.floor(1e12 / math.log(2))
     w3 = math.floor(1e12 / math.log(3))
     assert rows[(1, 2)].aa_picos == w2 + w3 and rows[(1, 2)].n_common == 2
@@ -692,7 +696,7 @@ def test_s24_checkpoint_resume_processes_only_new_arrivals(spark, tmp_path):
     import os
     import shutil
 
-    from chronicle_sniffer_spark.plans.round12 import _warc_dir
+    from chronicle_sniffer_spark.sources.warc import _warc_dir
     from chronicle_sniffer_spark.sources import warc as w
     from chronicle_sniffer_spark.sources.warc import read_warc
     from chronicle_sniffer_spark.streaming import manifest as mf

@@ -163,7 +163,7 @@ def test_triangle_count_matches_python_enumeration(spark):
 
     from chronicle_sniffer_spark.plans.round7 import g2_triangle_count
 
-    from chronicle_sniffer_spark.plans.round7 import G2_HOUR_CAP
+    from chronicle_sniffer_spark.operators.graph import G2_HOUR_CAP
 
     ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
     pur = (
@@ -392,7 +392,7 @@ def test_cc_components_match_union_find(spark):
 
     from chronicle_sniffer_spark.plans.round7 import g3_cc_components
 
-    from chronicle_sniffer_spark.plans.round7 import G2_HOUR_CAP
+    from chronicle_sniffer_spark.operators.graph import G2_HOUR_CAP
 
     pur = (
         spark.read.parquet(f"{SF_SMOKE}/events.parquet")

@@ -123,7 +123,7 @@ def test_l2_containment_scores_exact_and_candidates_lossless(spark):
     one under-cap gram is reported — the prefix filter must be
     lossless above threshold."""
     from chronicle_sniffer_spark.operators.dedup import containment_pairs
-    from chronicle_sniffer_spark.plans.dedup_sim import NGRAM_MAX_DF_PCT, NGRAM_N
+    from chronicle_sniffer_spark.operators.dedup import NGRAM_MAX_DF_PCT, NGRAM_N
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").collect()
     gsets = {}
@@ -306,7 +306,7 @@ def test_g5_bfs_matches_python_bfs(spark):
     collected edge set."""
     from collections import deque
 
-    from chronicle_sniffer_spark.plans.round7 import _copurchase_edges
+    from chronicle_sniffer_spark.operators.graph import _copurchase_edges
     from chronicle_sniffer_spark.plans.round8 import BFS_HOPS, g5_bfs_hops
 
     edges = [(r.u, r.v) for r in _copurchase_edges(spark, SF_SMOKE).collect()]

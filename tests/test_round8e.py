@@ -277,7 +277,7 @@ def test_u16_arrow_udtf_emits_batch_partials(spark):
 def test_g6_cc_matches_networkx_style_python(spark):
     """Per-node coefficients must equal a brute-force adjacency-set
     computation over the same capped graph, with cc in [0, 1]."""
-    from chronicle_sniffer_spark.plans.round7 import _copurchase_edges
+    from chronicle_sniffer_spark.operators.graph import _copurchase_edges
     from chronicle_sniffer_spark.plans.round8e import g6_clustering_coefficient
 
     edges = [(r.u, r.v) for r in _copurchase_edges(spark, SF_SMOKE).collect()]

@@ -53,7 +53,7 @@ def test_mips_norm_prune_is_lossless_and_fires(spark):
 
 def test_g7_kcore_matches_python_peel(spark):
     from chronicle_sniffer_spark.plans import registry
-    from chronicle_sniffer_spark.plans.round7 import _copurchase_edges
+    from chronicle_sniffer_spark.operators.graph import _copurchase_edges
 
     edges = {(r.u, r.v) for r in _copurchase_edges(spark, SF).collect()}
     while True:
@@ -287,7 +287,7 @@ def test_g8_alpha_matches_python_mle(spark):
     import math as m
 
     from chronicle_sniffer_spark.plans import registry
-    from chronicle_sniffer_spark.plans.round7 import _copurchase_edges
+    from chronicle_sniffer_spark.operators.graph import _copurchase_edges
 
     deg: dict[int, int] = {}
     for r in _copurchase_edges(spark, SF).collect():

@@ -24,12 +24,25 @@ def test_spread_repartitions_many_tiny_files(spark):
         spark.range(64).repartition(64).write.parquet(d)
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev)
-    df = spark.read.parquet(d)
-    par = spark.sparkContext.defaultParallelism
-    assert len(df.inputFiles()) >= min(par, 64)
-    # raw scan bin-packs the tiny files into far fewer partitions
-    assert df.rdd.getNumPartitions() < par
-    assert spread(df).rdd.getNumPartitions() >= par
+    # pack the tiny files as tightly as Spark allows, so the raw scan
+    # has fewer partitions than cores on any core count
+    packing = ("spark.sql.files.minPartitionNum", "spark.sql.files.openCostInBytes")
+    prev_packing = [spark.conf.get(k, None) for k in packing]
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    spark.conf.set("spark.sql.files.openCostInBytes", "1")
+    try:
+        df = spark.read.parquet(d)
+        par = spark.sparkContext.defaultParallelism
+        assert len(df.inputFiles()) >= min(par, 64)
+        # raw scan bin-packs the tiny files into far fewer partitions
+        assert df.rdd.getNumPartitions() < par
+        assert spread(df).rdd.getNumPartitions() >= par
+    finally:
+        for k, v in zip(packing, prev_packing):
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_spread_is_noop_on_already_parallel_relation(spark):

@@ -599,7 +599,7 @@ def test_t11_stream_maintained_sessions_equal_batch(spark, staged):
     batches), plus a replayed epoch that must not double-count."""
     import tempfile as _tf
 
-    from chronicle_sniffer_spark.plans.coverage5 import SESSION_GAP_MIN
+    from chronicle_sniffer_spark.streaming.sessions import SESSION_GAP_MIN
     from chronicle_sniffer_spark.streaming.sessions import (
         _read_table,
         maintain_sessions,

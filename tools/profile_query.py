@@ -2,10 +2,9 @@
 
 Usage:  python tools/profile_query.py [--reps N] query [query ...]
 
-Fresh session, the bench's warm-twice-then-time discipline, same
-noop-sink / collect() consumption split as bench.py, median of N
-timed reps (default 3) so before/after comparisons for a single
-entry are not at the mercy of full-bench drift.
+Fresh session, the bench's warm-twice-then-time discipline and noop
+sink, median of N timed reps (default 3) so before/after comparisons
+for a single entry are not at the mercy of full-bench drift.
 """
 
 from __future__ import annotations
@@ -17,7 +16,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _SMALL  # noqa: E402
 from chronicle_sniffer_spark.plans import registry  # noqa: E402
 from chronicle_sniffer_spark.session import get_spark  # noqa: E402
 
@@ -31,14 +29,9 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("profile_query")
     reg = registry()
-    reg["s1_parquet_count"].spark_fn(spark, sf_dir).collect()
 
     def run(name: str) -> None:
-        df = reg[name].spark_fn(spark, sf_dir)
-        if name in _SMALL:
-            df.collect()
-        else:
-            df.write.format("noop").mode("overwrite").save()
+        reg[name].spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     for name in args:
         spark.sparkContext.setJobDescription(f"profile:{name}")

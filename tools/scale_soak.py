@@ -4,8 +4,8 @@ The correctness gate and bench stop at sf0.1 (~600k lineitem rows);
 the design target is a 1000-executor cluster on 100 TB.  This tool
 provides the first MEASURED evidence above sf0.1: it generates the
 FK-consistent sf1 replica set (tools/make_scale_data.py, ~6M lineitem
-rows = 10x data), runs the heaviest catalog queries at both SFs on the
-same session, and records per-query walls and the sf1/sf0.1 ratio.
+rows = 10x data), runs catalog entries at both SFs on the same
+session, and records per-query walls and the sf1/sf0.1 ratio.
 
 Reading the ratios: 10x data through a scan+shuffle pipeline should
 cost ~10x (near-linear); sorts and window ranks may add an n·log n
@@ -14,14 +14,17 @@ the next 100x (the round-4 verdict's acceptance bar is <= ~12x with
 outliers explained).  The brute-force all-pairs oracle baseline
 (l2_embedding_near_dup) is excluded BY DESIGN: it is O(N^2) by
 definition and scope-guarded as an oracle, not a scale path — its
-scale paths (LSH and IVF ANN) are in the list instead.
+scale paths (LSH and IVF ANN) are soaked instead.
 
 Usage: python tools/scale_soak.py [out_json] [query ...]
-(default SCALE_r05.json next to the repo root; prints one JSON line,
-bench.py style).  With query names, runs a FOCUSED soak of just those
-and MERGES the rows into an existing out_json, recomputing the
-median/max — so late-round entries get scale evidence without
-re-timing the whole set.
+(default SCALE_r10.json next to the repo root; prints one JSON line,
+bench.py style).  With query names, runs a FOCUSED soak of just those;
+without, re-soaks every entry out_json already records (every registry
+entry when out_json does not exist yet).  Rows MERGE into out_json,
+recomputing the median/max — so late-round entries get scale evidence
+without re-timing the whole set.  The per-entry explanations of
+super-linear ratios (BASELINE.md §3) live in scale_outlier_notes.json
+and are merged over out_json's own notes.
 """
 
 from __future__ import annotations
@@ -38,301 +41,30 @@ from chronicle_sniffer_spark.session import get_spark
 from tools.make_scale_data import make_scale_data
 
 SF01_DIR = "/root/testdata/sf0.1"
-
-# The heavy/representative catalog surface: every multi-join TPC-H
-# shape, the window/sort/agg family, time-series, the full dedup and
-# similarity suite (scale paths, not the quadratic oracle), text
-# analysis, and the per-row media decodes.
-QUERIES = (
-    "a1_q1_pricing_summary",
-    "j2_q3_shape",
-    "j2g_q9_product_profit",
-    "sq4_q2_min_cost_supplier",
-    "a9c_q11_important_stock",
-    "a9b_q18_large_orders",
-    "sq2_q17_correlated",
-    "o1_sort_limit",
-    "w1_topk_per_group",
-    "w4_running_total",
-    "j8_asof",
-    "o9_cdc_latest",
-    "a10_salted_skew_agg",
-    "a10b_salted_skew_join",
-    "ts1_gapfill_ffill",
-    "ts2_funnel_conversion",
-    "ts3_retention_cohorts",
-    "l1_exact_dedup",
-    "l2_minhash_signatures",
-    "l2_ngram_jaccard",
-    "l2_simhash_pairs",
-    "l3_cosine_topk",
-    "l3_ann_lsh_topk",
-    "l3_ann_ivf_topk",
-    "l4_tfidf",
-    "l4_span_dedup",
-    "l4_fingerprint",
-    "l6_hash_split",
-    "l5_jpeg_decode",
-    "l5_video_decode",
-    "l5_gif_decode",
-    "l3_ann_ivf_index_topk",
-    # round-5 session additions
-    "l4_bm25_topk",
-    "l3_ann_pq_topk",
-    "l2_semantic_dedup",
-    "l3_ann_ivfpq_topk",
-    "l3_ann_ivfpq_index_topk",
-    "l4_unigram_surprisal",
-    "g1_pagerank_topk",
-    "ts4_zscore_anomaly",
-    "ts5_sessionize",
-    "l2_incremental_dedup",
-    "l2_fuzzy_title_join",
-    "l3_label_centroids",
-    "l6_quality_deciles",
-    "l6_leakage_safe_split",
-    "l6_token_budget_select",
-    "t10_doc_quality_gate",
-    "l4_bigram_surprisal",
-    "l6_moore_lewis_select",
-    "l4_pmi_collocations",
-    "l3_sq8_quantize",
-    "l3_ann_sq8_topk",
-    "ts7_mad_outliers",
-    "dq1_constraint_report",
-    "l6_weighted_sample_es",
-    "ts6_user_entropy",
-    # late round-5 additions (landed after the last full soak)
-    "l4_source_vocab_overlap",
-    "a11_corr_matrix",
-    "a12_ols_trend",
-    "a13_time_rollup",
-    "dq2_benford_digits",
-    # round-6 additions: in-plan iterative training (T scans) and the
-    # one-pass NB/eval passes
-    "ml1_logreg_gd",
-    "ml2_naive_bayes",
-    "ml3_eval_confusion",
-    "ml4_kmeans",
-    "ml5_gbt_stumps",
-    "ml2b_nb_classify",
-    "dq3_dp_release",
-    # round-7 additions: sketch/PIT/BPE + the star-CC consumer and the
-    # df-cap audit over the relative cap
-    "a14_cms_heavy_hitters",
-    "ml6_pit_training_set",
-    "l4_bpe_merge_step",
-    "l2_ngram_df_cap_audit",
-    "l2_dedup_clusters",
-    "l3_ann_recall_eval",
-    "dq4_drift_report",
-    "s8b_bucketed_colocated_join",
-    "g2_triangle_count",
-    "a15_bitmap_distinct",
-    "o9b_scd2_intervals",
-    "l4_phrase_search",
-    "o10_incremental_agg_refresh",
-    "a4b_mergeable_quantiles",
-    "g3_cc_components",
-    # round-8 additions: recursive CTE, SQL UDFs, per-key state
-    # recursions, skyline, bigram LM, containment, quarantine,
-    # nucleus, bounded BFS
-    "g4_hierarchy_rollup_rcte",
-    "u7_sql_scalar_udf",
-    "u8_sql_table_udf",
-    "ts8_ewma_smoothing",
-    "ts9_holt_linear",
-    "o11_pareto_frontier",
-    "l4_bigram_lm_score",
-    "l2_ngram_containment",
-    "dq5_quarantine_split",
-    "l6_nucleus_select",
-    "g5_bfs_hops",
-    "u9_iter_pandas_udf",
-    "ts10_sequence_pattern",
-    "l6_curation_funnel",
-    "p15_variant_shred",
-    "j13_lateral_topk",
-    "p16_try_arithmetic",
-    "a17_group_by_all",
-    "dq6_reconciliation_checksum",
-    "l4_rouge_pairs",
-    "p17_collated_group",
-    "s8c_dynamic_partition_overwrite",
-    "a4c_weighted_median",
-    "u10_parameterized_sql",
-    "t9c_full_outer_join_batch",
-    "a18_mode_per_group",
-    "t3b_dynamic_gap_session",
-    "u11_apply_in_arrow",
-    # round-8 second wave: bucketed range join, distributed NTILE,
-    # seasonal baseline
-    "j14_bucketed_range_join",
-    "a19_equidepth_histogram",
-    "ts11_seasonal_profile",
-    # round-8 third wave: data skipping, polymorphic UDTF, interval union
-    "s13_manifest_file_prune",
-    "u12_polymorphic_udtf",
-    "ts12_interval_coverage",
-    # round-8 fourth wave: DPP, pipe syntax, threshold-pruned top-k
-    "j15_dynamic_partition_pruning",
-    "p18_pipe_syntax",
-    "o12_threshold_topk",
-    # round-8 fifth wave: merge-on-read, temperature mix, calibration
-    "j16_merge_on_read",
-    "l6_temperature_mix",
-    "ml7_calibration_curve",
-    # round-8 sixth wave: null-safe join, M4 downsample, multi-distinct
-    "j17_null_safe_join",
-    "ts13_m4_downsample",
-    "a20_multi_distinct_expand",
-    # round-8 seventh wave: histogram AUC, table-arg UDTF, time travel
-    "ml8_auc_exact",
-    "u13_udtf_table_argument",
-    "s14_snapshot_time_travel",
-    # round-8 eighth wave: trailing range window, grouping flags, keyset page
-    "w5_trailing_range_window",
-    "a21_grouping_id_rollup",
-    "o13_keyset_pagination",
-    # round-8 ninth wave: forward asof, partition evolution
-    "j18_asof_forward",
-    "s15_partition_evolution",
-    # round-8 tenth wave: semi stream-join, sliding distinct, path options
-    "t9d_semi_join_batch",
-    "a22_sliding_distinct_users",
-    "s16_scan_path_options",
-    # round-8 eleventh wave: SQL scripting, lift table, window UDAF
-    "p20_sql_scripting",
-    "ml10_lift_table",
-    "u14_pandas_window_udaf",
-    # round-8 twelfth wave: observe metrics, preference pairs, IDENTIFIER
-    "dq8_observe_pipeline",
-    "l8_preference_pairs",
-    "p21_identifier_clause",
-    # round-8 thirteenth wave: chi-square, inversion audit, arrow UDF
-    "ml11_chi2_ab_test",
-    "dq9_order_inversions",
-    "u15_arrow_scalar_udf",
-    # round-8 fourteenth wave: corrupt-record quarantine, arrow UDTF
-    "s17_corrupt_record_quarantine",
-    "u16_arrow_udtf_wordhist",
-    # round-8 fifteenth wave: clustering coefficient, sequence gaps
-    "g6_clustering_coefficient",
-    "o16_sequence_gaps",
-    # round-9 additions: bitmap set algebra, integer-exact stats,
-    # profile drift, template dedup, gzip scan, norm-pruned MIPS,
-    # k-core peel
-    "a23_bitmap_set_algebra",
-    "ts14_cusum_changepoint",
-    "ts15_lag_cross_correlation",
-    "ml12_ks_two_sample",
-    "dq10_profile_snapshot_diff",
-    "l7_template_dedup",
-    "s18_gzip_json_scan",
-    "l3_mips_norm_prune",
-    "g7_kcore_peel",
-    "ts16_theil_sen_slope",
-    "ml13_poisson_bootstrap_ci",
-    "dq11_snapshot_row_diff",
-    "g8_degree_powerlaw",
-    "o18_incremental_sessionize",
-    "w7_rolling_median",
-    "ts17_mase_backtest",
-    "ml14_feature_hash_score",
-    # round-10 additions
-    "l3_ann_ivf_index_upsert",
-    "l4_bpe_encode",
-    "ml19_psi_drift",
-    "dq13_fd_audit",
-    "ml21_target_encode_loo",
-    "ts18_seasonal_decompose",
-    "g9_label_propagation",
-    "l3_sparse_cosine_topk",
-    "g10_cosupply_projection",
-    "ts20_outage_windows",
-    "ml16_ols_normal_eq",
-    "dq14_ri_orphan_audit",
-    "j19_asof_tolerance",
-    "l2_embedding_near_dup",
-    # round-11 additions
-    "l4_html_extract",
-    "l4_html_blocks",
-    "ml22_kfold_target_encode",
-    "ts22_holt_winters",
-    "a24_kmv_distinct",
-    "g12_bounded_cheapest_path",
-    "l4_markdown_extract",
-    "s19_manifest_store_scan",
-    "ml23_pr_curve",
-    "a25_gini_token_inequality",
-    "l1_dedup_keep_best",
-    "j21_nearest_value_join",
-    # round-12 additions
-    "s20_warc_scan",
-    "s20_warc_html_pipeline",
-    "l4_url_canonicalize",
-    "ts23_acf",
-    "ml24_welch_ttest",
-    "g13_common_neighbors",
-    "g13_degree_cap_audit",
-    "s20_warc_record_mix",
-    "a24b_kmv_production",
-    "l6_crawl_funnel",
-    "s22_cdx_offset_read",
-    "ml26_isotonic_calibration",
-    "ml27_mann_whitney_u",
-    "ts25_sax_symbolize",
-    "l4_lang_id_trigram",
-    "l5_audio_resample",
-    "s23_schema_evolution_scan",
-    "l5_image_resize",
-    "s21_manifest_compaction",
-    "ml25_brier_decomposition",
-    "l2_cdc_chunk_dedup",
-    "j22_interval_anti_join",
-    "u17_cogrouped_map",
-    "s20_warc_image_decode",
-    "s20_warc_audio_decode",
-    "s24_crawl_stream_ingest",
-    "ts26_time_weighted_avg",
-    "ml28_spearman_rho",
-    "ml29_ndcg_eval",
-    "ml30_cohens_kappa",
-    "s25_position_deletes",
-    "l5_video_scene_cut",
-    "l3_ann_ivf_index_delete",
-    "ts29_counter_rate",
-    "g14_adamic_adar",
-)
+NOTES_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "scale_outlier_notes.json")
 
 
 def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE_r10.json"
     )
-    only = set(sys.argv[2:])
+    prev: dict = {}
+    if os.path.exists(out_path):
+        with open(out_path) as fh:
+            prev = json.load(fh)
+    results: dict[str, dict] = prev.get("queries", {})
+    notes: dict[str, str] = prev.get("outlier_notes", {})
+    with open(NOTES_PATH) as fh:
+        notes.update(json.load(fh))
     sf1_dir = make_scale_data()
     spark = get_spark("scale-soak")
     reg = registry()
-    try:
-        from bench import _SMALL  # consumption parity with the bench
-    except ImportError:
-        _SMALL = set()
+    names = sys.argv[2:] or list(results) or list(reg)
 
     def run(name: str, sf_dir: str) -> None:
-        df = reg[name].spark_fn(spark, sf_dir)
-        if name in _SMALL:
-            df.collect()
-        else:
-            df.write.format("noop").mode("overwrite").save()
+        reg[name].spark_fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    results: dict[str, dict] = {}
-    if only and os.path.exists(out_path):
-        with open(out_path) as fh:
-            results = json.load(fh).get("queries", {})
-    for name in QUERIES:
-        if only and name not in only:
-            continue
+    for name in names:
         row: dict = {}
         for sf_dir, key in ((SF01_DIR, "sf0.1"), (sf1_dir, "sf1")):
             run(name, sf_dir)  # warm: codegen compile + JIT
@@ -361,27 +93,7 @@ def main() -> None:
         "max_ratio": max(ratios),
         "queries": results,
         "sf1_rows": {"lineitem": 6_000_000, "documents": 50_000, "embeddings": 20_000},
-        # super-linear WALL ratios that are OUTPUT-driven on this
-        # synthetic corpus (fixed 40-word vocabulary), not plan flaws —
-        # measured analysis in BASELINE.md §3
-        "outlier_notes": {
-            "l2_fuzzy_title_join": "true match set grows 99x (12.8k->1.27M pairs); any correct algorithm is Omega(output); candidates ~30x matches under block+band; the r9 char-frequency count filter (lossless, lev>=L1/2) cuts candidates reaching levenshtein to 68.5% at sf0.1 (381,662->261,534 for 12,830 matches)",
-            "l2_ngram_jaccard": "round 8: pairs+labels now materialized ONCE per session (shared_pairs_and_labels) and this entry reads the parquet back — the Omega(output) pair-generation cost (was ~35s sf1) is paid once in the session's first warm run, then amortized across all three consumers; candidate volume itself is unchanged and linear-in-corpus by design",
-            "l6_leakage_safe_split": "reads the shared materialized cluster labels (was 68.7s sf1 recomputing pairs+closure; now a parquet scan + hash split)",
-            "l2_dedup_clusters": "reads the shared materialized labels (was 64.5s sf1; the one-time build carries the pair generation + component closure)",
-            "l2_ngram_containment": "r9 added the containment-safe positional filter (PPJoin suffix bound) AND min-side-only candidate generation (match rows 45.2M->22.9M at sf1, countDistinct->map-side count), 21.7s->17.8s sf1; the remaining volume is the inverted-index floor on the 40-word synthetic vocabulary (every 'rare' 3-gram appears in ~40 docs, so each prefix entry fans out ~40 probe matches) - on Zipfian text the prefix df collapses and the join is output-sized; scores stay exact on full gram sets. r11 probed the r10 soak move (5.51x->7.48x) as machine drift: the df cap NEVER fires on this corpus (max gram df 25 vs cap 1000 at sf0.1, both scale 10x to sf1), so the r10 credit could not change the candidate set; interleaved fresh-session A/B of r10 vs r11 code measured identical medians (~20.6s vs ~20.4s). r11 also tightened the blanket min(ca,cb) credit to the EXACT per-pair capped-common count (stage 2, two candidate-sized joins; free on uncapped corpora via exchange reuse)",
-            "l2_semantic_dedup": "fixed K=16 cells for the oracle entry; the scale configuration grows n_centroids with the corpus (BASELINE.md: 3.0s at sf1 with K=160)",
-            "j14_bucketed_range_join": "the scale replicas multiply orders 10x over the SAME date span, so overlapping pairs grow ~100x (7.86M at sf0.1 -> ~786M at sf1); 13.9x wall for ~100x output is sub-linear in output (>40M pairs/s through the bucket join); real workloads grow the time span with the data, keeping pair density (and the ratio) linear",
-            "l2_ngram_containment_zipf": "round 12 MEASURED the Zipfian claim: tools/zipf_scale_probe.py on a 30k-word Zipf(1.05) regeneration of the corpus runs containment at 2.45x for 10x data with output-linear matches (sf1 wall 7.95s vs 21.6s on the 40-word corpus) - the synthetic-vocabulary floor is the fixture, not the plan (BASELINE.md round-12 table)",
-            "g13_common_neighbors": "round 13: FILTER-AND-VERIFY rewrite - degree-capped wedge candidates (<=C(16,2) per customer vs sum-of-deg^2) with the top-200 survivors re-counted EXACTLY on the full edge set; soak 4.17x -> 1.35x, sf10 176.6s -> 65.4s; capped top-k equals uncapped top-k at fixture scale (pytest)",
-            "l2_cdc_chunk_dedup": "round 13: the per-char boundary scan moved from the interpreted HOF expression (CodegenFallback, the r12 audit regression) to vectorized numpy over Arrow batches (utf-32 codepoints + one cumsum difference) - 2.6s -> 0.5s at sf1 for the exceptAll-identical chunk multiset",
-            "l4_lang_id_trigram": "trigram volume is 3x corpus chars through one (doc,gram) partial agg - char-linear at fixed cores (soak ~4x for 10x chars, sf10 spot 1.56x); the broadcast profile never shuffles the corpus",
-            "l6_crawl_funnel": "the near-dup stage reads the shared ngram cluster labels, so at sf10 it inherits the l2_ngram family's DOCUMENTED synthetic-vocabulary disk-intractability (every gram in ~40x more docs; BASELINE round-11 note, Zipf-measured output-linear on realistic text) - the sf10 spot for this entry is the Zipf corpus, not the 40-word fixture; sf1 steady state 1.53x",
-            "u17_cogrouped_map": "cogrouped applyInPandas pays one Arrow call per key pair - linear in keys at fixed cores, the declared per-key-Python class (u14 precedent); volume work belongs in the SQL twin the oracle runs",
-            "s18_gzip_json_scan": "STRUCTURAL, and the entry's point: gzip is not byte-range splittable, so the decompress is ONE serial task that grows linearly with the file (7.8x for 10x bytes is the codec, not the plan); spread() right after the scan parallelizes everything downstream - at 100 TB the fix is splittable codecs or many files, exactly what the docstring prescribes",
-            "ml13_poisson_bootstrap_ci": "compile-dominated, not data-dominated: ~10s of Catalyst+Janino per REBUILT plan (600 exprs) vs 0.32s of executed work at sf0.1 - the B1a fixed-cost class; ratio 1.6x reflects the sf1 marginal work riding the same fixed cost",
-            "u14_pandas_window_udaf": "bounded-frame pandas UDAF pays one Arrow evaluation per ROW - Python work is inherently linear in rows (3.7x wall for 10x purchases on 32 cores is the parallel floor, not a plan defect); full-volume work belongs on the pure-SQL frame (w5)",
-        },
+        "outlier_notes": notes,
     }
     with open(out_path, "w") as fh:
         json.dump(summary, fh, indent=1)
