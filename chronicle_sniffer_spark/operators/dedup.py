@@ -38,10 +38,12 @@ content-similarity dedup for training-data pipelines.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from chronicle_sniffer_spark.tables import load_table
+from chronicle_sniffer_spark.tables import load_table, session_memo, session_tmpdir
 
 
 def ngram_zip_expr(n: int, words_sql: str = "split(text, ' ')") -> str:
@@ -644,9 +646,6 @@ _ORACLE_GRAMS_CTE = f"""
 """
 
 
-_PAIR_LABEL_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
-
 def shared_pairs_and_labels(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -660,29 +659,18 @@ def shared_pairs_and_labels(
     recompute it from scratch (~35 s of EACH sf1 wall).  This is also
     the production shape: a dedup run computes the cluster table once
     and many downstream jobs read it.  First caller in a session pays
-    the computation and writes both tables to parquet under /tmp;
-    every later caller (and every later stage of the same query) reads
-    the parquet back — a scan, not a 7-shuffle recompute.
+    the computation and writes both tables to parquet; every later
+    caller (and every later stage of the same query) reads the parquet
+    back — a scan, not a 7-shuffle recompute.
 
-    The location includes BOTH the sf_dir hash and this session's
-    applicationId: the in-memory cache key is per-session (a fresh
-    session never trusts a stale file from a previous process), and
-    because the path is per-session too, two concurrent processes on
-    the same sf_dir (e.g. bench.py and pytest) each write their own
-    directory instead of one mode("overwrite") clobbering parquet
-    files the other is actively reading.  Directories live under the
-    OS temp dir and are reused for the lifetime of the session.
+    No fixture is shared across processes, so a fresh session never
+    trusts a stale file from a previous process, and two concurrent
+    processes on the same sf_dir (e.g. bench.py and pytest) never
+    clobber parquet files the other is reading.
     """
-    import hashlib
-    import os
-    import tempfile
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PAIR_LABEL_CACHE:
-        tag = hashlib.md5(
-            f"{sf_dir}|{spark.sparkContext.applicationId}".encode()
-        ).hexdigest()[:12]
-        base = os.path.join(tempfile.gettempdir(), f"css_ngram_pairs_{tag}")
+    def build() -> tuple[str, str]:
+        base = session_tmpdir("css_ngram_pairs_")
         pairs_path = os.path.join(base, "pairs")
         labels_path = os.path.join(base, "labels")
         pairs = ngram_jaccard_pairs(
@@ -694,8 +682,11 @@ def shared_pairs_and_labels(
         pairs.write.mode("overwrite").parquet(pairs_path)
         pairs = spark.read.parquet(pairs_path)
         connected_components(pairs).write.mode("overwrite").parquet(labels_path)
-        _PAIR_LABEL_CACHE[key] = (pairs_path, labels_path)
-    pairs_path, labels_path = _PAIR_LABEL_CACHE[key]
+        return pairs_path, labels_path
+
+    pairs_path, labels_path = session_memo(
+        spark, ("ngram_pairs_labels", os.path.abspath(sf_dir)), build
+    )
     return spark.read.parquet(pairs_path), spark.read.parquet(labels_path)
 
 

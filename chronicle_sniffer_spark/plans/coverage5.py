@@ -34,7 +34,6 @@ ulp — measured in tests/test_coverage5.py).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -60,7 +59,7 @@ from chronicle_sniffer_spark.operators.quality import (
 from chronicle_sniffer_spark.operators.similarity import ANN_K, ANN_QUERY_VEC, COSINE_TOPK_ORACLE
 from chronicle_sniffer_spark.plans.catalog import query, registry
 from chronicle_sniffer_spark.streaming.sessions import SESSION_GAP_MIN
-from chronicle_sniffer_spark.tables import load_table, session_tmpdir
+from chronicle_sniffer_spark.tables import load_table, session_memo, session_tmpdir
 
 
 # ---------------------------------------------------------------------------
@@ -226,22 +225,18 @@ def l3_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivfpq_topk(load_table(spark, sf_dir, "embeddings"), ANN_QUERY_VEC, ANN_K)
 
 
-# (applicationId, sf_dir) -> index dir: the IVF-PQ index is written
-# once per session and served many times — the 100 TB shape, mirroring
-# dedup_sim._ivf_index_dir for the plain-IVF index.
-_IVFPQ_INDEX_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _ivfpq_index_dir(spark: SparkSession, sf_dir: str) -> str:
-
+    """The IVF-PQ index, written once per session and served many
+    times — the 100 TB shape, mirroring dedup_sim._ivf_index_dir for
+    the plain-IVF index."""
     from chronicle_sniffer_spark.operators.pq import ivfpq_index_write
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVFPQ_INDEX_CACHE:
+    def build() -> str:
         out = session_tmpdir("css_ivfpq_index_")
         ivfpq_index_write(load_table(spark, sf_dir, "embeddings"), out)
-        _IVFPQ_INDEX_CACHE[key] = out
-    return _IVFPQ_INDEX_CACHE[key]
+        return out
+
+    return session_memo(spark, ("l3_ivfpq_index", os.path.abspath(sf_dir)), build)
 
 
 @query("l3_ann_ivfpq_index_topk", section="L3", oracle=_ivfpq_oracle())
@@ -2772,7 +2767,9 @@ def s12_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Completes the built-in source matrix next to
     parquet/JSON/CSV/ORC/XML/binary."""
     d = load_table(spark, sf_dir, "documents")
-    out = os.path.join(tempfile.gettempdir(), "css_s12_text_roundtrip")
+    out = session_memo(
+        spark, ("s12_text_roundtrip", os.path.abspath(sf_dir)), lambda: session_tmpdir("css_s12_")
+    )
     d.select(
         F.concat_ws("\t", F.col("doc_id").cast("string"), F.col("text")).alias("value")
     ).write.mode("overwrite").text(out)
@@ -2801,7 +2798,9 @@ def s11_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
-    out = os.path.join(tempfile.gettempdir(), "css_s11_xml_roundtrip")
+    out = session_memo(
+        spark, ("s11_xml_roundtrip", os.path.abspath(sf_dir)), lambda: session_tmpdir("css_s11_")
+    )
     s.write.mode("overwrite").format("xml").option("rowTag", "supplier").save(out)
     return (
         spark.read.schema(

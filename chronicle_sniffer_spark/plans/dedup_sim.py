@@ -9,6 +9,8 @@ hash-compare is exact — no RNG anywhere.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -29,7 +31,7 @@ from chronicle_sniffer_spark.operators.similarity import (
     oracle_bucket_keys_sql,
 )
 from chronicle_sniffer_spark.plans.catalog import query
-from chronicle_sniffer_spark.tables import load_table, session_tmpdir
+from chronicle_sniffer_spark.tables import load_table, session_memo, session_tmpdir
 
 
 def _oracle_grams_cte(rel: str = "documents") -> str:
@@ -261,22 +263,17 @@ def _ivf_oracle() -> str:
     return oracle_ivf_sql(ANN_QUERY_VEC, ANN_K)
 
 
-# (applicationId, sf_dir) -> index dir, so the materialized-index entry
-# writes the cid-partitioned layout once per session (the 100 TB shape:
-# the index is written once and served many times).
-_IVF_INDEX_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
-
+    """The cid-partitioned index layout, written once per session (the
+    100 TB shape: the index is written once and served many times)."""
     from chronicle_sniffer_spark.operators.ivf import ivf_index_write
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVF_INDEX_CACHE:
+    def build() -> str:
         out = session_tmpdir("css_ivf_index_")
         ivf_index_write(load_table(spark, sf_dir, "embeddings"), out)
-        _IVF_INDEX_CACHE[key] = out
-    return _IVF_INDEX_CACHE[key]
+        return out
+
+    return session_memo(spark, ("l3_ivf_index", os.path.abspath(sf_dir)), build)
 
 
 @query("l3_ann_ivf_topk", section="L3", oracle=_ivf_oracle())
@@ -319,21 +316,18 @@ def l3_ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # afterwards.  Mirrored verbatim in the DuckDB oracle's train_where.
 _IVF_UPSERT_BASE = "vec_id % 5 <> 0"
 
-_IVF_UPSERT_CACHE: dict[tuple[str, str], str] = {}
-
 
 def _ivf_upserted_index_dir(spark: SparkSession, sf_dir: str) -> str:
-
     from chronicle_sniffer_spark.operators.ivf import ivf_index_upsert, ivf_index_write
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVF_UPSERT_CACHE:
+    def build() -> str:
         out = session_tmpdir("css_ivf_upsert_")
         emb = load_table(spark, sf_dir, "embeddings")
         ivf_index_write(emb.filter(F.expr(_IVF_UPSERT_BASE)), out)
         ivf_index_upsert(spark, out, emb.filter(~F.expr(_IVF_UPSERT_BASE)))
-        _IVF_UPSERT_CACHE[key] = out
-    return _IVF_UPSERT_CACHE[key]
+        return out
+
+    return session_memo(spark, ("l3_ivf_upserted", os.path.abspath(sf_dir)), build)
 
 
 def _ivf_upsert_oracle() -> str:

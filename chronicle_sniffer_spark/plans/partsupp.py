@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from chronicle_sniffer_spark.plans.catalog import O_DISC_PRICE, disc_price_dec, query
-from chronicle_sniffer_spark.tables import load_table
+from chronicle_sniffer_spark.tables import load_table, session_memo
 
 
 # DuckDB CTE text, prepended to every oracle below.
@@ -63,11 +63,6 @@ PARTSUPP_CTE = """
 # 39 (module docstring) — reject those supplier counts outright.
 _DEGENERATE_SUPPLIER_COUNTS = frozenset({1, 2, 3, 13, 26, 39})
 
-# (applicationId, abspath(sf_dir)) -> cached partsupp DataFrame, so the
-# five Q-shapes share ONE materialization per session instead of
-# re-running the explode per query (free at sf0.1, measurable at sf1+).
-_PS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 
 def derived_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Spark side of the shared derivation (module docstring).
@@ -75,37 +70,39 @@ def derived_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     Materialized once per (session, sf_dir): the supplier count is a
     bounded 1-row collect used both for the degeneracy guard and as a
     literal in the suppkey arithmetic, and the resulting 4×|part|
-    DataFrame is cached so Q2/Q9/Q11/Q16/Q20 reuse one build.
+    DataFrame is cached so Q2/Q9/Q11/Q16/Q20 share ONE materialization
+    instead of re-running the explode per query (free at sf0.1,
+    measurable at sf1+).
     """
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _PS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    n_sup = load_table(spark, sf_dir, "supplier").count()
-    if n_sup in _DEGENERATE_SUPPLIER_COUNTS:
-        raise ValueError(
-            f"supplier count {n_sup} makes the stride-13 ps_suppkey derivation "
-            "collide (duplicate (ps_partkey, ps_suppkey) rows); regenerate the "
-            "testdata with >= 4 suppliers and S not in {1,2,3,13,26,39}"
+
+    def build() -> DataFrame:
+        n_sup = load_table(spark, sf_dir, "supplier").count()
+        if n_sup in _DEGENERATE_SUPPLIER_COUNTS:
+            raise ValueError(
+                f"supplier count {n_sup} makes the stride-13 ps_suppkey derivation "
+                "collide (duplicate (ps_partkey, ps_suppkey) rows); regenerate the "
+                "testdata with >= 4 suppliers and S not in {1,2,3,13,26,39}"
+            )
+        part = load_table(spark, sf_dir, "part").select("p_partkey")
+        base = part.select(
+            F.col("p_partkey").alias("ps_partkey"),
+            F.explode(F.expr("sequence(0, 3)")).alias("k"),
+        ).select(
+            "ps_partkey",
+            ((F.col("ps_partkey") * 7 + F.col("k") * 13) % F.lit(n_sup)).alias("ps_suppkey"),
+            (F.lit(100) + (F.col("ps_partkey") * 4 + F.col("k")) % 9901)
+            .cast("int")
+            .alias("ps_availqty"),
         )
-    part = load_table(spark, sf_dir, "part").select("p_partkey")
-    base = part.select(
-        F.col("p_partkey").alias("ps_partkey"),
-        F.explode(F.expr("sequence(0, 3)")).alias("k"),
-    ).select(
-        "ps_partkey",
-        ((F.col("ps_partkey") * 7 + F.col("k") * 13) % F.lit(n_sup)).alias("ps_suppkey"),
-        (F.lit(100) + (F.col("ps_partkey") * 4 + F.col("k")) % 9901)
-        .cast("int")
-        .alias("ps_availqty"),
-    )
-    cents = F.lit(100) + (F.col("ps_partkey") * 31 + F.col("ps_suppkey") * 17) % 90000
-    df = base.withColumn(
-        "ps_supplycost",
-        (cents.cast("decimal(18,2)") * F.lit("0.01").cast("decimal(3,2)")).cast("decimal(18,4)"),
-    ).cache()
-    _PS_CACHE[key] = df
-    return df
+        cents = F.lit(100) + (F.col("ps_partkey") * 31 + F.col("ps_suppkey") * 17) % 90000
+        return base.withColumn(
+            "ps_supplycost",
+            (cents.cast("decimal(18,2)") * F.lit("0.01").cast("decimal(3,2)")).cast(
+                "decimal(18,4)"
+            ),
+        ).cache()
+
+    return session_memo(spark, ("partsupp", os.path.abspath(sf_dir)), build)
 
 
 @query(

@@ -8,13 +8,12 @@ driver records rows-only checks for non-SQL-expressible ops).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chronicle_sniffer_spark.plans.catalog import query
-from chronicle_sniffer_spark.tables import load_table, session_tmpdir
+from chronicle_sniffer_spark.tables import load_table, session_memo, session_tmpdir
 
 
 @query(
@@ -66,14 +65,18 @@ def s4_pcap_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from chronicle_sniffer_spark.udm import project_udm
 
-    d = session_tmpdir("css_s4_")
-    with open(os.path.join(d, "capture_1.pcap"), "wb") as f:
-        f.write(pcap_bytes(example_packets()))
-    with open(os.path.join(d, "capture_2.pcapng"), "wb") as f:
-        f.write(pcapng_bytes(example_packets()))
-    with open(os.path.join(d, "garbage.pcap"), "wb") as f:
-        f.write(b"\x00\x01\x02\x03" * 16)
-    udm = project_udm(read_pcap(spark, d), PROC_TIME)
+    def build() -> str:
+        d = session_tmpdir("css_s4_")
+        with open(os.path.join(d, "capture_1.pcap"), "wb") as f:
+            f.write(pcap_bytes(example_packets()))
+        with open(os.path.join(d, "capture_2.pcapng"), "wb") as f:
+            f.write(pcapng_bytes(example_packets()))
+        with open(os.path.join(d, "garbage.pcap"), "wb") as f:
+            f.write(b"\x00\x01\x02\x03" * 16)
+        return d
+
+    captures = session_memo(spark, ("s4_captures",), build)
+    udm = project_udm(read_pcap(spark, captures), PROC_TIME)
     return (
         udm.groupBy(F.col("event_type"))
         .agg(F.count("*").alias("n"))
@@ -109,7 +112,9 @@ def s3_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV sink → CSV scan (declared schema, no inference) round-trips
     the region dim byte-exact."""
     r = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    out = os.path.join(tempfile.gettempdir(), "css_s3_csv_roundtrip")
+    out = session_memo(
+        spark, ("s3_csv_roundtrip", os.path.abspath(sf_dir)), lambda: session_tmpdir("css_s3_")
+    )
     r.write.mode("overwrite").option("header", True).csv(out)
     return spark.read.schema("r_regionkey int, r_name string").option("header", True).csv(out)
 
@@ -124,7 +129,9 @@ def s9_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (columnar-format coverage beyond parquet/CSV/JSON; ORC is a
     first-class Spark source with the same pushdown/pruning path)."""
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    out = os.path.join(tempfile.gettempdir(), "css_s9_orc_roundtrip")
+    out = session_memo(
+        spark, ("s9_orc_roundtrip", os.path.abspath(sf_dir)), lambda: session_tmpdir("css_s9_")
+    )
     n.write.mode("overwrite").orc(out)
     return spark.read.schema("n_nationkey int, n_name string, n_regionkey int").orc(out)
 

@@ -18,6 +18,8 @@ extend the declared LLM-pipeline surface (SURVEY.md §2B L4).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,7 +32,7 @@ from chronicle_sniffer_spark.operators.html import (
 )
 from chronicle_sniffer_spark.operators.sketches import _LEHMER_A, _LEHMER_M, KMV_K, _kmv_ranked
 from chronicle_sniffer_spark.plans.catalog import query
-from chronicle_sniffer_spark.tables import load_table, spread
+from chronicle_sniffer_spark.tables import load_table, session_memo, session_tmpdir, spread
 
 # ---------------------------------------------------------------------------
 # L4: HTML → text extraction
@@ -633,8 +635,6 @@ def l4_markdown_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # S19: manifest-committed table — snapshot scan + time travel
 # ---------------------------------------------------------------------------
 
-_MSTORE_CACHE: dict[tuple[str, str], str] = {}
-
 
 def _manifest_store(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per session+sf) a manifest-committed rollup table
@@ -642,41 +642,16 @@ def _manifest_store(spark: SparkSession, sf_dir: str) -> str:
     SAME merge path the streaming sink uses (streaming/incremental.py),
     so the batch entry exercises the production write protocol:
     write-once bucket files + one atomic manifest flip per epoch."""
-    import hashlib as _h
-    import os
-    from urllib.parse import urlparse
-
-    from chronicle_sniffer_spark.streaming import manifest as mf
     from chronicle_sniffer_spark.streaming.incremental import merge_batch
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MSTORE_CACHE:
-        suf = _h.md5(sf_dir.encode()).hexdigest()[:8]
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "/tmp"
-        table = os.path.join(wh, f"css_mstore_{suf}")
-        _v = mf.latest_version(table)
-        if _v is None or _v < 2:  # explicit None check: version 0 is falsy
-            # cross-process safety (two sessions sharing a warehouse
-            # dir — bench + gate, parallel pytest workers): build into
-            # a process-private dir, then publish the WHOLE table with
-            # one atomic rename; a losing racer keeps the winner's
-            # table (round-11 review finding — two builders sharing
-            # the staging path could rmtree each other's in-flight
-            # files)
-            build = f"{table}.build.{os.getpid()}"
-            ev = load_table(spark, sf_dir, "events")
-            for epoch in range(3):
-                merge_batch(
-                    spark, build, ev.filter(F.col("event_id") % 3 == epoch), epoch
-                )
-            try:
-                os.rename(build, table)
-            except OSError:
-                import shutil
+    def build() -> str:
+        table = session_tmpdir("css_mstore_")
+        ev = load_table(spark, sf_dir, "events")
+        for epoch in range(3):
+            merge_batch(spark, table, ev.filter(F.col("event_id") % 3 == epoch), epoch)
+        return table
 
-                shutil.rmtree(build, ignore_errors=True)  # lost the race
-        _MSTORE_CACHE[key] = table
-    return _MSTORE_CACHE[key]
+    return session_memo(spark, ("s19_mstore", os.path.abspath(sf_dir)), build)
 
 
 _S19_ORACLE = """

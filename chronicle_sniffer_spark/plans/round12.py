@@ -11,6 +11,8 @@ Families this round:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,7 +25,7 @@ from chronicle_sniffer_spark.operators.html import (
 )
 from chronicle_sniffer_spark.plans.catalog import query
 from chronicle_sniffer_spark.sources.warc import _warc_dir
-from chronicle_sniffer_spark.tables import load_table, spread
+from chronicle_sniffer_spark.tables import load_table, session_memo, session_tmpdir, spread
 
 
 # ---------------------------------------------------------------------------
@@ -834,10 +836,6 @@ def s21_manifest_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest-resolved paths only.  Crash safety inherits the s19
     protocol: a reader holds either the old or the new manifest,
     never a mix (crash-injection pytest in tests/test_round12.py)."""
-    import hashlib as _h
-    import os
-    from urllib.parse import urlparse
-
     from chronicle_sniffer_spark.streaming import manifest as mf
     from chronicle_sniffer_spark.streaming.incremental import (
         _read_table,
@@ -845,21 +843,15 @@ def s21_manifest_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_batch,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "s21")
-    if key not in _S21_CACHE:
-        suf = _h.md5(sf_dir.encode()).hexdigest()[:8]
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "/tmp"
-        from chronicle_sniffer_spark.tables import cleanup_at_exit
-
-        table = cleanup_at_exit(
-            os.path.join(wh, f"css_s21_{suf}.build.{os.getpid()}")
-        )
+    def build() -> str:
+        table = session_tmpdir("css_s21_")
         ev = load_table(spark, sf_dir, "events")
         for epoch in range(3):
             merge_batch(spark, table, ev.filter(F.col("event_id") % 3 == epoch), epoch)
         compact_table(spark, table)
-        _S21_CACHE[key] = table
-    table = _S21_CACHE[key]
+        return table
+
+    table = session_memo(spark, ("s21_compacted", os.path.abspath(sf_dir)), build)
     m = mf.read_manifest(table)
     n_dirs = len({e["path"] for e in m["buckets"].values()})
     return _read_table(spark, table).agg(
@@ -868,9 +860,6 @@ def s21_manifest_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("total_value").cast("double").alias("total_value"),
         F.lit(n_dirs).cast("int").alias("n_live_commit_dirs"),
     )
-
-
-_S21_CACHE: dict[tuple, str] = {}
 
 
 # ---------------------------------------------------------------------------

@@ -11,6 +11,8 @@ Families this round:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,7 +32,7 @@ from chronicle_sniffer_spark.operators.quality import (
 from chronicle_sniffer_spark.operators.sketches import KMV_K, _LEHMER_A, _LEHMER_M, _kmv_ranked
 from chronicle_sniffer_spark.plans.catalog import query
 from chronicle_sniffer_spark.sources.warc import _warc_dir
-from chronicle_sniffer_spark.tables import load_table
+from chronicle_sniffer_spark.tables import load_table, session_memo, session_tmpdir
 
 
 # ---------------------------------------------------------------------------
@@ -499,25 +501,21 @@ def l6_crawl_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 S22_PICK_MOD = 13  # read only doc_id % 13 == 0 through the offset index
 
-# (applicationId, sf_dir) -> materialized CDX parquet path: the index
-# is derived ONCE per session (production: written at crawl time) and
-# every targeted read after that is a parquet scan + ranged member
-# fetches.
-_CDX_CACHE: dict[tuple[str, str], str] = {}
-
 
 def _cdx_path(spark: SparkSession, sf_dir: str) -> str:
+    """Materialized CDX parquet: the index is derived ONCE per session
+    (production: written at crawl time) and every targeted read after
+    that is a parquet scan + ranged member fetches."""
     from chronicle_sniffer_spark.sources.warc import build_cdx
-    from chronicle_sniffer_spark.tables import session_tmpdir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CDX_CACHE:
+    def build() -> str:
         out = session_tmpdir("css_cdx_")
         build_cdx(spark, _warc_dir(spark, sf_dir)).write.mode("overwrite").parquet(
             out
         )
-        _CDX_CACHE[key] = out
-    return _CDX_CACHE[key]
+        return out
+
+    return session_memo(spark, ("s22_cdx", os.path.abspath(sf_dir)), build)
 
 
 def _s22_oracle() -> str:
@@ -1238,17 +1236,13 @@ def l5_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 S23_SPLIT = 2  # epoch 0: o_orderkey % 2 == 0 (old schema); epoch 1: rest
 
-_S23_CACHE: dict[tuple[str, str], str] = {}
-
 
 def _s23_dir(spark: SparkSession, sf_dir: str) -> str:
     """Two-epoch parquet layout with an EVOLVED schema: epoch 0 writes
     (okey, cents), epoch 1 adds a priority column — the additive
     column change every long-lived table accretes."""
-    from chronicle_sniffer_spark.tables import session_tmpdir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _S23_CACHE:
+    def build() -> str:
         out = session_tmpdir("css_s23_")
         o = load_table(spark, sf_dir, "orders").select(
             F.col("o_orderkey").alias("okey"),
@@ -1261,8 +1255,9 @@ def _s23_dir(spark: SparkSession, sf_dir: str) -> str:
             f"{out}/epoch=0"
         )
         o.filter(F.col("okey") % S23_SPLIT != 0).write.parquet(f"{out}/epoch=1")
-        _S23_CACHE[key] = out
-    return _S23_CACHE[key]
+        return out
+
+    return session_memo(spark, ("s23_evolved", os.path.abspath(sf_dir)), build)
 
 
 _S23_ORACLE = f"""

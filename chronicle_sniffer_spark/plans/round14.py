@@ -40,6 +40,8 @@ and dashboard rollups are the ts26/ts29 consumers.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,7 +55,7 @@ from chronicle_sniffer_spark.operators.quality import (
 from chronicle_sniffer_spark.operators.similarity import ANN_K, ANN_QUERY_VEC
 from chronicle_sniffer_spark.plans.catalog import query
 from chronicle_sniffer_spark.sources.warc import _warc_dir
-from chronicle_sniffer_spark.tables import load_table
+from chronicle_sniffer_spark.tables import load_table, session_memo, session_tmpdir
 
 
 # ---------------------------------------------------------------------------
@@ -115,18 +117,14 @@ def s20_warc_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 S24_SHARDS = 8
 S24_FILES_PER_TRIGGER = 8  # several micro-batches per run, not one big gulp
 
-# (applicationId, sf_dir) -> committed crawl-table dir: the stream runs
-# ONCE per session+sf (AvailableNow over the fixture containers); every
-# consumer after that reads the manifest-committed table.
-_STREAM_CACHE: dict[tuple[str, str], str] = {}
-
 
 def _stream_table(spark: SparkSession, sf_dir: str) -> str:
+    """Committed crawl-table dir: the stream runs ONCE per session+sf
+    (AvailableNow over the fixture containers); every consumer after
+    that reads the manifest-committed table."""
     from chronicle_sniffer_spark.streaming.crawl import stream_crawl_ingest
-    from chronicle_sniffer_spark.tables import session_tmpdir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _STREAM_CACHE:
+    def build() -> str:
         table = session_tmpdir("css_crawltab_")
         ckpt = session_tmpdir("css_crawlckpt_")
         stream_crawl_ingest(
@@ -136,8 +134,9 @@ def _stream_table(spark: SparkSession, sf_dir: str) -> str:
             ckpt,
             max_files_per_trigger=S24_FILES_PER_TRIGGER,
         )
-        _STREAM_CACHE[key] = table
-    return _STREAM_CACHE[key]
+        return table
+
+    return session_memo(spark, ("s24_crawl", os.path.abspath(sf_dir)), build)
 
 
 def _s24_oracle() -> str:
@@ -681,8 +680,6 @@ def ml30_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 # S25: position-delete merge-on-read (the Iceberg v2 delete-vector shape)
 # ---------------------------------------------------------------------------
 
-# (applicationId, sf_dir) -> staged multi-file base table directory
-_S25_CACHE: dict[tuple[str, str], str] = {}
 _S25_FILES = 8
 _S25_DEL_MOD = 17  # rows with o_orderkey % 17 == 3 get position-deleted
 
@@ -692,10 +689,8 @@ def _s25_base_dir(spark: SparkSession, sf_dir: str) -> str:
     table — position deletes address (file, row_index), so the base
     must actually have several files for the addressing to be
     exercised."""
-    from chronicle_sniffer_spark.tables import session_tmpdir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _S25_CACHE:
+    def build() -> str:
         out = session_tmpdir("css_s25_base_")
         (
             load_table(spark, sf_dir, "orders")
@@ -703,8 +698,9 @@ def _s25_base_dir(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(out)
         )
-        _S25_CACHE[key] = out
-    return _S25_CACHE[key]
+        return out
+
+    return session_memo(spark, ("s25_base", os.path.abspath(sf_dir)), build)
 
 
 _S25_ORACLE = f"""
@@ -835,26 +831,23 @@ l5_video_scene_cut.__doc__ = l5_video_scene_cut.__doc__.format(T=_SCENE_CUT_T)
 # the oracle trains on everything and restricts only the SCORED set.
 _IVF_DELETE_WHERE = "vec_id % 7 = 3"
 
-_IVF_DELETE_CACHE: dict[tuple[str, str], str] = {}
-
 
 def _ivf_deleted_index_dir(spark: SparkSession, sf_dir: str) -> str:
     from chronicle_sniffer_spark.operators.ivf import (
         ivf_index_delete,
         ivf_index_write,
     )
-    from chronicle_sniffer_spark.tables import session_tmpdir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVF_DELETE_CACHE:
+    def build() -> str:
         out = session_tmpdir("css_ivf_del_")
         emb = load_table(spark, sf_dir, "embeddings")
         ivf_index_write(emb, out)
         ivf_index_delete(
             spark, out, emb.filter(F.expr(_IVF_DELETE_WHERE))
         )
-        _IVF_DELETE_CACHE[key] = out
-    return _IVF_DELETE_CACHE[key]
+        return out
+
+    return session_memo(spark, ("l3_ivf_deleted", os.path.abspath(sf_dir)), build)
 
 
 def _ivf_delete_oracle() -> str:

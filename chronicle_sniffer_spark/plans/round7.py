@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from chronicle_sniffer_spark.operators.graph import _COPURCHASE_CTES, _copurchase_edges
 from chronicle_sniffer_spark.plans.catalog import query
-from chronicle_sniffer_spark.tables import load_table
+from chronicle_sniffer_spark.tables import load_table, session_memo, session_tmpdir
 
 
 # ---------------------------------------------------------------------------
@@ -518,55 +518,36 @@ def g2_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BUCKETS = 8
 
-# (applicationId, sf_dir) -> (lineitem table, orders table): the
-# bucketed layout is written ONCE per session and served many times —
-# the 100 TB shape, where bucketing is a property of the stored table.
-_BUCKETED_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    import hashlib
-    import shutil
-    from urllib.parse import urlparse
+    """Write lineitem and orders bucketed+sorted on the join key ONCE
+    per session and serve them many times — the 100 TB shape, where
+    bucketing is a property of the stored table.  External tables
+    (explicit path): the catalog entry dies with the session and the
+    files with the process, so nothing is dropped or reused later."""
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BUCKETED_CACHE:
-        # names derive from sf_dir ALONE (not the session), so repeated
-        # bench/test runs reuse the same two warehouse locations instead
-        # of accumulating a parquet copy of lineitem/orders per session.
-        # The warehouse DIRECTORY outlives the in-memory catalog, so a
-        # fresh session reusing the name would hit
-        # LOCATION_ALREADY_EXISTS on create — drop any catalog entry and
-        # remove the stale local directory first (local-warehouse only;
-        # on a shared metastore DROP TABLE alone clears the location)
-        suf = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        li_name, o_name = f"css_bkt_lineitem_{suf}", f"css_bkt_orders_{suf}"
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-        for name in (li_name, o_name):
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-            stale = os.path.join(wh, name) if wh else None
-            if stale and os.path.isdir(stale):
-                shutil.rmtree(stale, ignore_errors=True)
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_extendedprice", "l_discount")
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(BUCKETS, "l_orderkey")
-            .sortBy("l_orderkey")
-            .saveAsTable(li_name)
-        )
-        (
-            load_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_orderpriority")
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(BUCKETS, "o_orderkey")
-            .sortBy("o_orderkey")
-            .saveAsTable(o_name)
-        )
-        _BUCKETED_CACHE[key] = (li_name, o_name)
-    return _BUCKETED_CACHE[key]
+    def build() -> tuple[str, str]:
+        d = session_tmpdir("css_bkt_")
+        names = []
+        for table, cols in (
+            ("lineitem", ("l_orderkey", "l_extendedprice", "l_discount")),
+            ("orders", ("o_orderkey", "o_orderpriority")),
+        ):
+            name = f"{os.path.basename(d)}_{table}"
+            (
+                load_table(spark, sf_dir, table)
+                .select(*cols)
+                .write.mode("overwrite")
+                .format("parquet")
+                .bucketBy(BUCKETS, cols[0])
+                .sortBy(cols[0])
+                .option("path", os.path.join(d, table))
+                .saveAsTable(name)
+            )
+            names.append(name)
+        return names[0], names[1]
+
+    return session_memo(spark, ("s8b_bucketed", os.path.abspath(sf_dir)), build)
 
 
 @query(

@@ -73,7 +73,7 @@ from chronicle_sniffer_spark.operators.dedup import (
 )
 from chronicle_sniffer_spark.operators.graph import _COPURCHASE_CTES, _copurchase_edges
 from chronicle_sniffer_spark.plans.catalog import query
-from chronicle_sniffer_spark.tables import load_table
+from chronicle_sniffer_spark.tables import load_table, session_memo, session_tmpdir
 
 
 # ---------------------------------------------------------------------------
@@ -1427,12 +1427,10 @@ def s8c_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
     rebuilds the base table, applies the dynamic overwrite, and
     returns the per-partition rollup of what actually survived on
     disk."""
-    import hashlib
-    import tempfile
-
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"css_dynpart_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}",
+    path = session_memo(
+        spark,
+        ("s8c_dynamic_partition_overwrite", os.path.abspath(sf_dir)),
+        lambda: session_tmpdir("css_dynpart_"),
     )
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",

@@ -37,15 +37,13 @@ both engines, money math in exact decimal, ties fully keyed.
 
 from __future__ import annotations
 
-import hashlib
 import os
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from chronicle_sniffer_spark.plans.catalog import davg, dsum, o_davg, o_dsum, query
-from chronicle_sniffer_spark.tables import load_table
+from chronicle_sniffer_spark.tables import load_table, session_memo, session_tmpdir
 
 
 # ---------------------------------------------------------------------------
@@ -278,16 +276,12 @@ def ts11_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _S13_FILES = 16  # range-clustered files in the written layout
 
-# (applicationId, sf_dir) -> (layout dir, manifest rows).  Like the
-# bucketed-table cache (round7.py:570), the layout is written once per
-# session and served many times — min/max stats are a property of the
-# stored table, exactly as in a Delta/Iceberg transaction log.
-_MANIFEST_CACHE: dict[tuple[str, str], tuple[str, list]] = {}
-
 
 def manifest_layout(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
     """Write orders range-clustered on o_orderdate and build a per-file
-    (min, max, rows) stats manifest.
+    (min, max, rows) stats manifest, once per session — min/max stats
+    are a property of the stored table, exactly as in a Delta/Iceberg
+    transaction log.
 
     The manifest build here re-scans the written files once (grouping
     by ``input_file_name()``); a production writer collects the same
@@ -295,19 +289,15 @@ def manifest_layout(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
     way the manifest is O(files), not O(rows) — it IS the Delta/Iceberg
     data-skipping index, kept driver-readable by construction.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MANIFEST_CACHE:
-        # location derives from sf_dir alone so repeated runs reuse it
-        suf = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "/tmp"
-        base = os.path.join(wh, f"css_manifest_orders_{suf}")
-        if not os.path.exists(os.path.join(base, "_SUCCESS")):
-            (
-                load_table(spark, sf_dir, "orders")
-                .repartitionByRange(_S13_FILES, "o_orderdate")
-                .write.mode("overwrite")
-                .parquet(base)
-            )
+
+    def build() -> tuple[str, list]:
+        base = session_tmpdir("css_manifest_orders_")
+        (
+            load_table(spark, sf_dir, "orders")
+            .repartitionByRange(_S13_FILES, "o_orderdate")
+            .write.mode("overwrite")
+            .parquet(base)
+        )
         manifest = (
             spark.read.parquet(base)
             .groupBy(F.input_file_name().alias("file"))
@@ -318,8 +308,9 @@ def manifest_layout(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
             )
             .collect()  # O(files) planner metadata, never O(rows)
         )
-        _MANIFEST_CACHE[key] = (base, manifest)
-    return _MANIFEST_CACHE[key]
+        return base, manifest
+
+    return session_memo(spark, ("s13_manifest", os.path.abspath(sf_dir)), build)
 
 
 def prune_files(manifest: list, lo: str, hi: str) -> list[str]:

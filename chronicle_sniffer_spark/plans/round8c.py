@@ -46,60 +46,53 @@ House determinism rules (plans/catalog.py) apply.
 
 from __future__ import annotations
 
-import hashlib
 import os
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from chronicle_sniffer_spark.plans.catalog import dsum, o_dsum, query
-from chronicle_sniffer_spark.tables import load_table
+from chronicle_sniffer_spark.tables import load_table, session_memo, session_tmpdir
 
 
 # ---------------------------------------------------------------------------
 # J15: dynamic partition pruning
 # ---------------------------------------------------------------------------
 
-# (applicationId, sf_dir) -> (fact dir, dim dir): written once per
-# session (the layout is a property of the stored table), reused across
-# runs via the sf_dir-derived location.
-_DPP_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
 
 def dpp_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write orders partitioned by o_year (fact) plus a per-year dim
     table whose ``tier`` label is data, not a derivable expression —
-    so a tier filter can only prune fact partitions at runtime."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _DPP_CACHE:
-        suf = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "/tmp"
-        fact = os.path.join(wh, f"css_dpp_orders_{suf}")
-        dim = os.path.join(wh, f"css_dpp_years_{suf}")
+    so a tier filter can only prune fact partitions at runtime.
+    Written once per session: the layout is a property of the stored
+    table."""
+
+    def build() -> tuple[str, str]:
+        d = session_tmpdir("css_dpp_")
+        fact = os.path.join(d, "orders")
+        dim = os.path.join(d, "years")
         orders = load_table(spark, sf_dir, "orders")
-        if not os.path.exists(os.path.join(fact, "_SUCCESS")):
-            (
-                orders.withColumn("o_year", F.year("o_orderdate"))
-                .write.mode("overwrite")
-                .partitionBy("o_year")
-                .parquet(fact)
+        (
+            orders.withColumn("o_year", F.year("o_orderdate"))
+            .write.mode("overwrite")
+            .partitionBy("o_year")
+            .parquet(fact)
+        )
+        (
+            orders.groupBy(F.year("o_orderdate").alias("yr"))
+            .agg(F.count("*").alias("n_orders"))
+            .withColumn(
+                "tier",
+                F.when(F.col("yr") % 2 == 0, F.lit("even")).otherwise(
+                    F.lit("odd")
+                ),
             )
-        if not os.path.exists(os.path.join(dim, "_SUCCESS")):
-            (
-                orders.groupBy(F.year("o_orderdate").alias("yr"))
-                .agg(F.count("*").alias("n_orders"))
-                .withColumn(
-                    "tier",
-                    F.when(F.col("yr") % 2 == 0, F.lit("even")).otherwise(
-                        F.lit("odd")
-                    ),
-                )
-                .write.mode("overwrite")
-                .parquet(dim)
-            )
-        _DPP_CACHE[key] = (fact, dim)
-    return _DPP_CACHE[key]
+            .write.mode("overwrite")
+            .parquet(dim)
+        )
+        return fact, dim
+
+    return session_memo(spark, ("j15_dpp", os.path.abspath(sf_dir)), build)
 
 
 _J15_ORACLE = f"""
@@ -266,47 +259,42 @@ def o12_threshold_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # J16: merge-on-read (positional + equality delete files)
 # ---------------------------------------------------------------------------
 
-# (applicationId, sf_dir) -> (base dir, pos-delete dir, eq-delete dir)
-_MOR_CACHE: dict[tuple[str, str], tuple[str, str, str]] = {}
-
 
 def mor_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
-    """Write an orders base layout plus two delete files: an EQUALITY
-    delete (keys) and a POSITIONAL delete ((file_path, row_index) pairs
-    captured from the physical layout via the parquet ``_metadata``
-    column — exactly what Iceberg v2 position deletes store)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MOR_CACHE:
-        suf = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "/tmp"
-        base = os.path.join(wh, f"css_mor_base_{suf}")
-        posd = os.path.join(wh, f"css_mor_posdel_{suf}")
-        eqd = os.path.join(wh, f"css_mor_eqdel_{suf}")
-        if not os.path.exists(os.path.join(base, "_SUCCESS")):
-            load_table(spark, sf_dir, "orders").repartition(8).write.mode(
-                "overwrite"
-            ).parquet(base)
-        if not os.path.exists(os.path.join(eqd, "_SUCCESS")):
-            (
-                spark.read.parquet(base)
-                .filter(F.col("o_orderkey") % 97 == 0)
-                .select("o_orderkey")
-                .write.mode("overwrite")
-                .parquet(eqd)
+    """Write an orders base layout plus two delete files, once per
+    session: an EQUALITY delete (keys) and a POSITIONAL delete
+    ((file_path, row_index) pairs captured from the physical layout via
+    the parquet ``_metadata`` column — exactly what Iceberg v2 position
+    deletes store)."""
+
+    def build() -> tuple[str, str, str]:
+        d = session_tmpdir("css_mor_")
+        base = os.path.join(d, "base")
+        posd = os.path.join(d, "posdel")
+        eqd = os.path.join(d, "eqdel")
+        load_table(spark, sf_dir, "orders").repartition(8).write.mode(
+            "overwrite"
+        ).parquet(base)
+        (
+            spark.read.parquet(base)
+            .filter(F.col("o_orderkey") % 97 == 0)
+            .select("o_orderkey")
+            .write.mode("overwrite")
+            .parquet(eqd)
+        )
+        (
+            spark.read.parquet(base)
+            .filter(F.col("o_custkey") % 89 == 0)
+            .select(
+                F.col("_metadata.file_path").alias("file_path"),
+                F.col("_metadata.row_index").alias("row_index"),
             )
-        if not os.path.exists(os.path.join(posd, "_SUCCESS")):
-            (
-                spark.read.parquet(base)
-                .filter(F.col("o_custkey") % 89 == 0)
-                .select(
-                    F.col("_metadata.file_path").alias("file_path"),
-                    F.col("_metadata.row_index").alias("row_index"),
-                )
-                .write.mode("overwrite")
-                .parquet(posd)
-            )
-        _MOR_CACHE[key] = (base, posd, eqd)
-    return _MOR_CACHE[key]
+            .write.mode("overwrite")
+            .parquet(posd)
+        )
+        return base, posd, eqd
+
+    return session_memo(spark, ("j16_mor", os.path.abspath(sf_dir)), build)
 
 
 _J16_ORACLE = f"""

@@ -26,13 +26,12 @@ House determinism rules (plans/catalog.py) apply.
 from __future__ import annotations
 
 import os
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chronicle_sniffer_spark.plans.catalog import dsum, o_dsum, query
-from chronicle_sniffer_spark.tables import load_table
+from chronicle_sniffer_spark.tables import load_table, session_memo, session_tmpdir
 
 
 # ---------------------------------------------------------------------------
@@ -303,9 +302,6 @@ def u13_udtf_table_argument(spark: SparkSession, sf_dir: str) -> DataFrame:
 # S14: snapshot time travel (manifest-versioned reads)
 # ---------------------------------------------------------------------------
 
-# (applicationId, sf_dir) -> {version: [files]}
-_SNAPSHOT_CACHE: dict[tuple[str, str], dict[int, list]] = {}
-
 _S14_CUT = "1998-01-01"
 
 
@@ -314,31 +310,26 @@ def snapshot_layout(spark: SparkSession, sf_dir: str) -> dict[int, list]:
     snapshot manifest: version 1 = orders before {cut}, version 2 =
     version 1 + the appended later years.  The manifest (version ->
     file list) is the table-format transaction log in miniature."""
-    import hashlib as _h
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SNAPSHOT_CACHE:
-        suf = _h.md5(sf_dir.encode()).hexdigest()[:8]
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "/tmp"
-        base = os.path.join(wh, f"css_snap_orders_{suf}")
+    def build() -> dict[int, list]:
+        import glob as _g
+
+        base = session_tmpdir("css_snap_orders_")
         orders = load_table(spark, sf_dir, "orders")
         cut = F.lit(_S14_CUT).cast("timestamp")
         v1_dir, v2_dir = os.path.join(base, "c1"), os.path.join(base, "c2")
-        if not os.path.exists(os.path.join(v1_dir, "_SUCCESS")):
-            orders.filter(F.col("o_orderdate") < cut).write.mode(
-                "overwrite"
-            ).parquet(v1_dir)
-        if not os.path.exists(os.path.join(v2_dir, "_SUCCESS")):
-            orders.filter(F.col("o_orderdate") >= cut).write.mode(
-                "overwrite"
-            ).parquet(v2_dir)
-        import glob as _g
-
+        orders.filter(F.col("o_orderdate") < cut).write.mode(
+            "overwrite"
+        ).parquet(v1_dir)
+        orders.filter(F.col("o_orderdate") >= cut).write.mode(
+            "overwrite"
+        ).parquet(v2_dir)
         f1 = sorted(_g.glob(os.path.join(v1_dir, "*.parquet")))
         f2 = sorted(_g.glob(os.path.join(v2_dir, "*.parquet")))
         # append-only log: each snapshot is a superset of the previous
-        _SNAPSHOT_CACHE[key] = {1: f1, 2: f1 + f2}
-    return _SNAPSHOT_CACHE[key]
+        return {1: f1, 2: f1 + f2}
+
+    return session_memo(spark, ("s14_snapshot", os.path.abspath(sf_dir)), build)
 
 
 _S14_ORACLE = f"""
@@ -620,9 +611,6 @@ def j18_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
 # S15: partition-scheme evolution behind one view
 # ---------------------------------------------------------------------------
 
-# (applicationId, sf_dir) -> (yearly dir, monthly dir)
-_PEVO_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
 _S15_SPLIT = "1998-01-01"  # data before: partitioned by year; after: by month
 
 
@@ -632,34 +620,30 @@ def pevo_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     o_month (fine).  Partition evolution means old files are NEVER
     rewritten; the catalog just records which scheme covers which
     commit range."""
-    import hashlib as _h
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PEVO_CACHE:
-        suf = _h.md5(sf_dir.encode()).hexdigest()[:8]
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "/tmp"
-        ydir = os.path.join(wh, f"css_pevo_year_{suf}")
-        mdir = os.path.join(wh, f"css_pevo_month_{suf}")
+    def build() -> tuple[str, str]:
+        d = session_tmpdir("css_pevo_")
+        ydir = os.path.join(d, "year")
+        mdir = os.path.join(d, "month")
         orders = load_table(spark, sf_dir, "orders")
         split = F.lit(_S15_SPLIT).cast("timestamp")
-        if not os.path.exists(os.path.join(ydir, "_SUCCESS")):
-            (
-                orders.filter(F.col("o_orderdate") < split)
-                .withColumn("o_year", F.year("o_orderdate"))
-                .write.mode("overwrite")
-                .partitionBy("o_year")
-                .parquet(ydir)
-            )
-        if not os.path.exists(os.path.join(mdir, "_SUCCESS")):
-            (
-                orders.filter(F.col("o_orderdate") >= split)
-                .withColumn("o_month", F.date_format("o_orderdate", "yyyy-MM"))
-                .write.mode("overwrite")
-                .partitionBy("o_month")
-                .parquet(mdir)
-            )
-        _PEVO_CACHE[key] = (ydir, mdir)
-    return _PEVO_CACHE[key]
+        (
+            orders.filter(F.col("o_orderdate") < split)
+            .withColumn("o_year", F.year("o_orderdate"))
+            .write.mode("overwrite")
+            .partitionBy("o_year")
+            .parquet(ydir)
+        )
+        (
+            orders.filter(F.col("o_orderdate") >= split)
+            .withColumn("o_month", F.date_format("o_orderdate", "yyyy-MM"))
+            .write.mode("overwrite")
+            .partitionBy("o_month")
+            .parquet(mdir)
+        )
+        return ydir, mdir
+
+    return session_memo(spark, ("s15_pevo", os.path.abspath(sf_dir)), build)
 
 
 _S15_LO, _S15_HI = "1997-07-01", "1998-07-01"
@@ -824,42 +808,32 @@ def a22_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # S16: scan path options (recursive lookup + glob filter)
 # ---------------------------------------------------------------------------
 
-# (applicationId, sf_dir) -> base dir
-_S16_CACHE: dict[tuple[str, str], str] = {}
-
 
 def s16_layout(spark: SparkSession, sf_dir: str) -> str:
     """Write orders across NESTED directories (year-named subtrees of
     varying depth) with a non-parquet decoy file dropped in — the
     arrival shape of a hand-managed data lake."""
-    import hashlib as _h
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _S16_CACHE:
-        suf = _h.md5(sf_dir.encode()).hexdigest()[:8]
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "/tmp"
-        base = os.path.join(wh, f"css_nested_orders_{suf}")
-        done = os.path.join(base, "_LAYOUT_DONE")
-        if not os.path.exists(done):
-            orders = load_table(spark, sf_dir, "orders")
-            split = F.lit("1998-01-01").cast("timestamp")
-            (
-                orders.filter(F.col("o_orderdate") < split)
-                .write.mode("overwrite")
-                .parquet(os.path.join(base, "early"))
-            )
-            (
-                orders.filter(F.col("o_orderdate") >= split)
-                .write.mode("overwrite")
-                .parquet(os.path.join(base, "late", "deep"))
-            )
-            # a decoy a naive recursive read would choke on
-            with open(os.path.join(base, "late", "notes.json"), "w") as fh:
-                fh.write('{"this": "is not parquet"}\n')
-            with open(done, "w") as fh:
-                fh.write("ok\n")
-        _S16_CACHE[key] = base
-    return _S16_CACHE[key]
+    def build() -> str:
+        base = session_tmpdir("css_nested_orders_")
+        orders = load_table(spark, sf_dir, "orders")
+        split = F.lit("1998-01-01").cast("timestamp")
+        (
+            orders.filter(F.col("o_orderdate") < split)
+            .write.mode("overwrite")
+            .parquet(os.path.join(base, "early"))
+        )
+        (
+            orders.filter(F.col("o_orderdate") >= split)
+            .write.mode("overwrite")
+            .parquet(os.path.join(base, "late", "deep"))
+        )
+        # a decoy a naive recursive read would choke on
+        with open(os.path.join(base, "late", "notes.json"), "w") as fh:
+            fh.write('{"this": "is not parquet"}\n')
+        return base
+
+    return session_memo(spark, ("s16_nested", os.path.abspath(sf_dir)), build)
 
 
 _S16_ORACLE = f"""

@@ -20,7 +20,6 @@ House determinism rules (plans/catalog.py) apply.
 from __future__ import annotations
 
 import os
-from urllib.parse import urlparse
 
 import pandas as pd
 import pyarrow as pa
@@ -31,7 +30,7 @@ from pyspark.sql import functions as F
 
 from chronicle_sniffer_spark.operators.graph import _COPURCHASE_CTES, _copurchase_edges
 from chronicle_sniffer_spark.plans.catalog import query
-from chronicle_sniffer_spark.tables import load_table
+from chronicle_sniffer_spark.tables import load_table, session_memo, session_tmpdir
 
 
 # ---------------------------------------------------------------------------
@@ -626,42 +625,35 @@ def u15_arrow_scalar_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # S17: corrupt-record quarantine (PERMISSIVE parse path)
 # ---------------------------------------------------------------------------
 
-# (applicationId, sf_dir) -> csv dir
-_S17_CACHE: dict[tuple[str, str], str] = {}
-
 
 def s17_layout(spark: SparkSession, sf_dir: str) -> str:
     """Write orders as CSV text with a deterministic fraction of
     corrupted lines (o_orderkey % 101 == 0 becomes an unparseable
     token) — the arrival shape of any feed that crosses a system
     boundary as text."""
-    import hashlib as _h
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _S17_CACHE:
-        suf = _h.md5(sf_dir.encode()).hexdigest()[:8]
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path or "/tmp"
-        out = os.path.join(wh, f"css_badcsv_orders_{suf}")
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            orders = load_table(spark, sf_dir, "orders")
-            line = F.when(
-                F.col("o_orderkey") % 101 == 0,
-                # type mismatch in a present field -> PERMISSIVE flags it
-                F.concat(
-                    F.lit("garbage,garbage,"),
-                    F.format_string("%.2f", F.col("o_totalprice")),
-                ),
-            ).otherwise(
-                F.concat_ws(
-                    ",",
-                    F.col("o_orderkey").cast("string"),
-                    F.col("o_custkey").cast("string"),
-                    F.format_string("%.2f", F.col("o_totalprice")),
-                )
+    def build() -> str:
+        out = session_tmpdir("css_badcsv_orders_")
+        orders = load_table(spark, sf_dir, "orders")
+        line = F.when(
+            F.col("o_orderkey") % 101 == 0,
+            # type mismatch in a present field -> PERMISSIVE flags it
+            F.concat(
+                F.lit("garbage,garbage,"),
+                F.format_string("%.2f", F.col("o_totalprice")),
+            ),
+        ).otherwise(
+            F.concat_ws(
+                ",",
+                F.col("o_orderkey").cast("string"),
+                F.col("o_custkey").cast("string"),
+                F.format_string("%.2f", F.col("o_totalprice")),
             )
-            orders.select(line.alias("value")).write.mode("overwrite").text(out)
-        _S17_CACHE[key] = out
-    return _S17_CACHE[key]
+        )
+        orders.select(line.alias("value")).write.mode("overwrite").text(out)
+        return out
+
+    return session_memo(spark, ("s17_badcsv", os.path.abspath(sf_dir)), build)
 
 
 _S17_ORACLE = """

@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from chronicle_sniffer_spark.operators.graph import _COPURCHASE_CTES, _copurchase_edges
 from chronicle_sniffer_spark.plans.catalog import dsum, o_dsum, query
 from chronicle_sniffer_spark.streaming.sessions import SESSION_GAP_MIN
-from chronicle_sniffer_spark.tables import load_table, session_tmpdir, spread
+from chronicle_sniffer_spark.tables import load_table, session_memo, session_tmpdir, spread
 
 
 # ---------------------------------------------------------------------------
@@ -533,14 +533,12 @@ SELECT o_orderpriority,
 FROM orders GROUP BY 1
 """
 
-_S18_CACHE: dict[str, str] = {}
-
 
 def _s18_stage(spark: SparkSession, sf_dir: str) -> str:
     """Stage orders as ONE gzip JSON-lines file (the shape log
-    shippers deliver)."""
-    key = f"{spark.sparkContext.applicationId}|{sf_dir}"
-    if key not in _S18_CACHE:
+    shippers deliver), once per session."""
+
+    def build() -> str:
         out = session_tmpdir("css_s18_gzip_")
         (
             load_table(spark, sf_dir, "orders")
@@ -550,8 +548,9 @@ def _s18_stage(spark: SparkSession, sf_dir: str) -> str:
             .option("compression", "gzip")
             .json(out)
         )
-        _S18_CACHE[key] = out
-    return _S18_CACHE[key]
+        return out
+
+    return session_memo(spark, ("s18_gzip", os.path.abspath(sf_dir)), build)
 
 
 @query("s18_gzip_json_scan", section="S2", oracle=_S18_ORACLE)

@@ -72,7 +72,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from chronicle_sniffer_spark.operators.html import _pages
-from chronicle_sniffer_spark.tables import session_tmpdir
+from chronicle_sniffer_spark.tables import session_memo, session_tmpdir
 
 WARC_DATE = "2026-01-01T00:00:00Z"
 
@@ -644,17 +644,14 @@ def read_warc_cdx(cdx: DataFrame) -> DataFrame:
     return cdx.mapInPandas(_fetch, WARC_SCHEMA)
 
 
-_WARC_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _warc_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per session+sf) the synthetic crawl: the documents
     table rendered to the shared HTML fixture and packed into
     ``.warc.gz`` container files by the DISTRIBUTED writer (one gzip
     member per record, one file per partition — the Common Crawl
     layout at miniature scale)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _WARC_CACHE:
+
+    def build() -> str:
         out = session_tmpdir("css_warc_")
         # one container file per core: gzip members decode sequentially
         # WITHIN a file, so the file count IS the decode parallelism —
@@ -662,5 +659,6 @@ def _warc_dir(spark: SparkSession, sf_dir: str) -> str:
         # same reason (the s20 sf1 soak measured 7.2x at a pinned 8)
         n_files = spark.sparkContext.defaultParallelism
         write_warc(_pages(spark, sf_dir), out, n_files=n_files)
-        _WARC_CACHE[key] = out
-    return _WARC_CACHE[key]
+        return out
+
+    return session_memo(spark, ("warc", os.path.abspath(sf_dir)), build)

@@ -9,11 +9,10 @@ deterministic ``Trigger.AvailableNow``-style drive (T7).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from chronicle_sniffer_spark.tables import load_table
+from chronicle_sniffer_spark.tables import load_table, session_tmpdir
 
 EVENTS_STREAM_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
@@ -24,7 +23,7 @@ def stage_events_as_files(
     spark: SparkSession, sf_dir: str, n_files: int = 4, out_dir: str | None = None
 ) -> str:
     """Split the events table into n parquet files (≈ rotated captures)."""
-    out = out_dir or os.path.join(tempfile.mkdtemp(prefix="css_stream_"), "events")
+    out = out_dir or os.path.join(session_tmpdir("css_stream_"), "events")
     ev = load_table(spark, sf_dir, "events")
     ev.repartition(n_files).write.mode("overwrite").parquet(out)
     return out
@@ -39,7 +38,7 @@ def stage_documents_as_files(
     """Split the documents table into n parquet files — the arrival
     shape of a crawled/ingested document corpus (one file per fetch
     batch), feeding the streaming curation entries."""
-    out = out_dir or os.path.join(tempfile.mkdtemp(prefix="css_docstream_"), "documents")
+    out = out_dir or os.path.join(session_tmpdir("css_docstream_"), "documents")
     load_table(spark, sf_dir, "documents").repartition(n_files).write.mode(
         "overwrite"
     ).parquet(out)
@@ -102,7 +101,7 @@ def stage_events_time_ordered(
     import shutil
     import time as _time
 
-    out = out_dir or os.path.join(tempfile.mkdtemp(prefix="css_stream_sorted_"), "events")
+    out = out_dir or os.path.join(session_tmpdir("css_stream_sorted_"), "events")
     os.makedirs(out, exist_ok=True)
     ev = load_table(spark, sf_dir, "events")
     probs = [i / n_files for i in range(1, n_files)]
@@ -121,11 +120,14 @@ def stage_events_time_ordered(
             sl = sl.filter(F.expr(ts_num) > F.lit(lo))
         if hi is not None:
             sl = sl.filter(F.expr(ts_num) <= F.lit(hi))
-        tmp = tempfile.mkdtemp(prefix="css_slice_")
+        # staged under a hidden (underscore) name inside the output
+        # directory, so no file source lists it before the move
+        tmp = os.path.join(out, f"_slice_{i:03d}")
         sl.coalesce(1).write.mode("overwrite").parquet(tmp)
         part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
         dst = os.path.join(out, f"slice_{i:03d}.parquet")
         shutil.move(os.path.join(tmp, part), dst)
+        shutil.rmtree(tmp)
         t = _time.time() + i * 2  # strictly increasing mtimes
         os.utime(dst, (t, t))
         bounds.append(sl.agg(F.max("ts")).collect()[0][0])

@@ -1,14 +1,22 @@
-"""Testdata table loaders.
+"""Testdata table loaders and the per-session memo.
 
 The driver-generated TPC-H-ish tables live at
 ``/root/testdata/sf{0.001,0.01,0.1}/<name>.parquet`` (TESTDATA.md).
 Loaders return plain DataFrames so Catalyst sees the parquet scan
 directly (predicate pushdown / column pruning reach the file).
+
+One memo per session holds both the loaded tables and every catalog
+fixture staged from them (a layout, an index, a store, a crawl):
+``session_memo`` decides how long a value lives, ``session_tmpdir``
+where its files live.  Nothing outlives the process, so no later
+process can read a fixture built from data that has since changed.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
+from typing import Callable, Hashable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -25,36 +33,43 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+T = TypeVar("T")
+
+# One dict per session object.  It holds loaded base-table DataFrames
+# (lazy logical plans, NOT data: a warm `spark.read.parquet` costs
+# ~90-130 ms of footer/schema read + Dataset analysis, and every
+# catalog entry re-loads its 1-3 tables on every plan build) and the
+# fixtures builders stage once and serve many times.  Every action
+# still scans its input in full; this is the same class of metadata
+# caching as Spark's own filesourcePartitionFileCache, guide §6.
+# WeakKeyDictionary keyed on the session object: a stopped session's
+# memo dies with it, a driver-owned session gets its own entry, and a
+# lookup costs no py4j round trip.
+_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+_MISSING = object()
 
 
-# Per-session memo of loaded base-table DataFrames (lazy logical
-# plans, NOT data): a warm `spark.read.parquet` costs ~90-130 ms per
-# call (footer/schema read + Dataset analysis), and every catalog
-# entry re-loads its 1-3 tables on every plan build — including every
-# timed bench repetition.  Memoizing the PLAN per (session, sf_dir,
-# table) removes that fixed cost while every action still scans the
-# parquet in full (nothing is persisted or precomputed; this is the
-# same class of metadata caching as Spark's own
-# filesourcePartitionFileCache, guide §6).  WeakKeyDictionary keyed on
-# the session object: a stopped session's memo dies with it, and a
-# driver-owned session gets its own entry.
-import weakref
-
-_LOAD_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+def session_memo(spark: SparkSession, key: Hashable, build: Callable[[], T]) -> T:
+    """``build()`` once per (session, key); later calls return the
+    same value.  Fixture keys are ``("<fixture>", abspath(sf_dir))``.
+    No lock: plans are built from one thread, and two threads racing
+    on a key would each build into their own directory."""
+    per_session = _MEMO.setdefault(spark, {})
+    value = per_session.get(key, _MISSING)
+    if value is _MISSING:
+        value = per_session[key] = build()
+    return value
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    try:
-        per_session = _LOAD_MEMO[spark]
-    except KeyError:
-        per_session = _LOAD_MEMO.setdefault(spark, {})
-    key = (os.path.abspath(sf_dir), name)
-    hit = per_session.get(key)
-    if hit is not None:
-        return hit
+    return session_memo(
+        spark, ("table", os.path.abspath(sf_dir), name), lambda: _read_table(spark, sf_dir, name)
+    )
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # defensive: a caller-owned session (the driver's) may lack the
         # nanos config that session.get_spark sets; it is runtime-settable
@@ -69,18 +84,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    per_session[key] = df
     return df
 
 
 def session_tmpdir(prefix: str) -> str:
-    """``mkdtemp`` that does not outlive the process: per-session
-    fixture/staging directories (the WARC corpus, IVF index layouts,
-    gzip fixtures, per-pid build tables) are registered for atexit
-    removal — round-12 advisor finding: bare mkdtemp dirs accumulated
-    across sessions and pytest workers with nothing ever reclaiming
-    them.  ``ignore_errors`` because a hard-killed JVM may still hold
-    a file handle; leftover cleanup is best-effort by design."""
+    """A process-private ``mkdtemp``, removed at exit: the one place a
+    fixture or staging directory comes from.  ``ignore_errors``
+    because a hard-killed JVM may still hold a file handle; leftover
+    cleanup is best-effort by design."""
     import atexit
     import shutil
     import tempfile
@@ -88,16 +99,6 @@ def session_tmpdir(prefix: str) -> str:
     d = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
-
-
-def cleanup_at_exit(path: str) -> str:
-    """Register an existing directory for atexit removal (the per-pid
-    warehouse build tables); returns the path for chaining."""
-    import atexit
-    import shutil
-
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -154,15 +155,3 @@ def spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= par:
         return df
     return df.repartition(par)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view for spark.sql use."""
-    dfs = load_all(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

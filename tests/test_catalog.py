@@ -31,6 +31,31 @@ def test_rows_only_query_runs(name, spark):
     assert df.collect() is not None
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "s3_csv_roundtrip",
+        "s9_orc_roundtrip",
+        "s11_xml_roundtrip",
+        "s12_text_roundtrip",
+        "s8c_dynamic_partition_overwrite",
+    ],
+)
+def test_scratch_entry_survives_a_build_at_another_scale(name, spark):
+    """Entries that write and re-read a scratch directory on every
+    build must not share it with a build for another sf_dir: a
+    DataFrame built earlier still lists its own files when collected
+    after the other build ran."""
+    fn = REG[name].spark_fn
+    first = fn(spark, SF_SMOKE)
+    fn(spark, SF_SMOKE.replace("sf0.001", "sf0.01"))
+    got = first.collect()
+    fresh = fn(spark, SF_SMOKE)
+    assert _canon(first.columns, [tuple(r) for r in got]) == _canon(
+        fresh.columns, [tuple(r) for r in fresh.collect()]
+    )
+
+
 def test_entry_contract(spark):
     import __spark_entry__ as mod
 

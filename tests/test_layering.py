@@ -92,3 +92,44 @@ def test_bench_tools_hold_no_entry_names():
             if isinstance(n, ast.Constant) and isinstance(n.value, str) and n.value in names
         }
         assert not found, (rel, sorted(found))
+
+
+def test_only_tables_decides_fixture_location_and_lifetime():
+    """Temp directories come from ``tables.session_tmpdir``, session
+    fixtures are memoised by ``tables.session_memo``: no other module
+    makes a temp dir, reads the warehouse location, or keeps its own
+    module-level ``*_CACHE`` dict (``operators/ivf.py``'s centroid
+    cache is a data cache keyed by manifest version, not a fixture)."""
+    bad = []
+    for path, tree in _package_modules().items():
+        if path == os.path.join("chronicle_sniffer_spark", "tables.py"):
+            continue
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr in ("mkdtemp", "gettempdir"):
+                bad.append((path, node.lineno, node.attr))
+            elif isinstance(node, ast.ImportFrom) and node.module == "tempfile":
+                bad += [
+                    (path, node.lineno, a.name)
+                    for a in node.names
+                    if a.name in ("mkdtemp", "gettempdir")
+                ]
+            elif (
+                isinstance(node, ast.Constant)
+                and node.value == "spark.sql.warehouse.dir"
+                and path != os.path.join("chronicle_sniffer_spark", "session.py")
+            ):
+                bad.append((path, node.lineno, node.value))
+        if path == os.path.join("chronicle_sniffer_spark", "operators", "ivf.py"):
+            continue
+        for node in tree.body:
+            targets = (
+                node.targets
+                if isinstance(node, ast.Assign)
+                else [node.target] if isinstance(node, ast.AnnAssign) else []
+            )
+            bad += [
+                (path, node.lineno, t.id)
+                for t in targets
+                if isinstance(t, ast.Name) and t.id.endswith("_CACHE")
+            ]
+    assert not bad, bad

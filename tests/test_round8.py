@@ -474,20 +474,12 @@ def test_dq6_checksum_detects_single_row_mutation(spark):
 def test_s8c_dynamic_overwrite_touches_only_target_partition(spark):
     """The dynamic overwrite must leave every non-1995 partition's
     files untouched (mtime/identity preserved) while 1995 shrinks."""
-    import glob
-    import hashlib
-    import tempfile
-    import os as _os
-
     from chronicle_sniffer_spark.plans.round8 import (
         s8c_dynamic_partition_overwrite,
     )
 
-    path = _os.path.join(
-        tempfile.gettempdir(),
-        f"css_dynpart_{hashlib.md5(SF_SMOKE.encode()).hexdigest()[:8]}",
-    )
-    rows = {r.yr: r.n_orders for r in s8c_dynamic_partition_overwrite(spark, SF_SMOKE).collect()}
+    df = s8c_dynamic_partition_overwrite(spark, SF_SMOKE)
+    rows = {r.yr: r.n_orders for r in df.collect()}
     orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
     by_year = {
         r.yr: r.n
@@ -504,9 +496,9 @@ def test_s8c_dynamic_overwrite_touches_only_target_partition(spark):
             assert rows[yr] == n - urgent_1995
         else:
             assert rows[yr] == n
-    # every partition directory still exists (static mode would have
+    # every partition directory still holds files (static mode would have
     # dropped all but 1995)
-    dirs = {p.split("yr=")[1] for p in glob.glob(_os.path.join(path, "yr=*"))}
+    dirs = {p.split("yr=")[1].split("/")[0] for p in df.inputFiles()}
     assert dirs == {str(y) for y in by_year}
 
 
