@@ -152,21 +152,6 @@ def ivf_topk(
 CELL_SCHEMA = "vec_id bigint, v array<double>, cid int"
 
 
-def _staged_buckets(staging: str) -> list[int]:
-    """Cell ids actually written under a staging dir — driver-side
-    directory metadata, the same class of information as the manifest
-    itself."""
-    import os
-
-    if not os.path.isdir(staging):
-        return []
-    return sorted(
-        int(name.split("=", 1)[1])
-        for name in os.listdir(staging)
-        if name.startswith("bucket=")
-    )
-
-
 def ivf_read_cells(
     spark, index_dir: str, cids=None, version: int | None = None, manifest=None
 ):
@@ -180,10 +165,7 @@ def ivf_read_cells(
     from chronicle_sniffer_spark.streaming import manifest as mf
 
     m = manifest if manifest is not None else mf.read_manifest(index_dir, version)
-    paths = mf.bucket_paths(index_dir, m, set(cids) if cids is not None else None)
-    if not paths:
-        return spark.createDataFrame([], CELL_SCHEMA)
-    return spark.read.schema(CELL_SCHEMA).parquet(*paths)
+    return mf.read_snapshot(spark, index_dir, CELL_SCHEMA, m, cids)
 
 
 # (index_dir, manifest version) -> [(cid, [cvec...])]: the trained
@@ -247,7 +229,7 @@ def ivf_index_write(
     n_iter: int = N_ITER,
 ) -> list[tuple[int, list[float]]]:
     """Materialize the inverted file as a MANIFEST-COMMITTED per-cell
-    layout (``index_dir/data/commit=E/bucket=<cid>/...`` +
+    layout (``index_dir/data/commit=N/bucket=<cid>/...`` +
     ``index_dir/centroids/commit=E`` + ``index_dir/manifest/vN.json``,
     the streaming/manifest.py protocol with bucket ≡ cell id): data
     and centroid files are write-once and publication is one atomic
@@ -280,33 +262,27 @@ def ivf_index_write(
         "vec_id", "v", "cid"
     )
     cent_rel = f"centroids/commit={epoch}"
-    # a dir here is the residue of a CRASHED attempt (same reasoning
-    # as manifest.staging_dir): unpublished, unreachable — remove it
+    # a dir here is the residue of a CRASHED attempt: every index
+    # commit advances the epoch, so this one was never published and
+    # no reader can reach it — remove it
     import os as _os
     import shutil as _shutil
 
     if _os.path.isdir(f"{index_dir}/{cent_rel}"):
         _shutil.rmtree(f"{index_dir}/{cent_rel}")
     _centroid_df(spark, centroids).write.parquet(f"{index_dir}/{cent_rel}")
-    staging = mf.staging_dir(index_dir, epoch)
-    assigned.withColumn("bucket", F.col("cid")).write.partitionBy("bucket").parquet(
-        staging
-    )
-    written = _staged_buckets(staging)
-    stale = (
-        [int(b) for b in prev["buckets"] if int(b) not in set(written)]
-        if prev
-        else []
-    )
-    mf.commit(
-        index_dir, epoch, written, dropped_buckets=stale, extra={"centroids": cent_rel}
+    # every previous cell not re-staged is dropped in the same flip
+    mf.publish(
+        assigned.withColumn("bucket", F.col("cid")),
+        index_dir,
+        epoch,
+        mf.bucket_epochs(prev),
+        extra={"centroids": cent_rel},
     )
     return centroids
 
 
-def ivf_index_upsert(
-    spark, index_dir: str, new_embeddings: DataFrame, fail_before_commit: bool = False
-) -> list[int]:
+def ivf_index_upsert(spark, index_dir: str, new_embeddings: DataFrame) -> list[int]:
     """Delta-upsert new/changed vectors into a materialized IVF index
     WITHOUT retraining or rewriting untouched cells — the operational
     shape for a daily-growing 100 TB embedding corpus where full
@@ -322,8 +298,8 @@ def ivf_index_upsert(
        between cells, so its old cell must be rewritten too) — a
        semi-join + distinct whose result is bounded by n_centroids,
        the one ≤16-row collect;
-    3. rewrite ONLY the touched cells into a WRITE-ONCE epoch
-       directory (``data/commit=E``): existing rows minus replaced
+    3. rewrite ONLY the touched cells into a WRITE-ONCE
+       directory (``data/commit=N``): existing rows minus replaced
        vec_ids, union the delta — untouched cells' files are never
        listed, read, or rewritten, and keep serving from their old
        paths (asserted by
@@ -342,9 +318,7 @@ def ivf_index_upsert(
 
     The write-once epoch dir also removes the round-11
     localCheckpoint: nothing reads and overwrites the same path
-    anymore.  ``fail_before_commit`` injects a crash between the data
-    write and the manifest flip (tests).  Returns the sorted touched
-    cell ids.
+    anymore.  Returns the sorted touched cell ids.
     """
     from chronicle_sniffer_spark.streaming import manifest as mf
 
@@ -369,25 +343,16 @@ def ivf_index_upsert(
         .select("vec_id", "v", "cid")
         .unionByName(assigned)
     )
-    epoch = (m["epoch"] + 1) if m else 0
-    staging = mf.staging_dir(index_dir, epoch)
-    merged.withColumn("bucket", F.col("cid")).write.partitionBy("bucket").parquet(
-        staging
+    mf.publish(
+        merged.withColumn("bucket", F.col("cid")),
+        index_dir,
+        (m["epoch"] + 1) if m else 0,
+        touched,
     )
-    if fail_before_commit:
-        raise RuntimeError("injected crash before manifest commit")
-    written = _staged_buckets(staging)
-    drained = [c for c in touched if c not in set(written)]
-    mf.commit(index_dir, epoch, written, dropped_buckets=drained)
     return touched
 
 
-def ivf_index_delete(
-    spark,
-    index_dir: str,
-    delete_ids: DataFrame,
-    fail_before_commit: bool = False,
-) -> list[int]:
+def ivf_index_delete(spark, index_dir: str, delete_ids: DataFrame) -> list[int]:
     """Delete vectors from a materialized IVF index WITHOUT retraining
     or touching unaffected cells — the third leg of the index CRUD
     next to rebuild (`ivf_index_write`) and delta-upsert
@@ -407,8 +372,7 @@ def ivf_index_delete(
        drained to zero vectors leave the bucket map in the SAME flip
        (a stale path must not keep serving deleted vectors), and a
        crash before the flip leaves readers on the exact pre-delete
-       snapshot (``fail_before_commit`` injects that crash for the
-       pytest).
+       snapshot.
 
     Centroids are deliberately NOT retrained — deletion shifts cell
     populations, not the model; retraining is `ivf_index_write`'s
@@ -433,16 +397,9 @@ def ivf_index_delete(
         .join(ids, "vec_id", "anti")
         .select("vec_id", "v", "cid")
     )
-    epoch = m["epoch"] + 1
-    staging = mf.staging_dir(index_dir, epoch)
-    merged.withColumn("bucket", F.col("cid")).write.partitionBy("bucket").parquet(
-        staging
+    mf.publish(
+        merged.withColumn("bucket", F.col("cid")), index_dir, m["epoch"] + 1, touched
     )
-    if fail_before_commit:
-        raise RuntimeError("injected crash before manifest commit")
-    written = _staged_buckets(staging)
-    drained = [c for c in touched if c not in set(written)]
-    mf.commit(index_dir, epoch, written, dropped_buckets=drained)
     return touched
 
 

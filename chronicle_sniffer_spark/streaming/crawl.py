@@ -15,18 +15,16 @@ Shape:
 - each micro-batch runs the SAME stages as the batch path — member
   decode (sources/warc.py decode_members), HTML extraction, C4
   quality gate — nothing is reimplemented stream-side;
-- the sink is a manifest-committed bucket store (streaming/
-  manifest.py), bucketed by CONTAINER FILE: each batch MERGEs its
-  files' documents into only the buckets those files hash into
-  (existing rows for OTHER files are carried forward; rows for the
-  batch's own files are REPLACED).  A bucket's content is therefore a
-  deterministic function of the container files mapping to it — the
-  S7 idempotence contract holds structurally: re-delivering a
-  container (duplicate notification, checkpoint loss, operator
-  replay) rewrites its bucket with byte-identical rows instead of
-  appending duplicates, and publication stays one atomic manifest
-  flip per batch (a crash mid-batch leaves readers on the previous
-  consistent snapshot).
+- the sink is a manifest-committed bucket store bucketed by CONTAINER
+  FILE (streaming/manifest.py owns the snapshot read and the
+  stage-and-publish flip): each batch MERGEs its files' documents
+  into only the buckets those files hash into — rows for OTHER files
+  are carried forward, rows for the batch's own files are REPLACED.
+  A bucket's content is therefore a deterministic function of the
+  container files mapping to it, so the S7 idempotence contract holds
+  structurally: re-delivering a container (duplicate notification,
+  checkpoint loss, operator replay) rewrites its bucket with
+  byte-identical rows instead of appending duplicates.
 
 At 100 TB: the data path is fully distributed (decode/extract/gate
 run on executors; the MERGE is a bucket-pruned anti-join + union);
@@ -53,7 +51,6 @@ BINARYFILE_SCHEMA = (
     "path string, modificationTime timestamp, length bigint, content binary"
 )
 CRAWL_TABLE_SCHEMA = "doc_id bigint, file string, n_tokens bigint, text string"
-N_BUCKETS = 32
 
 
 def gated_extract(recs: DataFrame) -> DataFrame:
@@ -109,20 +106,14 @@ def gated_extract(recs: DataFrame) -> DataFrame:
     ).select("doc_id", "file", "n_tokens", "text")
 
 
-def _bucket_of(col: str = "file"):
-    return F.pmod(F.xxhash64(col), F.lit(N_BUCKETS)).cast("int")
-
-
 def read_crawl_table(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
     """One consistent manifest snapshot of the ingested document
     table (time travel via ``version``)."""
-    m = mf.read_manifest(table_dir, version)
-    paths = mf.bucket_paths(table_dir, m)
-    if not paths:
-        return spark.createDataFrame([], CRAWL_TABLE_SCHEMA)
-    return spark.read.schema(CRAWL_TABLE_SCHEMA).parquet(*paths)
+    return mf.read_snapshot(
+        spark, table_dir, CRAWL_TABLE_SCHEMA, mf.read_manifest(table_dir, version)
+    )
 
 
 def merge_containers(
@@ -149,45 +140,32 @@ def merge_containers(
         for r in spark.createDataFrame(
             [(p,) for p in batch_files], "file string"
         )
-        .select(_bucket_of("file").alias("bucket"))
+        .select(mf.bucket_of("file").alias("bucket"))
         .distinct()
         .collect()
     }
     docs = gated_extract(decode_members(files)).withColumn(
-        "bucket", _bucket_of("file")
+        "bucket", mf.bucket_of("file")
     )
     m = mf.read_manifest(table_dir)
-    epoch = (m["epoch"] + 1) if m else 0
-    old_paths = mf.bucket_paths(table_dir, m, touched)
-    if old_paths:
-        carried = (
-            spark.read.schema(CRAWL_TABLE_SCHEMA)
-            .parquet(*old_paths)
-            # REPLACE the batch's own files' rows: re-delivery must
-            # rewrite, not append (the S7 contract).  The IN list is
-            # bounded by maxFilesPerTrigger; an unbounded batch would
-            # want a broadcast anti-join instead.
-            .filter(~F.col("file").isin(batch_files))
-            .withColumn("bucket", _bucket_of("file"))
-        )
-        merged = carried.unionByName(docs)
-    else:
-        merged = docs
-    staging = mf.staging_dir(table_dir, epoch)
-    merged.write.partitionBy("bucket").parquet(staging)
-    import os
-
-    written = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(staging)
-        if d.startswith("bucket=")
+    carried = (
+        mf.read_snapshot(spark, table_dir, CRAWL_TABLE_SCHEMA, m, touched)
+        # REPLACE the batch's own files' rows: re-delivery must
+        # rewrite, not append (the S7 contract).  The IN list is
+        # bounded by maxFilesPerTrigger; an unbounded batch would
+        # want a broadcast anti-join instead.
+        .filter(~F.col("file").isin(batch_files))
+        .withColumn("bucket", mf.bucket_of("file"))
     )
-    # a touched bucket the merge drained to zero rows writes no
-    # bucket=NN dir; it must leave the manifest in the SAME flip or
-    # its stale path would keep serving the replaced rows
-    drained = sorted(b for b in touched if b not in set(written))
-    mf.commit(table_dir, epoch, written, dropped_buckets=drained)
-    return epoch
+    # a touched bucket the merge drains to zero rows leaves the
+    # manifest in the same flip, or its stale path would keep serving
+    # the replaced rows
+    return mf.publish(
+        carried.unionByName(docs),
+        table_dir,
+        (m["epoch"] + 1) if m else 0,
+        touched,
+    )
 
 
 def stream_crawl_ingest(

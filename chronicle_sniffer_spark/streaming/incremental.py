@@ -12,25 +12,13 @@ MERGE entry (plans/quality.py s8_merge_upsert), generalizing the
 reference's per-file counter accumulation (R23/R26) to a keyed,
 restart-safe table.
 
-Storage & merge shape (the 100 TB design; the data path is fully
-distributed): the table is hash-bucketed on user_id; each micro-batch
-full-outer-merges its partials into ONLY the buckets its keys hash
-into, stages them as WRITE-ONCE files under ``data/commit=E/
-bucket=NN``, and publishes with ONE atomic manifest flip
-(streaming/manifest.py) — no delete+rename window anywhere, so a
-crash at any point leaves readers on the previous manifest seeing a
-consistent cross-bucket snapshot.  Untouched buckets' files are never
-rewritten, so per-batch write cost tracks the batch's key spread, not
-the table size.
-
-Exactly-once: the manifest records each bucket's applied epoch and
-commits atomically with the bucket paths.  On redelivery, buckets
-whose manifest epoch already reached E are skipped; staged-but-never-
-published residue is discarded and merged exactly once.  Values
-accumulate through exact DECIMAL(18,4) so association order across
-micro-batches can never matter.  Driver-side actions are
-control-plane only (affected-bucket ids + the manifest file) — the
-same metadata a Delta/Iceberg commit writes.
+Storage: a manifest-committed bucket store hash-bucketed on user_id
+(streaming/manifest.py owns the snapshot read and the write-once
+stage-and-publish, and documents the exactly-once epoch skip applied
+here); each micro-batch full-outer-merges its partials into only the
+buckets its keys hash into, so per-batch write cost tracks the
+batch's key spread, not the table size.  Values accumulate through exact DECIMAL(18,4) so
+association order across micro-batches can never matter.
 """
 
 from __future__ import annotations
@@ -41,23 +29,15 @@ from pyspark.sql import functions as F
 from chronicle_sniffer_spark.streaming import manifest as mf
 
 TABLE_SCHEMA = "user_id bigint, n_events bigint, total_value decimal(18,4)"
-N_BUCKETS = 32
-
-
-def _bucket_of(col: str = "user_id"):
-    return F.pmod(F.xxhash64(col), F.lit(N_BUCKETS)).cast("int")
 
 
 def _read_table(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
-    """Resolve through ONE manifest version (default latest): a frozen,
-    consistent cross-bucket snapshot (time travel via ``version``)."""
-    m = mf.read_manifest(table_dir, version)
-    paths = mf.bucket_paths(table_dir, m)
-    if not paths:
-        return spark.createDataFrame([], TABLE_SCHEMA)
-    return spark.read.schema(TABLE_SCHEMA).parquet(*paths)
+    """One manifest snapshot of the store (time travel via ``version``)."""
+    return mf.read_snapshot(
+        spark, table_dir, TABLE_SCHEMA, mf.read_manifest(table_dir, version)
+    )
 
 
 def merge_batch(
@@ -65,20 +45,17 @@ def merge_batch(
     table_dir: str,
     batch_df: DataFrame,
     epoch_id: int,
-    fail_before_commit: bool = False,
 ) -> None:
     """MERGE one micro-batch's partial aggregates into the table,
     idempotently — only affected buckets whose manifest epoch has not
-    yet reached ``epoch_id`` are merged, staged write-once, and
-    published by one atomic manifest flip.  ``fail_before_commit``
-    injects a crash between the data write and the flip (tests)."""
+    yet reached ``epoch_id`` are merged and published."""
     part = (
         batch_df.groupBy("user_id")
         .agg(
             F.count("*").cast("bigint").alias("d_n"),
             F.sum(F.col("value").cast("decimal(18,4)")).alias("d_total"),
         )
-        .withColumn("bucket", _bucket_of())
+        .withColumn("bucket", mf.bucket_of("user_id"))
     )
     m = mf.read_manifest(table_dir)
     done = [b for b, e in mf.bucket_epochs(m).items() if e >= int(epoch_id)]
@@ -89,12 +66,7 @@ def merge_batch(
     # a rewritten bucket carries ALL its keys forward: read the
     # affected buckets by exact manifest path (untouched keys in an
     # affected bucket flow through the full-outer join unchanged)
-    stored_paths = mf.bucket_paths(table_dir, m, set(affected))
-    stored = (
-        spark.read.schema(TABLE_SCHEMA).parquet(*stored_paths)
-        if stored_paths
-        else spark.createDataFrame([], TABLE_SCHEMA)
-    )
+    stored = mf.read_snapshot(spark, table_dir, TABLE_SCHEMA, m, affected)
     merged = stored.join(todo.drop("bucket"), "user_id", "full_outer").select(
         "user_id",
         (F.coalesce("n_events", F.lit(0)) + F.coalesce("d_n", F.lit(0)))
@@ -106,13 +78,9 @@ def merge_batch(
         )
         .cast("decimal(18,4)")
         .alias("total_value"),
-        _bucket_of().alias("bucket"),
+        mf.bucket_of("user_id").alias("bucket"),
     )
-    staging = mf.staging_dir(table_dir, epoch_id)
-    merged.write.partitionBy("bucket").parquet(staging)
-    if fail_before_commit:
-        raise RuntimeError("injected crash before manifest commit")
-    mf.commit(table_dir, int(epoch_id), affected)
+    mf.publish(merged, table_dir, int(epoch_id), affected)
 
 
 def maintain_rollup(events_stream: DataFrame, table_dir: str, checkpoint_dir: str):
@@ -131,45 +99,34 @@ def maintain_rollup(events_stream: DataFrame, table_dir: str, checkpoint_dir: st
     return _read_table(spark, table_dir).select("user_id", "n_events", "total_value")
 
 
-def compact_table(
-    spark: SparkSession, table_dir: str, fail_before_commit: bool = False
-) -> int:
+def compact_table(spark: SparkSession, table_dir: str) -> int:
     """Small-file compaction through the SAME atomic protocol as the
     merges (round-12): a long-lived stream-maintained table accretes
     one commit directory per epoch — every bucket's live file sits in
-    whichever epoch last rewrote it, so a full read touches O(epochs)
-    directories and the file count grows without bound.  Compaction
-    reads the CURRENT snapshot through one manifest, rewrites every
-    live bucket into ONE new write-once epoch directory (one file per
-    bucket — ``repartition(bucket)`` before ``partitionBy``), and
-    publishes with one manifest flip; buckets that vanished (none in
-    practice — compaction preserves data) leave the map in the same
-    flip.  Readers never see a half-compacted table: they hold either
-    the old manifest (all old paths, still on disk — write-once) or
-    the new one; prune() then reclaims the dead epoch directories.
-    This is exactly Delta OPTIMIZE / Iceberg rewrite_data_files
-    re-expressed on the self-contained manifest store.  Returns the
-    committed manifest version."""
+    whichever commit last rewrote it, so a full read touches
+    O(epochs) directories and the file count grows without bound.
+    Compaction reads the CURRENT snapshot through one manifest,
+    rewrites every live bucket into ONE new write-once directory (one
+    file per bucket — ``repartition(bucket)`` before ``partitionBy``),
+    and publishes with one manifest flip.  Readers never see a
+    half-compacted table: they hold either the old manifest (all old
+    paths, still on disk — write-once) or the new one; prune() then
+    reclaims the dead directories.  This is exactly Delta OPTIMIZE /
+    Iceberg rewrite_data_files re-expressed on the self-contained
+    manifest store.
+
+    It publishes at the manifest's CURRENT epoch, never a new one:
+    every epoch up to it is fully published, so marking all buckets
+    with it is exact, whereas epoch + 1 is the id the stream's next
+    batch carries — that batch would find every bucket "done" and be
+    skipped.  Returns the committed manifest version."""
     m = mf.read_manifest(table_dir)
     if m is None:
         raise ValueError(f"nothing to compact at {table_dir}")
-    cur = _read_table(spark, table_dir)
-    epoch = int(m["epoch"]) + 1
-    staging = mf.staging_dir(table_dir, epoch)
-    (
-        cur.withColumn("bucket", _bucket_of())
-        .repartition("bucket")
-        .write.partitionBy("bucket")
-        .parquet(staging)
+    cur = mf.read_snapshot(spark, table_dir, TABLE_SCHEMA, m)
+    return mf.publish(
+        cur.withColumn("bucket", mf.bucket_of("user_id")).repartition("bucket"),
+        table_dir,
+        int(m["epoch"]),
+        mf.bucket_epochs(m),
     )
-    import os
-
-    written = sorted(
-        int(name.split("=", 1)[1])
-        for name in os.listdir(staging)
-        if name.startswith("bucket=")
-    )
-    if fail_before_commit:
-        raise RuntimeError("injected crash before manifest commit")
-    dropped = [b for b in mf.bucket_epochs(m) if b not in set(written)]
-    return mf.commit(table_dir, epoch, written, dropped_buckets=dropped)

@@ -1,18 +1,23 @@
-"""Atomic manifest commits for the stream-maintained bucket stores
-(sessions.py, incremental.py) — closes the commit-granularity window
-the round-10 verdict documented: dynamic-partition overwrite delegates
+"""Atomic manifest commits for the bucket stores — the session table
+(sessions.py), the rollup (incremental.py), the crawl table (crawl.py)
+and the IVF index (operators/ivf.py).  This module is the ONE place
+that decides how such a store is read and published: stores call
+:func:`read_snapshot` and :func:`publish` and keep only their merge
+semantics.  It closes the commit-granularity window the round-10
+verdict documented: dynamic-partition overwrite delegates
 bucket-directory replacement to the file committer, so a crash MID-JOB
 could leave some buckets at epoch E and others at E−1 (each bucket
 individually consistent, but a cross-bucket read was not a snapshot).
 
 Protocol (the Iceberg/Delta shape, self-contained):
 
-1. **Data files are immutable and write-once.**  A commit for epoch E
-   writes its rewritten buckets under ``data/commit=E/bucket=NN`` —
-   a NEW directory, never an in-place overwrite, so there is no
-   delete+rename window at all.  A crashed attempt leaves an
-   unpublished directory that no reader can reach (readers resolve
-   paths only through the manifest); the retry removes and rewrites it.
+1. **Data files are immutable and write-once.**  The commit that
+   publishes manifest version N writes its rewritten buckets under
+   ``data/commit=N/bucket=NN`` — a NEW directory, never an in-place
+   overwrite, so there is no delete+rename window at all.  A crashed
+   attempt leaves an unpublished directory that no reader can reach
+   (readers resolve paths only through the manifest); the retry
+   removes and rewrites it.
 2. **Publication is ONE atomic rename.**  A manifest version file
    ``manifest/v{N}.json`` maps every bucket to the exact data path
    (and epoch) that serves it.  The new version is written to a temp
@@ -26,13 +31,29 @@ Protocol (the Iceberg/Delta shape, self-contained):
    :func:`prune` drops data directories unreferenced by the retained
    manifest tail (the s13_manifest_file_prune idea).
 
+Data directories are named after the manifest VERSION they publish,
+not after the writer's epoch.  Every version is published at most
+once, so a ``commit=N`` directory found before version N exists is
+always crash residue and :func:`staging_dir` may remove it without
+any promise from the caller.  Epochs are the writer's idempotence
+key (a stream's batch id) and several commits may carry the same one
+— compaction republishes the current epoch — so an epoch-named
+directory could collide with a live one.
+
+Exactly-once: the manifest records each bucket's applied epoch and
+commits atomically WITH the bucket paths.  A streaming store skips
+buckets whose manifest epoch already reached the batch's epoch, so a
+redelivered batch is merged exactly once and staged-but-unpublished
+residue is discarded.
+
 Scale notes: the manifest is control-plane metadata — O(N_BUCKETS)
 entries, written by the single foreachBatch driver (streaming sinks
 are single-writer by construction).  On a real cluster the atomic
 rename is HDFS ``rename`` or an object-store conditional put; the
 production swap-in is a Delta/Iceberg commit, whose log append is
 exactly this one-file flip.  The DATA path stays fully distributed —
-the manifest never carries rows.
+the manifest never carries rows; the driver only lists the staged
+``bucket=NN`` directory names.
 """
 
 from __future__ import annotations
@@ -41,8 +62,17 @@ import json
 import os
 import shutil
 
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+
 MANIFEST_DIR = "manifest"
 DATA_DIR = "data"
+N_BUCKETS = 32
+
+
+def bucket_of(col: str) -> Column:
+    """The store's bucket id for key column ``col``."""
+    return F.pmod(F.xxhash64(col), F.lit(N_BUCKETS)).cast("int")
 
 
 def _manifest_dir(table_dir: str) -> str:
@@ -71,7 +101,10 @@ def read_manifest(
     an empty store.  Shape::
 
         {"version": N, "epoch": E,
-         "buckets": {"7": {"path": "data/commit=E", "epoch": E}, ...}}
+         "buckets": {"7": {"path": "data/commit=K", "epoch": E7}, ...}}
+
+    where K is the version that last rewrote bucket 7 and E7 the
+    epoch it was rewritten at.
 
     An EXPLICITLY requested version that does not exist on disk raises
     ``FileNotFoundError``: a time-travel read of a pruned snapshot must
@@ -109,24 +142,66 @@ def bucket_paths(table_dir: str, manifest: dict | None, buckets=None) -> list[st
     """Absolute data paths serving the given buckets (default: all)."""
     if manifest is None:
         return []
-    out = []
-    for b, e in manifest["buckets"].items():
-        if buckets is not None and int(b) not in buckets:
-            continue
-        out.append(os.path.join(table_dir, e["path"], f"bucket={int(b)}"))
-    return out
+    wanted = None if buckets is None else {int(b) for b in buckets}
+    return [
+        os.path.join(table_dir, e["path"], f"bucket={int(b)}")
+        for b, e in manifest["buckets"].items()
+        if wanted is None or int(b) in wanted
+    ]
 
 
-def staging_dir(table_dir: str, epoch_id: int) -> str:
-    """Write-once data directory for this epoch's rewritten buckets.
-    If it already exists it is the residue of a CRASHED attempt (a
-    published epoch is skipped upstream via the manifest's bucket
-    epochs before any write) — remove it; no reader can hold a path
-    into an unpublished directory."""
-    d = os.path.join(table_dir, DATA_DIR, f"commit={int(epoch_id)}")
+def read_snapshot(
+    spark: SparkSession, table_dir: str, schema: str, manifest: dict | None, buckets=None
+) -> DataFrame:
+    """The given buckets (default: all) of ONE resolved manifest — the
+    paths are frozen at resolve time, so the DataFrame is a consistent
+    snapshot even while later commits land — or an empty DataFrame of
+    ``schema`` when the manifest serves none of them."""
+    paths = bucket_paths(table_dir, manifest, buckets)
+    if not paths:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*paths)
+
+
+def _data_rel(version: int) -> str:
+    return os.path.join(DATA_DIR, f"commit={int(version)}")
+
+
+def _next_version(table_dir: str) -> int:
+    latest = latest_version(table_dir)
+    return 0 if latest is None else latest + 1
+
+
+def staging_dir(table_dir: str, version: int) -> str:
+    """Write-once data directory for the commit that will publish
+    manifest ``version``.  Every version is published at most once, so
+    a directory that exists before its version does is the residue of
+    a CRASHED attempt — remove it; no reader can hold a path into an
+    unpublished directory."""
+    d = os.path.join(table_dir, _data_rel(version))
     if os.path.isdir(d):
         shutil.rmtree(d)
     return d
+
+
+def publish(
+    df: DataFrame, table_dir: str, epoch: int, touched, extra: dict | None = None
+) -> int:
+    """Stage ``df`` (which carries a ``bucket`` column) write-once and
+    publish it with one manifest flip at ``epoch``: every staged
+    ``bucket=NN`` directory is repointed, and every ``touched`` bucket
+    the merge drained to zero rows leaves the map in the SAME flip (a
+    stale path must not keep serving replaced rows).  Returns the
+    committed version."""
+    staging = staging_dir(table_dir, _next_version(table_dir))
+    df.write.partitionBy("bucket").parquet(staging)
+    written = sorted(
+        int(name.split("=", 1)[1])
+        for name in os.listdir(staging)
+        if name.startswith("bucket=")
+    )
+    drained = sorted({int(b) for b in touched} - set(written))
+    return commit(table_dir, epoch, written, dropped_buckets=drained, extra=extra)
 
 
 def commit(
@@ -136,13 +211,14 @@ def commit(
     dropped_buckets: list[int] = (),
     extra: dict | None = None,
 ) -> int:
-    """Atomically publish epoch ``epoch_id``'s staged buckets: merge
-    the bucket→path map of the previous manifest with the rewritten
-    buckets, remove ``dropped_buckets`` (buckets the commit drained to
-    zero rows — they leave the map in the SAME flip, so no reader can
-    ever resolve a stale path for them; their old data dirs become
-    unreferenced and prune() reclaims them), and flip one new manifest
-    version into place.  Returns the committed version number.
+    """Atomically publish the buckets staged in the next version's
+    :func:`staging_dir` at epoch ``epoch_id``: merge the bucket→path
+    map of the previous manifest with the rewritten buckets, remove
+    ``dropped_buckets`` (buckets the commit drained to zero rows — they
+    leave the map in the SAME flip, so no reader can ever resolve a
+    stale path for them; their old data dirs become unreferenced and
+    prune() reclaims them), and flip one new manifest version into
+    place.  Returns the committed version number.
 
     ``extra`` carries store-specific snapshot metadata (e.g. the IVF
     centroid table's epoch path) INSIDE the same atomic flip; previous
@@ -152,10 +228,10 @@ def commit(
     buckets = dict(prev["buckets"]) if prev else {}
     for b in dropped_buckets:
         buckets.pop(str(int(b)), None)
-    rel = os.path.join(DATA_DIR, f"commit={int(epoch_id)}")
+    version = (prev["version"] + 1) if prev else 0
+    rel = _data_rel(version)
     for b in rewritten_buckets:
         buckets[str(int(b))] = {"path": rel, "epoch": int(epoch_id)}
-    version = (prev["version"] + 1) if prev else 0
     doc = {
         k: v
         for k, v in (prev or {}).items()

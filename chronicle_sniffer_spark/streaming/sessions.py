@@ -17,26 +17,11 @@ merged interval's internal gaps stay ≤ G, re-establishing the
 invariant for the next batch.  tests/test_streaming.py proves the
 stream-maintained table equals the batch one-shot sessionization.
 
-Storage & merge shape (the 100 TB design; the data path is fully
-distributed): the table is hash-bucketed on user_id; each micro-batch
-rewrites ONLY the buckets its users hash into, as WRITE-ONCE files
-under ``data/commit=E/bucket=NN``, then publishes them with ONE
-atomic manifest flip (streaming/manifest.py).  Untouched buckets'
-files are physically never rewritten — and, unlike the previous
-dynamic-partition-overwrite protocol, never even re-renamed: there is
-NO delete+rename window anywhere, so a crash at ANY point leaves
-readers on the previous manifest seeing a perfectly consistent
-snapshot (the round-10 verdict's item 4; crash-injection proof in
-tests/test_streaming.py::test_t11_crash_never_exposes_mixed_epochs).
-
-Exactly-once: the manifest records each bucket's applied epoch and
-commits atomically WITH the bucket paths.  On redelivery, buckets
-whose manifest epoch already reached E are skipped; buckets a crashed
-attempt staged but never published are discarded and merged exactly
-once.  The only driver-side actions are control-plane metadata — the
-affected-bucket id list (≤ N_BUCKETS ints) and the manifest file
-itself, exactly what a Delta/Iceberg commit does; no row data ever
-reaches the driver.
+Storage: a manifest-committed bucket store hash-bucketed on user_id
+(streaming/manifest.py owns the snapshot read and the write-once
+stage-and-publish, and documents the exactly-once epoch skip applied
+here); each micro-batch rewrites only the buckets its users hash
+into.
 """
 
 from __future__ import annotations
@@ -47,27 +32,17 @@ from pyspark.sql import functions as F
 from chronicle_sniffer_spark.streaming import manifest as mf
 
 SESSIONS_SCHEMA = "user_id bigint, s bigint, e bigint, n bigint"
-N_BUCKETS = 32
 # session gap of the catalog's batch and incremental sessionize entries
 SESSION_GAP_MIN = 30
-
-
-def _bucket_of(col: str = "user_id"):
-    return F.pmod(F.xxhash64(col), F.lit(N_BUCKETS)).cast("int")
 
 
 def _read_table(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
-    """Resolve the store through ONE manifest version (default:
-    latest) — the paths are frozen at resolve time, so the returned
-    DataFrame is a consistent snapshot even if later commits land
-    while it is being consumed (time travel via ``version``)."""
-    m = mf.read_manifest(table_dir, version)
-    paths = mf.bucket_paths(table_dir, m)
-    if not paths:
-        return spark.createDataFrame([], SESSIONS_SCHEMA)
-    return spark.read.schema(SESSIONS_SCHEMA).parquet(*paths)
+    """One manifest snapshot of the store (time travel via ``version``)."""
+    return mf.read_snapshot(
+        spark, table_dir, SESSIONS_SCHEMA, mf.read_manifest(table_dir, version)
+    )
 
 
 def interval_union_with_gap(items: DataFrame, gap_us: int) -> DataFrame:
@@ -110,17 +85,14 @@ def merge_session_batch(
     batch_df: DataFrame,
     epoch_id: int,
     gap_us: int,
-    fail_before_commit: bool = False,
 ) -> None:
     """Merge one micro-batch of events into the session table,
     idempotently — only affected buckets whose manifest epoch has not
-    yet reached ``epoch_id`` are merged, staged write-once, and
-    published by one atomic manifest flip.  ``fail_before_commit``
-    injects a crash between the data write and the flip (tests)."""
+    yet reached ``epoch_id`` are merged and published."""
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     pts = batch_df.select(
         "user_id", us.alias("s"), us.alias("e"), F.lit(1).cast("bigint").alias("n")
-    ).withColumn("bucket", _bucket_of())
+    ).withColumn("bucket", mf.bucket_of("user_id"))
     m = mf.read_manifest(table_dir)
     # buckets already carrying this (or a later) epoch were fully
     # PUBLISHED by a previous attempt — redelivery skips them (a tiny
@@ -138,24 +110,16 @@ def merge_session_batch(
     # fragments of untouched users pass through the union unchanged —
     # they are already maximal, so the gaps-and-islands pass is the
     # identity on them)
-    stored_paths = mf.bucket_paths(table_dir, m, set(affected))
-    stored = (
-        spark.read.schema(SESSIONS_SCHEMA).parquet(*stored_paths)
-        if stored_paths
-        else spark.createDataFrame([], SESSIONS_SCHEMA)
-    )
+    stored = mf.read_snapshot(spark, table_dir, SESSIONS_SCHEMA, m, affected)
     merged = interval_union_with_gap(
         stored.unionByName(todo_pts.select("user_id", "s", "e", "n")), gap_us
     )
-    out = merged.withColumn("bucket", _bucket_of())
-    # stage write-once: a fresh directory no reader can resolve yet
-    # (a pre-existing dir is a crashed attempt's residue — removed)
-    staging = mf.staging_dir(table_dir, epoch_id)
-    out.write.partitionBy("bucket").parquet(staging)
-    if fail_before_commit:
-        raise RuntimeError("injected crash before manifest commit")
-    # the flip: one atomic rename publishes every staged bucket
-    mf.commit(table_dir, int(epoch_id), affected)
+    mf.publish(
+        merged.withColumn("bucket", mf.bucket_of("user_id")),
+        table_dir,
+        int(epoch_id),
+        affected,
+    )
 
 
 def maintain_sessions(

@@ -9,10 +9,13 @@
            per-file metric rows        (R23/R25)
 
 Where the reference needed Pub/Sub push + Cloud Run + per-file
-subprocesses, the streaming runtime supplies the same guarantees
-natively: the file source lists only completed files (R3), the
-checkpoint dedups re-listed files (R4), and foreachBatch appends are
-keyed by source file for overwrite-idempotency (R5/S7).
+subprocesses, the streaming runtime supplies part of the same
+guarantees natively: the file source lists only completed files (R3)
+and the checkpoint dedups re-listed files (R4).  The sink is NOT yet
+idempotent (R5/S7): it does two plain appends, so a micro-batch
+replayed after a crash between them appends its rows again.  Delivery
+is at-least-once until the sink publishes through
+streaming/manifest.py.
 """
 
 from __future__ import annotations
@@ -57,8 +60,8 @@ def run_udm_stream(
     metrics_dir = os.path.join(out_dir, "file_metrics")
 
     def sink(batch: DataFrame, epoch_id: int) -> None:
-        # per-batch transactional pair: events append + metric rows;
-        # both keyed by source file so redelivery overwrites, not dups
+        # events append + metric rows: two plain appends, so a replayed
+        # epoch appends again (at-least-once, see the module docstring)
         batch.persist()
         try:
             batch.write.mode("append").partitionBy("event_date").parquet(events_dir)

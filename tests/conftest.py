@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -30,3 +31,22 @@ def oracle():
         )
     yield con
     con.close()
+
+
+@pytest.fixture
+def crash_before_commit(monkeypatch):
+    """Context manager that makes ``manifest.commit`` raise: a bucket
+    store's write crashes after its staged data write and before the
+    manifest flip."""
+    from chronicle_sniffer_spark.streaming import manifest
+
+    def crash(*_args, **_kwargs):
+        raise RuntimeError("injected crash before manifest commit")
+
+    @contextlib.contextmanager
+    def inject():
+        with monkeypatch.context() as mp:
+            mp.setattr(manifest, "commit", crash)
+            yield
+
+    return inject

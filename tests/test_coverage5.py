@@ -599,7 +599,7 @@ def test_observe_metrics_ride_the_main_pass(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_incremental_rollup_equals_batch(spark, tmp_path):
+def test_incremental_rollup_equals_batch(spark, tmp_path, crash_before_commit):
     """The foreachBatch-MERGE-maintained per-user rollup, fed one file
     per micro-batch, converges to exactly the batch groupBy — and
     re-applying an already-applied epoch is a no-op (idempotent under
@@ -654,8 +654,8 @@ def test_incremental_rollup_equals_batch(spark, tmp_path):
 
     v = mf.latest_version(table)
     delta = spark.read.parquet(staged).limit(80)
-    with _pt.raises(RuntimeError, match="injected crash"):
-        merge_batch(spark, table, delta, 99, fail_before_commit=True)
+    with crash_before_commit(), _pt.raises(RuntimeError, match="injected crash"):
+        merge_batch(spark, table, delta, 99)
     assert mf.latest_version(table) == v
     still = sorted(
         tuple(r)

@@ -331,7 +331,9 @@ def test_upsert_drained_cell_is_deleted(emb, tmp_path):
     assert ivf_read_cells(spark, idx).count() == merged.count()
 
 
-def test_upsert_crash_before_commit_serves_old_snapshot(emb, tmp_path):
+def test_upsert_crash_before_commit_serves_old_snapshot(
+    emb, tmp_path, crash_before_commit
+):
     """Crash injection between the epoch-dir data write and the
     manifest flip (the window the round-11 dynamic-overwrite layout
     could NOT close): readers must keep seeing the exact pre-upsert
@@ -350,8 +352,8 @@ def test_upsert_crash_before_commit_serves_old_snapshot(emb, tmp_path):
     ivf_index_write(base, idx)
     key = lambda r: (r.vec_id, r.cid, tuple(r.v))  # noqa: E731
     before = sorted(map(key, ivf_read_cells(spark, idx).collect()))
-    with pytest.raises(RuntimeError, match="injected crash"):
-        ivf_index_upsert(spark, idx, delta, fail_before_commit=True)
+    with crash_before_commit(), pytest.raises(RuntimeError, match="injected crash"):
+        ivf_index_upsert(spark, idx, delta)
     # the staged-but-unpublished epoch dir is invisible to readers
     assert sorted(map(key, ivf_read_cells(spark, idx).collect())) == before
     # retry completes: merged index equals full assignment to the

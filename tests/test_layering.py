@@ -133,3 +133,54 @@ def test_only_tables_decides_fixture_location_and_lifetime():
                 if isinstance(t, ast.Name) and t.id.endswith("_CACHE")
             ]
     assert not bad, bad
+
+
+def _manifest_bindings(tree: ast.Module, protocol: set[str]) -> tuple[set, set]:
+    """Names bound to the ``streaming.manifest`` module, and protocol
+    functions imported from it by name."""
+    aliases, direct = set(), set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            aliases |= {
+                a.asname or a.name for a in node.names if a.name.endswith("streaming.manifest")
+            }
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            if node.module.endswith("streaming"):
+                aliases |= {a.asname or a.name for a in node.names if a.name == "manifest"}
+            elif node.module.endswith("streaming.manifest"):
+                direct |= {a.asname or a.name for a in node.names if a.name in protocol}
+    return aliases, direct
+
+
+def test_only_manifest_reads_and_publishes_bucket_stores():
+    """``streaming/manifest.py`` alone decides how a bucket store is
+    read and published: no other module stages, lists or commits a
+    store's data directory, resolves its bucket paths, or keeps its
+    own bucket count or bucket hash."""
+    protocol = {"staging_dir", "commit", "bucket_paths"}
+    bad = []
+    for path, tree in _package_modules().items():
+        if path == os.path.join("chronicle_sniffer_spark", "streaming", "manifest.py"):
+            continue
+        aliases, direct = _manifest_bindings(tree, protocol)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                f, src = node.func, ast.unparse(node.func)
+                if (
+                    isinstance(f, ast.Attribute)
+                    and f.attr in protocol
+                    and ast.unparse(f.value) in aliases
+                ) or (isinstance(f, ast.Name) and f.id in direct):
+                    bad.append((path, node.lineno, src))
+                elif src == "os.listdir" and "stag" in ast.unparse(node):
+                    bad.append((path, node.lineno, ast.unparse(node)))
+            elif isinstance(node, ast.FunctionDef) and node.name == "_bucket_of":
+                bad.append((path, node.lineno, node.name))
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                bad += [
+                    (path, node.lineno, t.id)
+                    for t in targets
+                    if isinstance(t, ast.Name) and t.id == "N_BUCKETS"
+                ]
+    assert not bad, bad

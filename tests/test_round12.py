@@ -168,7 +168,9 @@ def test_write_is_deterministic_across_runs(spark, tmp_path):
             assert f1.read() == f2.read(), (pa, pb)
 
 
-def test_compaction_preserves_data_and_collapses_dirs(spark, tmp_path):
+def test_compaction_preserves_data_and_collapses_dirs(
+    spark, tmp_path, crash_before_commit
+):
     """compact_table: same rows before/after, one live commit dir
     after, time travel to the pre-compaction version intact, crash
     before the flip leaves readers on the old snapshot, and prune()
@@ -202,8 +204,8 @@ def test_compaction_preserves_data_and_collapses_dirs(spark, tmp_path):
     # crash injection: the staged rewrite is invisible
     import pytest as _pytest
 
-    with _pytest.raises(RuntimeError, match="injected crash"):
-        compact_table(spark, table, fail_before_commit=True)
+    with crash_before_commit(), _pytest.raises(RuntimeError, match="injected crash"):
+        compact_table(spark, table)
     assert mf.latest_version(table) == v_before
     assert rows(_read_table(spark, table)) == before
 
@@ -220,6 +222,43 @@ def test_compaction_preserves_data_and_collapses_dirs(spark, tmp_path):
     assert rows(_read_table(spark, table)) == before
     live = {e["path"] for e in mf.read_manifest(table)["buckets"].values()}
     assert all(os.path.isdir(os.path.join(table, p)) for p in live)
+
+
+@pytest.mark.parametrize("early_users", [None, 5])
+def test_merge_after_compaction_applies_the_next_epoch(spark, tmp_path, early_users):
+    """Compaction must not take the stream's next epoch: merge epochs
+    0-2, compact, merge epoch 3, and the rollup equals the raw events
+    of all four slices.  With the early slices limited to a few users,
+    epoch 3 also touches buckets the compacted table lacks, so its
+    staged directory must not be the live compacted one."""
+    from chronicle_sniffer_spark.streaming.incremental import (
+        _read_table,
+        compact_table,
+        merge_batch,
+    )
+
+    ev = load_table(spark, SF_SMOKE, "events")
+    early = F.lit(True) if early_users is None else F.col("user_id") < early_users
+    slices = [(F.col("event_id") % 4 == e) & early for e in range(3)]
+    slices.append(F.col("event_id") % 4 == 3)
+    table = str(tmp_path / "t")
+    for epoch in range(3):
+        merge_batch(spark, table, ev.filter(slices[epoch]), epoch)
+    compact_table(spark, table)
+    merge_batch(spark, table, ev.filter(slices[3]), 3)
+
+    want = (
+        ev.filter(slices[0] | slices[1] | slices[2] | slices[3])
+        .groupBy("user_id")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.sum(F.col("value").cast("decimal(18,4)")).alias("total_value"),
+        )
+    )
+    rows = lambda df: sorted(  # noqa: E731
+        (r.user_id, r.n_events, str(r.total_value)) for r in df.collect()
+    )
+    assert rows(_read_table(spark, table)) == rows(want)
 
 
 def test_canonical_url_edge_cases(spark):

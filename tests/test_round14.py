@@ -262,7 +262,6 @@ def test_s24_redelivery_rewrites_not_appends(spark):
     from chronicle_sniffer_spark.sources import warc as w
     from chronicle_sniffer_spark.streaming import manifest as mf
     from chronicle_sniffer_spark.streaming.crawl import (
-        _bucket_of,
         merge_containers,
         read_crawl_table,
     )
@@ -282,7 +281,7 @@ def test_s24_redelivery_rewrites_not_appends(spark):
     fb = [
         (r.path, r.bucket)
         for r in files.select(
-            "path", _bucket_of("path").alias("bucket")
+            "path", mf.bucket_of("path").alias("bucket")
         ).collect()
     ]
     from collections import Counter
@@ -583,7 +582,9 @@ def test_ivf_delete_touches_only_affected_cells(spark, tmp_path):
     assert mf.read_manifest(index_dir)["version"] == m2["version"]
 
 
-def test_ivf_delete_crash_before_commit_serves_old_snapshot(spark, tmp_path):
+def test_ivf_delete_crash_before_commit_serves_old_snapshot(
+    spark, tmp_path, crash_before_commit
+):
     """A crash between the staged cell write and the manifest flip
     must leave readers on the exact pre-delete snapshot."""
     import pytest
@@ -602,12 +603,11 @@ def test_ivf_delete_crash_before_commit_serves_old_snapshot(spark, tmp_path):
         for r in ivf.ivf_read_cells(spark, index_dir).select("vec_id", "cid").collect()
     )
     v0 = mf.read_manifest(index_dir)["version"]
-    with pytest.raises(RuntimeError, match="injected crash"):
+    with crash_before_commit(), pytest.raises(RuntimeError, match="injected crash"):
         ivf.ivf_index_delete(
             spark,
             index_dir,
             spark.createDataFrame([(i,) for i in range(0, 80, 3)], "vec_id bigint"),
-            fail_before_commit=True,
         )
     assert mf.read_manifest(index_dir)["version"] == v0
     after = sorted(

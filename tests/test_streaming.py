@@ -648,7 +648,7 @@ def test_t11_stream_maintained_sessions_equal_batch(spark, staged):
     assert _rows(_read_table(spark, table_dir), *cols) == before
 
 
-def test_t11_crash_never_exposes_mixed_epochs(spark, tmp_path):
+def test_t11_crash_never_exposes_mixed_epochs(spark, tmp_path, crash_before_commit):
     """Round-10 verdict item 4: the old dynamic-partition-overwrite
     protocol delegated bucket replacement to the file committer, so a
     crash MID-JOB could leave some buckets at epoch E and others at
@@ -683,10 +683,8 @@ def test_t11_crash_never_exposes_mixed_epochs(spark, tmp_path):
     # the manifest flip — the worst case for the old protocol
     import pytest as _pt
 
-    with _pt.raises(RuntimeError, match="injected crash"):
-        merge_session_batch(
-            spark, crash_dir, b1, 1, gap_us, fail_before_commit=True
-        )
+    with crash_before_commit(), _pt.raises(RuntimeError, match="injected crash"):
+        merge_session_batch(spark, crash_dir, b1, 1, gap_us)
     # the staged (unpublished) epoch-1 data exists on disk...
     assert os.path.isdir(os.path.join(crash_dir, "data", "commit=1"))
     # ...but the manifest never flipped: a reader resolves the
