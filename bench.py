@@ -23,6 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from chronicle_sniffer_spark.plans import registry
 from chronicle_sniffer_spark.session import get_spark
+from chronicle_sniffer_spark.tables import session_tmpdir
 
 UDM_BENCH_PACKETS = 60_000
 UDM_BENCH_FILES = 32
@@ -33,15 +34,12 @@ UDM_AMORTIZED_PACKETS = 600_000
 
 
 def _stage_udm_corpus(n_packets: int = UDM_BENCH_PACKETS) -> str:
-    """Generate (once) an n-packet tshark-JSON corpus split across
-    files, mirroring the reference's rotated-capture unit of work."""
+    """Generate an n-packet tshark-JSON corpus split across files, in
+    a process-private directory, mirroring the reference's
+    rotated-capture unit of work."""
     import json
 
-    base = os.path.join("/tmp", f"css_bench_udm_{n_packets}")
-    marker = os.path.join(base, "_done")
-    if os.path.exists(marker):
-        return base
-    os.makedirs(base, exist_ok=True)
+    base = session_tmpdir(f"css_bench_udm_{n_packets}_")
     per_file = n_packets // UDM_BENCH_FILES
     for fi in range(UDM_BENCH_FILES):
         pkts = []
@@ -93,8 +91,6 @@ def _stage_udm_corpus(n_packets: int = UDM_BENCH_PACKETS) -> str:
             pkts.append({"_source": {"layers": layers}})
         with open(os.path.join(base, f"capture_{fi:03d}.json"), "w") as f:
             json.dump(pkts, f)
-    with open(marker, "w") as f:
-        f.write("ok")
     return base
 
 

@@ -20,12 +20,22 @@ Sinks:
   (R23; error counts only PacketProcessingError events, matching the
   reference's UDM_PACKET_ERRORS, json2udm_cloud.py:340) and
   wall-clock duration logging shape (R25)
+
+``write_udm_sinks`` is the one sink body over them, shared by ``main``
+and the stream's ``foreachBatch`` (streaming/udm_pipeline.py): it
+persists the projected batch once, so every output comes from one
+parse of the captures, and overwrites each output, so a repeated call
+on the same input leaves the same content (the reference's blob
+overwrite, processor_app.py:171).  ``main`` persists the whole input;
+at scale the stream is the bounded form, each persist holding one
+micro-batch of at most ``maxFilesPerTrigger`` captures.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -128,19 +138,30 @@ def per_file_metrics(udm: DataFrame) -> DataFrame:
     reference's UDM_PACKET_ERRORS metric (json2udm_cloud.py:340);
     malformed-but-parsed packets are surfaced separately so the R23
     metric is not inflated."""
-    has_malformed = "is_malformed" in udm.columns
-    malformed = (
-        F.sum(F.when(F.col("is_malformed"), 1).otherwise(0))
-        if has_malformed
-        else F.lit(0)
-    )
     return udm.groupBy(F.regexp_extract("source_file", r"([^/]+)$", 1).alias("file")).agg(
         F.count("*").alias("processed_packet_count"),
         F.sum(F.when(F.col("is_error"), 1).otherwise(0)).alias("error_event_count"),
-        malformed.alias("malformed_event_count"),
+        F.sum(F.when(F.col("is_malformed"), 1).otherwise(0)).alias("malformed_event_count"),
         F.min("event_ts").alias("first_event_ts"),
         F.max("event_ts").alias("last_event_ts"),
     )
+
+
+def write_udm_sinks(
+    udm: DataFrame, events_dir: str, metrics_dir: str, json_dir: str | None = None
+) -> None:
+    """Persist ``udm`` once and overwrite, from that one copy, the
+    events table (:func:`write_udm_parquet`), the
+    :func:`per_file_metrics` rows and, when ``json_dir`` is given, the
+    per-capture JSON arrays (:func:`write_udm_json_array_per_file`)."""
+    udm.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        write_udm_parquet(udm, events_dir)
+        per_file_metrics(udm).write.mode("overwrite").parquet(metrics_dir)
+        if json_dir is not None:
+            write_udm_json_array_per_file(udm, json_dir)
+    finally:
+        udm.unpersist()
 
 
 def compact_small_files(
@@ -222,14 +243,12 @@ def main(argv: list[str] | None = None) -> int:
         )
     else:
         udm = convert_directory(spark, args.input, proc_time)
-    write_udm_parquet(udm, os.path.join(args.output, "udm_parquet"))
-    write_udm_json_array_per_file(udm, os.path.join(args.output, "udm_json"))
     # Metrics go to a sink (no O(n_files) driver materialization); the
     # log lines stream through a bounded iterator, and the exit-code
     # total is a single-row aggregate.
     metrics_dir = os.path.join(args.output, "file_metrics")
-    metrics = per_file_metrics(udm)
-    metrics.write.mode("overwrite").parquet(metrics_dir)
+    json_dir = os.path.join(args.output, "udm_json")
+    write_udm_sinks(udm, os.path.join(args.output, "udm_parquet"), metrics_dir, json_dir)
     spark_metrics = spark.read.parquet(metrics_dir)
     for m in spark_metrics.toLocalIterator():
         # the reference's per-file metric log lines (terraform/main.tf:238-548)

@@ -88,17 +88,14 @@ def s4_pcap_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def udm_per_file_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-file processed/error counters (ref UDM_PACKETS_PROCESSED /
     UDM_PACKET_ERRORS logs, json2udm_cloud.py:325-348) as a grouped agg."""
+    from chronicle_sniffer_spark.etl import per_file_metrics
     from chronicle_sniffer_spark.sources.json_source import read_tshark_json
     from chronicle_sniffer_spark.udm import project_udm
 
     raw = read_tshark_json(spark, os.path.join(FIXTURE_DIR, "*.json"))
-    udm = project_udm(raw, PROC_TIME)
     return (
-        udm.groupBy(F.regexp_extract("source_file", r"([^/]+)$", 1).alias("file"))
-        .agg(
-            F.count("*").alias("processed_packet_count"),
-            F.sum(F.when(F.col("is_error"), 1).otherwise(0)).alias("error_event_count"),
-        )
+        per_file_metrics(project_udm(raw, PROC_TIME))
+        .select("file", "processed_packet_count", "error_event_count")
         .orderBy("file")
     )
 

@@ -4,18 +4,21 @@
     capture dir (rotated tshark-JSON files)        [ref: R1/R3 rotation]
       → readStream file source (completed files only)
       → project_udm (R11-R22, same column expressions as batch)
-      → foreachBatch:
-           partitioned parquet append  (S8)
-           per-file metric rows        (R23/R25)
+      → foreachBatch: etl.write_udm_sinks into epoch-named dirs
+           udm_events/epoch=N    partitioned parquet (S8)
+           file_metrics/epoch=N  per-file metric rows (R23/R25)
 
 Where the reference needed Pub/Sub push + Cloud Run + per-file
-subprocesses, the streaming runtime supplies part of the same
-guarantees natively: the file source lists only completed files (R3)
-and the checkpoint dedups re-listed files (R4).  The sink is NOT yet
-idempotent (R5/S7): it does two plain appends, so a micro-batch
-replayed after a crash between them appends its rows again.  Delivery
-is at-least-once until the sink publishes through
-streaming/manifest.py.
+subprocesses, the streaming runtime supplies the same guarantees
+natively: the file source lists only completed files (R3), the
+checkpoint dedups re-listed files (R4), and the sink is idempotent
+(R5/S7), so delivery is exactly-once.  The offset log pins the files of
+an epoch, a capture never spans two epochs, and the sink OVERWRITES
+that epoch's own directories, so an epoch replayed after a crash
+anywhere before its commit-log entry replaces its rows instead of
+appending them.  The tables are append-only, so no manifest is needed:
+a reader lists ``udm_events/`` and ``file_metrics/`` as plain parquet,
+with ``epoch`` as a partition column.
 """
 
 from __future__ import annotations
@@ -25,7 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chronicle_sniffer_spark.etl import per_file_metrics
+from chronicle_sniffer_spark.etl import write_udm_sinks
 from chronicle_sniffer_spark.sources.json_source import tshark_packets
 from chronicle_sniffer_spark.udm import project_udm
 
@@ -49,27 +52,19 @@ def run_udm_stream(
     """Drive the capture directory to completion (AvailableNow replay —
     the same call tails a live directory with a different trigger)."""
     # udm_json excluded before the sink: the streamed table stores the
-    # typed event struct, so no to_json runs in the micro-batch (same
-    # rule as the batch parquet sink).
+    # typed event struct, and the sink persists the whole batch, so a
+    # kept udm_json would run to_json on every row of the micro-batch.
     udm_stream = (
         project_udm(read_capture_stream(spark, in_dir, max_files_per_trigger), processing_time)
         .drop("udm_json")
         .withColumn("event_date", F.to_date("event_ts"))
     )
-    events_dir = os.path.join(out_dir, "udm_events")
-    metrics_dir = os.path.join(out_dir, "file_metrics")
 
     def sink(batch: DataFrame, epoch_id: int) -> None:
-        # events append + metric rows: two plain appends, so a replayed
-        # epoch appends again (at-least-once, see the module docstring)
-        batch.persist()
-        try:
-            batch.write.mode("append").partitionBy("event_date").parquet(events_dir)
-            per_file_metrics(batch).withColumn("epoch", F.lit(epoch_id)).write.mode(
-                "append"
-            ).parquet(metrics_dir)
-        finally:
-            batch.unpersist()
+        # overwrite this epoch's dirs: a replayed epoch rewrites its own
+        # rows, never appends them (exactly-once, see the module docstring)
+        tables = ("udm_events", "file_metrics")
+        write_udm_sinks(batch, *(os.path.join(out_dir, t, f"epoch={epoch_id}") for t in tables))
 
     q = (
         udm_stream.writeStream.foreachBatch(sink)

@@ -74,6 +74,50 @@ def test_convert_and_sinks(spark):
     assert outs == outs2
 
 
+def _json_arrays(json_dir):
+    """``{<base>.udm.json: sorted events}`` of a per-capture array dir."""
+    arrays = {}
+    for name in os.listdir(json_dir):
+        if name.endswith(".udm.json"):
+            with open(os.path.join(json_dir, name)) as fh:
+                arrays[name] = sorted(json.dumps(e, sort_keys=True) for e in json.load(fh))
+    return arrays
+
+
+def test_main_writes_every_sink_and_reruns_idempotently(spark, tmp_path, capsys):
+    """``etl.main`` twice into one output dir: exit 0, one
+    UDM_PACKETS_PROCESSED line per capture, outputs equal to the
+    per-function sinks, and the rerun overwrites to the same content."""
+    out = str(tmp_path / "out")
+    captures = sorted(f for f in os.listdir(FIXDIR) if f.endswith(".json"))
+    udm = etl.convert_directory(spark, FIXDIR, PROC_TIME)
+    want_rows = udm.count()
+    metric_cols = etl.per_file_metrics(udm).columns
+    want_metrics = sorted(etl.per_file_metrics(udm).collect(), key=lambda r: r.file)
+    etl.write_udm_json_array_per_file(udm, str(tmp_path / "ref_json"))
+    want_arrays = _json_arrays(str(tmp_path / "ref_json"))
+    assert len(want_arrays) == len(captures)
+
+    runs = []
+    for _ in range(2):
+        assert etl.main([FIXDIR, out, "--processing-time", PROC_TIME]) == 0
+        logged = [
+            line.rsplit(" FILE: ", 1)[1]
+            for line in capsys.readouterr().out.splitlines()
+            if line.startswith("UDM_PACKETS_PROCESSED: ")
+        ]
+        assert sorted(logged) == captures
+
+        events = spark.read.parquet(os.path.join(out, "udm_parquet"))
+        assert events.count() == want_rows
+        metrics = spark.read.parquet(os.path.join(out, "file_metrics")).select(*metric_cols)
+        assert sorted(metrics.collect(), key=lambda r: r.file) == want_metrics
+        assert _json_arrays(os.path.join(out, "udm_json")) == want_arrays
+        rows = events.select(F.to_json(F.struct(*events.columns))).collect()
+        runs.append(sorted(r[0] for r in rows))
+    assert runs[0] == runs[1]
+
+
 def test_compact_small_files(spark, tmp_path):
     """Many tiny files in, few target-sized files out, content
     identical, and the rewrite plan is shuffle-free (coalesce)."""
