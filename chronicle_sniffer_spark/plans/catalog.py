@@ -6,6 +6,22 @@ equivalent DuckDB oracle SQL.  The driver's correctness gate runs both
 at sf0.01 and hash-matches (row count + schema + order-insensitive
 value hash, doubles canonicalized).
 
+An entry takes one of two forms:
+
+- **One SQL text** (:func:`sql_query`), when Spark and DuckDB both run
+  the same text.  Each base table is a ``{table}`` placeholder:
+  Spark binds it to the ``load_table`` DataFrame through
+  DataFrame-parameterised ``spark.sql`` (a private view name that is
+  dropped again, so no session view is touched), and the oracle is the
+  text with each placeholder rendered to the bare table name.
+  Catalyst compiles the text and the equivalent DataFrame calls to
+  one plan, so a builder that only re-spells its oracle is this form.
+- **A builder** (:func:`query`), a ``(spark, sf_dir) -> DataFrame``
+  callable.  It stays a builder when its plan shape, a hint or a
+  library call is the point of the entry: a broadcast hint, a
+  bucketed or manifest layout, a UDF, an eager fixture, or a plan
+  with fewer exchanges than the SQL text compiles to.
+
 Determinism rules used throughout (SURVEY.md §7.4-5):
 
 - **Money aggregates go through exact decimal arithmetic.**  A plain
@@ -35,11 +51,14 @@ Determinism rules used throughout (SURVEY.md §7.4-5):
 from __future__ import annotations
 
 import importlib
+import string
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from chronicle_sniffer_spark.tables import load_table
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -98,6 +117,28 @@ def query(name: str, section: str, oracle: str | None = None, doc: str = ""):
     return deco
 
 
+@dataclass(frozen=True)
+class SqlText:
+    """The Spark side of an entry written as one SQL text with
+    ``{table}`` placeholders (see the module docstring)."""
+
+    text: str
+
+    def tables(self) -> set[str]:
+        return {field for _, field, _, _ in string.Formatter().parse(self.text) if field}
+
+    def __call__(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        # load_table resolves through this module's global at call
+        # time, so a tracer that rebinds it sees every table load
+        return spark.sql(self.text, **{t: load_table(spark, sf_dir, t) for t in self.tables()})
+
+
+def sql_query(name: str, section: str, text: str) -> None:
+    """Register an entry whose Spark side and oracle are one SQL text."""
+    fn = SqlText(text)
+    query(name, section, oracle=text.format_map({t: t for t in fn.tables()}))(fn)
+
+
 def registry() -> dict[str, QuerySpec]:
     """Import all catalog submodules and return the full registry."""
     for mod in _SUBMODULES:
@@ -146,19 +187,11 @@ def o_davg(expr: str, alias: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def money2(name: str) -> Column:
-    """A 2dp-clean double source column as exact DECIMAL(18,2)."""
-    return F.col(name).cast("decimal(18,2)")
-
-
 def disc_price_dec() -> Column:
     """l_extendedprice * (1 - l_discount), exact DECIMAL(18,4)."""
-    return (money2("l_extendedprice") * (F.lit(1) - money2("l_discount"))).cast("decimal(18,4)")
-
-
-def charge_dec() -> Column:
-    """disc_price * (1 + l_tax), exact DECIMAL(18,6)."""
-    return (disc_price_dec() * (F.lit(1) + money2("l_tax"))).cast("decimal(18,6)")
+    price = F.col("l_extendedprice").cast("decimal(18,2)")
+    disc = F.col("l_discount").cast("decimal(18,2)")
+    return (price * (F.lit(1) - disc)).cast("decimal(18,4)")
 
 
 O_DISC_PRICE = (

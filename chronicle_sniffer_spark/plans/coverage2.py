@@ -11,11 +11,11 @@ from pyspark.sql import functions as F
 from chronicle_sniffer_spark.plans.catalog import (
     O_DISC_PRICE,
     disc_price_dec,
-    dsum,
     dsum_dec,
     o_dsum,
     o_dsum_dec,
     query,
+    sql_query,
 )
 from chronicle_sniffer_spark.tables import load_table
 
@@ -47,39 +47,26 @@ def w1b_ranking_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "a5b_cube",
     section="A5",
-    oracle=f"""
+    text=f"""
     SELECT l_returnflag, l_linestatus, {o_dsum("l_quantity", "sum_qty")}, count(*) AS n
-    FROM lineitem
+    FROM {{lineitem}}
     GROUP BY CUBE (l_returnflag, l_linestatus)
     """,
 )
-def a5b_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.cube("l_returnflag", "l_linestatus").agg(
-        dsum("l_quantity", "sum_qty"), F.count("*").alias("n")
-    )
 
 
-@query(
+sql_query(
     "a5c_grouping_sets",
     section="A5",
-    oracle=f"""
+    text=f"""
     SELECT l_returnflag, l_linestatus, {o_dsum("l_quantity", "sum_qty")}
-    FROM lineitem
+    FROM {{lineitem}}
     GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
     """,
 )
-def a5c_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("lineitem")
-    return li.sparkSession.sql(
-        "SELECT l_returnflag, l_linestatus,"
-        " CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty"
-        " FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())"
-    )
 
 
 @query(
@@ -108,34 +95,20 @@ def p6b_base64_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# TPC-H Q14 shape: fact⋈part with conditional revenue share —
+# the dim side broadcasts, the CASE aggregates map-side.
+sql_query(
     "j2c_q14_promo_revenue",
     section="J2/A6",
-    oracle=f"""
+    text=f"""
     SELECT round(
              100.00 * CAST(SUM(CASE WHEN p_type LIKE 'PROMO%' THEN {O_DISC_PRICE} END)
                           AS DOUBLE)
              / CAST(SUM({O_DISC_PRICE}) AS DOUBLE), 4) AS promo_revenue_pct
-    FROM lineitem JOIN part ON l_partkey = p_partkey
+    FROM {{lineitem}} JOIN {{part}} ON l_partkey = p_partkey
     WHERE l_shipdate >= DATE '1995-09-01' AND l_shipdate < DATE '1995-10-01'
     """,
 )
-def j2c_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: fact⋈part with conditional revenue share —
-    the dim side broadcasts, the CASE aggregates map-side."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1995-09-01") & (F.col("l_shipdate") < "1995-10-01")
-    )
-    p = load_table(spark, sf_dir, "part")
-    j = li.join(p, li.l_partkey == p.p_partkey)
-    promo = F.sum(
-        F.when(F.col("p_type").like("PROMO%"), disc_price_dec())
-    ).cast("double")
-    return j.agg(
-        F.round(F.lit(100.0) * promo / F.sum(disc_price_dec()).cast("double"), 4).alias(
-            "promo_revenue_pct"
-        )
-    )
 
 
 @query(

@@ -16,7 +16,7 @@ comparison; LIMIT always carries a full tie-breaking ORDER BY.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chronicle_sniffer_spark.plans.catalog import (
@@ -24,6 +24,7 @@ from chronicle_sniffer_spark.plans.catalog import (
     disc_price_dec,
     dsum_dec,
     query,
+    sql_query,
 )
 from chronicle_sniffer_spark.tables import load_table
 
@@ -38,178 +39,106 @@ def _o_davg(expr: str) -> str:
     return f"(CAST(SUM(CAST({expr} AS DECIMAL(18,4))) AS DOUBLE) / COUNT({expr}))"
 
 
-@query(
+# TPC-H Q4 shape: correlated EXISTS with an extra range predicate.
+# Catalyst decorrelates into a single left-semi join on l_orderkey
+# (shipdate > orderdate rides along as the join condition) — one
+# shuffle, no per-row subquery.
+sql_query(
     "j4b_q4_exists",
     section="J4",
-    oracle="""
+    text="""
     SELECT o_orderpriority, count(*) AS order_count
-    FROM orders o
+    FROM {orders} o
     WHERE o.o_orderdate >= DATE '1995-01-01' AND o.o_orderdate < DATE '1995-04-01'
-      AND EXISTS (SELECT 1 FROM lineitem l
+      AND EXISTS (SELECT 1 FROM {lineitem} l
                   WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate)
     GROUP BY o_orderpriority
     """,
 )
-def j4b_q4_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: correlated EXISTS with an extra range predicate.
-    Catalyst decorrelates into a single left-semi join on l_orderkey
-    (shipdate > orderdate rides along as the join condition) — one
-    shuffle, no per-row subquery."""
-    _views(spark, sf_dir, "orders", "lineitem")
-    return spark.sql(
-        """
-        SELECT o_orderpriority, count(*) AS order_count
-        FROM orders o
-        WHERE o.o_orderdate >= DATE '1995-01-01' AND o.o_orderdate < DATE '1995-04-01'
-          AND EXISTS (SELECT 1 FROM lineitem l
-                      WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate)
-        GROUP BY o_orderpriority
-        """
-    )
 
 
-@query(
+# TPC-H Q13 shape: outer join preserved under a two-level
+# aggregate (customers with zero orders must appear as c_count=0).
+sql_query(
     "j3b_q13_custdist",
     section="J3",
-    oracle="""
+    text="""
     SELECT c_count, count(*) AS custdist
     FROM (SELECT c.c_custkey, count(o.o_orderkey) AS c_count
-          FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
+          FROM {customer} c LEFT JOIN {orders} o ON c.c_custkey = o.o_custkey
           GROUP BY c.c_custkey)
     GROUP BY c_count
     """,
 )
-def j3b_q13_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: outer join preserved under a two-level
-    aggregate (customers with zero orders must appear as c_count=0)."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy(c.c_custkey)
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count("*").alias("custdist"))
 
 
-@query(
+# TPC-H Q18 shape: IN over an aggregated-HAVING subquery becomes a
+# semi join against the grouped lineitem — the group-by and the semi
+# probe share the l_orderkey shuffle.
+sql_query(
     "a9b_q18_large_orders",
     section="A9/J2",
-    oracle="""
+    text="""
     SELECT c_name, c.c_custkey, o.o_orderkey, o_orderdate, o_totalprice,
            CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
-    FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-                    JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    WHERE o.o_orderkey IN (SELECT l_orderkey FROM lineitem
+    FROM {customer} c JOIN {orders} o ON c.c_custkey = o.o_custkey
+                    JOIN {lineitem} l ON o.o_orderkey = l.l_orderkey
+    WHERE o.o_orderkey IN (SELECT l_orderkey FROM {lineitem}
                            GROUP BY l_orderkey HAVING sum(l_quantity) > 150)
     GROUP BY c_name, c.c_custkey, o.o_orderkey, o_orderdate, o_totalprice
     """,
 )
-def a9b_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: IN over an aggregated-HAVING subquery becomes a
-    semi join against the grouped lineitem — the group-by and the semi
-    probe share the l_orderkey shuffle."""
-    _views(spark, sf_dir, "customer", "orders", "lineitem")
-    return spark.sql(
-        """
-        SELECT c_name, c.c_custkey, o.o_orderkey, o_orderdate, o_totalprice,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
-        FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-                        JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-        WHERE o.o_orderkey IN (SELECT l_orderkey FROM lineitem
-                               GROUP BY l_orderkey HAVING sum(l_quantity) > 150)
-        GROUP BY c_name, c.c_custkey, o.o_orderkey, o_orderdate, o_totalprice
-        """
-    )
 
 
-@query(
+# Uncorrelated scalar subquery in both WHERE and SELECT — planned
+# as a one-row broadcast, evaluated once.  The average goes through
+# exact decimal sums so the 1.8x threshold is engine-identical.
+sql_query(
     "sq1_scalar_subquery",
     section="J4/A1",
-    oracle=f"""
+    text=f"""
     SELECT o_orderkey, o_totalprice,
-           o_totalprice / (SELECT {_o_davg("o_totalprice")} FROM orders) AS price_ratio
-    FROM orders
-    WHERE o_totalprice > 1.8 * (SELECT {_o_davg("o_totalprice")} FROM orders)
+           o_totalprice / (SELECT {_o_davg("o_totalprice")} FROM {{orders}}) AS price_ratio
+    FROM {{orders}}
+    WHERE o_totalprice > 1.8 * (SELECT {_o_davg("o_totalprice")} FROM {{orders}})
     """,
 )
-def sq1_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uncorrelated scalar subquery in both WHERE and SELECT — planned
-    as a one-row broadcast, evaluated once.  The average goes through
-    exact decimal sums so the 1.8x threshold is engine-identical."""
-    _views(spark, sf_dir, "orders")
-    avg = _o_davg("o_totalprice")
-    return spark.sql(
-        f"""
-        SELECT o_orderkey, o_totalprice,
-               o_totalprice / (SELECT {avg} FROM orders) AS price_ratio
-        FROM orders
-        WHERE o_totalprice > 1.8 * (SELECT {avg} FROM orders)
-        """
-    )
 
 
-@query(
+# TPC-H Q17 shape: correlated scalar aggregate subquery.
+# Catalyst decorrelates into an aggregate-then-join on l_partkey; the
+# per-part average is computed once per key, not once per probe row.
+sql_query(
     "sq2_q17_correlated",
     section="J4/A1",
-    oracle=f"""
+    text=f"""
     SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS small_qty_revenue,
            count(*) AS n_small
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+    FROM {{lineitem}} l JOIN {{part}} p ON p.p_partkey = l.l_partkey
     WHERE p.p_brand = 'Brand#1'
       AND l.l_quantity < (SELECT CAST(0.2 AS DOUBLE) * {_o_davg("l2.l_quantity")}
-                          FROM lineitem l2 WHERE l2.l_partkey = p.p_partkey)
+                          FROM {{lineitem}} l2 WHERE l2.l_partkey = p.p_partkey)
     """,
 )
-def sq2_q17_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: correlated scalar aggregate subquery.
-    Catalyst decorrelates into an aggregate-then-join on l_partkey; the
-    per-part average is computed once per key, not once per probe row."""
-    _views(spark, sf_dir, "lineitem", "part")
-    return spark.sql(
-        f"""
-        SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
-                 AS small_qty_revenue,
-               count(*) AS n_small
-        FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-        WHERE p.p_brand = 'Brand#1'
-          AND l.l_quantity < (SELECT CAST(0.2 AS DOUBLE) * {_o_davg("l2.l_quantity")}
-                              FROM lineitem l2 WHERE l2.l_partkey = p.p_partkey)
-        """
-    )
 
 
-@query(
+# TPC-H Q22 shape (adapted: no c_phone column in the testdata, and
+# every customer has orders — the anti condition is 'no URGENT
+# order').  NOT EXISTS decorrelates to a left-anti join; the scalar
+# average broadcasts.
+sql_query(
     "j5b_q22_anti_subquery",
     section="J5",
-    oracle=f"""
+    text=f"""
     SELECT c_nationkey, count(*) AS numcust,
            CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS totacctbal
-    FROM customer c
-    WHERE c_acctbal > (SELECT {_o_davg("c_acctbal")} FROM customer WHERE c_acctbal > 0)
-      AND NOT EXISTS (SELECT 1 FROM orders o
+    FROM {{customer}} c
+    WHERE c_acctbal > (SELECT {_o_davg("c_acctbal")} FROM {{customer}} WHERE c_acctbal > 0)
+      AND NOT EXISTS (SELECT 1 FROM {{orders}} o
                       WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
     GROUP BY c_nationkey
     """,
 )
-def j5b_q22_anti_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape (adapted: no c_phone column in the testdata, and
-    every customer has orders — the anti condition is 'no URGENT
-    order').  NOT EXISTS decorrelates to a left-anti join; the scalar
-    average broadcasts."""
-    _views(spark, sf_dir, "customer", "orders")
-    return spark.sql(
-        f"""
-        SELECT c_nationkey, count(*) AS numcust,
-               CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS totacctbal
-        FROM customer c
-        WHERE c_acctbal > (SELECT {_o_davg("c_acctbal")} FROM customer WHERE c_acctbal > 0)
-          AND NOT EXISTS (SELECT 1 FROM orders o
-                          WHERE o.o_custkey = c.c_custkey
-                            AND o.o_orderpriority = '1-URGENT')
-        GROUP BY c_nationkey
-        """
-    )
 
 
 @query(
@@ -321,28 +250,19 @@ def p13_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# percent_rank / cume_dist: rank-arithmetic doubles, IEEE-identical
+# across engines (no float accumulation).
+sql_query(
     "w1c_distribution_ranks",
     section="W1",
-    oracle="""
+    text="""
     SELECT s_suppkey, s_nationkey,
            percent_rank() OVER w AS pct_rank,
            cume_dist()    OVER w AS cdist
-    FROM supplier
+    FROM {supplier}
     WINDOW w AS (PARTITION BY s_nationkey ORDER BY s_acctbal, s_suppkey)
     """,
 )
-def w1c_distribution_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """percent_rank / cume_dist: rank-arithmetic doubles, IEEE-identical
-    across engines (no float accumulation)."""
-    s = load_table(spark, sf_dir, "supplier")
-    w = Window.partitionBy("s_nationkey").orderBy("s_acctbal", "s_suppkey")
-    return s.select(
-        "s_suppkey",
-        "s_nationkey",
-        F.percent_rank().over(w).alias("pct_rank"),
-        F.cume_dist().over(w).alias("cdist"),
-    )
 
 
 @query(
@@ -396,29 +316,20 @@ def a7b_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Edit distance + positional split + reverse/repeat — the string
+# surface fuzzy matching and feature extraction lean on.
+sql_query(
     "p6c_string_edit",
     section="P6",
-    oracle="""
+    text="""
     SELECT c_custkey,
            levenshtein(c_mktsegment, 'BUILDING') AS edit_dist,
            split_part(c_name, '#', 2) AS name_tail,
            reverse(c_mktsegment) AS rev,
            repeat(left(c_mktsegment, 2), 2) AS rep
-    FROM customer WHERE c_custkey <= 200
+    FROM {customer} WHERE c_custkey <= 200
     """,
 )
-def p6c_string_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edit distance + positional split + reverse/repeat — the string
-    surface fuzzy matching and feature extraction lean on."""
-    c = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 200)
-    return c.select(
-        "c_custkey",
-        F.levenshtein("c_mktsegment", F.lit("BUILDING")).alias("edit_dist"),
-        F.split_part(F.col("c_name"), F.lit("#"), F.lit(2)).alias("name_tail"),
-        F.reverse("c_mktsegment").alias("rev"),
-        F.repeat(F.substring("c_mktsegment", 1, 2), 2).alias("rep"),
-    )
 
 
 @query(

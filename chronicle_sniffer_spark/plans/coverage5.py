@@ -57,7 +57,7 @@ from chronicle_sniffer_spark.operators.quality import (
     VAL_PCT,
 )
 from chronicle_sniffer_spark.operators.similarity import ANN_K, ANN_QUERY_VEC, COSINE_TOPK_ORACLE
-from chronicle_sniffer_spark.plans.catalog import query, registry
+from chronicle_sniffer_spark.plans.catalog import query, registry, sql_query
 from chronicle_sniffer_spark.streaming.sessions import SESSION_GAP_MIN
 from chronicle_sniffer_spark.tables import load_table, session_memo, session_tmpdir
 
@@ -1958,9 +1958,16 @@ ts7_mad_outliers.__doc__ = ts7_mad_outliers.__doc__.format(k=MAD_K)
 # TS6: per-user behavioral entropy (diversity metric)
 # ---------------------------------------------------------------------------
 
-_ENTROPY_ORACLE = """
+# Shannon entropy of each user's event-type distribution (nats) — the
+# behavioral-diversity metric segmentation and anomaly triage rank on.
+# Two key-sized aggregations; per-term −p·ln p is quantized then summed
+# as exact decimal (the surprisal discipline).
+sql_query(
+    "ts6_user_entropy",
+    section="TS",
+    text="""
     WITH c AS (
-      SELECT user_id, event_type, count(*) AS c FROM events
+      SELECT user_id, event_type, count(*) AS c FROM {events}
       GROUP BY user_id, event_type
     ),
     tot AS (SELECT user_id, sum(c) AS n FROM c GROUP BY user_id),
@@ -1974,27 +1981,8 @@ _ENTROPY_ORACLE = """
            CAST(count(*) AS INTEGER) AS n_types,
            CAST(sum(CAST(h AS DECIMAL(20,9))) AS DOUBLE) AS entropy
     FROM terms GROUP BY user_id
-"""
-
-
-@query("ts6_user_entropy", section="TS", oracle=_ENTROPY_ORACLE)
-def ts6_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shannon entropy of each user's event-type distribution (nats) —
-    the behavioral-diversity metric segmentation and anomaly triage
-    rank on (a user suddenly emitting one event type collapses to
-    H≈0).  Two key-sized aggregations; per-term −p·ln p is quantized
-    then summed as exact decimal (the surprisal discipline)."""
-    e = load_table(spark, sf_dir, "events")
-    c = e.groupBy("user_id", "event_type").agg(F.count("*").alias("c"))
-    tot = c.groupBy("user_id").agg(F.sum("c").alias("n"))
-    p = F.col("c").cast("double") / F.col("n").cast("double")
-    terms = c.join(tot, "user_id").select(
-        "user_id", F.round(-p * F.round(F.log(p), 9), 9).alias("h")
-    )
-    return terms.groupBy("user_id").agg(
-        F.count("*").cast("int").alias("n_types"),
-        F.sum(F.col("h").cast("decimal(20,9)")).cast("double").alias("entropy"),
-    )
+""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -2393,13 +2381,22 @@ ZS_FRAME = 20  # trailing events per type
 ZS_MIN_N = 10
 ZS_THRESHOLD = 2.0
 
-_ZSCORE_ORACLE = f"""
+# Rolling z-score outlier detection: each event scored against the
+# mean/σ of the previous ZS_FRAME events of its type (self-excluded
+# trailing frame), flagged when |z| ≥ ZS_THRESHOLD.  Frame sums go
+# through exact DECIMAL, so the window's association order can't
+# matter; mean/variance use one fixed double expression shape on both
+# engines, and cancellation is clamped with greatest(·, 0).
+sql_query(
+    "ts4_zscore_anomaly",
+    section="TS",
+    text=f"""
     WITH base AS (
       SELECT event_id, event_type, value,
              sum(CAST(value AS DECIMAL(18,4))) OVER w AS s1,
              sum(CAST(value AS DECIMAL(14,4)) * CAST(value AS DECIMAL(14,4))) OVER w AS s2,
              count(value) OVER w AS n
-      FROM events
+      FROM {{events}}
       WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id
                    ROWS BETWEEN {ZS_FRAME} PRECEDING AND 1 PRECEDING)
     ),
@@ -2416,59 +2413,8 @@ _ZSCORE_ORACLE = f"""
            round((value - m) / sd, 6) AS z
     FROM scored
     WHERE sd > 0 AND abs((value - m) / sd) >= {ZS_THRESHOLD}
-"""
-
-
-@query("ts4_zscore_anomaly", section="TS", oracle=_ZSCORE_ORACLE)
-def ts4_zscore_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling z-score outlier detection: each event scored against
-    the mean/σ of the previous {f} events of its type (self-excluded
-    trailing frame), flagged when |z| ≥ {t} — the batch form of the
-    streaming anomaly monitors the reference's dashboard implies
-    (R28's latency-spike panels).
-
-    Determinism: frame sums go through exact DECIMAL (values are 2-dp;
-    squares are exact in DECIMAL(28,8)), so the window's association
-    order can't matter; mean/variance then use one fixed double
-    expression shape on both engines, `sqrt` is IEEE-correctly-rounded,
-    and cancellation is clamped with greatest(·, 0)."""
-    e = load_table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-ZS_FRAME, -1)
-    )
-    base = e.select(
-        "event_id",
-        "event_type",
-        "value",
-        F.sum(F.col("value").cast("decimal(18,4)")).over(w).alias("s1"),
-        F.sum(
-            F.col("value").cast("decimal(14,4)") * F.col("value").cast("decimal(14,4)")
-        )
-        .over(w)
-        .alias("s2"),
-        F.count("value").over(w).alias("n"),
-    ).filter(F.col("n") >= ZS_MIN_N)
-    m = F.col("s1").cast("double") / F.col("n").cast("double")
-    sd = F.sqrt(
-        F.greatest(
-            F.col("s2").cast("double") / F.col("n").cast("double") - m * m, F.lit(0.0)
-        )
-    )
-    scored = base.select("event_id", "event_type", "value", m.alias("m"), sd.alias("sd"))
-    return scored.filter(
-        (F.col("sd") > 0)
-        & (F.abs((F.col("value") - F.col("m")) / F.col("sd")) >= ZS_THRESHOLD)
-    ).select(
-        "event_id",
-        "event_type",
-        "value",
-        F.round((F.col("value") - F.col("m")) / F.col("sd"), 6).alias("z"),
-    )
-
-
-ts4_zscore_anomaly.__doc__ = ts4_zscore_anomaly.__doc__.format(f=ZS_FRAME, t=ZS_THRESHOLD)
+""",
+)
 
 
 # ---------------------------------------------------------------------------

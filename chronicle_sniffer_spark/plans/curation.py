@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from chronicle_sniffer_spark.plans.catalog import query
+from chronicle_sniffer_spark.plans.catalog import query, sql_query
 from chronicle_sniffer_spark.tables import load_table
 
 
@@ -120,24 +120,20 @@ def _rate_case_sql() -> str:
     return f"CASE lang {whens} ELSE 0 END"
 
 
-@query(
+# Per-language stratified sample with a Lehmer multiplicative
+# hash on doc_id as the acceptance test — deterministic (re-runs and
+# both engines select identical rows), seedless, and pure per-row
+# arithmetic: no shuffle, no RNG state, products bounded well inside
+# BIGINT for any realistic id space.
+sql_query(
     "l6_stratified_sample",
     section="L6",
-    oracle=f"""
+    text=f"""
     SELECT doc_id, lang
-    FROM documents
+    FROM {{documents}}
     WHERE (doc_id * {_LEHMER_A}) % {_LEHMER_M} % 1000 < ({_rate_case_sql()})
     """,
 )
-def l6_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language stratified sample with a Lehmer multiplicative
-    hash on doc_id as the acceptance test — deterministic (re-runs and
-    both engines select identical rows), seedless, and pure per-row
-    arithmetic: no shuffle, no RNG state, products bounded well inside
-    BIGINT for any realistic id space."""
-    d = load_table(spark, sf_dir, "documents")
-    u = (F.col("doc_id") * _LEHMER_A) % _LEHMER_M % 1000
-    return d.filter(u < F.expr(_rate_case_sql())).select("doc_id", "lang")
 
 
 # ---------------------------------------------------------------------------

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from chronicle_sniffer_spark.operators.dedup import MINHASH_K, SHINGLE_LEN, minhash_signatures
 from chronicle_sniffer_spark.operators.similarity import COSINE_TOPK_ORACLE
-from chronicle_sniffer_spark.plans.catalog import query
+from chronicle_sniffer_spark.plans.catalog import query, sql_query
 from chronicle_sniffer_spark.tables import load_table
 
 
@@ -25,25 +25,18 @@ from chronicle_sniffer_spark.tables import load_table
 # ---------------------------------------------------------------------------
 
 
-@query(
+# Exact dedup by content hash: group on the md5 of the text, keep the
+# lowest doc_id as representative.  Hash-groupBy (not distinct-on-
+# text) so the shuffle key is 16 bytes, not the document body —
+# the difference between shuffling 100 TB and shuffling 1.6 TB.
+sql_query(
     "l1_exact_dedup",
     section="L1",
-    oracle="""
+    text="""
     SELECT min(doc_id) AS keep_id, count(*) AS n_copies
-    FROM documents GROUP BY md5(text)
+    FROM {documents} GROUP BY md5(text)
     """,
 )
-def l1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup by content hash: group on sha-of-text, keep the
-    lowest doc_id as representative.  Hash-groupBy (not distinct-on-
-    text) so the shuffle key is 16 bytes, not the document body —
-    the difference between shuffling 100 TB and shuffling 1.6 TB."""
-    d = load_table(spark, sf_dir, "documents")
-    return (
-        d.groupBy(F.md5(F.col("text").cast("binary")).alias("content_hash"))
-        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_copies"))
-        .select("keep_id", "n_copies")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -250,16 +243,13 @@ def l4_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
+# Binary pass-through integrity: content survives the pipeline
+# byte-exact (multimodal decode plumbing lives in operators/multimodal).
+sql_query(
     "l5_content_hash",
     section="L5",
-    oracle="SELECT doc_id, md5(text) AS content_hash FROM documents",
+    text="SELECT doc_id, md5(text) AS content_hash FROM {documents}",
 )
-def l5_content_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary pass-through integrity: content survives the pipeline
-    byte-exact (multimodal decode plumbing lives in operators/multimodal)."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.select("doc_id", F.md5(F.col("text").cast("binary")).alias("content_hash"))
 
 
 CHUNK_SIZE = 32  # words per chunk

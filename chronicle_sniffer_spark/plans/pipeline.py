@@ -12,18 +12,16 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chronicle_sniffer_spark.plans.catalog import query
+from chronicle_sniffer_spark.plans.catalog import query, sql_query
 from chronicle_sniffer_spark.tables import load_table, session_memo, session_tmpdir
 
 
-@query(
+# Parquet scan smoke: count(*) is metadata-only (no column read).
+sql_query(
     "s1_parquet_count",
     section="S1",
-    oracle="SELECT count(*) AS n FROM lineitem",
+    text="SELECT count(*) AS n FROM {lineitem}",
 )
-def s1_parquet_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parquet scan smoke: count(*) is metadata-only (no column read)."""
-    return load_table(spark, sf_dir, "lineitem").agg(F.count("*").alias("n"))
 
 
 FIXTURE_DIR = os.path.join(

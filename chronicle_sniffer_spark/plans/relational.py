@@ -1,10 +1,12 @@
 """Relational query surface: projection/filter (P), joins (J),
 aggregation (A), windows (W), sort/set ops (O) — SURVEY.md §2B.
 
-Implementations are DataFrame-API-first so Catalyst sees a fully
-declarative plan (predicate pushdown, column pruning and join-strategy
-selection all apply).  Oracle SQL strings target DuckDB 1.0 over the
-same parquet tables.
+An entry whose oracle text Spark runs as-is is that one SQL text
+(``sql_query``); Catalyst compiles it to the plan the equivalent
+DataFrame calls would build (predicate pushdown, column pruning and
+join-strategy selection all apply).  The rest are DataFrame builders
+whose shape is the point.  Oracle SQL strings target DuckDB 1.0 over
+the same parquet tables.
 
 Scale notes (100 TB posture):
 - Joins against dimension tables (`nation`, `region`) are explicitly
@@ -24,11 +26,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from chronicle_sniffer_spark.plans.catalog import (
-    DEC,
     O_CHARGE,
     O_DISC_PRICE,
-    charge_dec,
-    davg,
     disc_price_dec,
     dsum,
     dsum_dec,
@@ -36,6 +35,7 @@ from chronicle_sniffer_spark.plans.catalog import (
     o_dsum,
     o_dsum_dec,
     query,
+    sql_query,
 )
 from chronicle_sniffer_spark.tables import load_table
 
@@ -45,71 +45,42 @@ from chronicle_sniffer_spark.tables import load_table
 # ---------------------------------------------------------------------------
 
 
-@query(
+# Column projection + rename (SURVEY §2B P1; generalizes ref layer
+# projection json2udm_cloud.py:113-124).
+sql_query(
     "p1_projection",
     section="P1",
-    oracle="SELECT l_orderkey AS ok, l_linenumber AS ln, l_quantity AS qty FROM lineitem",
+    text="SELECT l_orderkey AS ok, l_linenumber AS ln, l_quantity AS qty FROM {lineitem}",
 )
-def p1_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column projection + rename (SURVEY §2B P1; generalizes ref layer
-    projection json2udm_cloud.py:113-124)."""
-    return load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"),
-        F.col("l_linenumber").alias("ln"),
-        F.col("l_quantity").alias("qty"),
-    )
 
 
-@query(
+# TPC-H Q6-shaped predicate filter; filters push to the parquet scan.
+sql_query(
     "p3_filter_q6",
     section="P3",
-    oracle=f"""
+    text=f"""
     SELECT count(*) AS n,
            {o_dsum_dec("CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2)) AS DECIMAL(18,4))", "revenue")}
-    FROM lineitem
+    FROM {{lineitem}}
     WHERE l_shipdate BETWEEN DATE '1996-01-01' AND DATE '1996-12-31'
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
     """,
 )
-def p3_filter_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6-shaped predicate filter; filters push to the parquet scan."""
-    from chronicle_sniffer_spark.plans.catalog import money2
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.filter(
-        F.col("l_shipdate").between("1996-01-01", "1996-12-31 00:00:00")
-        & F.col("l_discount").between(0.05, 0.07)
-        & (F.col("l_quantity") < 24)
-    ).agg(
-        F.count("*").alias("n"),
-        dsum_dec(
-            (money2("l_extendedprice") * money2("l_discount")).cast("decimal(18,4)"), "revenue"
-        ),
-    )
 
 
-@query(
+# Conditional expression (CASE chain, ref R15-R17).
+sql_query(
     "p4_case_buckets",
     section="P4",
-    oracle="""
+    text="""
     SELECT o_orderkey,
            CASE WHEN o_totalprice > 100000 THEN 'big'
                 WHEN o_totalprice > 10000 THEN 'mid'
                 ELSE 'small' END AS bucket
-    FROM orders
+    FROM {orders}
     """,
 )
-def p4_case_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional expression (when/otherwise chain, ref R15-R17)."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        F.when(F.col("o_totalprice") > 100000, "big")
-        .when(F.col("o_totalprice") > 10000, "mid")
-        .otherwise("small")
-        .alias("bucket"),
-    )
 
 
 @query(
@@ -195,10 +166,13 @@ def p7_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Math function battery (generalizes ref R27 histogram math).
+# Transcendentals are rounded in-query to 6 dp so last-ulp libm
+# differences between JVM and C++ can never flip the oracle hash.
+sql_query(
     "p8_math",
     section="P8",
-    oracle=f"""
+    text=f"""
     SELECT l_orderkey, l_linenumber,
            CAST(round({O_DISC_PRICE}, 2) AS DOUBLE) AS disc_price,
            CAST(floor(l_quantity) AS BIGINT) AS qty_floor,
@@ -208,28 +182,9 @@ def p7_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(ln(l_extendedprice), 6) AS price_ln,
            l_quantity * l_quantity AS qty_sq,
            CAST(l_linenumber % 3 AS INTEGER) AS ln_mod
-    FROM lineitem
+    FROM {{lineitem}}
     """,
 )
-def p8_math(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Math function battery (generalizes ref R27 histogram math).
-
-    Transcendentals are rounded in-query to 6 dp so last-ulp libm
-    differences between JVM and C++ can never flip the oracle hash.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.round(disc_price_dec(), 2).cast("double").alias("disc_price"),
-        F.floor("l_quantity").alias("qty_floor"),
-        F.ceil(F.col("l_discount") * 10).alias("disc_ceil"),
-        F.round(F.abs(F.col("l_tax") - 0.05), 6).alias("tax_dev"),
-        F.round(F.sqrt("l_extendedprice"), 6).alias("price_sqrt"),
-        F.round(F.log("l_extendedprice"), 6).alias("price_ln"),
-        (F.col("l_quantity") * F.col("l_quantity")).alias("qty_sq"),
-        (F.col("l_linenumber") % 3).cast("int").alias("ln_mod"),
-    )
 
 
 @query(
@@ -317,26 +272,17 @@ def p11_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Null handling (ref R13 fallbacks, R21 null pruning).
+sql_query(
     "p12_nulls",
     section="P12",
-    oracle="""
+    text="""
     SELECT o_orderkey,
            coalesce(nullif(o_orderpriority, '1-URGENT'), 'OTHER') AS prio,
            (nullif(o_orderstatus, 'F') IS NULL) AS is_f
-    FROM orders
+    FROM {orders}
     """,
 )
-def p12_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Null handling (ref R13 fallbacks, R21 null pruning)."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        F.coalesce(F.nullif(F.col("o_orderpriority"), F.lit("1-URGENT")), F.lit("OTHER")).alias(
-            "prio"
-        ),
-        F.nullif(F.col("o_orderstatus"), F.lit("F")).isNull().alias("is_f"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -393,46 +339,27 @@ def j2_q3_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "j3_left_outer",
     section="J3",
-    oracle="""
+    text="""
     SELECT c.c_custkey
-    FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
+    FROM {customer} c LEFT JOIN {orders} o ON c.c_custkey = o.o_custkey
     WHERE o.o_orderkey IS NULL
     """,
 )
-def j3_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left outer join + null filter: customers with no orders."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .filter(F.col("o_orderkey").isNull())
-        .select("c_custkey")
-    )
 
 
-@query(
+sql_query(
     "j3_full_outer",
     section="J3",
-    oracle="""
+    text="""
     SELECT count(*) AS n_rows,
            CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_no_orders,
            CAST(sum(CASE WHEN c_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_no_customer
-    FROM customer FULL JOIN orders ON c_custkey = o_custkey
+    FROM {customer} FULL JOIN {orders} ON c_custkey = o_custkey
     """,
 )
-def j3_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full outer join, summarized (row count + dangling-side counts)."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    j = c.join(o, c.c_custkey == o.o_custkey, "full")
-    return j.agg(
-        F.count("*").alias("n_rows"),
-        F.sum(F.when(F.col("o_orderkey").isNull(), 1).otherwise(0)).alias("n_no_orders"),
-        F.sum(F.when(F.col("c_custkey").isNull(), 1).otherwise(0)).alias("n_no_customer"),
-    )
 
 
 @query(
@@ -466,35 +393,25 @@ def j5_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").agg(F.count("*").alias("n"))
 
 
-@query(
+# Equi + theta residual join (equi key keeps it shuffle-hash-able;
+# the range predicate is a post-join filter, not a nested loop).
+sql_query(
     "j6_theta",
     section="J6",
-    oracle="""
+    text="""
     SELECT count(*) AS n
-    FROM orders o JOIN lineitem l
+    FROM {orders} o JOIN {lineitem} l
       ON o.o_orderkey = l.l_orderkey AND l.l_shipdate > o.o_orderdate
     """,
 )
-def j6_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi + theta residual join (equi key keeps it shuffle-hash-able;
-    the range predicate is a post-join filter, not a nested loop)."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    return o.join(
-        li, (o.o_orderkey == li.l_orderkey) & (li.l_shipdate > o.o_orderdate)
-    ).agg(F.count("*").alias("n"))
 
 
-@query(
+# Bounded cross join (dims only — never fact×fact).
+sql_query(
     "j7_cross",
     section="J7",
-    oracle="SELECT count(*) AS n FROM region CROSS JOIN nation",
+    text="SELECT count(*) AS n FROM {region} CROSS JOIN {nation}",
 )
-def j7_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded cross join (dims only — never fact×fact)."""
-    r = load_table(spark, sf_dir, "region")
-    n = load_table(spark, sf_dir, "nation")
-    return r.crossJoin(n).agg(F.count("*").alias("n"))
 
 
 @query(
@@ -559,26 +476,16 @@ def j8_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "j9_interval",
     section="J9",
-    oracle="""
+    text="""
     SELECT count(*) AS n
-    FROM orders o JOIN lineitem l
+    FROM {orders} o JOIN {lineitem} l
       ON o.o_orderkey = l.l_orderkey
      AND l.l_shipdate BETWEEN o.o_orderdate AND o.o_orderdate + INTERVAL 7 DAY
     """,
 )
-def j9_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval-overlap join (range predicate riding an equi key)."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    cond = (
-        (o.o_orderkey == li.l_orderkey)
-        & (li.l_shipdate >= o.o_orderdate)
-        & (li.l_shipdate <= o.o_orderdate + F.expr("INTERVAL 7 DAY"))
-    )
-    return o.join(li, cond).agg(F.count("*").alias("n"))
 
 
 # ---------------------------------------------------------------------------
@@ -586,10 +493,12 @@ def j9_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
+# TPC-H Q1 shape — the flagship multi-measure hash aggregate
+# (generalizes ref per-file counters, json2udm_cloud.py:325-348).
+sql_query(
     "a1_q1_pricing_summary",
     section="A1",
-    oracle=f"""
+    text=f"""
     SELECT l_returnflag, l_linestatus,
            {o_dsum("l_quantity", "sum_qty")},
            {o_dsum("l_extendedprice", "sum_base_price")},
@@ -599,29 +508,11 @@ def j9_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
            {o_davg("l_extendedprice", "avg_price")},
            {o_davg("l_discount", "avg_disc")},
            count(*) AS count_order
-    FROM lineitem
+    FROM {{lineitem}}
     WHERE l_shipdate <= DATE '1998-09-02'
     GROUP BY l_returnflag, l_linestatus
     """,
 )
-def a1_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape — the flagship multi-measure hash aggregate
-    (generalizes ref per-file counters, json2udm_cloud.py:325-348)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= "1998-09-02 00:00:00")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            dsum("l_quantity", "sum_qty"),
-            dsum("l_extendedprice", "sum_base_price"),
-            dsum_dec(disc_price_dec(), "sum_disc_price"),
-            dsum_dec(charge_dec(), "sum_charge"),
-            davg("l_quantity", "avg_qty"),
-            davg("l_extendedprice", "avg_price"),
-            davg("l_discount", "avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-    )
 
 
 @query(
@@ -682,20 +573,15 @@ def a4_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+sql_query(
     "a5_rollup",
     section="A5",
-    oracle=f"""
+    text=f"""
     SELECT l_returnflag, l_linestatus, {o_dsum("l_quantity", "sum_qty")}, count(*) AS n
-    FROM lineitem
+    FROM {{lineitem}}
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
 )
-def a5_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        dsum("l_quantity", "sum_qty"), F.count("*").alias("n")
-    )
 
 
 @query(
@@ -736,36 +622,27 @@ def a7_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Exponential histogram bucketing — mirrors the ref's log-based
+# latency distribution (growth 1.5, terraform/main.tf:540-547).
+sql_query(
     "a8_exp_histogram",
     section="A8",
-    oracle="""
+    text="""
     SELECT CAST(floor(ln(l_extendedprice) / ln(1.5)) AS BIGINT) AS bucket,
            count(*) AS n
-    FROM lineitem GROUP BY 1
+    FROM {lineitem} GROUP BY 1
     """,
 )
-def a8_exp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exponential histogram bucketing — mirrors the ref's log-based
-    latency distribution (growth 1.5, terraform/main.tf:540-547)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    bucket = F.floor(F.log("l_extendedprice") / F.log(F.lit(1.5))).alias("bucket")
-    return li.groupBy(bucket).agg(F.count("*").alias("n"))
 
 
-@query(
+sql_query(
     "a9_having",
     section="A9",
-    oracle="""
+    text="""
     SELECT o_custkey, count(*) AS n_orders
-    FROM orders GROUP BY o_custkey HAVING count(*) > 12
+    FROM {orders} GROUP BY o_custkey HAVING count(*) > 12
     """,
 )
-def a9_having(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    return o.groupBy("o_custkey").agg(F.count("*").alias("n_orders")).filter(
-        F.col("n_orders") > 12
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -820,51 +697,31 @@ def w2_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+# Moving-frame sum (decimal-exact so frame association can't drift).
+sql_query(
     "w3_moving_frame",
     section="W3",
-    oracle="""
+    text="""
     SELECT user_id, event_id,
            CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER (
              PARTITION BY user_id ORDER BY ts, event_id
              ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS DOUBLE) AS moving_val
-    FROM events
+    FROM {events}
     """,
 )
-def w3_moving_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Moving-frame sum (decimal-exact so frame association can't drift)."""
-    e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-2, 0)
-    return e.select(
-        "user_id",
-        "event_id",
-        F.sum(F.col("value").cast(DEC)).over(w).cast("double").alias("moving_val"),
-    )
 
 
-@query(
+sql_query(
     "w4_running_total",
     section="W4",
-    oracle="""
+    text="""
     SELECT o_custkey, o_orderkey,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) OVER (
              PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_spend
-    FROM orders
+    FROM {orders}
     """,
 )
-def w4_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.sum(F.col("o_totalprice").cast(DEC)).over(w).cast("double").alias("running_spend"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -872,33 +729,23 @@ def w4_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
+# Global top-k: Spark plans TakeOrderedAndProject (per-partition
+# heap + driver merge), never a full sort at scale.
+sql_query(
     "o1_sort_limit",
     section="O1",
-    oracle="""
+    text="""
     SELECT o_orderkey, o_totalprice
-    FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10
+    FROM {orders} ORDER BY o_totalprice DESC, o_orderkey LIMIT 10
     """,
 )
-def o1_sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global top-k: Spark plans TakeOrderedAndProject (per-partition
-    heap + driver merge), never a full sort at scale."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-        .select("o_orderkey", "o_totalprice")
-        .limit(10)
-    )
 
 
-@query(
+sql_query(
     "o2_limit_offset",
     section="O2",
-    oracle="SELECT o_orderkey FROM orders ORDER BY o_orderkey LIMIT 5 OFFSET 10",
+    text="SELECT o_orderkey FROM {orders} ORDER BY o_orderkey LIMIT 5 OFFSET 10",
 )
-def o2_limit_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    return o.orderBy("o_orderkey").select("o_orderkey").offset(10).limit(5)
 
 
 @query(
@@ -946,10 +793,8 @@ def o5_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.intersect(s)
 
 
-@query(
+sql_query(
     "o6_distinct",
     section="O6",
-    oracle="SELECT DISTINCT o_orderpriority FROM orders",
+    text="SELECT DISTINCT o_orderpriority FROM {orders}",
 )
-def o6_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "orders").select("o_orderpriority").distinct()

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chronicle_sniffer_spark.plans.catalog import query
+from chronicle_sniffer_spark.plans.catalog import query, sql_query
 from chronicle_sniffer_spark.tables import load_table
 
 
@@ -317,46 +317,18 @@ def _fd_oracle() -> str:
              AS n_violating,
            CAST(max(nd) AS BIGINT) AS max_rhs_distinct,
            (max(nd) = 1) AS holds
-    FROM (SELECT {lhs}, count(DISTINCT {rhs}) AS nd FROM {table} GROUP BY {lhs})""")
+    FROM (SELECT {lhs}, count(DISTINCT {rhs}) AS nd FROM {{{table}}} GROUP BY {lhs})""")
     return " UNION ALL ".join(parts)
 
 
-@query("dq13_fd_audit", section="DQ", oracle=_fd_oracle())
-def dq13_fd_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Functional-dependency audit: for each DECLARED dependency
-    A → B, does every A value map to exactly one B?  The data-quality
-    primitive behind key discovery, denormalization safety checks, and
-    "is this column derivable" questions — profilers run exactly this
-    sweep before schema changes.
-
-    Reports per claim: distinct LHS count, number of violating keys,
-    the worst per-key RHS cardinality, and the verdict.  The claim
-    list mixes true dependencies (primary-key determinations) with
-    deliberately false ones (a part ships from 4 suppliers; an order
-    ships by many modes) so both outcomes are exercised.
-
-    Spark shapes: each claim is one groupBy(lhs).countDistinct(rhs) —
-    a two-phase partial aggregate keyed on the LHS — followed by a
-    4-measure rollup of the key-level result; claims union into one
-    report.  At 100 TB each claim touches two columns of one table
-    (column pruning does the rest) and shuffles key-level rows only."""
-    outs = []
-    for name, table, lhs, rhs in FD_CLAIMS:
-        t = load_table(spark, sf_dir, table)
-        keys = t.groupBy(lhs).agg(F.countDistinct(rhs).alias("nd"))
-        outs.append(
-            keys.agg(
-                F.lit(name).alias("fd"),
-                F.count("*").alias("n_lhs"),
-                F.sum(F.when(F.col("nd") > 1, 1).otherwise(0)).alias("n_violating"),
-                F.max("nd").alias("max_rhs_distinct"),
-                (F.max("nd") == 1).alias("holds"),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+# Functional-dependency audit: for each declared dependency A → B,
+# does every A value map to exactly one B?  Reports per claim: distinct
+# LHS count, number of violating keys, the worst per-key RHS cardinality
+# and the verdict.  Each claim is one groupBy(lhs) count-distinct(rhs) —
+# a two-phase partial aggregate keyed on the LHS — rolled up to 4
+# measures; claims union into one report.  At 100 TB each claim touches
+# two columns of one table and shuffles key-level rows only.
+sql_query("dq13_fd_audit", section="DQ", text=_fd_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -1020,7 +992,7 @@ def _ols2_moment_sql() -> str:
                       * CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS s1y,
              CAST(sum(CAST(l_discount AS DECIMAL(18,2))
                       * CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS s2y
-      FROM lineitem
+      FROM {lineitem}
     """
 
 
@@ -1036,10 +1008,18 @@ _OLS2_SOLVE_SQL = """
 """
 
 
-@query(
+# Multi-feature ordinary least squares solved in the plan via the
+# normal equations + Cramer's rule: y = β₀ + β₁·quantity + β₂·discount
+# over lineitem, from one aggregation pass of nine exact-decimal moments
+# followed by a closed-form 2×2 solve — the data pass produces a tiny
+# Gram matrix; the solve is O(p³) on p features, not on rows.  Every
+# moment is an exact DECIMAL sum, so the betas are a fixed dag of IEEE
+# double ops on bit-identical inputs and compare unrounded across
+# engines.
+sql_query(
     "ml16_ols_normal_eq",
     section="ML",
-    oracle=f"""
+    text=f"""
     WITH m AS ({_ols2_moment_sql()}),
     c AS ({_OLS2_SOLVE_SQL}),
     sol AS (
@@ -1053,76 +1033,6 @@ _OLS2_SOLVE_SQL = """
     FROM sol
     """,
 )
-def ml16_ols_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-feature ordinary least squares SOLVED IN THE PLAN via the
-    normal equations + Cramer's rule: y = β₀ + β₁·quantity +
-    β₂·discount over lineitem, from ONE aggregation pass of nine
-    exact-decimal moments (n, Σx, Σxx', Σxy) followed by a closed-form
-    2×2 solve — the way distributed linear regression actually works
-    at scale (the data pass produces a tiny Gram matrix; the solve is
-    O(p³) on p features, not on rows).  Extends `a12_ols_trend`
-    (single feature per group) to the multi-feature case and contrasts
-    with `ml1_logreg_gd`'s iterative path: one pass, no learning rate,
-    exact answer.
-
-    Determinism: every moment is an exact DECIMAL sum (2-dp inputs ⇒
-    4-dp products, zero float channel in the aggregation); the
-    centered Gram entries, determinant, and betas are then a fixed
-    dag of IEEE double ops on bit-identical inputs, so the output
-    doubles compare UNROUNDED across engines.
-
-    Spark shapes: one partial-agg over the fact table (9 measures,
-    map-side combine), then a 1-row projection — nothing else moves.
-    At 100 TB this is a single scan producing 9 numbers; for p
-    features it is p(p+3)/2 measures and a driver-side (or in-plan,
-    as here for p=2) solve."""
-    li = load_table(spark, sf_dir, "lineitem")
-    q = F.col("l_quantity").cast("decimal(18,2)")
-    d = F.col("l_discount").cast("decimal(18,2)")
-    y = F.col("l_extendedprice").cast("decimal(18,2)")
-    m = li.agg(
-        F.count("*").cast("double").alias("n"),
-        F.sum(q).cast("double").alias("s1"),
-        F.sum(d).cast("double").alias("s2"),
-        F.sum(y).cast("double").alias("sy"),
-        F.sum(q * q).cast("double").alias("s11"),
-        F.sum(q * d).cast("double").alias("s12"),
-        F.sum(d * d).cast("double").alias("s22"),
-        F.sum(q * y).cast("double").alias("s1y"),
-        F.sum(d * y).cast("double").alias("s2y"),
-    )
-    c = m.select(
-        (F.col("s11") - F.col("s1") * F.col("s1") / F.col("n")).alias("a11"),
-        (F.col("s12") - F.col("s1") * F.col("s2") / F.col("n")).alias("a12"),
-        (F.col("s22") - F.col("s2") * F.col("s2") / F.col("n")).alias("a22"),
-        (F.col("s1y") - F.col("s1") * F.col("sy") / F.col("n")).alias("b1"),
-        (F.col("s2y") - F.col("s2") * F.col("sy") / F.col("n")).alias("b2"),
-        "n",
-        "s1",
-        "s2",
-        "sy",
-    )
-    det = F.col("a11") * F.col("a22") - F.col("a12") * F.col("a12")
-    sol = c.select(
-        ((F.col("b1") * F.col("a22") - F.col("b2") * F.col("a12")) / det).alias(
-            "beta1"
-        ),
-        ((F.col("a11") * F.col("b2") - F.col("a12") * F.col("b1")) / det).alias(
-            "beta2"
-        ),
-        "n",
-        "s1",
-        "s2",
-        "sy",
-    )
-    return sol.select(
-        "beta1",
-        "beta2",
-        (
-            (F.col("sy") - F.col("beta1") * F.col("s1") - F.col("beta2") * F.col("s2"))
-            / F.col("n")
-        ).alias("intercept"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -53,7 +53,7 @@ from chronicle_sniffer_spark.operators.quality import (
     MIN_WORDS,
 )
 from chronicle_sniffer_spark.operators.similarity import ANN_K, ANN_QUERY_VEC
-from chronicle_sniffer_spark.plans.catalog import query
+from chronicle_sniffer_spark.plans.catalog import query, sql_query
 from chronicle_sniffer_spark.sources.warc import _warc_dir
 from chronicle_sniffer_spark.tables import load_table, session_memo, session_tmpdir
 
@@ -589,13 +589,23 @@ def ml29_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ML30: Cohen's kappa — inter-annotator agreement (labeling QA)
 # ---------------------------------------------------------------------------
 
-_ML30_ORACLE = """
+# Cohen's kappa — chance-corrected inter-annotator agreement, the
+# labeling-QA statistic annotation pipelines report before labels feed
+# training.  Two deterministic synthetic raters over 3 classes (the
+# second disagrees on every 5th item).  κ is computed from int64 counts
+# (numerator and denominator are exact integers); the only float op is
+# the final division.  One map-side-combinable hash aggregate produces
+# all eight counts — no pivot, no self-join.
+sql_query(
+    "ml30_cohens_kappa",
+    section="ML3",
+    text="""
 WITH e AS (
   SELECT event_type,
          CAST((event_id * 7) % 3 AS BIGINT) AS a,
          CAST(((event_id * 7) + CASE WHEN event_id % 5 = 0 THEN 1 ELSE 0 END)
               % 3 AS BIGINT) AS b
-  FROM events
+  FROM {events}
 ),
 s AS (
   SELECT event_type,
@@ -618,62 +628,8 @@ SELECT event_type, n, agree,
                    AS DOUBLE)
        END AS kappa
 FROM s
-"""
-
-
-@query("ml30_cohens_kappa", section="ML3", oracle=_ML30_ORACLE)
-def ml30_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's kappa — chance-corrected inter-annotator agreement, the
-    labeling-QA statistic every human-annotation pipeline reports
-    before labels feed training.  Two deterministic synthetic raters
-    over 3 classes (the second disagrees on every 5th item).
-
-    Exactness: κ = (n·agree − Σ_k na_k·nb_k) / (n² − Σ_k na_k·nb_k) is
-    computed entirely from int64 counts — numerator and denominator
-    are EXACT integers (n² fits int64 through sf100 per-type volumes),
-    and the only float op is the final division, identical in both
-    engines.
-
-    Scale shape: ONE map-side-combinable hash aggregate produces all
-    eight counts (agreement + both marginals via conditional sums — no
-    pivot, no self-join); κ is a projection over the group row.
-    O(series) output, a single shuffle of 8 longs per series."""
-    e = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        ((F.col("event_id") * 7) % 3).cast("bigint").alias("a"),
-        (
-            (
-                F.col("event_id") * 7
-                + F.when(F.col("event_id") % 5 == 0, 1).otherwise(0)
-            )
-            % 3
-        )
-        .cast("bigint")
-        .alias("b"),
-    )
-    cnt = lambda c: F.sum(F.when(c, 1).otherwise(0)).cast("bigint")  # noqa: E731
-    s = e.groupBy("event_type").agg(
-        F.count("*").cast("bigint").alias("n"),
-        cnt(F.col("a") == F.col("b")).alias("agree"),
-        *[cnt(F.col("a") == k).alias(f"na{k}") for k in range(3)],
-        *[cnt(F.col("b") == k).alias(f"nb{k}") for k in range(3)],
-    )
-    pe = (
-        F.col("na0") * F.col("nb0")
-        + F.col("na1") * F.col("nb1")
-        + F.col("na2") * F.col("nb2")
-    )
-    den = F.col("n") * F.col("n") - pe
-    num = F.col("n") * F.col("agree") - pe
-    return s.select(
-        "event_type",
-        "n",
-        "agree",
-        pe.cast("bigint").alias("pe_num"),
-        F.when(den > 0, num.cast("double") / den.cast("double")).alias(
-            "kappa"
-        ),
-    )
+""",
+)
 
 
 # ---------------------------------------------------------------------------

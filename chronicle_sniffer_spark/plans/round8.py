@@ -72,7 +72,7 @@ from chronicle_sniffer_spark.operators.dedup import (
     shared_pairs_and_labels,
 )
 from chronicle_sniffer_spark.operators.graph import _COPURCHASE_CTES, _copurchase_edges
-from chronicle_sniffer_spark.plans.catalog import query
+from chronicle_sniffer_spark.plans.catalog import query, sql_query
 from chronicle_sniffer_spark.tables import load_table, session_memo, session_tmpdir
 
 
@@ -1085,30 +1085,26 @@ def p15_variant_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
 # J13: LATERAL correlated top-k join
 # ---------------------------------------------------------------------------
 
-_J13_SQL = """
+# Per-key correlated top-k via a LATERAL subquery join (Spark 4 SQL
+# surface) — 'each customer's two most expensive orders' in the
+# correlated form users write, rather than the window-rank rewrite
+# (w1_topk_per_group) they are usually told to use.  Catalyst
+# decorrelates the LATERAL into a ranked join, so the physical plan is
+# the same partition-parallel shape: the point of the entry is that the
+# declarative form is supported and optimal, full tie-break keys
+# included.
+sql_query(
+    "j13_lateral_topk",
+    section="J13",
+    text="""
     SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-    FROM customer c,
-         LATERAL (SELECT o_orderkey, o_totalprice FROM orders o
+    FROM {customer} c,
+         LATERAL (SELECT o_orderkey, o_totalprice FROM {orders} o
                   WHERE o.o_custkey = c.c_custkey
                   ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
     WHERE c.c_custkey < 30
-"""
-
-
-@query("j13_lateral_topk", section="J13", oracle=_J13_SQL)
-def j13_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-key correlated top-k via a LATERAL subquery join (Spark 4
-    SQL surface) — 'each customer's two most expensive orders'
-    expressed as the correlated form users write, rather than the
-    window-rank rewrite (w1_topk_per_group) they are usually told to
-    use.  Catalyst decorrelates the LATERAL into a ranked join, so
-    the physical plan is the same partition-parallel shape — the
-    point of the entry is that the DECLARATIVE form is supported and
-    optimal, full tie-break keys included.  Identical SQL runs on
-    DuckDB."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_J13_SQL)
+""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1174,23 +1170,20 @@ def p16_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # A17: GROUP BY ALL (Spark 4 SQL surface)
 # ---------------------------------------------------------------------------
 
-_A17_SQL = """
+# ``GROUP BY ALL`` (Spark 4 / modern-SQL sugar): every non-aggregate
+# select item becomes a grouping key — kills the copy-the-select-list-
+# into-GROUP-BY drift bug in wide rollups.  The resolved plan is the
+# ordinary hash aggregate.
+sql_query(
+    "a17_group_by_all",
+    section="A17",
+    text="""
     SELECT CAST(year(o_orderdate) AS INT) AS yr, o_orderstatus,
            CAST(count(*) AS BIGINT) AS n_orders,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-    FROM orders GROUP BY ALL
-"""
-
-
-@query("a17_group_by_all", section="A17", oracle=_A17_SQL)
-def a17_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``GROUP BY ALL`` (Spark 4 / modern-SQL sugar): every
-    non-aggregate select item becomes a grouping key — kills the
-    copy-the-select-list-into-GROUP-BY drift bug in wide rollups.
-    The IDENTICAL query text runs on both engines; the resolved plan
-    is the ordinary hash aggregate."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_A17_SQL)
+    FROM {orders} GROUP BY ALL
+""",
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1652,10 +1645,19 @@ def t9c_full_outer_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # A18: deterministic mode per group
 # ---------------------------------------------------------------------------
 
-_A18_ORACLE = """
+# Deterministic mode per group — most frequent value with a total
+# tie-break (count desc, value asc).  Spark's and DuckDB's native
+# ``mode()`` both leave ties implementation-defined (Spark's depends on
+# hash-map iteration order), which makes the built-in unusable under a
+# hash-compare contract; the count + ranked-window form pins the
+# semantics at the cost of one extra value-cardinality-sized shuffle.
+sql_query(
+    "a18_mode_per_group",
+    section="A18",
+    text="""
     WITH counts AS (
       SELECT o_orderstatus, o_orderpriority, count(*) AS n
-      FROM orders GROUP BY o_orderstatus, o_orderpriority
+      FROM {orders} GROUP BY o_orderstatus, o_orderpriority
     ),
     ranked AS (
       SELECT o_orderstatus, o_orderpriority, n,
@@ -1666,35 +1668,8 @@ _A18_ORACLE = """
     SELECT o_orderstatus, o_orderpriority AS mode_priority,
            CAST(n AS BIGINT) AS n_occurrences
     FROM ranked WHERE rn = 1
-"""
-
-
-@query("a18_mode_per_group", section="A18", oracle=_A18_ORACLE)
-def a18_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DETERMINISTIC mode per group — most frequent value with a
-    total tie-break (count desc, value asc).  Spark's and DuckDB's
-    native ``mode()`` both leave ties implementation-defined (Spark's
-    depends on hash-map iteration order), which makes the built-in
-    unusable under a hash-compare contract or any reproducibility
-    requirement; the count + ranked-window form pins the semantics at
-    the cost of one extra (tiny, value-cardinality-sized) shuffle."""
-    counts = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy("o_orderstatus", "o_orderpriority")
-        .agg(F.count("*").alias("n"))
-    )
-    w = Window.partitionBy("o_orderstatus").orderBy(
-        F.col("n").desc(), "o_orderpriority"
-    )
-    return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "o_orderstatus",
-            F.col("o_orderpriority").alias("mode_priority"),
-            F.col("n").cast("bigint").alias("n_occurrences"),
-        )
-    )
+""",
+)
 
 
 # ---------------------------------------------------------------------------

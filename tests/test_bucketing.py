@@ -7,7 +7,6 @@ from a full shuffle into a local merge."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,8 +18,8 @@ N_BUCKETS = 8
 
 
 @pytest.fixture(scope="module")
-def bucketed(spark):
-    wh = tempfile.mkdtemp(prefix="css_buckets_")
+def bucketed(spark, tmp_path_factory):
+    wh = str(tmp_path_factory.mktemp("buckets"))
     for t, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
         load_table(spark, SF_SMOKE, t).write.bucketBy(N_BUCKETS, key).sortBy(key).mode(
             "overwrite"

@@ -3,15 +3,20 @@ sf0.001 (the driver's gate runs the same comparison at sf0.01)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from chronicle_sniffer_spark.canon import canon_rows as _canon
 from chronicle_sniffer_spark.plans import registry
+from chronicle_sniffer_spark.plans.catalog import SqlText
+from chronicle_sniffer_spark.tables import TABLE_NAMES
 from tests.conftest import SF_SMOKE
 
 REG = registry()
 ORACLE_QUERIES = sorted(name for name, spec in REG.items() if spec.oracle is not None)
 ROWS_ONLY_QUERIES = sorted(name for name, spec in REG.items() if spec.oracle is None)
+SQL_TEXT_QUERIES = sorted(name for name, spec in REG.items() if isinstance(spec.spark_fn, SqlText))
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
@@ -29,6 +34,30 @@ def test_query_matches_oracle(name, spark, oracle):
 def test_rows_only_query_runs(name, spark):
     df = REG[name].spark_fn(spark, SF_SMOKE)
     assert df.collect() is not None
+
+
+@pytest.mark.parametrize("name", SQL_TEXT_QUERIES)
+def test_sql_text_entry_leaves_session_views_alone(name, spark):
+    """Building an SQL-text entry touches no view of the caller's
+    session, not even one named after a base table, and reads only
+    the tables under the sf_dir it was given."""
+    from urllib.parse import urlparse
+
+    for t in TABLE_NAMES:
+        spark.sql(f"SELECT '{t}' AS host_view").createOrReplaceTempView(t)
+    try:
+        before = sorted((t.name, t.isTemporary) for t in spark.catalog.listTables())
+        df = REG[name].spark_fn(spark, SF_SMOKE)
+        after = sorted((t.name, t.isTemporary) for t in spark.catalog.listTables())
+        hosts = {t: spark.table(t).columns for t in TABLE_NAMES}
+    finally:
+        for t in TABLE_NAMES:
+            spark.catalog.dropTempView(t)
+    assert after == before
+    assert hosts == {t: ["host_view"] for t in TABLE_NAMES}
+    root = os.path.abspath(SF_SMOKE) + os.sep
+    files = df.inputFiles()
+    assert files and all(urlparse(f).path.startswith(root) for f in files), files
 
 
 @pytest.mark.parametrize(

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -15,8 +14,8 @@ FIXDIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 PROC_TIME = "2025-09-05T12:00:00.000000Z"
 
 
-def test_convert_and_sinks(spark):
-    base = tempfile.mkdtemp(prefix="css_etl_")
+def test_convert_and_sinks(spark, tmp_path):
+    base = str(tmp_path)
     udm = etl.convert_directory(spark, os.path.join(FIXDIR, "*.json"), PROC_TIME)
 
     # S8: partitioned parquet

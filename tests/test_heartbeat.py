@@ -4,7 +4,6 @@ and alert on missing heartbeats; stream equals batch."""
 from __future__ import annotations
 
 import os
-import tempfile
 from datetime import datetime, timedelta
 
 import pytest
@@ -57,8 +56,8 @@ def test_inactive_alerts(spark, lines):
     ]
 
 
-def test_liveness_stream_equals_batch(spark, lines):
-    d = os.path.join(tempfile.mkdtemp(prefix="css_hb_"), "hb")
+def test_liveness_stream_equals_batch(spark, lines, tmp_path):
+    d = str(tmp_path / "hb")
     lines.repartition(3).write.mode("overwrite").parquet(d)
     from chronicle_sniffer_spark.streaming.runtime import run_to_completion
 

@@ -19,9 +19,9 @@ PLAN_MODULES = {
 } - {"__init__"}
 
 
-def _package_modules() -> dict[str, ast.Module]:
+def _package_modules(top: str = PKG) -> dict[str, ast.Module]:
     out = {}
-    for root, _dirs, files in os.walk(PKG):
+    for root, _dirs, files in os.walk(top):
         for f in files:
             if f.endswith(".py"):
                 path = os.path.join(root, f)
@@ -94,26 +94,37 @@ def test_bench_tools_hold_no_entry_names():
         assert not found, (rel, sorted(found))
 
 
+def _temp_dir_calls(path: str, tree: ast.Module) -> list[tuple]:
+    bad = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and node.attr in ("mkdtemp", "gettempdir"):
+            bad.append((path, node.lineno, node.attr))
+        elif isinstance(node, ast.ImportFrom) and node.module == "tempfile":
+            bad += [
+                (path, node.lineno, a.name)
+                for a in node.names
+                if a.name in ("mkdtemp", "gettempdir")
+            ]
+    return bad
+
+
 def test_only_tables_decides_fixture_location_and_lifetime():
     """Temp directories come from ``tables.session_tmpdir``, session
     fixtures are memoised by ``tables.session_memo``: no other module
     makes a temp dir, reads the warehouse location, or keeps its own
     module-level ``*_CACHE`` dict (``operators/ivf.py``'s centroid
-    cache is a data cache keyed by manifest version, not a fixture)."""
+    cache is a data cache keyed by manifest version, not a fixture).
+    Tests take ``tmp_path``/``tmp_path_factory``, which pytest
+    removes, so the temp-dir rule covers ``tests/`` too."""
     bad = []
+    for path, tree in _package_modules(os.path.join(REPO, "tests")).items():
+        bad += _temp_dir_calls(path, tree)
     for path, tree in _package_modules().items():
         if path == os.path.join("chronicle_sniffer_spark", "tables.py"):
             continue
+        bad += _temp_dir_calls(path, tree)
         for node in ast.walk(tree):
-            if isinstance(node, ast.Attribute) and node.attr in ("mkdtemp", "gettempdir"):
-                bad.append((path, node.lineno, node.attr))
-            elif isinstance(node, ast.ImportFrom) and node.module == "tempfile":
-                bad += [
-                    (path, node.lineno, a.name)
-                    for a in node.names
-                    if a.name in ("mkdtemp", "gettempdir")
-                ]
-            elif (
+            if (
                 isinstance(node, ast.Constant)
                 and node.value == "spark.sql.warehouse.dir"
                 and path != os.path.join("chronicle_sniffer_spark", "session.py")

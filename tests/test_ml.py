@@ -113,7 +113,7 @@ def test_dp_release_noise_is_laplace_shaped(spark):
     assert (a["n_released"] - a["n_true"] - a["noise"]).abs().max() < 1e-6
 
 
-def test_offline_trained_model_scores_stream_equals_batch(spark):
+def test_offline_trained_model_scores_stream_equals_batch(spark, tmp_path):
     """Serving integration: weights trained offline (in-plan GD) score
     a STREAM of the same rows — the quantized score aggregate from the
     AvailableNow replay must equal the batch plan exactly (fast
@@ -135,11 +135,10 @@ def test_offline_trained_model_scores_stream_equals_batch(spark):
     batch = scored_agg(feats).collect()[0]
 
     import os
-    import tempfile
 
     schema = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet").schema
     # the file stream source wants a DIRECTORY; stage the table file in
-    stage = tempfile.mkdtemp(prefix="ml_stream_src_")
+    stage = str(tmp_path)
     os.symlink(f"{SF_SMOKE}/lineitem.parquet", os.path.join(stage, "lineitem.parquet"))
     stream = spark.readStream.schema(schema).parquet(stage)
     q = (
@@ -157,14 +156,13 @@ def test_offline_trained_model_scores_stream_equals_batch(spark):
     assert rows[0]["qscore"] == batch["qscore"]
 
 
-def test_threshold_sweep_stream_equals_batch(spark):
+def test_threshold_sweep_stream_equals_batch(spark, tmp_path):
     """Serving-time evaluation: the ml3 confusion/threshold sweep run
     over a STREAM of rows (offline-trained frozen weights, 9-threshold
     broadcast grid, AvailableNow replay, complete mode) must equal the
     identical batch aggregate — the shape a training-data pipeline
     runs to watch a live operating point drift."""
     import os
-    import tempfile
 
     import chronicle_sniffer_spark.plans.ml as ml
 
@@ -194,7 +192,7 @@ def test_threshold_sweep_stream_equals_batch(spark):
     batch = {r["thr"]: (r["tp"], r["fp"], r["fn"], r["tn"]) for r in sweep(feats).collect()}
 
     schema = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet").schema
-    stage = tempfile.mkdtemp(prefix="ml3_stream_src_")
+    stage = str(tmp_path)
     os.symlink(f"{SF_SMOKE}/lineitem.parquet", os.path.join(stage, "lineitem.parquet"))
     stream = spark.readStream.schema(schema).parquet(stage)
     q = (

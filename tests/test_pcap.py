@@ -6,7 +6,6 @@ trailing record."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -48,8 +47,8 @@ def test_truncated_trailing_record_stops_cleanly():
     assert list(decode_pcap_bytes(raw[:20])) == []  # short header
 
 
-def test_pcap_to_udm_end_to_end(spark):
-    d = tempfile.mkdtemp(prefix="css_pcap_")
+def test_pcap_to_udm_end_to_end(spark, tmp_path):
+    d = str(tmp_path)
     with open(os.path.join(d, "capture_1.pcap"), "wb") as f:
         f.write(pcap_bytes(example_packets()))
     raw = read_pcap(spark, d)
@@ -76,7 +75,7 @@ def test_pcap_to_udm_end_to_end(spark):
     assert rows[0].ts == "2025-06-10T13:14:15.123400Z"
 
 
-def test_tshark_fidelity_mode(spark):
+def test_tshark_fidelity_mode(spark, tmp_path):
     """S4 fidelity path (processor_app.py:150-155): same pcap through a
     real tshark subprocess must classify identically to the native
     decoder.  Skips where the container ships no tshark."""
@@ -86,7 +85,7 @@ def test_tshark_fidelity_mode(spark):
 
     if not tshark_available():
         pytest.skip("tshark not installed in this container")
-    d = tempfile.mkdtemp(prefix="css_pcap_tshark_")
+    d = str(tmp_path)
     with open(os.path.join(d, "capture_1.pcap"), "wb") as f:
         f.write(pcap_bytes(example_packets()))
     udm = project_udm(
@@ -153,12 +152,12 @@ def test_pcapng_spb_and_truncation():
     assert list(decode_pcapng_bytes(bad)) == []
 
 
-def test_unknown_magic_quarantines_one_error_row(spark):
+def test_unknown_magic_quarantines_one_error_row(spark, tmp_path):
     """A file matching neither capture magic must surface as exactly
     ONE quarantined error event — never silently decode to zero rows
     (the batch analogue of the reference 500-ing an unreadable file
     into retry/DLQ, processor_app.py:184-190)."""
-    d = tempfile.mkdtemp(prefix="css_pcap_quarantine_")
+    d = str(tmp_path)
     with open(os.path.join(d, "capture_1.pcap"), "wb") as f:
         f.write(pcap_bytes(example_packets()))
     with open(os.path.join(d, "garbage.pcap"), "wb") as f:
@@ -170,13 +169,13 @@ def test_unknown_magic_quarantines_one_error_row(spark):
     assert len(bad) == 1 and bad[0].is_error
 
 
-def test_mixed_container_directory_reads_both(spark):
+def test_mixed_container_directory_reads_both(spark, tmp_path):
     """One directory holding a classic .pcap and a .pcapng of the same
     frames: read_pcap decodes both (the reference's '.pcap*' wildcard
     contract, sniffer_entrypoint.sh:159-164)."""
     from chronicle_sniffer_spark.sources.pcap_synth import pcapng_bytes
 
-    d = tempfile.mkdtemp(prefix="css_pcap_mixed_")
+    d = str(tmp_path)
     with open(os.path.join(d, "capture_1.pcap"), "wb") as f:
         f.write(pcap_bytes(example_packets()))
     with open(os.path.join(d, "capture_2.pcapng"), "wb") as f:
@@ -189,7 +188,7 @@ def test_mixed_container_directory_reads_both(spark):
     assert sum(counts.values()) == 14
 
 
-def test_tshark_fidelity_golden(spark):
+def test_tshark_fidelity_golden(spark, tmp_path):
     """Fidelity diff the native decoder against the tshark JSON shape
     WITHOUT needing a tshark binary: the recorded fixture
     tests/fixtures/tshark_fidelity_pcap.json carries the same 7 frames
@@ -210,7 +209,7 @@ def test_tshark_fidelity_golden(spark):
     fx = os.path.join(os.path.dirname(__file__), "fixtures", "tshark_fidelity_pcap.json")
     from chronicle_sniffer_spark.sources.json_source import read_tshark_json
 
-    d = tempfile.mkdtemp(prefix="css_pcap_fidelity_")
+    d = str(tmp_path)
     with open(os.path.join(d, "capture_1.pcap"), "wb") as f:
         f.write(pcap_bytes(example_packets()))
     proc = "2025-01-01T00:00:00.000000Z"

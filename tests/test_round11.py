@@ -81,7 +81,7 @@ def test_g12_matches_bruteforce_bellman_ford(spark):
     assert got == dist and len(got) > 1
 
 
-def test_holt_winters_pinned_series(spark):
+def test_holt_winters_pinned_series(spark, tmp_path):
     """Hand-replayed 10-point series: the operator's recursion must
     equal the reference loop bit-for-bit (dyadic constants)."""
     from chronicle_sniffer_spark.plans.round11 import (
@@ -103,9 +103,9 @@ def test_holt_winters_pinned_series(spark):
     df = spark.createDataFrame(
         rows, "user_id bigint, ts timestamp, event_id bigint, value double"
     )
-    import tempfile, os
+    import os
 
-    d = tempfile.mkdtemp(prefix="css_hw_")
+    d = str(tmp_path)
     df.write.parquet(os.path.join(d, "events.parquet"))
     got = {
         r.h: r.forecast

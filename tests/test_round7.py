@@ -45,14 +45,13 @@ def test_cms_top1_matches_exact_top_word(spark):
     assert got.true_cnt == exact["count"]
 
 
-def test_cms_sketch_stream_equals_batch(spark):
+def test_cms_sketch_stream_equals_batch(spark, tmp_path):
     """The CMS is THE streaming-mergeable frequency sketch: cells
     built over an AvailableNow micro-batched stream of the corpus
     (update mode through a grouped agg) must equal the batch cells —
     cell-wise sums are associative, so micro-batch order can't
     matter."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -80,7 +79,7 @@ def test_cms_sketch_stream_equals_batch(spark):
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     batch = {(r.i, r.bucket): r.cell for r in cells(docs).collect()}
 
-    stage = tempfile.mkdtemp(prefix="cms_stream_src_")
+    stage = str(tmp_path)
     os.symlink(
         f"{SF_SMOKE}/documents.parquet", os.path.join(stage, "documents.parquet")
     )

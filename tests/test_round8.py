@@ -398,8 +398,9 @@ def test_j13_lateral_equals_window_rewrite(spark):
     """The LATERAL correlated top-k must equal the window-rank
     rewrite users are usually told to use instead."""
     from pyspark.sql import Window
-    from chronicle_sniffer_spark.plans.round8 import j13_lateral_topk
+    from chronicle_sniffer_spark.plans import registry
 
+    j13_lateral_topk = registry()["j13_lateral_topk"].spark_fn
     orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
     cust = spark.read.parquet(f"{SF_SMOKE}/customer.parquet").filter(
         F.col("c_custkey") < 30
@@ -444,15 +445,14 @@ def test_p15_variant_equals_string_json_path(spark):
     )
 
 
-def test_dq6_checksum_detects_single_row_mutation(spark):
+def test_dq6_checksum_detects_single_row_mutation(spark, tmp_path):
     """The additive checksum must shift when exactly one row's content
     changes (same row count — the failure mode bare counts miss)."""
     from chronicle_sniffer_spark.plans.round8 import dq6_reconciliation_checksum
-    import tempfile
 
     base = dq6_reconciliation_checksum(spark, SF_SMOKE).collect()
     # mutate one order's priority and recompute via a staged copy
-    mut_dir = tempfile.mkdtemp(prefix="css_dq6_")
+    mut_dir = str(tmp_path)
     orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
     first = orders.select("o_orderkey").first()[0]
     orders.withColumn(

@@ -6,16 +6,15 @@ partitions by maxPartitionBytes/openCostInBytes."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 
-def test_spread_repartitions_many_tiny_files(spark):
+def test_spread_repartitions_many_tiny_files(spark, tmp_path):
     """40 one-row files pass the old file-count probe but scan as a
     handful of bin-packed tasks; spread() must see through that and
     repartition to >= cores."""
     from chronicle_sniffer_spark.tables import spread
 
-    d = os.path.join(tempfile.mkdtemp(prefix="css_tiny_"), "t")
+    d = str(tmp_path / "t")
     # AQE coalesces the repartition's tiny shuffle partitions, which
     # would merge the output files — disable it for the staging write
     prev = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 import time
 
 import pytest
@@ -65,9 +64,9 @@ def test_t3_session_stream_equals_batch(spark, staged):
     assert _rows(result, *cols) == _rows(batch, *cols)
 
 
-def test_t5_stream_dedup(spark, staged):
+def test_t5_stream_dedup(spark, staged, tmp_path):
     # redeliver every file twice via a doubled staging dir
-    double_dir = os.path.join(tempfile.mkdtemp(prefix="css_dup_"), "events")
+    double_dir = str(tmp_path / "events")
     ev = spark.read.parquet(staged)
     ev.unionByName(ev).repartition(6).write.mode("overwrite").parquet(double_dir)
     stream = read_events_stream(spark, double_dir, max_files_per_trigger=2)
@@ -92,7 +91,7 @@ def test_t3b_dynamic_session_stream_equals_batch(spark, staged):
     assert _rows(result, *cols) == _rows(batch, *cols)
 
 
-def test_t5b_dedup_within_watermark_semantics(spark):
+def test_t5b_dedup_within_watermark_semantics(spark, tmp_path):
     """dropDuplicatesWithinWatermark, the ALWAYS-watermark-evicted
     dedup (plain dropDuplicates only expires state when the event-time
     column is part of the key): (a) a redelivery inside the horizon is
@@ -105,7 +104,7 @@ def test_t5b_dedup_within_watermark_semantics(spark):
         dedup_stream_within_watermark,
     )
 
-    base = tempfile.mkdtemp(prefix="css_dupw_")
+    base = str(tmp_path)
     d = os.path.join(base, "events")
     os.makedirs(d)
     checkpoint = os.path.join(base, "ckpt")
@@ -155,10 +154,10 @@ def test_t5b_dedup_within_watermark_semantics(spark):
     ]
 
 
-def test_t4_watermark_drops_late_rows(spark):
+def test_t4_watermark_drops_late_rows(spark, tmp_path):
     """A row arriving after the watermark passed its window is dropped
     from the append-mode aggregate."""
-    base = tempfile.mkdtemp(prefix="css_late_")
+    base = str(tmp_path)
     d = os.path.join(base, "events")
     os.makedirs(d)
     from datetime import datetime
@@ -260,8 +259,8 @@ def test_t6b_transform_with_state(spark, staged):
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
-def test_s6_notification_validation(spark):
-    d = tempfile.mkdtemp(prefix="css_notif_")
+def test_s6_notification_validation(spark, tmp_path):
+    d = str(tmp_path)
     msgs = [
         {"filename": "capture_001.pcap", "publish_ts": "2024-01-01T00:00:00Z", "attributes": {}},
         {"filename": "", "publish_ts": "2024-01-01T00:00:01Z", "attributes": {}},
@@ -274,8 +273,8 @@ def test_s6_notification_validation(spark):
     assert sorted(r.filename for r in ok.collect()) == ["capture_001.pcap", "capture_002.pcap"]
 
 
-def test_t8_s7_dlq_and_idempotency(spark):
-    base = tempfile.mkdtemp(prefix="css_dlq_")
+def test_t8_s7_dlq_and_idempotency(spark, tmp_path):
+    base = str(tmp_path)
     sink = DlqSink(
         out_dir=os.path.join(base, "out"),
         state_dir=os.path.join(base, "state"),
@@ -541,7 +540,7 @@ def test_t9d_semi_stream_equals_batch(spark, staged):
     assert len({c for _, c in got}) == len(got)  # each click at most once
 
 
-def test_t13_checkpoint_restart_no_dups_no_loss(spark):
+def test_t13_checkpoint_restart_no_dups_no_loss(spark, tmp_path):
     """File-source exactly-once across a RESTART: run an AvailableNow
     pass over 4 staged files into a durable parquet sink with a
     checkpoint, then add 2 more files and run a SECOND query from the
@@ -549,7 +548,7 @@ def test_t13_checkpoint_restart_no_dups_no_loss(spark):
     (old files not reprocessed, new files not missed)."""
     import shutil
 
-    base = tempfile.mkdtemp(prefix="css_restart_")
+    base = str(tmp_path)
     stage_all = os.path.join(base, "all")
     stream_dir = os.path.join(base, "stream")
     sink = os.path.join(base, "sink")
@@ -591,14 +590,12 @@ def test_t13_checkpoint_restart_no_dups_no_loss(spark):
     assert out.select("event_id").distinct().count() == ev.count()  # no dups
 
 
-def test_t11_stream_maintained_sessions_equal_batch(spark, staged):
+def test_t11_stream_maintained_sessions_equal_batch(spark, staged, tmp_path):
     """Stream-maintained session table (foreachBatch interval-union
     merge, streaming/sessions.py) must equal the one-shot batch
     sessionization of the same events — across micro-batch boundaries
     and with files delivered 2 at a time (so sessions DO span
     batches), plus a replayed epoch that must not double-count."""
-    import tempfile as _tf
-
     from chronicle_sniffer_spark.streaming.sessions import SESSION_GAP_MIN
     from chronicle_sniffer_spark.streaming.sessions import (
         _read_table,
@@ -609,8 +606,8 @@ def test_t11_stream_maintained_sessions_equal_batch(spark, staged):
     from pyspark.sql import Window as W
 
     gap_us = SESSION_GAP_MIN * 60 * 1000000
-    table_dir = os.path.join(_tf.mkdtemp(prefix="css_t11_"), "sessions")
-    ckpt = _tf.mkdtemp(prefix="css_t11_ckpt_")
+    table_dir = str(tmp_path / "sessions")
+    ckpt = str(tmp_path / "ckpt")
     stream = read_events_stream(spark, staged, max_files_per_trigger=2)
     got = maintain_sessions(stream, table_dir, ckpt, gap_us)
 

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -65,8 +64,8 @@ packets = st.one_of(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(batch=st.lists(packets, min_size=1, max_size=25))
-def test_one_in_one_out_for_arbitrary_packets(spark, batch):
-    d = tempfile.mkdtemp(prefix="css_prop_")
+def test_one_in_one_out_for_arbitrary_packets(spark, tmp_path_factory, batch):
+    d = str(tmp_path_factory.mktemp("prop"))
     with open(os.path.join(d, "fuzz.json"), "w") as f:
         json.dump(batch, f)
     udm = project_udm(read_tshark_json(spark, d), "2025-01-01T00:00:00.000000Z")
