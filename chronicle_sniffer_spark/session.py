@@ -37,12 +37,14 @@ def get_spark(app_name: str = "chronicle_sniffer_spark") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
-        # The UDM projection compiles to a ~400-expression generated
-        # class; with 100+ catalog queries live in one session the
-        # default 100-entry codegen cache evicts it and re-compilation
-        # (Janino, seconds for a class that size) shows up as bimodal
-        # query times.  A large app serving many plans wants this high
-        # on a cluster too.
+        # The UDM projection compiles to two large generated classes
+        # (largest methods ~20 KB and ~17 KB, see udm.py); with 100+
+        # catalog queries live in one session the default 100-entry
+        # codegen cache evicts them and re-compilation (Janino, about a
+        # second for classes that size) shows up as bimodal query
+        # times.  Only successful compiles are cached: a class that
+        # fails to compile is recompiled, and fails, on every plan.  A
+        # large app serving many plans wants this high on a cluster too.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         # PySpark's DataFrame-debugging feature wraps every DataFrame/
         # Column API call to capture the Python call site for error

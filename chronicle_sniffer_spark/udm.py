@@ -46,6 +46,22 @@ evaluate only for the rare malformed/error rows.  (The round-1
 version materialized ~25 unconditional schema walks per row; this
 formulation benches ~3× faster on the B1 corpus.)
 
+Code generation: the projection runs as three physical operators.
+:func:`_parse` is one whole-stage codegen class, fused with the scan;
+:func:`_ttl_islet` is the one interpreted Project (a single lambda
+column); :func:`_build` is a second codegen class.  The islet is what
+splits the generated code: inside one stage Spark inlines every
+chained Project into one ``processNext`` method (a Project gets its
+own method only when it reads each of its inputs at least twice), so
+Project boundaries alone do not bound method size.  As one stage the
+projection needed a method over Janino's 64 KB limit, and every sink
+plan paid a failed compile and then ran interpreted.  The largest
+generated methods are now 20,149 bytes (parse) and 16,958 bytes
+(build, the JSON sink's plan), both still above HotSpot's 8,000-byte
+JIT limit.  ``tests/test_udm_codegen.py`` runs every UDM sink with
+codegen fallback off and bounds each sink stage's largest method at
+32 KB.
+
 Documented intent-over-literal deviations from the reference:
 - frame number: the reference's ``get_nested_value(pkt,
   "_source.layers.frame.frame.number")`` can never resolve (tshark
@@ -70,7 +86,15 @@ from pyspark.sql import functions as F
 from chronicle_sniffer_spark.schemas import DNS_ANSWERS_DDL, DNS_QUERIES_DDL, LAYER_DDL
 
 # JSON texts of Python-falsy scalars: '' , 0, 0.0, False, [], {}, None.
-_FALSY_JSON = "('\"\"', '0', '0.0', '-0.0', 'false', '[]', '{}', 'null')"
+# A literal array rather than an IN list: array_contains generates one
+# loop, an 8-item IN eight inlined compares at each of the ~15 probes.
+_FALSY_JSON = "array('\"\"', '0', '0.0', '-0.0', 'false', '[]', '{}', 'null')"
+
+
+def _falsy(variant: str) -> str:
+    """SQL: the variant's JSON text is that of a Python-falsy value."""
+    return f"array_contains({_FALSY_JSON}, to_json({variant}))"
+
 
 _PRODUCT = "Wireshark TShark"
 _PRODUCT_MALFORMED = "Wireshark TShark (Malformed)"
@@ -108,18 +132,27 @@ def _pytype(sch_expr: str) -> str:
     )
 
 
-def _attr_err(sch_expr: str) -> Column:
-    return F.expr(f"concat('''', {_pytype(sch_expr)}, ''' object has no attribute ''get''')")
+def _attr_err(sch_expr: str) -> str:
+    return f"concat('''', {_pytype(sch_expr)}, ''' object has no attribute ''get''')"
 
 
-def _int_err(value_expr: str) -> Column:
-    return F.expr(f"concat('invalid literal for int() with base 10: ''', {value_expr}, '''')")
+def _int_err(value_expr: str) -> str:
+    return f"concat('invalid literal for int() with base 10: ''', {value_expr}, '''')"
+
+
+def _truthy_str(value: str) -> str:
+    """SQL: a Python-truthy string (non-NULL, non-empty)."""
+    return f"({value} IS NOT NULL AND {value} != '')"
 
 
 _MAPV = "map<string, variant>"
 
+# Position of the DNS answer TTL check in Python's check order (ref
+# :296-317; see _parse).  It is the only check the islet computes.
+_ERR_TTL = 18
 
-def _stage1(df: DataFrame) -> DataFrame:
+
+def _layers(df: DataFrame) -> DataFrame:
     """Materialize, once per row: the layers variant (as a shallow
     ``map<string, variant>``), each layer's raw sub-variant + typed
     struct + presence/badness flags, the DNS query/answer lists, and
@@ -129,7 +162,7 @@ def _stage1(df: DataFrame) -> DataFrame:
     — NULL for any non-object, ``{}`` for the empty object — which
     touch only the variant's top level.  No ``schema_of_variant`` (a
     deep recursive walk) runs here; schema text is computed lazily in
-    the error branches of :func:`project_udm` only.
+    the error branches of :func:`_parse` only.
     """
     out = df.withColumn("layers", F.expr("try_variant_get(_source, '$.layers')")).withColumn(
         "M_layers", F.expr(f"try_cast(layers AS {_MAPV})")
@@ -162,11 +195,9 @@ def _stage1(df: DataFrame) -> DataFrame:
         flags[f"P_{name}"] = F.expr(f"({m} IS NOT NULL AND size({m}) > 0)")
         # Python-truthy non-dict → AttributeError on .get; to_json only
         # evaluated on the rare non-object branch (short-circuit AND)
-        flags[f"B_{name}"] = F.expr(
-            f"({v} IS NOT NULL AND {m} IS NULL AND to_json({v}) NOT IN {_FALSY_JSON})"
-        )
+        flags[f"B_{name}"] = F.expr(f"({v} IS NOT NULL AND {m} IS NULL AND NOT {_falsy(v)})")
     out = out.withColumns(flags)
-    truthy = {f"T_{name}": F.col(f"P_{name}") | F.col(f"B_{name}") for name in _LAYERS}
+    truthy = {f"T_{name}": F.expr(f"P_{name} OR B_{name}") for name in _LAYERS}
     out = out.withColumns(truthy)
 
     return out.withColumns(
@@ -223,56 +254,13 @@ def _stage1(df: DataFrame) -> DataFrame:
     )
 
 
-def project_udm(df: DataFrame, processing_time: str) -> DataFrame:
-    """Project raw packets to UDM events (one in → one out, always).
-
-    ``processing_time`` is the injected deterministic stand-in for the
-    reference's ``datetime.now()`` fallbacks (SURVEY §2C.4), as an
-    ISO-8601 string like ``2025-01-01T00:00:00.000000Z``.
-    """
-    proc_ts = F.lit(processing_time)
-
-    # ---- ttl-error islet (the ONE interpreted operator) ------------------
-    # Higher-order functions (transform/filter/exists lambdas) are
-    # CodegenFallback expressions: a single one in a Project knocks the
-    # ENTIRE operator out of whole-stage codegen, and the ~400-expression
-    # event assembly then evaluates interpreted (measured ~3x slower on
-    # the B1 corpus).  Every former lambda in the hot path is rewritten
-    # below with codegen-supported builtins; the one irreducible lambda —
-    # "first TTL that fails int()", which needs a filter — is computed
-    # HERE, at the bottom of the DAG on the raw 3-column rows, so the
-    # interpreted operator boundary stays narrow.  The `_ttl_err_msg`
-    # shield column references `_ttl_err_raw` twice, which stops
-    # CollapseProject from inlining the lambda back up into the codegen
-    # projections (it only inlines aliases referenced once or cheap).
-    _DNS_ANS_INLINE = (
-        f"try_cast(try_element_at(try_cast(try_element_at("
-        f"try_cast(try_variant_get(_source, '$.layers') AS {_MAPV}), 'dns') AS {_MAPV}),"
-        f" 'Answers') AS {DNS_ANSWERS_DDL})"
-    )
-    _M_DNS_INLINE = (
-        f"try_cast(try_element_at("
-        f"try_cast(try_variant_get(_source, '$.layers') AS {_MAPV}), 'dns') AS {_MAPV})"
-    )
-    _A_TTLS_INLINE = (
-        f"filter(transform(map_values({_DNS_ANS_INLINE}), x -> x['dns.resp.ttl']),"
-        f" v -> v IS NOT NULL)"
-    )
-    df = df.withColumn(
-        "_ttl_err_raw",
-        F.expr(
-            f"CASE WHEN ({_M_DNS_INLINE}) IS NOT NULL AND size({_M_DNS_INLINE}) > 0"
-            f" AND exists({_A_TTLS_INLINE}, t -> try_cast(t AS int) IS NULL)"
-            f" THEN concat('invalid literal for int() with base 10: ''',"
-            f"   filter({_A_TTLS_INLINE}, t -> try_cast(t AS int) IS NULL)[0], '''')"
-            f" END"
-        ),
-    ).withColumn(
-        "_ttl_err_msg",
-        F.expr("CASE WHEN _ttl_err_raw IS NOT NULL THEN _ttl_err_raw END"),
-    )
-
-    stage1 = _stage1(df)
+def _parse(df: DataFrame) -> DataFrame:
+    """Codegen stage 1 (fused with the scan): everything read from the
+    variant — layer probes and typed structs, the DNS arrays, the
+    transport elif chain, the first failing error check other than the
+    TTL one (``_err_at0``, with its message subject), the malformed
+    flag, and the raw TTL list the islet reads."""
+    out = _layers(df)
 
     # ---- dns arrays, codegen-safe (no lambdas) ---------------------------
     # Null-compaction via concat_ws/split: concat_ws skips NULL elements
@@ -282,235 +270,321 @@ def project_udm(df: DataFrame, processing_time: str) -> DataFrame:
     # documented exactness caveat).  The all-dropped result '' is
     # disambiguated with array_max: NULL max means every element was
     # NULL (-> empty), a non-NULL max means a lone '' survived.
-    _SEP = "\x01"
+    sep = "\x01"
 
-    def _compact(raw_expr: str) -> str:
-        joined = f"concat_ws('{_SEP}', {raw_expr})"
+    def compact(raw_expr: str) -> str:
+        joined = f"concat_ws('{sep}', {raw_expr})"
         return (
             f"CASE WHEN ({raw_expr}) IS NULL THEN NULL"
-            f" WHEN {joined} != '' THEN split({joined}, '{_SEP}')"
+            f" WHEN {joined} != '' THEN split({joined}, '{sep}')"
             f" WHEN array_max({raw_expr}) IS NOT NULL THEN array('')"
             f" ELSE CAST(array() AS array<string>) END"
         )
 
-    stage1 = stage1.withColumns(
+    out = out.withColumns(
         {
-            "q_names": F.expr(_compact("map_values(dns_queries).`dns.qry.name`")),
-            "q_types": F.expr(_compact("map_values(dns_queries).`dns.qry.type`")),
-            "a_ttls": F.expr(_compact("map_values(dns_answers).`dns.resp.ttl`")),
+            "q_names": F.expr(compact("map_values(dns_queries).`dns.qry.name`")),
+            "q_types": F.expr(compact("map_values(dns_queries).`dns.qry.type`")),
+            "a_ttls": F.expr(compact("map_values(dns_answers).`dns.resp.ttl`")),
+            # the transport elif chain (ref :136,165,169,180,197,227)
+            "_ipv6_br": F.expr("NOT T_ip AND P_ipv6"),
+            "_udp_br": F.expr("NOT T_tcp AND P_udp"),
+            "_icmp_br": F.expr("NOT T_tcp AND NOT T_udp AND P_icmp"),
+            "_arp_br": F.expr("NOT T_tcp AND NOT T_udp AND NOT T_icmp AND P_arp"),
         }
     )
 
-    P = lambda n: F.col(f"P_{n}")  # noqa: E731  (non-empty dict)
-    B = lambda n: F.col(f"B_{n}")  # noqa: E731  (truthy non-dict → error)
-    T = lambda n: F.col(f"T_{n}")  # noqa: E731  (Python-truthy)
-    fld = lambda layer, f: F.col(f"L_{layer}.`{f}`")  # noqa: E731
-
-    ip_branch = P("ip")
-    ipv6_branch = ~T("ip") & P("ipv6")
-    tcp_branch = P("tcp")
-    udp_branch = ~T("tcp") & P("udp")
-    icmp_branch = ~T("tcp") & ~T("udp") & P("icmp")
-    arp_branch = ~T("tcp") & ~T("udp") & ~T("icmp") & P("arp")
-    dns_present = P("dns")
-
-    # ---- timestamp chain (ref convert_timestamp_robust, :19-46) ----------
-    # [:26] truncation reproduces Python's quirk of capping the fraction
-    # at whatever fits in 26 chars (4 digits for 2-digit days).
-    ts_str = fld("frame", "frame.time_utc")
-    parsed_ts = F.coalesce(
-        F.try_to_timestamp(F.substring(ts_str, 1, 26), F.lit(_TS_FMT_MICRO)),
-        F.try_to_timestamp(
-            F.trim(F.regexp_replace(ts_str, " (UTC|Central European Summer Time).*$", "")),
-            F.lit(_TS_FMT_PLAIN),
-        ),
-    )
-    # (the ISO form of the timestamp is built later, over the
-    # materialized _parsed_ts column — see event_ts_iso_col)
-
-    # ---- classifier (last-writer-wins; SURVEY §2C.2) ---------------------
-    event_type = (
-        F.when(P("tls"), "NETWORK_SSL")
-        .when(dns_present, "NETWORK_DNS")
-        .when(P("http"), "NETWORK_HTTP")
-        .when(icmp_branch, "NETWORK_ICMP")
-        .when(arp_branch, "NETWORK_ARP")
-        .otherwise("NETWORK_CONNECTION")
-    )
-
-    # ---- principal / target (ARP overwrite trap, SURVEY §2C.5) ----------
-    p_ip = F.when(arp_branch, fld("arp", "arp.src.proto_ipv4")).otherwise(
-        F.when(ip_branch, fld("ip", "ip.src")).when(ipv6_branch, fld("ipv6", "ipv6.src"))
-    )
-    t_ip = F.when(arp_branch, fld("arp", "arp.dst.proto_ipv4")).otherwise(
-        F.when(ip_branch, fld("ip", "ip.dst")).when(ipv6_branch, fld("ipv6", "ipv6.dst"))
-    )
-    p_mac = F.when(arp_branch, fld("arp", "arp.src.hw_mac")).otherwise(
-        F.when(P("eth"), fld("eth", "eth.src"))
-    )
-    t_mac = F.when(arp_branch, fld("arp", "arp.dst.hw_mac")).otherwise(
-        F.when(P("eth"), fld("eth", "eth.dst"))
-    )
-    p_port = F.when(tcp_branch, F.expr("try_cast(L_tcp.`tcp.srcport` AS int)")).when(
-        udp_branch, F.expr("try_cast(L_udp.`udp.srcport` AS int)")
-    )
-    t_port = F.when(tcp_branch, F.expr("try_cast(L_tcp.`tcp.dstport` AS int)")).when(
-        udp_branch, F.expr("try_cast(L_udp.`udp.dstport` AS int)")
-    )
-
-    # ---- network ---------------------------------------------------------
-    ipv = F.when(ip_branch, F.lit(4)).when(ipv6_branch, F.lit(6)).cast("int")
-    transport = F.when(tcp_branch, "TCP").when(udp_branch, "UDP").when(icmp_branch, "ICMP")
-    tcp_flags = F.when(tcp_branch, fld("tcp", "tcp.flags"))
-    icmp_type = F.when(icmp_branch, fld("icmp", "icmp.type"))
-    icmp_code = F.when(icmp_branch, fld("icmp", "icmp.code"))
-
-    # ---- HTTP (truthy-string guards; ref :179-192) -----------------------
-    def truthy_str(col: Column) -> Column:
-        return col.isNotNull() & (col != "")
-
-    h = {
-        "host": fld("http", "http.host"),
-        "file_data": fld("http", "http.file_data"),
-        "method": fld("http", "http.request.method"),
-        "url": fld("http", "http.request.full_uri"),
-        "user_agent": fld("http", "http.user_agent"),
-        "code": fld("http", "http.response.code"),
-    }
-    http_guard = lambda col: F.when(P("http") & truthy_str(col), col)  # noqa: E731
-    http_status = F.when(
-        P("http") & truthy_str(h["code"]),
-        F.expr("try_cast(L_http.`http.response.code` AS int)"),
-    )
-    http_info = F.struct(
-        http_guard(h["host"]).alias("host"),
-        http_guard(h["file_data"]).alias("file_data"),
-        http_guard(h["method"]).alias("method"),
-        http_guard(h["url"]).alias("url"),
-        http_guard(h["user_agent"]).alias("user_agent"),
-        http_status.alias("status_code"),
-    )
-    http_info_nonempty = P("http") & (
-        truthy_str(h["host"])
-        | truthy_str(h["file_data"])
-        | truthy_str(h["method"])
-        | truthy_str(h["url"])
-        | truthy_str(h["user_agent"])
-        | truthy_str(h["code"])
-    )
-
-    # ---- DNS (index-guarded zip, SURVEY §2C.6; ref :194-223) -------------
-    # arrays_zip pads the shorter side with NULLs and slice(.., 1,
-    # size(q_names)) trims to the names' length — identical to the
-    # reference's `if i < len(q_types)` guard, without a lambda.
-    queries_arr = F.expr(
-        "CAST(slice(arrays_zip(q_names, q_types), 1, size(q_names))"
-        " AS array<struct<name string, type string>>)"
-    )
-    # try_cast on an array applies per element (NULL on failure) — same
-    # as transform(a_ttls, t -> try_cast(t AS int)), lambda-free.
-    a_ttls_int = F.expr("try_cast(a_ttls AS array<int>)")
-    has_queries = dns_present & (F.size("q_names") > 0)
-    has_answers = dns_present & (F.size("a_ttls") > 0)
-    has_resp_flag = dns_present & F.col("dns_response_flag").isNotNull()
-    dns_info = F.struct(
-        F.when(has_queries, queries_arr).alias("queries"),
-        F.when(has_answers, a_ttls_int).alias("answer_ttls"),
-        F.when(has_resp_flag, F.col("dns_response_flag") == "1").alias("is_response"),
-    )
-    dns_info_nonempty = has_queries | has_answers | has_resp_flag
-
-    # ---- TLS (ref :226-253) ----------------------------------------------
-    tls_info = F.struct(
-        F.when(P("tls") & truthy_str(F.col("tls_rec_version")), F.col("tls_rec_version")).alias(
-            "record_version_protocol"
-        ),
-        F.when(P("tls") & truthy_str(F.col("tls_hs_version")), F.col("tls_hs_version")).alias(
-            "handshake_protocol_version"
-        ),
-        F.when(P("tls") & truthy_str(F.col("tls_sni")), F.col("tls_sni")).alias(
-            "server_name_indication"
-        ),
-    )
-    tls_info_nonempty = P("tls") & (
-        truthy_str(F.col("tls_rec_version"))
-        | truthy_str(F.col("tls_hs_version"))
-        | truthy_str(F.col("tls_sni"))
-    )
-
-    app_nonempty = http_info_nonempty | dns_info_nonempty | tls_info_nonempty
-    app_data = F.when(
-        app_nonempty,
-        F.struct(
-            F.when(http_info_nonempty, http_info).alias("http"),
-            F.when(dns_info_nonempty, dns_info).alias("dns"),
-            F.when(tls_info_nonempty, tls_info).alias("tls"),
-        ),
-    )
-
-    # ---- about (append order: http host, http url, dns names, sni) ------
-    # The reference's final truthy filter (ref :283) drops ""-only
-    # items; the http/tls entries are truthy-guarded at construction,
-    # so only the dns names need the "" scrub — array_remove does it
-    # lambda-free, and arrays_zip-with-empty + cast turns the names
-    # into {hostname, url: NULL} structs without a transform.
-    empty_about = F.expr(f"CAST(array() AS {_ABOUT_DDL})")
-    about_http_host = F.when(
-        P("http") & truthy_str(h["host"]),
-        F.array(F.struct(h["host"].alias("hostname"), F.lit(None).cast("string").alias("url"))),
-    ).otherwise(empty_about)
-    about_http_url = F.when(
-        P("http") & truthy_str(h["url"]),
-        F.array(F.struct(F.lit(None).cast("string").alias("hostname"), h["url"].alias("url"))),
-    ).otherwise(empty_about)
-    about_dns = F.when(
-        has_queries,
-        F.expr(
-            f"CAST(arrays_zip(array_remove(q_names, ''), CAST(array() AS array<string>))"
-            f" AS {_ABOUT_DDL})"
-        ),
-    ).otherwise(empty_about)
-    about_tls = F.when(
-        P("tls") & truthy_str(F.col("tls_sni")),
-        F.array(
-            F.struct(F.col("tls_sni").alias("hostname"), F.lit(None).cast("string").alias("url"))
-        ),
-    ).otherwise(empty_about)
-    about_all = F.concat(about_http_host, about_http_url, about_dns, about_tls)
-    about_col = F.when(F.size(about_all) > 0, about_all)
-
-    # ---- additional ------------------------------------------------------
-    empty_map = F.expr("map()").cast("map<string,string>")
-    additional = F.map_concat(
-        F.when(
-            ip_branch & fld("ip", "ip.ttl").isNotNull(),
-            F.create_map(F.lit("ip_ttl"), fld("ip", "ip.ttl")),
-        ).otherwise(empty_map),
-        F.when(
-            arp_branch & fld("arp", "arp.opcode").isNotNull(),
-            F.create_map(F.lit("arp_operation"), fld("arp", "arp.opcode")),
-        ).otherwise(empty_map),
-    )
-    additional_col = F.when(F.size(additional) > 0, additional)
-
-    # ---- descriptions ----------------------------------------------------
-    packet_num = F.coalesce(fld("frame", "frame.number"), F.lit("N/A"))
-    protocols = F.coalesce(fld("frame", "frame.protocols"), F.lit("N/A"))
-    description = F.concat(
-        F.lit("Packet capture. Protocols: "), protocols, F.lit(". Frame No: "), packet_num
-    )
-
     # ---- error chain (ordered as Python executes; ref :296-317) ----------
+    def int_fail(value: str) -> str:
+        return f"{value} IS NOT NULL AND try_cast({value} AS int) IS NULL"
+
+    def bad_dict(v: str, m: str) -> str:
+        # a Python-truthy value that is not a dict: .get raises
+        return f"{v} IS NOT NULL AND {m} IS NULL AND NOT {_falsy(v)}"
+
+    http_code = "L_http.`http.response.code`"
     # A non-object _source implies layers IS NULL (path extraction on a
     # scalar yields NULL), so the guard keeps the shape probes off the
     # fast path entirely.
-    src_bad = F.expr(
-        f"(layers IS NULL AND _source IS NOT NULL"
-        f" AND try_cast(_source AS {_MAPV}) IS NULL"
-        f" AND to_json(_source) NOT IN {_FALSY_JSON})"
+    src_bad = f"layers IS NULL AND {bad_dict('_source', f'try_cast(_source AS {_MAPV})')}"
+    checks: list[tuple[str | None, str, str | None]] = [
+        (src_bad, "V", "_source"),
+        (bad_dict("layers", "M_layers"), "V", "layers"),
+        ("B_frame", "V", "V_frame"),
+        ("B_ip", "V", "V_ip"),
+        ("NOT T_ip AND B_ipv6", "V", "V_ipv6"),
+        ("B_eth", "V", "V_eth"),
+        ("B_tcp", "V", "V_tcp"),
+        (f"P_tcp AND {int_fail('L_tcp.`tcp.srcport`')}", "I", "L_tcp.`tcp.srcport`"),
+        (f"P_tcp AND {int_fail('L_tcp.`tcp.dstport`')}", "I", "L_tcp.`tcp.dstport`"),
+        ("NOT T_tcp AND B_udp", "V", "V_udp"),
+        (f"_udp_br AND {int_fail('L_udp.`udp.srcport`')}", "I", "L_udp.`udp.srcport`"),
+        (f"_udp_br AND {int_fail('L_udp.`udp.dstport`')}", "I", "L_udp.`udp.dstport`"),
+        ("NOT T_tcp AND NOT T_udp AND B_icmp", "V", "V_icmp"),
+        ("NOT T_tcp AND NOT T_udp AND NOT T_icmp AND B_arp", "V", "V_arp"),
+        ("B_http", "V", "V_http"),
+        (
+            f"P_http AND {_truthy_str(http_code)} AND try_cast({http_code} AS int) IS NULL",
+            "I",
+            http_code,
+        ),
+        ("B_dns", "V", "V_dns"),
+        (None, "TTL", None),
+        (f"P_dns AND {bad_dict('V_flags_tree', 'M_flags_tree')}", "V", "V_flags_tree"),
+        ("B_tls", "V", "V_tls"),
+        (f"P_tls AND {bad_dict('V_tls_hs', 'M_tls_hs')}", "V", "V_tls_hs"),
+    ]
+    assert checks[_ERR_TTL - 1][1] == "TTL"
+    err_at0 = "CASE WHEN _corrupt_record IS NOT NULL AND _source IS NULL THEN 0 "
+    err_at0 += " ".join(
+        f"WHEN {cond} THEN {i}" for i, (cond, _, _) in enumerate(checks, 1) if cond is not None
     )
-    corrupt_elem = F.col("_corrupt_record").isNotNull() & F.col("_source").isNull()
-    corrupt_pytype = F.expr(
+
+    def subject(kind: str) -> str:
+        arms = " ".join(
+            f"WHEN {i} THEN {src}" for i, (_, k, src) in enumerate(checks, 1) if k == kind
+        )
+        return f"CASE _err_at0 {arms} END"
+
+    return out.withColumns(
+        {
+            "_err_at0": F.expr(err_at0 + " END"),
+            # malformed: layers falsy (absent / {} / falsy scalar); ref :103-111
+            "_layers_falsy": F.expr(
+                f"(layers IS NULL OR (M_layers IS NOT NULL AND size(M_layers) = 0)"
+                f" OR (M_layers IS NULL AND {_falsy('layers')}))"
+            ),
+        }
+    ).withColumns(
+        {
+            # the deep schema walk runs only for the failing subject
+            "_err_schema": F.expr(f"schema_of_variant({subject('V')})"),
+            "_err_int": F.expr(subject("I")),
+            # the islet's input, in the Project right below it: every
+            # answer's TTL, NULLs kept
+            "_ttl_raw": F.expr("map_values(dns_answers).`dns.resp.ttl`"),
+        }
+    )
+
+
+def _ttl_islet(df: DataFrame) -> DataFrame:
+    """The ONE interpreted operator: "first DNS answer TTL that fails
+    int()" needs a filter, and a higher-order-function lambda is a
+    CodegenFallback expression that knocks its whole Project out of
+    whole-stage codegen.  Its Project holds only this column; reading
+    ``_ttl_raw`` twice keeps CollapseProject from folding the parse
+    stage into it, and the ``_ttl_err_msg`` shield reads
+    ``_ttl_err_raw`` twice, which keeps it from being folded up into
+    the build stage.  So the islet is also the boundary between the
+    two generated classes."""
+    bad = "t -> t IS NOT NULL AND try_cast(t AS int) IS NULL"
+    return df.withColumn(
+        "_ttl_err_raw",
+        F.expr(
+            f"CASE WHEN P_dns AND exists(_ttl_raw, {bad})"
+            f" THEN concat('invalid literal for int() with base 10: ''',"
+            f"   filter(_ttl_raw, {bad})[0], '''')"
+            f" END"
+        ),
+    ).withColumn(
+        "_ttl_err_msg",
+        F.expr("CASE WHEN _ttl_err_raw IS NOT NULL THEN _ttl_err_raw END"),
+    )
+
+
+def _build(df: DataFrame, processing_time: str) -> DataFrame:
+    """Codegen stage 2: the UDM fields, the event sections, the error
+    message and the event itself, from the parsed columns.  Written as
+    SQL text: one ``F.expr`` is one py4j round trip, where the same
+    CASE built from Column calls costs one per call."""
+    ts = "L_frame.`frame.time_utc`"
+    frame_no = "L_frame.`frame.number`"
+    proc_ts_typed = "to_timestamp(replace(_proc_ts, 'Z', ''))"
+
+    def when(cond: str, value: str, otherwise: str | None = None) -> str:
+        tail = f" ELSE {otherwise}" if otherwise is not None else ""
+        return f"CASE WHEN {cond} THEN {value}{tail} END"
+
+    def struct(**fields: str) -> str:
+        return "named_struct(" + ", ".join(f"'{k}', {v}" for k, v in fields.items()) + ")"
+
+    def guarded(present: str, value: str) -> str:
+        # truthy-string guard (ref :179-192, :226-253): NULL unless the
+        # layer is present and the value a non-empty string
+        return when(f"{present} AND {_truthy_str(value)}", value)
+
+    # ---- fields: every value the event reads more than once, once per row
+    http = {
+        "host": "L_http.`http.host`",
+        "file_data": "L_http.`http.file_data`",
+        "method": "L_http.`http.request.method`",
+        "url": "L_http.`http.request.full_uri`",
+        "user_agent": "L_http.`http.user_agent`",
+    }
+    http_code = "L_http.`http.response.code`"
+    tls = {"rec": "tls_rec_version", "hs": "tls_hs_version", "sni": "tls_sni"}
+    net = {
+        "ip_protocol_version": "CAST(CASE WHEN P_ip THEN 4 WHEN _ipv6_br THEN 6 END AS int)",
+        "transport_protocol": (
+            "CASE WHEN P_tcp THEN 'TCP' WHEN _udp_br THEN 'UDP' WHEN _icmp_br THEN 'ICMP' END"
+        ),
+        "tcp_flags": when("P_tcp", "L_tcp.`tcp.flags`"),
+        "icmp_type": when("_icmp_br", "L_icmp.`icmp.type`"),
+        "icmp_code": when("_icmp_br", "L_icmp.`icmp.code`"),
+    }
+
+    def endpoint_field(arp: str, eth_or_ip: str) -> str:
+        # ARP overwrites eth-derived MACs/IPs, even with nulls (SURVEY §2C.5)
+        return when("_arp_br", f"L_arp.`{arp}`", eth_or_ip)
+
+    def port(side: str) -> str:
+        return (
+            f"CASE WHEN P_tcp THEN try_cast(L_tcp.`tcp.{side}port` AS int)"
+            f" WHEN _udp_br THEN try_cast(L_udp.`udp.{side}port` AS int) END"
+        )
+
+    fields = {
+        "_proc_ts": F.lit(processing_time),
+        "_err_at": F.expr(
+            f"CASE WHEN _err_at0 < {_ERR_TTL} THEN _err_at0"
+            f" WHEN _ttl_err_msg IS NOT NULL THEN {_ERR_TTL} ELSE _err_at0 END"
+        ),
+        # timestamp chain (ref convert_timestamp_robust, :19-46): the
+        # [:26] truncation reproduces Python's quirk of capping the
+        # fraction at whatever fits in 26 chars (4 digits for 2-digit days)
+        "_parsed_ts": F.expr(
+            f"coalesce(try_to_timestamp(substring({ts}, 1, 26), '{_TS_FMT_MICRO}'),"
+            f" try_to_timestamp(trim(regexp_replace({ts},"
+            f" ' (UTC|Central European Summer Time).*$', '')), '{_TS_FMT_PLAIN}'))"
+        ),
+        # classifier, last-writer-wins (SURVEY §2C.2)
+        "_etype": F.expr(
+            "CASE WHEN P_tls THEN 'NETWORK_SSL' WHEN P_dns THEN 'NETWORK_DNS'"
+            " WHEN P_http THEN 'NETWORK_HTTP' WHEN _icmp_br THEN 'NETWORK_ICMP'"
+            " WHEN _arp_br THEN 'NETWORK_ARP' ELSE 'NETWORK_CONNECTION' END"
+        ),
+        **{
+            f"_{side}_ip": F.expr(
+                endpoint_field(
+                    f"arp.{side_arp}.proto_ipv4",
+                    f"CASE WHEN P_ip THEN L_ip.`ip.{side_ip}`"
+                    f" WHEN _ipv6_br THEN L_ipv6.`ipv6.{side_ip}` END",
+                )
+            )
+            for side, side_arp, side_ip in (("p", "src", "src"), ("t", "dst", "dst"))
+        },
+        **{
+            f"_{side}_mac": F.expr(
+                endpoint_field(f"arp.{side_arp}.hw_mac", when("P_eth", f"L_eth.`eth.{side_arp}`"))
+            )
+            for side, side_arp in (("p", "src"), ("t", "dst"))
+        },
+        "_p_port": F.expr(port("src")),
+        "_t_port": F.expr(port("dst")),
+        **{f"_net_{k}": F.expr(v) for k, v in net.items()},
+        **{f"_http_{k}": F.expr(guarded("P_http", v)) for k, v in http.items()},
+        "_http_status": F.expr(
+            when(f"P_http AND {_truthy_str(http_code)}", f"try_cast({http_code} AS int)")
+        ),
+        "_dns_q": F.expr("P_dns AND size(q_names) > 0"),
+        "_dns_a": F.expr("P_dns AND size(a_ttls) > 0"),
+        "_dns_r": F.expr("P_dns AND dns_response_flag IS NOT NULL"),
+        **{f"_tls_{k}": F.expr(guarded("P_tls", v)) for k, v in tls.items()},
+    }
+    out = df.withColumns(fields)
+    # each guarded field is NULL unless set, so "any field set" is the
+    # section's non-empty flag
+    out = out.withColumns(
+        {
+            "_http_ne": F.expr(
+                f"P_http AND {_truthy_str(http_code)}"
+                + "".join(f" OR _http_{k} IS NOT NULL" for k in http)
+            ),
+            "_dns_ne": F.expr("_dns_q OR _dns_a OR _dns_r"),
+            "_tls_ne": F.expr(" OR ".join(f"_tls_{k} IS NOT NULL" for k in tls)),
+        }
+    )
+
+    # ---- sections, one named column each ---------------------------------
+    # arrays_zip pads the shorter side with NULLs and slice(.., 1,
+    # size(q_names)) trims to the names' length — identical to the
+    # reference's `if i < len(q_types)` guard, without a lambda.  try_cast
+    # on an array applies per element (NULL on failure) — same as
+    # transform(a_ttls, t -> try_cast(t AS int)), lambda-free.
+    dns_info = struct(
+        queries=when(
+            "_dns_q",
+            "CAST(slice(arrays_zip(q_names, q_types), 1, size(q_names))"
+            " AS array<struct<name string, type string>>)",
+        ),
+        answer_ttls=when("_dns_a", "try_cast(a_ttls AS array<int>)"),
+        is_response=when("_dns_r", "dns_response_flag = '1'"),
+    )
+    app_data = when(
+        "_http_ne OR _dns_ne OR _tls_ne",
+        struct(
+            http=when(
+                "_http_ne",
+                struct(**{k: f"_http_{k}" for k in http}, status_code="_http_status"),
+            ),
+            dns=when("_dns_ne", dns_info),
+            tls=when(
+                "_tls_ne",
+                struct(
+                    record_version_protocol="_tls_rec",
+                    handshake_protocol_version="_tls_hs",
+                    server_name_indication="_tls_sni",
+                ),
+            ),
+        ),
+    )
+    network = when(
+        " OR ".join(f"_net_{k} IS NOT NULL" for k in net) + " OR _http_ne OR _dns_ne OR _tls_ne",
+        struct(**{k: f"_net_{k}" for k in net}, application_protocol_data=app_data),
+    )
+
+    def endpoint(side: str) -> str:
+        parts = {k: f"_{side}_{k}" for k in ("ip", "mac", "port")}
+        return when(" OR ".join(f"{c} IS NOT NULL" for c in parts.values()), struct(**parts))
+
+    # about, in append order: http host, http url, dns names, sni.  The
+    # reference's final truthy filter (ref :283) drops ""-only items;
+    # the http/tls entries are truthy-guarded at construction, so only
+    # the dns names need the "" scrub — array_remove does it
+    # lambda-free, and arrays_zip-with-empty + cast turns the names
+    # into {hostname, url: NULL} structs without a transform.
+    empty_about = f"CAST(array() AS {_ABOUT_DDL})"
+
+    null_str = "CAST(NULL AS string)"
+
+    def about_item(present: str, hostname: str, url: str) -> str:
+        item = struct(hostname=hostname, url=url)
+        return when(f"{present} IS NOT NULL", f"array({item})", empty_about)
+
+    dns_names = when(
+        "_dns_q",
+        "CAST(arrays_zip(array_remove(q_names, ''), CAST(array() AS array<string>))"
+        f" AS {_ABOUT_DDL})",
+        empty_about,
+    )
+    about = (
+        f"concat({about_item('_http_host', '_http_host', null_str)},"
+        f" {about_item('_http_url', null_str, '_http_url')}, {dns_names},"
+        f" {about_item('_tls_sni', '_tls_sni', null_str)})"
+    )
+    empty_map = "CAST(map() AS map<string,string>)"
+    additional = (
+        "map_concat("
+        + when("P_ip AND L_ip.`ip.ttl` IS NOT NULL", "map('ip_ttl', L_ip.`ip.ttl`)", empty_map)
+        + ", "
+        + when(
+            "_arp_br AND L_arp.`arp.opcode` IS NOT NULL",
+            "map('arp_operation', L_arp.`arp.opcode`)",
+            empty_map,
+        )
+        + ")"
+    )
+    corrupt_pytype = (
         "CASE WHEN left(ltrim(_corrupt_record), 1) = '\"' THEN 'str'"
         " WHEN left(ltrim(_corrupt_record), 1) = '[' THEN 'list'"
         " WHEN ltrim(_corrupt_record) IN ('true','false') THEN 'bool'"
@@ -519,195 +593,128 @@ def project_udm(df: DataFrame, processing_time: str) -> DataFrame:
         " WHEN _corrupt_record RLIKE '^\\\\s*-?[0-9.eE+-]+\\\\s*$' THEN 'float'"
         " ELSE 'str' END"
     )
-    layers_bad = F.expr(
-        f"(layers IS NOT NULL AND M_layers IS NULL"
-        f" AND to_json(layers) NOT IN {_FALSY_JSON})"
-    )
 
-    def int_fail(col_expr: str) -> Column:
-        return F.expr(f"({col_expr} IS NOT NULL AND try_cast({col_expr} AS int) IS NULL)")
-
-    flags_tree_bad = F.expr(
-        f"(V_flags_tree IS NOT NULL AND M_flags_tree IS NULL"
-        f" AND to_json(V_flags_tree) NOT IN {_FALSY_JSON})"
-    )
-    hs_bad = F.expr(
-        f"(V_tls_hs IS NOT NULL AND M_tls_hs IS NULL"
-        f" AND to_json(V_tls_hs) NOT IN {_FALSY_JSON})"
-    )
-
-    error_msg = (
-        F.when(
-            corrupt_elem,
-            F.concat(F.lit("'"), corrupt_pytype, F.lit("' object has no attribute 'get'")),
-        )
-        .when(src_bad, _attr_err("schema_of_variant(_source)"))
-        .when(layers_bad, _attr_err("schema_of_variant(layers)"))
-        .when(B("frame"), _attr_err("schema_of_variant(V_frame)"))
-        .when(B("ip"), _attr_err("schema_of_variant(V_ip)"))
-        .when(~T("ip") & B("ipv6"), _attr_err("schema_of_variant(V_ipv6)"))
-        .when(B("eth"), _attr_err("schema_of_variant(V_eth)"))
-        .when(B("tcp"), _attr_err("schema_of_variant(V_tcp)"))
-        .when(tcp_branch & int_fail("L_tcp.`tcp.srcport`"), _int_err("L_tcp.`tcp.srcport`"))
-        .when(tcp_branch & int_fail("L_tcp.`tcp.dstport`"), _int_err("L_tcp.`tcp.dstport`"))
-        .when(~T("tcp") & B("udp"), _attr_err("schema_of_variant(V_udp)"))
-        .when(udp_branch & int_fail("L_udp.`udp.srcport`"), _int_err("L_udp.`udp.srcport`"))
-        .when(udp_branch & int_fail("L_udp.`udp.dstport`"), _int_err("L_udp.`udp.dstport`"))
-        .when(~T("tcp") & ~T("udp") & B("icmp"), _attr_err("schema_of_variant(V_icmp)"))
-        .when(
-            ~T("tcp") & ~T("udp") & ~T("icmp") & B("arp"),
-            _attr_err("schema_of_variant(V_arp)"),
-        )
-        .when(B("http"), _attr_err("schema_of_variant(V_http)"))
-        .when(
-            P("http")
-            & truthy_str(h["code"])
-            & F.expr("try_cast(L_http.`http.response.code` AS int) IS NULL"),
-            _int_err("L_http.`http.response.code`"),
-        )
-        .when(B("dns"), _attr_err("schema_of_variant(V_dns)"))
-        .when(F.col("_ttl_err_msg").isNotNull(), F.col("_ttl_err_msg"))
-        .when(dns_present & flags_tree_bad, _attr_err("schema_of_variant(V_flags_tree)"))
-        .when(B("tls"), _attr_err("schema_of_variant(V_tls)"))
-        .when(P("tls") & hs_bad, _attr_err("schema_of_variant(V_tls_hs)"))
-    )
-    # malformed: layers falsy (absent / {} / falsy scalar); ref :103-111
-    layers_falsy = F.expr(
-        f"(layers IS NULL OR (M_layers IS NOT NULL AND size(M_layers) = 0)"
-        f" OR (M_layers IS NULL AND to_json(layers) IN {_FALSY_JSON}))"
-    )
-
-    # ---- snippet (canonical minified sorted-key packet JSON) -------------
-    raw_pkt = F.coalesce(
-        F.expr("to_json(named_struct('_source', _source))"), F.col("_corrupt_record")
-    )
-    snippet = F.when(
-        F.length(raw_pkt) > 1000, F.concat(F.substring(raw_pkt, 1, 1000), F.lit("..."))
-    ).otherwise(raw_pkt)
-
-    # ---- assemble the three event shapes ---------------------------------
-    def metadata(ts: Column, product: str, etype: Column | str, desc: Column) -> Column:
-        e = F.lit(etype) if isinstance(etype, str) else etype
-        return F.struct(
-            ts.alias("event_timestamp"),
-            F.lit(product).alias("product_name"),
-            F.lit(_VENDOR).alias("vendor_name"),
-            e.alias("event_type"),
-            desc.alias("description"),
+    def metadata(ts_sql: str, product: str, etype: str, desc: str) -> str:
+        return struct(
+            event_timestamp=ts_sql,
+            product_name=f"'{product}'",
+            vendor_name=f"'{_VENDOR}'",
+            event_type=etype,
+            description=desc,
         )
 
-    principal = F.struct(p_ip.alias("ip"), p_mac.alias("mac"), p_port.alias("port"))
-    target = F.struct(t_ip.alias("ip"), t_mac.alias("mac"), t_port.alias("port"))
-    principal_col = F.when(p_ip.isNotNull() | p_mac.isNotNull() | p_port.isNotNull(), principal)
-    target_col = F.when(t_ip.isNotNull() | t_mac.isNotNull() | t_port.isNotNull(), target)
-    network = F.struct(
-        ipv.alias("ip_protocol_version"),
-        transport.alias("transport_protocol"),
-        tcp_flags.alias("tcp_flags"),
-        icmp_type.alias("icmp_type"),
-        icmp_code.alias("icmp_code"),
-        app_data.alias("application_protocol_data"),
+    event_ts_iso = when(
+        f"{ts} IS NOT NULL AND {ts} != '' AND _parsed_ts IS NOT NULL",
+        f'date_format(_parsed_ts, "{_ISO_FMT}")',
+        "_proc_ts",
     )
-    network_col = F.when(
-        ipv.isNotNull()
-        | transport.isNotNull()
-        | tcp_flags.isNotNull()
-        | icmp_type.isNotNull()
-        | icmp_code.isNotNull()
-        | app_nonempty,
-        network,
+    out = out.withColumns(
+        {
+            "_is_error": F.expr("_err_at IS NOT NULL"),
+            "_is_malformed": F.expr("_err_at IS NULL AND _layers_falsy"),
+            # the TTL check overrides a later check's subject, so it goes first
+            "_error_msg": F.expr(
+                f"CASE WHEN _err_at = 0"
+                f" THEN concat('''', {corrupt_pytype}, ''' object has no attribute ''get''')"
+                f" WHEN _err_at = {_ERR_TTL} THEN _ttl_err_msg"
+                f" WHEN _err_schema IS NOT NULL THEN {_attr_err('_err_schema')}"
+                f" WHEN _err_int IS NOT NULL THEN {_int_err('_err_int')} END"
+            ),
+            "_metadata": F.expr(
+                metadata(
+                    event_ts_iso,
+                    _PRODUCT,
+                    "_etype",
+                    f"concat('Packet capture. Protocols: ',"
+                    f" coalesce(L_frame.`frame.protocols`, 'N/A'), '. Frame No: ',"
+                    f" coalesce({frame_no}, 'N/A'))",
+                )
+            ),
+            "_principal": F.expr(endpoint("p")),
+            "_target": F.expr(endpoint("t")),
+            "_network": F.expr(network),
+            "_about": F.expr(f"CASE WHEN size({about}) > 0 THEN {about} END"),
+            "_additional": F.expr(f"CASE WHEN size({additional}) > 0 THEN {additional} END"),
+        }
     )
-    null_section = lambda ddl: F.lit(None).cast(ddl)  # noqa: E731
 
-    # Malformed events carry ONLY metadata (ref :107-111).
-    malformed_desc = F.concat(F.lit("Malformed packet data. Frame: "), packet_num)
-    malformed_event = F.struct(
-        metadata(proc_ts, _PRODUCT_MALFORMED, "NETWORK_EVENT_UNKNOWN", malformed_desc).alias(
-            "metadata"
+    # ---- the three event shapes ------------------------------------------
+    # snippet: canonical minified sorted-key packet JSON
+    raw_pkt = "coalesce(to_json(named_struct('_source', _source)), _corrupt_record)"
+    snippet = when(
+        f"length({raw_pkt}) > 1000", f"concat(substring({raw_pkt}, 1, 1000), '...')", raw_pkt
+    )
+    no_sections = {
+        "principal": f"CAST(NULL AS {_PRINCIPAL_DDL})",
+        "target": f"CAST(NULL AS {_PRINCIPAL_DDL})",
+        "network": f"CAST(NULL AS {_NETWORK_DDL})",
+        "about": f"CAST(NULL AS {_ABOUT_DDL})",
+    }
+    error_event = struct(
+        metadata=metadata(
+            "_proc_ts",
+            _PRODUCT_ERROR,
+            "'NETWORK_EVENT_ERROR'",
+            "concat('Error during UDM conversion for packet. Frame No: ',"
+            f" coalesce({frame_no}, 'N/A (error state)'), '. Error: ', _error_msg)",
         ),
-        null_section(_PRINCIPAL_DDL).alias("principal"),
-        null_section(_PRINCIPAL_DDL).alias("target"),
-        null_section(_NETWORK_DDL).alias("network"),
-        null_section(_ABOUT_DDL).alias("about"),
-        F.lit(None).cast("map<string,string>").alias("additional"),
+        **no_sections,
+        additional="map_from_arrays(array('processing_error_message',"
+        f" 'original_packet_data_snippet'), array(_error_msg, {snippet}))",
     )
-    err_frame = F.coalesce(fld("frame", "frame.number"), F.lit("N/A (error state)"))
-
-    proc_ts_typed = F.to_timestamp(F.replace(proc_ts, F.lit("Z"), F.lit("")))
-
-    # Expression-tree hygiene: every expensive sub-tree referenced more
-    # than once below (the ~20-branch error CASE, the timestamp chain,
-    # the three event shapes) is materialized as a named column first.
-    # Inlining them instead multiplies the Catalyst tree — which is pure
-    # driver/planning and per-task-deserialization weight (measured at
-    # ~1 s fixed per job on the B1 corpus before this split).
-    stage2 = stage1.withColumns(
+    # malformed events carry ONLY metadata (ref :107-111)
+    malformed_event = struct(
+        metadata=metadata(
+            "_proc_ts",
+            _PRODUCT_MALFORMED,
+            "'NETWORK_EVENT_UNKNOWN'",
+            f"concat('Malformed packet data. Frame: ', coalesce({frame_no}, 'N/A'))",
+        ),
+        **no_sections,
+        additional="CAST(NULL AS map<string,string>)",
+    )
+    sections = ("metadata", "principal", "target", "network", "about", "additional")
+    normal_event = struct(**{n: f"_{n}" for n in sections})
+    out = out.withColumns(
         {
-            "_error_msg": error_msg,
-            "_parsed_ts": parsed_ts,
-        }
-    ).withColumns(
-        {
-            "_is_error": F.col("_error_msg").isNotNull(),
-            "_is_malformed": F.col("_error_msg").isNull() & layers_falsy,
-        }
-    )
-
-    # rebuild the few consumers of the materialized columns
-    err_desc_col = F.concat(
-        F.lit("Error during UDM conversion for packet. Frame No: "),
-        err_frame,
-        F.lit(". Error: "),
-        F.col("_error_msg"),
-    )
-    error_event_col = F.struct(
-        metadata(proc_ts, _PRODUCT_ERROR, "NETWORK_EVENT_ERROR", err_desc_col).alias("metadata"),
-        null_section(_PRINCIPAL_DDL).alias("principal"),
-        null_section(_PRINCIPAL_DDL).alias("target"),
-        null_section(_NETWORK_DDL).alias("network"),
-        null_section(_ABOUT_DDL).alias("about"),
-        F.map_from_arrays(
-            F.array(F.lit("processing_error_message"), F.lit("original_packet_data_snippet")),
-            F.array(F.col("_error_msg"), snippet),
-        ).alias("additional"),
-    )
-    event_ts_iso_col = F.when(
-        (ts_str.isNotNull()) & (ts_str != "") & F.col("_parsed_ts").isNotNull(),
-        F.date_format(F.col("_parsed_ts"), _ISO_FMT),
-    ).otherwise(proc_ts)
-    normal_event_col = F.struct(
-        metadata(event_ts_iso_col, _PRODUCT, event_type, description).alias("metadata"),
-        principal_col.alias("principal"),
-        target_col.alias("target"),
-        network_col.alias("network"),
-        about_col.alias("about"),
-        additional_col.alias("additional"),
-    )
-
-    stage3 = stage2.withColumns(
-        {
-            "event": F.when(F.col("_is_error"), error_event_col)
-            .when(F.col("_is_malformed"), malformed_event)
-            .otherwise(normal_event_col),
+            "event": F.expr(
+                f"CASE WHEN _is_error THEN {error_event}"
+                f" WHEN _is_malformed THEN {malformed_event} ELSE {normal_event} END"
+            ),
             # classifier computed directly, NOT extracted back out of the
             # event struct (extraction would re-inline the whole struct)
-            "event_type": F.when(F.col("_is_error"), F.lit("NETWORK_EVENT_ERROR"))
-            .when(F.col("_is_malformed"), F.lit("NETWORK_EVENT_UNKNOWN"))
-            .otherwise(event_type),
-            "event_ts": F.when(
-                F.col("_is_error") | F.col("_is_malformed"), proc_ts_typed
-            ).otherwise(F.coalesce(F.col("_parsed_ts"), proc_ts_typed)),
+            "event_type": F.expr(
+                "CASE WHEN _is_error THEN 'NETWORK_EVENT_ERROR'"
+                " WHEN _is_malformed THEN 'NETWORK_EVENT_UNKNOWN' ELSE _etype END"
+            ),
+            "event_ts": F.expr(
+                when(
+                    "_is_error OR _is_malformed",
+                    proc_ts_typed,
+                    f"coalesce(_parsed_ts, {proc_ts_typed})",
+                )
+            ),
         }
     )
 
-    return stage3.select(
-        F.col("event"),
+    return out.select(
+        "event",
         # Lazy under column pruning: plans that don't select udm_json
         # (the parquet table sink, the B1 bench) never pay to_json.
-        F.to_json(F.struct(F.col("event").alias("event"))).alias("udm_json"),
-        F.col("event_ts"),
-        F.col("event_type"),
+        F.expr("to_json(named_struct('event', event))").alias("udm_json"),
+        "event_ts",
+        "event_type",
         F.col("_is_error").alias("is_error"),
         F.col("_is_malformed").alias("is_malformed"),
-        F.col("source_file"),
+        "source_file",
     )
+
+
+def project_udm(df: DataFrame, processing_time: str) -> DataFrame:
+    """Project raw packets to UDM events (one in → one out, always).
+
+    ``processing_time`` is the injected deterministic stand-in for the
+    reference's ``datetime.now()`` fallbacks (SURVEY §2C.4), as an
+    ISO-8601 string like ``2025-01-01T00:00:00.000000Z``.
+    """
+    return _build(_ttl_islet(_parse(df)), processing_time)

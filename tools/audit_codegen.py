@@ -1,11 +1,24 @@
 """Codegen audit: flag catalog plans with interpreted operators.
 
-Any higher-order-function lambda (transform/filter/exists/aggregate/
-zip_with) is a CodegenFallback expression; ONE of them in a Project/
-Generate/Filter knocks that whole operator out of whole-stage codegen
-and its full expression tree evaluates interpreted — the round-4 UDM
-projection measured ~3x slower, and the all-pairs cosine 68x, from
-exactly this.  Run per-round after adding operators:
+Two ways an operator ends up interpreted:
+
+- Any higher-order-function lambda (transform/filter/exists/aggregate/
+  zip_with) is a CodegenFallback expression; ONE of them in a Project/
+  Generate/Filter knocks that whole operator out of whole-stage codegen
+  and its full expression tree evaluates interpreted — the round-4 UDM
+  projection measured ~3x slower, and the all-pairs cosine 68x, from
+  exactly this.
+- A whole-stage ``*(n)`` class that Janino cannot compile (a generated
+  method over the JVM's 64 KB limit) falls back to interpreted
+  evaluation with only an ERROR log line, and since Spark caches only
+  successful compiles, every new plan pays the failed compile again.
+  The plan string looks fine; ``codegenToSeq()`` compiles every stage
+  and reports a failed one with ``maxMethodCodeSize`` -1.  The audit
+  session runs with AQE off, so plans with an exchange show their
+  codegen stages before execution (an adaptive plan inserts them only
+  when its query stages materialize).
+
+Run per-round after adding operators:
 
     python tools/audit_codegen.py [sf_dir]
 
@@ -66,13 +79,24 @@ def main() -> int:
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("audit-codegen")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     findings: list[str] = []
+    largest: list[tuple[int, str]] = []
     for name, spec in sorted(registry().items()):
         try:
-            plan = spec.spark_fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+            qe = spec.spark_fn(spark, sf_dir)._jdf.queryExecution()
+            plan = qe.executedPlan().toString()
+            stages = qe.debug().codegenToSeq()
+            sizes = [stages.apply(i)._3().maxMethodCodeSize() for i in range(stages.size())]
         except Exception as e:  # noqa: BLE001 - audit must not stop on one entry
             print(f"SKIP {name}: {str(e)[:80]}")
             continue
+        if -1 in sizes:
+            msg = f"REGRESSION {name}: {sizes.count(-1)} of {len(sizes)} codegen stages fail to compile"
+            print(msg)
+            findings.append(msg)
+        elif sizes:
+            largest.append((max(sizes), name))
         interpreted = [
             line.lstrip(" +-:").split(" ")[0].split("[")[0]
             for line in plan.splitlines()
@@ -93,6 +117,8 @@ def main() -> int:
             print(msg)
             findings.append(msg)
     spark.stop()
+    for size, name in sorted(largest, reverse=True)[:5]:
+        print(f"largest generated method: {size} bytes in {name}")
     print(f"\n{len(findings)} unaccepted interpreted plans")
     return 1 if findings else 0
 
