@@ -7,7 +7,7 @@ extended with the batch/streaming analytics and LLM-data-pipeline
 operator surface declared in SURVEY.md §2B.
 
 Layout:
-    session      SparkSession factory tuned for local[32] and cluster
+    session      SparkSession factory (local[$SPARK_GRAFT_CPUS] or cluster)
     schemas      tshark raw schema, UDM StructType, testdata schemas
     tables       testdata loaders + temp-view registration
     udm          the UDM projection core (reference json2udm semantics)
@@ -19,15 +19,3 @@ Layout:
 """
 
 __version__ = "0.1.0"
-
-# Plan construction is serial driver-side work; py4j re-issues a
-# reflection round trip for every `sc._jvm.<name>` / static-member
-# access, which dominates the residual per-query build cost (see
-# py4j_fastpath docstring for the measurements and safety argument).
-# Installed at package import so every consumer — bench, tests, and
-# a driver passing its own SparkSession into __spark_entry__.entry —
-# builds plans through the cached path.  CSS_NO_PY4J_FASTPATH=1
-# disables it (used for A/B round-trip counting).
-from chronicle_sniffer_spark import py4j_fastpath as _py4j_fastpath
-
-_py4j_fastpath.install()

@@ -52,7 +52,7 @@ def _parse_one(s: str | None) -> datetime | None:
         return None
 
 
-@F.udf(T.TimestampType())
+@F.udf(T.TimestampType(), useArrow=False)
 def parse_capture_ts_udf(s: str | None):
     """U1: row-at-a-time Python UDF form (one serde round-trip per row)."""
     return _parse_one(s)

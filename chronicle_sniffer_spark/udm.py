@@ -395,8 +395,9 @@ def _ttl_islet(df: DataFrame) -> DataFrame:
 def _build(df: DataFrame, processing_time: str) -> DataFrame:
     """Codegen stage 2: the UDM fields, the event sections, the error
     message and the event itself, from the parsed columns.  Written as
-    SQL text: one ``F.expr`` is one py4j round trip, where the same
-    CASE built from Column calls costs one per call."""
+    SQL text: one ``F.expr`` is a fixed three py4j round trips (two
+    reflection lookups and the call), where the same CASE built from
+    Column calls costs at least that per call."""
     ts = "L_frame.`frame.time_utc`"
     frame_no = "L_frame.`frame.number`"
     proc_ts_typed = "to_timestamp(replace(_proc_ts, 'Z', ''))"

@@ -12,13 +12,13 @@ Methodology matches bench.py's plan_build split: each entry's plan is
 built twice and the SECOND build is reported (the first pays one-time
 session/table staging).
 
+The reflection column counts py4j's own lookups: py4j resolves every
+``sc._jvm.<name>`` and static member with a round trip of its own on
+each access, so one ``F.<fn>()`` call costs two reflection round trips
+and one call.
+
 Usage:
     python tools/count_roundtrips.py entry [entry ...]
-    CSS_NO_PY4J_FASTPATH=1 python tools/count_roundtrips.py entry ...
-
-Run once with and once without the env var for the fastpath A/B —
-the fastpath install is process-global, so the comparison needs two
-processes.
 """
 
 from __future__ import annotations
@@ -74,8 +74,7 @@ def main() -> None:
     reg = registry()
     reg["s1_parquet_count"].spark_fn(spark, sf_dir).collect()
 
-    fastpath = not os.environ.get("CSS_NO_PY4J_FASTPATH")
-    out = {"fastpath": fastpath, "builds": {}}
+    out = {"builds": {}}
     for name in names:
         reg[name].spark_fn(spark, sf_dir)  # build 1: staging + caches warm
         before = _snapshot()
